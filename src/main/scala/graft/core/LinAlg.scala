@@ -17,8 +17,6 @@ object LinAlg {
     (a \ DenseVector(b)).toArray
   }
 
-  def solve(a: DenseMatrix[Double], b: DenseVector[Double]): DenseVector[Double] = a \ b
-
   def inverse(a: DenseMatrix[Double]): DenseMatrix[Double] = inv(a)
 
   /** Unpack a row-major upper-triangular packed symmetric matrix. */
@@ -35,17 +33,5 @@ object LinAlg {
       i += 1
     }
     m
-  }
-
-  /** Index of (i,j), i<=j, in the row-major packed upper triangle. */
-  def packedIndex(p: Int, i: Int, j: Int): Int = {
-    require(i <= j)
-    i * p - i * (i - 1) / 2 + (j - i)
-  }
-
-  def dot(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i) * b(i); i += 1 }
-    s
   }
 }

@@ -66,9 +66,4 @@ object Rng {
     * weighted-sampling keys: -ln(u)/w). */
   def exponential(key: Column, rate: Column): Column =
     -log(uniform(key)) / rate
-
-  /** Inverse-CDF Weibull(shape, scale): scale * (-ln(1-u))^(1/shape) —
-    * the reference's rweibull synthesis (calib_simu_noninf0315.R:52). */
-  def weibull(key: Column, shape: Double, scale: Column): Column =
-    scale * pow(-log(lit(1.0) - uniform(key)), lit(1.0 / shape))
 }

@@ -34,6 +34,10 @@ case class CoefAt(coef: Array[Double], index: Int) extends LeafExpression {
   override def nullable: Boolean = false
   override def foldable: Boolean = false
   override def prettyName: String = "coef_at"
+  // hash by position, not by the array's identity: common-subexpression
+  // elimination orders its candidates by hash, so an identity hash would
+  // reorder the generated code for every snapshot and defeat the cache
+  override def hashCode(): Int = index
   override def eval(input: InternalRow): Any = coef(index)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("coef", coef, "double[]")
@@ -53,6 +57,7 @@ case class CoefArray(values: Array[Double]) extends LeafExpression {
   override def nullable: Boolean = false
   override def foldable: Boolean = false
   override def prettyName: String = "coef_array"
+  override def hashCode(): Int = values.length // see CoefAt.hashCode
   @transient private lazy val arr =
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(values)
@@ -64,12 +69,22 @@ case class CoefArray(values: Array[Double]) extends LeafExpression {
   }
 }
 
+/** Both builders SNAPSHOT `values`: the column holds a copy taken at
+  * capture, so a Newton driver may step its β in place after building a
+  * pass, and the pass still reads the β it was built with. Expressions
+  * built on [[CoefAt]] / [[CoefArray]] directly must likewise never see
+  * their array mutated after capture.
+  *
+  * Replicated fitters keep all m replicates' p coefficients in ONE
+  * replicate-major array of m·p doubles and read θ_{r,j} per row as
+  * `element_at(Coef.array(θ), r·p + j + 1)` — one referenced array
+  * instead of a per-iteration broadcast join of an m×p frame. */
 object Coef {
   /** `values(i)` as a Column whose generated code is value-independent. */
   def at(values: Array[Double], i: Int): Column =
-    GraftSqlBridge.column(CoefAt(values, i))
+    GraftSqlBridge.column(CoefAt(values.clone(), i))
 
   /** `values` as an ARRAY<DOUBLE> Column, generated as a reference. */
   def array(values: Array[Double]): Column =
-    GraftSqlBridge.column(CoefArray(values))
+    GraftSqlBridge.column(CoefArray(values.clone()))
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Text-analysis operators: language-ID heuristic, quality scoring,
+/** Text-analysis operators: language-ID heuristic, stopword and
   * token counting, document fingerprinting. All pure column expressions
   * (whole-stage codegen; no UDFs) — per-row work, embarrassingly
   * parallel at any scale.
@@ -14,34 +14,12 @@ object TextAnalysis {
   def tokenCount(text: Column): Column =
     size(split(Dedup.normalize(text), " "))
 
-  /** BPE-ish subword proxy: count of letter-runs, digit-runs and
-    * non-alphanumeric symbols — a cheap stand-in for a tokenizer's
-    * token count, linear in text length. */
-  def subwordCount(text: Column): Column =
-    size(split(lower(text), "[^a-z0-9]+")) - 1 +
-      (length(text) - length(regexp_replace(text, "[0-9]", ""))) / lit(4)
-
   /** Stopword hit count against a fixed (tiny, broadcast-as-literal)
     * marker list. */
   def stopwordCount(text: Column, stopwords: Seq[String]): Column = {
     val words = split(Dedup.normalize(text), " ")
     aggregate(words, lit(0), (acc, w) =>
       acc + when(w.isin(stopwords: _*), 1).otherwise(0))
-  }
-
-  /** Quality signals per document (length, punctuation ratio, stopword
-    * ratio, mean word length) and a blended score in [0,1]. */
-  def qualitySignals(text: Column, stopwords: Seq[String]): Seq[(String, Column)] = {
-    val n = length(text)
-    val nTok = tokenCount(text)
-    val punct = n - length(regexp_replace(text, "[.,;:!?']", ""))
-    val stops = stopwordCount(text, stopwords)
-    Seq(
-      "n_chars_m" -> n,
-      "n_tokens" -> nTok,
-      "punct_ratio" -> punct.cast("double") / greatest(n, lit(1)),
-      "stop_ratio" -> stops.cast("double") / greatest(nTok, lit(1)),
-      "mean_word_len" -> (n - nTok + 1).cast("double") / greatest(nTok, lit(1)))
   }
 
   val EnglishMarkers: Seq[String] = Seq("the", "and", "of", "to", "a", "in", "is")

@@ -120,17 +120,6 @@ object SurveyIntegration {
     Battery(fit.coefficients, fit.converged, fit.scoreResidual, cum, gail, abs)
   }
 
-  /** GREG-calibrate a combined frame's weight to population auxiliary
-    * totals, then rerun the battery with the calibrated weight
-    * (calib_est, jk_fun.R:24-78 without the influence plumbing). */
-  def calibratedBattery(comDat: DataFrame, time: Column, event: Column,
-      weight: Column, auxCols: Seq[String], auxTotals: Array[Double],
-      featureCols: Seq[String], tStar: Seq[Double]): Battery = {
-    val feats = FeatureArray.withIntercept(auxCols.map(col))
-    val cald = Greg.calibrate(comDat, feats, weight, auxTotals)
-    estimatorBattery(cald, time, event, col("greg_wt"), featureCols, tStar)
-  }
-
   final case class BatteryVariance(
       battery: Battery,
       betaVar: Array[Double],

@@ -126,9 +126,7 @@ object TaylorInference {
       sizeHint: graft.core.Windows.SizeHint =
         graft.core.Windows.SizeHint.Auto,
       psIters: Int = 0,
-      coxIters: Int = 0,
-      // phase-boundary callback for wall-clock probes (None in prod)
-      probe: Option[String => Unit] = None): IpswInference = {
+      coxIters: Int = 0): IpswInference = {
     val q = psFeatureCols.length + 1
     val psFeats = FeatureArray.withIntercept(psFeatureCols.map(col))
     val stackedCache = SurveyIntegration.stack(
@@ -142,7 +140,6 @@ object TaylorInference {
       if (psIters > 0) WeightedGLM.logistic(stacked, psFeats, col("trt"),
         col("__wps"), p = q, maxIter = psIters, tol = 0.0)
       else WeightedGLM.logistic(stacked, psFeats, col("trt"), col("__wps"), p = q)
-    probe.foreach(_("psFit (IRLS)"))
     val gammaDevExprs = Influence.logisticDeviates(psFit, psFeats,
       col("trt"), col("__wps"))
     val score = FeatureArray.dot(psFeats, psFit.coefficients)
@@ -188,9 +185,8 @@ object TaylorInference {
       .select((withW.columns.map(col) ++ gdCols ++ pgCols): _*)
       .persist()
     val prepared = org.apache.spark.sql.GraftSqlBridge.flattenPlan(preparedCache)
-    probe.foreach(_("kernel weights declared"))
     val out = inferenceCore(prepared, time, event, featureCols, q, tStar,
-      lambdaStar, x0, sizeHint, coxIters, psFit.coefficients, probe)
+      lambdaStar, x0, sizeHint, coxIters, psFit.coefficients)
     preparedCache.unpersist(blocking = false)
     stackedCache.unpersist(blocking = false)
     out
@@ -217,8 +213,7 @@ object TaylorInference {
       x0: Option[Array[Double]],
       sizeHint: graft.core.Windows.SizeHint,
       coxIters: Int,
-      gamma: Array[Double],
-      probe: Option[String => Unit] = None): IpswInference = {
+      gamma: Array[Double]): IpswInference = {
     val p = featureCols.length
     val cohortF = prepared.filter(col("trt") === 1)
     val feats = featureCols.map(col)
@@ -227,7 +222,6 @@ object TaylorInference {
         maxIter = coxIters, tol = 0.0, hint = fitHint(sizeHint))
       else CoxPH.fit(cohortF, time, event, col("__wtc"), feats,
         hint = fitHint(sizeHint))
-    probe.foreach(_("cox fit (NR)"))
 
     // 3. influence frame: cohort rows carry the direct score influence,
     //    survey rows join as zero-weight γ-only blocks (the reference's
@@ -255,123 +249,109 @@ object TaylorInference {
       case n => lit(0.0).as(n)
     }: _*)
     val allDevCache = devC.unionByName(surveyAligned).persist()
-    val allDev = org.apache.spark.sql.GraftSqlBridge.flattenPlan(allDevCache)
-    probe.foreach(_("deviates declared"))
+    try {
+      val allDev = org.apache.spark.sql.GraftSqlBridge.flattenPlan(allDevCache)
 
-    // 4. per-m β deviates: ipsw·I⁻¹U + B·Δγ (cross-derivative through
-    //    ∂w̃/∂γ = −ipsw·x_ps; survey rows have U = 0)
-    val dExprs = for (j <- 0 until p; m0 <- 0 until q) yield
-      sum(col(s"ui_$j") * col(s"__pg$m0")).as(s"d${j}_$m0")
-    val dRow = allDev.agg(dExprs.head, dExprs.tail: _*).head()
-    probe.foreach(_("dMat contraction"))
-    val dMat = breeze.linalg.DenseMatrix.tabulate(p, q)((j, m0) =>
-      dRow.getDouble(j * q + m0))
-    val bMat = LinAlg.inverse(LinAlg.unpack(p, fit.infoPacked)) * dMat
-    val dbTot = (0 until p).map { j =>
-      (col("__psw") * col("trt") * col(s"dbeta_$j") +
-        (0 until q).map(m0 => lit(bMat(j, m0)) * col(s"__gd$m0"))
-          .foldLeft(lit(0.0): Column)(_ + _)).as(s"dbeta_m_$j")
-    }
-    val withDb = allDev.select((allDev.columns.map(col) ++ dbTot): _*)
+      // 4. per-m β deviates: ipsw·I⁻¹U + B·Δγ (cross-derivative through
+      //    ∂w̃/∂γ = −ipsw·x_ps; survey rows have U = 0)
+      val dExprs = for (j <- 0 until p; m0 <- 0 until q) yield
+        sum(col(s"ui_$j") * col(s"__pg$m0")).as(s"d${j}_$m0")
+      val dRow = allDev.agg(dExprs.head, dExprs.tail: _*).head()
+      val dMat = breeze.linalg.DenseMatrix.tabulate(p, q)((j, m0) =>
+        dRow.getDouble(j * q + m0))
+      val bMat = LinAlg.inverse(LinAlg.unpack(p, fit.infoPacked)) * dMat
+      val dbTot = (0 until p).map { j =>
+        (col("__psw") * col("trt") * col(s"dbeta_$j") +
+          (0 until q).map(m0 => lit(bMat(j, m0)) * col(s"__gd$m0"))
+            .foldLeft(lit(0.0): Column)(_ + _)).as(s"dbeta_m_$j")
+      }
+      val withDb = allDev.select((allDev.columns.map(col) ++ dbTot): _*)
 
-    // 5. hazard-chain deviates at the same per-m scale
-    val risk = x0.map(v => HazardInfluence.RiskProfile(fit.coefficients, v))
-    val long = HazardInfluence.cumulativeDeviates(withDb, p, tStar,
-      lambdaStar = lambdaStar, risk = risk,
-      gamma = Some(HazardInfluence.GammaChain(
-        (0 until q).map(m0 => col(s"__pg$m0")),
-        (0 until q).map(m0 => col(s"__gd$m0")))),
-      betaDevPrefix = "dbeta_m_",
-      directScale = col("__psw") * col("trt"),
-      sizeHint = sizeHint,
-      passthrough = Seq(col("trt"), col("__pi"), col("__psw")),
-      preCollapsed = Some(devFull.collapsed))
-    probe.foreach(_("hazard chain declared"))
+      // 5. hazard-chain deviates at the same per-m scale
+      val risk = x0.map(v => HazardInfluence.RiskProfile(fit.coefficients, v))
+      val long = HazardInfluence.cumulativeDeviates(withDb, p, tStar,
+        lambdaStar = lambdaStar, risk = risk,
+        gamma = Some(HazardInfluence.GammaChain(
+          (0 until q).map(m0 => col(s"__pg$m0")),
+          (0 until q).map(m0 => col(s"__gd$m0")))),
+        betaDevPrefix = "dbeta_m_",
+        directScale = col("__psw") * col("trt"),
+        sizeHint = sizeHint,
+        passthrough = Seq(col("trt"), col("__pi"), col("__psw")),
+        preCollapsed = Some(devFull.collapsed))
 
-    // 6. contractions: Poisson Σ(1−π)Δ² over both samples; PPS
-    //    n·cov per sample summed (taylor_deviate.R:109-111)
-    // ALL estimand families contract in ONE job grouped by
-    // (t*, sample): the Poisson sum is additive over the sample split,
-    // the point estimate is a max of maxes, and the PPS n·cov terms
-    // are per-sample already — the driver recombines. One job instead
-    // of two matters twice at scale: the chain is job-count bound, and
-    // a single consumer means the LONG frame (units × t*, the widest
-    // frame in the chain — ~200M rows at 200×) never needs a persist:
-    // it streams straight into the aggregate instead of materializing
-    // a multi-GB cache whose allocation churn dominated GC (the
-    // r13 sf20 probe measured 300 CPU-s of GC, 10× the invocation
-    // variance, in the cache-fill stage alone).
-    val families = Seq("d_cum_hzd" -> "cum_hzd", "d_cum_gail" -> "cum_gail",
-        "d_abs_risk" -> "abs_risk", "d_abs_risk_gail" -> "abs_risk_gail")
-      .filter { case (dc, _) => long.columns.contains(dc) }
-    val famAggs = families.flatMap { case (dc, ec) => Seq(
-      sum((lit(1.0) - col("__pi")) * col(dc) * col(dc)).as(s"v_$dc"),
-      max(col(ec)).as(s"e_$ec"),
-      (covar_samp(col(dc), col(dc)) * count(lit(1))).as(s"pps_$dc")) }
-    // The family contraction (reads `long`) and the β contraction below
-    // (reads `withDb`) are INDEPENDENT jobs over the same cached deviate
-    // frame — the chain is job-count bound, so the β job runs from a
-    // second driver thread and back-fills the tail of the family job's
-    // stage instead of waiting for it. Each job's plan, partitioning
-    // and per-partition arithmetic are untouched — only the submission
-    // overlaps.
-    val famRowsF = scala.concurrent.Future {
-      if (families.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else long.groupBy(col("t_star"), col("trt"))
-        .agg(famAggs.head, famAggs.tail: _*).collect()
-    }(scala.concurrent.ExecutionContext.global)
-    // same one-job recombine for the β contractions: Poisson partials
-    // per sample + per-sample n·cov in a single groupBy(trt) aggregate,
-    // submitted from THIS thread while the family job runs on the future
-    val bAggs = (0 until p).flatMap(j => Seq(
-      sum((lit(1.0) - col("__pi")) *
-        col(s"dbeta_m_$j") * col(s"dbeta_m_$j")).as(s"pois$j"),
-      (covar_samp(col(s"dbeta_m_$j"), col(s"dbeta_m_$j")) *
-        count(lit(1))).as(s"pps$j")))
-    val bRows = withDb.groupBy(col("trt"))
-      .agg(bAggs.head, bAggs.tail: _*).collect()
-    val famRows = scala.concurrent.Await.result(famRowsF,
-      scala.concurrent.duration.Duration.Inf)
-    probe.foreach(_("poisson+pps + beta contractions (overlapped)"))
-    // a whole (t*, sample) group can come back NULL on any aggregate
-    // column (sum/max over an all-NULL group): treat NULL partials as
-    // 0.0 — exactly what the pre-recombine per-group aggregates did by
-    // ignoring NULL inputs
-    def nz(r: org.apache.spark.sql.Row, i: Int): Double =
-      if (r.isNullAt(i)) 0.0 else r.getDouble(i)
-    def contract(dcol: String, ecol: String): Map[Double, Estimand] = {
-      if (!families.exists(_._1 == dcol)) return Map.empty
-      val fi = families.indexWhere(_._1 == dcol)
-      val byT = famRows.groupBy(_.getDouble(0))
-      tStar.map { t =>
-        val rs = byT(t)
-        val pois = rs.map(nz(_, 2 + 3 * fi)).sum
-        // a sample group can be all-NULL on the estimate column (the
-        // pre-grouped max ignored those rows; the recombine must too).
-        // Every sample NULL (a t* before any event / grid mass reaches
-        // either sample) ⇒ the cumulative estimand is identically 0.
-        val estVals = rs.filter(!_.isNullAt(3 + 3 * fi))
-          .map(_.getDouble(3 + 3 * fi))
-        val est = if (estVals.isEmpty) 0.0 else estVals.max
-        val pps = rs.map(nz(_, 4 + 3 * fi)).sum
-        t -> Estimand(est, pois, pps)
-      }.toMap
-    }
-    val lam = contract("d_cum_hzd", "cum_hzd")
-    val gail = if (lambdaStar.isDefined) contract("d_cum_gail", "cum_gail")
-      else Map.empty[Double, Estimand]
-    val absR = if (risk.isDefined) contract("d_abs_risk", "abs_risk")
-      else Map.empty[Double, Estimand]
-    val absRG = if (risk.isDefined && lambdaStar.isDefined)
-      contract("d_abs_risk_gail", "abs_risk_gail") else Map.empty[Double, Estimand]
+      // 6. contractions: Poisson Σ(1−π)Δ² over both samples; PPS
+      //    n·cov per sample summed (taylor_deviate.R:109-111)
+      // ALL estimand families contract in ONE job grouped by
+      // (t*, sample): the Poisson sum is additive over the sample split,
+      // the point estimate is a max of maxes, and the PPS n·cov terms
+      // are per-sample already — the driver recombines. One job instead
+      // of two matters twice at scale: the chain is job-count bound, and
+      // a single consumer means the LONG frame (units × t*, the widest
+      // frame in the chain — ~200M rows at 200×) never needs a persist:
+      // it streams straight into the aggregate instead of materializing
+      // a multi-GB cache whose allocation churn dominated GC (the
+      // r13 sf20 probe measured 300 CPU-s of GC, 10× the invocation
+      // variance, in the cache-fill stage alone).
+      val families = Seq("d_cum_hzd" -> "cum_hzd", "d_cum_gail" -> "cum_gail",
+          "d_abs_risk" -> "abs_risk", "d_abs_risk_gail" -> "abs_risk_gail")
+        .filter { case (dc, _) => long.columns.contains(dc) }
+      val famAggs = families.flatMap { case (dc, ec) => Seq(
+        sum((lit(1.0) - col("__pi")) * col(dc) * col(dc)).as(s"v_$dc"),
+        max(col(ec)).as(s"e_$ec"),
+        (covar_samp(col(dc), col(dc)) * count(lit(1))).as(s"pps_$dc")) }
+      val famRows =
+        if (families.isEmpty) Array.empty[org.apache.spark.sql.Row]
+        else long.groupBy(col("t_star"), col("trt"))
+          .agg(famAggs.head, famAggs.tail: _*).collect()
+      // same one-job recombine for the β contractions: Poisson partials
+      // per sample + per-sample n·cov in a single groupBy(trt) aggregate
+      val bAggs = (0 until p).flatMap(j => Seq(
+        sum((lit(1.0) - col("__pi")) *
+          col(s"dbeta_m_$j") * col(s"dbeta_m_$j")).as(s"pois$j"),
+        (covar_samp(col(s"dbeta_m_$j"), col(s"dbeta_m_$j")) *
+          count(lit(1))).as(s"pps$j")))
+      val bRows = withDb.groupBy(col("trt"))
+        .agg(bAggs.head, bAggs.tail: _*).collect()
+      // a whole (t*, sample) group can come back NULL on any aggregate
+      // column (sum/max over an all-NULL group): treat NULL partials as
+      // 0.0 — exactly what the pre-recombine per-group aggregates did by
+      // ignoring NULL inputs
+      def nz(r: org.apache.spark.sql.Row, i: Int): Double =
+        if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+      def contract(dcol: String, ecol: String): Map[Double, Estimand] = {
+        if (!families.exists(_._1 == dcol)) return Map.empty
+        val fi = families.indexWhere(_._1 == dcol)
+        val byT = famRows.groupBy(_.getDouble(0))
+        tStar.map { t =>
+          val rs = byT(t)
+          val pois = rs.map(nz(_, 2 + 3 * fi)).sum
+          // a sample group can be all-NULL on the estimate column (the
+          // pre-grouped max ignored those rows; the recombine must too).
+          // Every sample NULL (a t* before any event / grid mass reaches
+          // either sample) ⇒ the cumulative estimand is identically 0.
+          val estVals = rs.filter(!_.isNullAt(3 + 3 * fi))
+            .map(_.getDouble(3 + 3 * fi))
+          val est = if (estVals.isEmpty) 0.0 else estVals.max
+          val pps = rs.map(nz(_, 4 + 3 * fi)).sum
+          t -> Estimand(est, pois, pps)
+        }.toMap
+      }
+      val lam = contract("d_cum_hzd", "cum_hzd")
+      val gail = if (lambdaStar.isDefined) contract("d_cum_gail", "cum_gail")
+        else Map.empty[Double, Estimand]
+      val absR = if (risk.isDefined) contract("d_abs_risk", "abs_risk")
+        else Map.empty[Double, Estimand]
+      val absRG = if (risk.isDefined && lambdaStar.isDefined)
+        contract("d_abs_risk_gail", "abs_risk_gail") else Map.empty[Double, Estimand]
 
-    val bPois = (0 until p).map(j =>
-      bRows.map(nz(_, 1 + 2 * j)).sum).toArray
-    val bPps = (0 until p).map(j =>
-      bRows.map(nz(_, 2 + 2 * j)).sum).toArray
+      val bPois = (0 until p).map(j =>
+        bRows.map(nz(_, 1 + 2 * j)).sum).toArray
+      val bPps = (0 until p).map(j =>
+        bRows.map(nz(_, 2 + 2 * j)).sum).toArray
 
-    allDevCache.unpersist(blocking = false)
-    IpswInference(gamma, fit.coefficients, bPois, bPps,
-      lam, gail, absR, absRG)
+      IpswInference(gamma, fit.coefficients, bPois, bPps,
+        lam, gail, absR, absRG)
+    } finally allDevCache.unpersist(blocking = false)
   }
 }

@@ -359,7 +359,7 @@ object RelationalQueries {
           .as("w_mean"))
     },
 
-    // ---- A4: Gram matrix X'WX via the custom vector-outer-product UDAF ----
+    // ---- A4: Gram matrix X'WX via the flat-column Gram builder ----
     sqlChecked("a4_gram",
       """SELECT
         |  ROUND(SUM(w), 6) AS g00,
@@ -375,11 +375,10 @@ object RelationalQueries {
         graft.core.FeatureArray.withIntercept(Seq(col("c_acctbal") / 1000.0)).as("x"),
         when(col("c_mktsegment") === "BUILDING", 1.0).otherwise(0.0).as("y"),
         (col("c_custkey") % 3 + 1.0).cast("double").as("w"))
-      val buf = base.as[(Seq[Double], Double, Double)]
-        .select(graft.core.NormalEqAgg.column(2)).head()
-      val r = graft.core.NormalEqAgg.Result(2, buf)
-      val Seq(g00, g01, g11) = r.gram.toSeq
-      val Seq(xy0, xy1) = r.xy.toSeq
+      val sums = graft.core.Gram.columns(
+        (0 until 2).map(i => col("x").getItem(i).cast("double")), col("w"), Some(col("y")))
+      val Array(g00, g01, g11, xy0, xy1) =
+        graft.core.Gram.read(base.agg(sums.head, sums.tail: _*).head(), 0, 5)
       Seq((rnd(g00), rnd(g01), rnd(g11), rnd(xy0), rnd(xy1)))
         .toDF("g00", "g01", "g11", "xy0", "xy1")
     },

@@ -639,10 +639,8 @@ object RelationalQueries3 {
       val ps = graft.stats.GLMReplicated.logistic(ex, col("jk_r"),
         Seq(lit(1.0), col("x")), col("trt"), col("jk_wt"), m,
         maxIter = 4, tol = 0.0)
-      val coxIn = cohortRep.join(broadcast(ps.gammaFrame(s)),
-          col("jk_r") === col("__r"))
-        .withColumn("__q",
-          element_at(col("__gamma"), 1) + element_at(col("__gamma"), 2) * col("x"))
+      val coxIn = cohortRep
+        .withColumn("__q", ps.coef(col("jk_r"), 0) + ps.coef(col("jk_r"), 1) * col("x"))
         .withColumn("__cw",
           when(col("jk_wt") === 0.0, 0.0).otherwise(exp(-col("__q")) / lit(A)))
       val fit = graft.stats.CoxPHReplicated.fit(coxIn, col("jk_r"), col("t"),

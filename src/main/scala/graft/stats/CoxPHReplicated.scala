@@ -1,24 +1,26 @@
 package graft.stats
 
-import graft.core.LinAlg
-import org.apache.spark.sql.expressions.Window
+import graft.core.Gram
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Vectorized-replicate weighted Cox fitting (SURVEY.md §7.4.5, M14×M2).
   *
   * The reference's delete-a-group jackknife re-runs `svycoxph` 90 times
   * sequentially (jk_fun.R:314-374). Here ALL replicates advance through
-  * Newton-Raphson together: each iteration is ONE distributed pass where
+  * Newton-Raphson together on the shared Newton driver: each iteration
+  * is ONE distributed pass where
   *
   *  - every row carries its replicate id and replicate weight (the
   *    exploded jackknife dimension),
-  *  - the current per-replicate β enters via a broadcast join on
-  *    replicate id (a tiny m×p frame), so rel-hazard, risk-set sums,
-  *    score and information are all computed per replicate inside the
-  *    same shuffle: groupBy(rep, t) then Window.partitionBy(rep) —
-  *    naturally parallel over replicates, no single-partition stage,
-  *  - the driver solves m tiny p×p systems and broadcasts the new βs.
+  *  - the current β of all replicates is ONE referenced m·p array
+  *    (functions.Coef.array); each row reads its β_r at index r·p + j,
+  *    so no coefficient frame is joined per iteration. Rel-hazard,
+  *    risk-set sums, score and information are CoxPH's pass with the
+  *    replicate as group key: groupBy(rep, t) then the grouped scan per
+  *    rep — naturally parallel over replicates, no single-partition
+  *    stage,
+  *  - the driver solves m tiny p×p systems.
   *
   * Total jobs = O(NR iterations), independent of replicate count —
   * the shape that survives 90 replicates × 100 TB.
@@ -35,109 +37,45 @@ object CoxPHReplicated {
   def fit(df: DataFrame, rep: Column, time: Column, event: Column,
       weight: Column, features: Seq[Column], m: Int,
       maxIter: Int = 15, tol: Double = 1e-8): RepFit = {
-    val spark = df.sparkSession
     val p = features.length
-    val x = features.indices.map(j => features(j).cast("double").as(s"__x$j"))
-    val cached = df.select((Seq(rep.cast("int").as("__r"),
-        time.cast("double").as("__t"), event.cast("double").as("__d"),
-        weight.cast("double").as("__w")) ++ x): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // leaf-plan view of the cache (see GraftSqlBridge.flattenPlan):
-    // every joint-NR pass re-plans a one-node tree, not the lineage
-    val base = org.apache.spark.sql.GraftSqlBridge.flattenPlan(cached)
-
-    val s2Pairs = for (j <- 0 until p; k <- j until p) yield (j, k)
-    var betas: Map[Int, Array[Double]] = (0 until m).map(_ -> new Array[Double](p)).toMap
-    var iter = 0
-    var done = false
+    val cols = Newton.replicateId(rep, m, "CoxPHReplicated").as("__r") +:
+      CoxPH.columns(time, event, weight, features)
     var maxResid = Double.MaxValue
 
-    // size the (replicate, time) step table ONCE — every NR iteration
-    // scans the same axis, so the small-vs-two-phase decision is paid a
-    // single head() probe, not one per iteration. The step table is
-    // m × |distinct t|, and m is known — probing distinct t alone keeps
-    // the probe a one-column distinct (map-side partials collapse the
-    // m-fold replication before the shuffle) instead of a distinct over
-    // the exploded (r, t) pairs.
-    val tBudget = math.max(1, 20000 / math.max(1, m))
-    val stepHint =
-      if (base.select(col("__t")).distinct()
-            .head(tBudget + 1).length <= tBudget)
-        graft.core.Windows.SizeHint.Small
-      else graft.core.Windows.SizeHint.Large
+    val res = Newton.run(df, cols, new Array[Double](m * p), maxIter, tol) { base =>
+      // size the (replicate, time) step table ONCE — every NR iteration
+      // scans the same axis, so the small-vs-two-phase decision is paid a
+      // single head() probe, not one per iteration. The step table is
+      // m × |distinct t|, and m is known — probing distinct t alone keeps
+      // the probe a one-column distinct (map-side partials collapse the
+      // m-fold replication before the shuffle) instead of a distinct over
+      // the exploded (r, t) pairs.
+      val tBudget = math.max(1, 20000 / math.max(1, m))
+      val stepHint =
+        if (base.select(col("__t")).distinct()
+              .head(tBudget + 1).length <= tBudget)
+          graft.core.Windows.SizeHint.Small
+        else graft.core.Windows.SizeHint.Large
 
-    while (iter < maxIter && !done) {
-      import spark.implicits._
-      val betaDf = betas.toSeq.map { case (r, b) => (r, b.toSeq) }
-        .toDF("__r", "__beta")
-      val withBeta = base.join(broadcast(betaDf), Seq("__r"))
-      val eta = (0 until p).map(j => col(s"__x$j") * element_at(col("__beta"), j + 1))
-        .foldLeft(lit(0.0): Column)(_ + _)
-      val withRel = withBeta.withColumn("__rel", exp(eta))
-
-      val aggExprs =
-        Seq(sum(col("__w") * col("__rel")).as("s0g"),
-          sum(when(col("__d") === 1.0, col("__w")).otherwise(0.0)).as("wd")) ++
-        (0 until p).map(j =>
-          sum(col("__w") * col("__rel") * col(s"__x$j")).as(s"s1g$j")) ++
-        (0 until p).map(j =>
-          sum(when(col("__d") === 1.0, col("__w") * col(s"__x$j")).otherwise(0.0))
-            .as(s"ux$j")) ++
-        s2Pairs.map { case (j, k) =>
-          sum(col("__w") * col("__rel") * col(s"__x$j") * col(s"__x$k"))
-            .as(s"s2g${j}_$k") }
-      val grouped = withRel.groupBy(col("__r"), col("__t"))
-        .agg(aggExprs.head, aggExprs.tail: _*)
-
-      // per-replicate risk-set suffix sums via the two-phase grouped
-      // scan: a bare `Window.partitionBy(__r)` caps parallelism at the
-      // replicate count AND funnels each replicate's whole time axis
-      // (data-sized for continuous times) through one task — the
-      // grouped-window trap. The grouped scan range-partitions on
-      // (__r, __t desc), so the step table parallelizes within a
-      // replicate too; tie-collapsed/monthly axes take the probed
-      // small path, which is the plain partitioned window.
-      val scanSums = Seq((col("s0g"), "S0")) ++
-        (0 until p).map(j => (col(s"s1g$j"), s"S1$j")) ++
-        s2Pairs.map { case (j, k) => (col(s"s2g${j}_$k"), s"S2${j}_$k") }
-      val relBuf = scala.collection.mutable.Buffer[DataFrame]()
-      val scanned = graft.core.Windows.groupedScan(grouped,
-        Seq(col("__r")), Seq(col("__t").desc), scanSums,
-        sizeHint = stepHint, release = Some(relBuf))
-
-      val uExprs = (0 until p).map { j =>
-        sum(col(s"ux$j") - col("wd") * col(s"S1$j") / col("S0")).as(s"U$j") }
-      val iExprs = s2Pairs.map { case (j, k) =>
-        sum(col("wd") * (col(s"S2${j}_$k") / col("S0") -
-          col(s"S1$j") * col(s"S1$k") / (col("S0") * col("S0")))).as(s"I${j}_$k") }
-      val rows: Array[Row] = scanned.filter(col("wd") > 0)
-        .groupBy(col("__r"))
-        .agg((uExprs ++ iExprs).head, (uExprs ++ iExprs).tail: _*)
-        .collect()
-      relBuf.foreach(_.unpersist(blocking = false))
-
-      var worstStep = 0.0
-      maxResid = 0.0
-      val next = rows.map { r =>
-        val repId = r.getInt(0)
-        val u = (0 until p).map(j => r.getDouble(1 + j)).toArray
-        val info = s2Pairs.indices.map(i => r.getDouble(1 + p + i)).toArray
-        val step = LinAlg.solvePacked(p, info, u)
-        val b = betas(repId).clone()
-        var j = 0
-        while (j < p) {
-          b(j) += step(j)
-          worstStep = math.max(worstStep, math.abs(step(j)))
-          j += 1
+      beta => {
+        val b = graft.functions.Coef.array(beta)
+        val eta = (0 until p).map(j =>
+            col(s"__x$j") * element_at(b, col("__r") * p + (j + 1)))
+          .foldLeft(lit(0.0): Column)(_ + _)
+        val rows = CoxPH.scoreRows(base, p, eta, Seq(col("__r")), stepHint)
+        // replicates with no events keep their β (a zero step)
+        maxResid = 0.0
+        val step = new Array[Double](m * p)
+        rows.foreach { r =>
+          val u = Gram.read(r, 1, p)
+          val s = Newton.step(p, Gram.read(r, 1 + p, p * (p + 1) / 2), u)
+          System.arraycopy(s, 0, step, r.getInt(0) * p, p)
+          maxResid = math.max(maxResid, u.map(math.abs).sum)
         }
-        maxResid = math.max(maxResid, u.map(math.abs).sum)
-        repId -> b
-      }.toMap
-      betas = betas ++ next
-      iter += 1
-      done = worstStep < tol
+        step
+      }
     }
-    cached.unpersist(blocking = false)
-    RepFit(betas, iter, maxResid)
+    RepFit((0 until m).map(r => r -> res.theta.slice(r * p, r * p + p)).toMap,
+      res.iterations, maxResid)
   }
 }

@@ -1,6 +1,6 @@
 package graft.stats
 
-import graft.core.LinAlg
+import graft.core.Gram
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 
@@ -11,16 +11,18 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * pseudo-weights and the downstream Cox fit are recomputed.
   *
   * The reference re-runs `svyglm` once per replicate, sequentially.
-  * Here all m replicates advance through IRLS together — the
-  * `CoxPHReplicated` pattern applied to M1's weighted logistic:
+  * Here all m replicates advance through IRLS together on the shared
+  * Newton driver — the `CoxPHReplicated` pattern applied to M1's
+  * weighted logistic:
   *
   *  - input is the exploded (unit × replicate) frame; each row carries
   *    its replicate id and replicate weight (0 for the dropped group),
-  *  - per iteration the current per-replicate γ enters via a broadcast
-  *    join on replicate id (a tiny m×p frame); μ, the p×p Hessian and
-  *    the score are aggregated groupBy(replicate) in ONE codegen'd
-  *    distributed pass,
-  *  - the driver solves m tiny p×p systems and broadcasts the new γs.
+  *  - the current γ of all replicates is ONE referenced m·p array
+  *    (functions.Coef.array); each row reads its γ_r at index r·p + j,
+  *    so no coefficient frame is joined per iteration. μ, the p×p
+  *    Hessian and the score are aggregated groupBy(replicate) in ONE
+  *    codegen'd distributed pass,
+  *  - the driver solves m tiny p×p systems.
   *
   * Jobs = O(IRLS iterations), independent of replicate count — the
   * shape that survives 90 replicates × 100 TB.
@@ -29,12 +31,14 @@ object GLMReplicated {
 
   final case class RepFit(gammas: Map[Int, Array[Double]], iterations: Int,
       maxStep: Double) {
-    /** Per-replicate linear predictor x'γ_r as a column, for a frame
-      * already carrying the broadcast-joined `__gamma` array. */
-    def gammaFrame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      import spark.implicits._
-      gammas.toSeq.map { case (r, g) => (r, g.toSeq) }
-        .toDF("__r", "__gamma")
+    /** γ_{r,j} for the replicate-id column `rep`, read from one
+      * referenced m·p array at index r·p + j (no join). */
+    def coef(rep: Column, j: Int): Column = {
+      val m = gammas.size
+      val p = gammas(0).length
+      val flat = Array.tabulate(m * p)(k => gammas(k / p)(k % p))
+      element_at(graft.functions.Coef.array(flat),
+        Newton.replicateId(rep, m, "GLMReplicated.RepFit") * p + (j + 1))
     }
   }
 
@@ -49,61 +53,32 @@ object GLMReplicated {
   def logistic(df: DataFrame, rep: Column, features: Seq[Column],
       label: Column, weight: Column, m: Int,
       maxIter: Int = 25, tol: Double = 1e-9): RepFit = {
-    val spark = df.sparkSession
     val p = features.length
-    val cached = df.select((Seq(rep.cast("int").as("__r"),
+    val cols = Seq(Newton.replicateId(rep, m, "GLMReplicated").as("__r"),
         label.cast("double").as("__y"), weight.cast("double").as("__w")) ++
-      features.indices.map(j => features(j).cast("double").as(s"__f$j"))): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // leaf-plan view of the cache (see GraftSqlBridge.flattenPlan):
-    // every joint-IRLS pass re-plans a one-node tree, not the lineage
-    val base = org.apache.spark.sql.GraftSqlBridge.flattenPlan(cached)
-
-    val pairs = for (i <- 0 until p; j <- i until p) yield (i, j)
-    val tri = pairs.length
-    var gammas: Map[Int, Array[Double]] =
-      (0 until m).map(_ -> new Array[Double](p)).toMap
-    var iter = 0
-    var done = false
-    var worst = Double.MaxValue
-
-    while (iter < maxIter && !done) {
-      import spark.implicits._
-      val gDf = gammas.toSeq.map { case (r, g) => (r, g.toSeq) }
-        .toDF("__r", "__g")
-      val eta = (0 until p).map(j =>
-          col(s"__f$j") * element_at(col("__g"), j + 1))
+      features.indices.map(j => features(j).cast("double").as(s"__f$j"))
+    val f = (0 until p).map(j => col(s"__f$j"))
+    val tri = p * (p + 1) / 2
+    val res = Newton.run(df, cols, new Array[Double](m * p), maxIter, tol) { base => gamma =>
+      val g = graft.functions.Coef.array(gamma)
+      val eta = f.indices.map(j =>
+          f(j) * element_at(g, col("__r") * p + (j + 1)))
         .foldLeft(lit(0.0): Column)(_ + _)
-      val withMu = base.join(broadcast(gDf), Seq("__r"))
-        .withColumn("__mu", lit(1.0) / (lit(1.0) + exp(-eta)))
-      val sWgt = col("__w") * col("__mu") * (lit(1.0) - col("__mu"))
-      val resid = col("__w") * (col("__y") - col("__mu"))
-      val aggs = pairs.map { case (i, j) =>
-          sum(sWgt * col(s"__f$i") * col(s"__f$j")).as(s"h${i}_$j") } ++
-        (0 until p).map(i => sum(resid * col(s"__f$i")).as(s"g$i"))
+      val withMu = base.withColumn("__mu", lit(1.0) / (lit(1.0) + exp(-eta)))
+      val aggs =
+        Gram.columns(f, col("__w") * col("__mu") * (lit(1.0) - col("__mu"))) ++
+        Gram.linear(f, col("__w") * (col("__y") - col("__mu")))
       val rows: Array[Row] = withMu.groupBy(col("__r"))
         .agg(aggs.head, aggs.tail: _*).collect()
-
-      worst = 0.0
-      val next = rows.map { r =>
-        val repId = r.getInt(0)
-        val hess = (0 until tri).map(i => r.getDouble(1 + i)).toArray
-        val grad = (0 until p).map(i => r.getDouble(1 + tri + i)).toArray
-        val step = LinAlg.solvePacked(p, hess, grad)
-        val g = gammas(repId).clone()
-        var j = 0
-        while (j < p) {
-          g(j) += step(j)
-          worst = math.max(worst, math.abs(step(j)))
-          j += 1
-        }
-        repId -> g
-      }.toMap
-      gammas = gammas ++ next
-      iter += 1
-      done = worst < tol
+      // replicates with no rows keep their γ (a zero step)
+      val step = new Array[Double](m * p)
+      rows.foreach { r =>
+        val s = Newton.step(p, Gram.read(r, 1, tri), Gram.read(r, 1 + tri, p))
+        System.arraycopy(s, 0, step, r.getInt(0) * p, p)
+      }
+      step
     }
-    cached.unpersist(blocking = false)
-    RepFit(gammas, iter, worst)
+    RepFit((0 until m).map(r => r -> res.theta.slice(r * p, r * p + p)).toMap,
+      res.iterations, res.maxStep)
   }
 }

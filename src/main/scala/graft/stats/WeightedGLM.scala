@@ -1,20 +1,17 @@
 package graft.stats
 
-import breeze.linalg.{DenseMatrix, DenseVector}
-import graft.core.{LinAlg, NormalEqAgg}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import graft.core.{Gram, LinAlg}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Design-weighted GLMs (SURVEY.md M1/M3).
   *
   * M1: weighted logistic regression — the reference's
   * `svyglm(trt ~ ..., family=binomial)` propensity / outcome models
   * (simu_fun.R:29-31,67-68; taylor_deviate.R:8). Implemented as explicit
-  * IRLS: each iteration is ONE distributed pass (a custom typed
-  * aggregate computing the p×p Hessian and p-gradient at the current β)
-  * followed by a driver-side Breeze solve. p ≤ ~6, ~8 iterations —
+  * IRLS on the shared Newton driver: each iteration is ONE distributed
+  * pass (flat Gram sums for the p×p Hessian and p-gradient at the
+  * current β) followed by a driver-side Breeze solve. p ≤ ~6, ~8 iterations —
   * O(iterations) shuffle-free scans over a cached input, never a
   * per-row collect.
   *
@@ -70,9 +67,11 @@ object WeightedGLM {
       (mu, mu)
     }
 
-  /** Shared IRLS driver: `family(η)` returns (μ, Var(μ)) as columns —
-    * the mean and the working-weight variance function at the current
-    * linear predictor. */
+  /** IRLS on the shared Newton driver: `family(η)` returns (μ, Var(μ))
+    * as columns — the mean and the working-weight variance function at
+    * the current linear predictor. Each pass is one codegen'd hash
+    * aggregate over the flattened features: the Hessian Σ w·V(μ)·x xᵀ
+    * and the score Σ w·(y − μ)·x. */
   private def irls(
       df: DataFrame,
       features: Column,
@@ -81,74 +80,32 @@ object WeightedGLM {
       p: Int,
       maxIter: Int,
       tol: Double)(family: Column => (Column, Column)): Fit = {
-    // flatten the feature array to scalar columns once so every IRLS
-    // pass is a plain codegen'd hash aggregate (the typed-Aggregator
-    // formulation paid encoder deserialization per row per iteration —
-    // measured several× slower on wide inputs)
-    val cached = df.select(((0 until p).map(i =>
+    val cols = (0 until p).map(i =>
         features.getItem(i).cast("double").as(s"__f$i")) ++
-      Seq(label.cast("double").as("__y"), weight.cast("double").as("__w"))): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // leaf-plan view of the cache: each IRLS pass re-plans a one-node
-    // tree instead of re-analyzing the caller's full upstream lineage
-    val flat = org.apache.spark.sql.GraftSqlBridge.flattenPlan(cached)
-
+      Seq(label.cast("double").as("__y"), weight.cast("double").as("__w"))
+    val f = (0 until p).map(i => col(s"__f$i"))
     val tri = p * (p + 1) / 2
-    val pairs = for (i <- 0 until p; j <- i until p) yield (i, j)
-    var beta = new Array[Double](p)
-    var iter = 0
-    var converged = false
     var lastHessian = new Array[Double](tri)
-    while (iter < maxIter && !converged) {
-      // β enters as referenced values (functions.Coef.at), not inlined
-      // literals: the generated code is identical every iteration (and
-      // across same-p fits), so only iteration 1 ever pays a Janino
-      // compile. Reads the same double the literal held — the fixed
-      // point is bit-identical.
-      val eta = (0 until p).map(i =>
-          graft.functions.Coef.at(beta, i) * col(s"__f$i"))
+    val res = Newton.run(df, cols, new Array[Double](p), maxIter, tol) { flat => beta =>
+      val eta = f.indices.map(i => graft.functions.Coef.at(beta, i) * f(i))
         .foldLeft(lit(0.0): Column)(_ + _)
       val (mu, varFn) = family(eta)
-      val sWgt = col("__w") * varFn
-      val resid = col("__w") * (col("__y") - mu)
-      val aggs = pairs.map { case (i, j) =>
-        sum(sWgt * col(s"__f$i") * col(s"__f$j")).as(s"h${i}_$j") } ++
-        (0 until p).map(i => sum(resid * col(s"__f$i")).as(s"g$i"))
+      val aggs = Gram.columns(f, col("__w") * varFn) ++
+        Gram.linear(f, col("__w") * (col("__y") - mu))
       val row = flat.agg(aggs.head, aggs.tail: _*).head()
-      lastHessian = (0 until tri).map(row.getDouble).toArray
-      val grad = (0 until p).map(i => row.getDouble(tri + i)).toArray
-      val step = LinAlg.solvePacked(p, lastHessian, grad)
-      var i = 0
-      var maxStep = 0.0
-      while (i < p) {
-        beta(i) += step(i)
-        maxStep = math.max(maxStep, math.abs(step(i)))
-        i += 1
-      }
-      iter += 1
-      converged = maxStep < tol
+      lastHessian = Gram.read(row, 0, tri)
+      Newton.step(p, lastHessian, Gram.read(row, tri, p))
     }
-    cached.unpersist(blocking = false)
-    Fit(beta, iter, converged, lastHessian)
+    Fit(res.theta, res.iterations, res.converged, lastHessian)
   }
 
   /** Weighted least squares: solve (X'WX) β = X'Wy in one pass. */
   def wls(df: DataFrame, features: Column, y: Column, weight: Column, p: Int): Fit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df.select(features.cast("array<double>"), y.cast("double"), weight.cast("double"))
-      .as[(Seq[Double], Double, Double)]
-    val buf = ds.select(NormalEqAgg.column(p)).head()
-    val res = NormalEqAgg.Result(p, buf)
-    val beta = LinAlg.solvePacked(p, res.gram, res.xy)
-    Fit(beta, 1, converged = true, res.gram)
-  }
-
-  /** Weighted mean of y: Σw·y / Σw (A3; svymean, simu_fun.R:315). */
-  def weightedMean(df: DataFrame, y: Column, weight: Column): Double = {
-    val r = df.agg(
-      sum(weight * y).cast("double").as("swy"),
-      sum(weight).cast("double").as("sw")).head()
-    r.getDouble(0) / r.getDouble(1)
+    val x = (0 until p).map(i => features.getItem(i).cast("double"))
+    val aggs = Gram.columns(x, weight.cast("double"), Some(y.cast("double")))
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val gram = Gram.read(row, 0, p * (p + 1) / 2)
+    val beta = LinAlg.solvePacked(p, gram, Gram.read(row, gram.length, p))
+    Fit(beta, 1, converged = true, gram)
   }
 }

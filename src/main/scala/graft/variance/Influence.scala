@@ -39,14 +39,6 @@ object Influence {
     df.agg(sum((lit(1.0) - pi.cast("double")) * deviate * deviate))
       .head().getDouble(0)
 
-  /** PPS-with-replacement style variance: n·cov(Δ) per stratum summed
-    * (cov path, taylor_deviate.R:490,562). For a single column this is
-    * n·Σ(Δ−Δ̄)²/(n−1). */
-  def ppsVarianceOfTotal(df: DataFrame, deviate: Column): Double = {
-    val r = df.agg(count(lit(1)).cast("double"), var_samp(deviate)).head()
-    r.getDouble(0) * r.getDouble(1)
-  }
-
   /** Sandwich variance for the logistic fit under Poisson sampling
     * (`v_Poisson`, simu_fun.R:231-263): H⁻¹ M H⁻¹ with
     * M = Σ (1−π_i) s_i s_iᵀ, s_i = w_i(y_i−μ_i)x_i. Returns the p×p

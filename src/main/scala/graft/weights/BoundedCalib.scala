@@ -1,6 +1,7 @@
 package graft.weights
 
-import graft.core.LinAlg
+import graft.core.Gram
+import graft.stats.Newton
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -15,9 +16,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * F(u) = (L(U−1) + U(1−L)·z) / ((U−1) + (1−L)·z),  z = e^{A·u},
   * A = (U−L)/((1−L)(U−1));   F(0) = 1, L < F < U, F' > 0.
   *
-  * Scale shape (same discipline as the IRLS/GREG drivers): each Newton
-  * step is ONE codegen'd hash aggregate over the sample producing a
-  * p-vector residual and p×p Jacobian; only those p(p+3)/2 doubles
+  * Scale shape (the shared Newton driver, stats/Newton.scala): each
+  * Newton step is ONE codegen'd hash aggregate over the sample producing
+  * a p-vector residual and p×p Jacobian; only those p(p+3)/2 doubles
   * reach the driver. Iteration count is pinned by the caller so a
   * second engine can replay the fixed point exactly.
   */
@@ -28,46 +29,36 @@ object BoundedCalib {
     * weight `d`, against population totals `targets`. */
   def solve(df: DataFrame, xs: Seq[Column], d: Column,
       targets: Array[Double], l: Double, u: Double,
-      iters: Int): Array[Double] = {
+      iters: Int): Array[Double] =
+    newton(df, xs, d, targets, l, u, iters, cramer = targets.length == 2)
+
+  /** `iters` pinned Newton steps on the shared driver; `cramer` takes the
+    * closed-form 2×2 step (p = 2 only) instead of the LU solve. */
+  private[graft] def newton(df: DataFrame, xs: Seq[Column], d: Column,
+      targets: Array[Double], l: Double, u: Double, iters: Int,
+      cramer: Boolean): Array[Double] = {
     val p = targets.length
     require(xs.length == p, s"need ${targets.length} x-columns, got ${xs.length}")
-    val cols = xs.zipWithIndex.map { case (c, i) => c.cast("double").as(s"x$i") }
-    val base = df.select(cols :+ d.cast("double").as("d"): _*).persist()
-    try {
-      var lambda = Array.fill(p)(0.0)
-      for (_ <- 1 to iters) {
-        // λ as referenced values, not inlined literals: identical
-        // generated code every Newton step → codegen-cache hit after
-        // step 1 (functions.Coef.at; bit-identical arithmetic)
-        val (fExpr, fpExpr) = distance(
-          (0 until p).map(j =>
-            col(s"x$j") * graft.functions.Coef.at(lambda, j)).reduce(_ + _), l, u)
-        val aggs =
-          (0 until p).map(j => sum(col("d") * fExpr * col(s"x$j")).as(s"r$j")) ++
-          (for (j <- 0 until p; k <- j until p) yield
-            sum(col("d") * fpExpr * col(s"x$j") * col(s"x$k")).as(s"j${j}_$k"))
-        val row = base.agg(aggs.head, aggs.tail: _*).head()
-        val r = Array.tabulate(p)(j => targets(j) - row.getDouble(j))
-        if (p == 2) {
-          // closed-form 2×2 step in the EXACT operation order a SQL
-          // replay writes it — keeps the two engines' fixed points
-          // bit-aligned instead of LU-vs-Cramer ulp drift
-          val (j00, j01, j11) = (row.getDouble(2), row.getDouble(3), row.getDouble(4))
-          val det = j00 * j11 - j01 * j01
-          lambda = Array(lambda(0) + (j11 * r(0) - j01 * r(1)) / det,
-            lambda(1) + (j00 * r(1) - j01 * r(0)) / det)
-        } else {
-          val jm = breeze.linalg.DenseMatrix.zeros[Double](p, p)
-          var idx = p
-          for (j <- 0 until p; k <- j until p) {
-            jm(j, k) = row.getDouble(idx); jm(k, j) = jm(j, k); idx += 1
-          }
-          val delta = LinAlg.solve(jm, breeze.linalg.DenseVector(r))
-          lambda = Array.tabulate(p)(j => lambda(j) + delta(j))
-        }
-      }
-      lambda
-    } finally { base.unpersist(); () }
+    require(!cramer || p == 2, "the closed-form step is 2×2 only")
+    val cols = xs.zipWithIndex.map { case (c, i) => c.cast("double").as(s"x$i") } :+
+      d.cast("double").as("d")
+    val x = (0 until p).map(j => col(s"x$j"))
+    Newton.run(df, cols, new Array[Double](p), iters, tol = 0.0) { base => lambda =>
+      val (fExpr, fpExpr) = distance(
+        x.indices.map(j => x(j) * graft.functions.Coef.at(lambda, j)).reduce(_ + _), l, u)
+      val aggs = Gram.linear(x, col("d") * fExpr) ++ Gram.columns(x, col("d") * fpExpr)
+      val row = base.agg(aggs.head, aggs.tail: _*).head()
+      val r = Array.tabulate(p)(j => targets(j) - row.getDouble(j))
+      val jac = Gram.read(row, p, p * (p + 1) / 2)
+      if (cramer) {
+        // closed-form 2×2 step in the EXACT operation order a SQL
+        // replay writes it — keeps the two engines' fixed points
+        // bit-aligned instead of LU-vs-Cramer ulp drift
+        val Array(j00, j01, j11) = jac
+        val det = j00 * j11 - j01 * j01
+        Array((j11 * r(0) - j01 * r(1)) / det, (j00 * r(1) - j01 * r(0)) / det)
+      } else Newton.step(p, jac, r)
+    }.theta
   }
 
   /** The calibration factor F(x'λ) as a column expression. */

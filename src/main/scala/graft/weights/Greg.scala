@@ -1,6 +1,6 @@
 package graft.weights
 
-import graft.core.{LinAlg, NormalEqAgg}
+import graft.core.{Gram, LinAlg}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   *   f_i = 1 + (V − V̂)' (Σ w x x')⁻¹ x_i,   V̂_j = Σ w_i x_ij
   *
-  * One distributed pass (the NormalEqAgg Gram aggregate) → p×p driver
+  * One distributed pass (flat Gram sums plus V̂) → p×p driver
   * solve → the coefficient vector broadcasts back as literals inside a
   * codegen'd per-row expression. The n×n Jacobian the reference refuses
   * to materialize stays factored here too: downstream variance uses the
@@ -29,27 +29,18 @@ object Greg {
   final case class Calibration(lambda: Array[Double], totalsHat: Array[Double],
       gramPacked: Array[Double])
 
-  /** Solve for the calibration coefficient λ = (X'WX)⁻¹(V − V̂). */
+  /** Solve for the calibration coefficient λ = (X'WX)⁻¹(V − V̂): the
+    * Gram and V̂_j = Σ w·x_j come from ONE aggregate. */
   def solve(df: DataFrame, features: Column, weight: Column, targets: Array[Double]): Calibration = {
     val p = targets.length
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df.select(features.cast("array<double>"), lit(0.0), weight.cast("double"))
-      .as[(Seq[Double], Double, Double)]
-    val buf = ds.select(NormalEqAgg.column(p)).head()
-    val res = NormalEqAgg.Result(p, buf)
-    // V̂_j = Σ w·x_j: recover from the Gram's intercept row if features
-    // include an intercept; compute directly otherwise.
-    val vhat = totals(df, features, weight, p)
+    val w = weight.cast("double")
+    val x = (0 until p).map(j => features.getItem(j).cast("double"))
+    val aggs = Gram.columns(x, w) ++ Gram.linear(x, w)
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val gram = Gram.read(row, 0, p * (p + 1) / 2)
+    val vhat = Gram.read(row, gram.length, p)
     val diff = targets.zip(vhat).map { case (v, h) => v - h }
-    Calibration(LinAlg.solvePacked(p, res.gram, diff), vhat, res.gram)
-  }
-
-  def totals(df: DataFrame, features: Column, weight: Column, p: Int): Array[Double] = {
-    val exprs = (0 until p).map(j =>
-      sum(weight.cast("double") * features.getItem(j)).as(s"v$j"))
-    val row = df.agg(exprs.head, exprs.tail: _*).head()
-    (0 until p).map(row.getDouble).toArray
+    Calibration(LinAlg.solvePacked(p, gram, diff), vhat, gram)
   }
 
   /** The per-row calibration factor f_i as a codegen'd expression. */

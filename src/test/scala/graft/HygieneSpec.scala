@@ -96,7 +96,7 @@ class HygieneSpec extends AnyFunSuite {
   test("no Scala UDFs in main (functions/Expressions only)") {
     // `udf(` would leave whole-stage codegen and lose Catalyst
     // optimization on the hot path; every extension point is a native
-    // Expression (functions/VectorExpressions, core/GramAgg UDAF).
+    // Expression (functions/VectorExpressions, functions/CoefExpressions).
     val hits = sites("""(?<![\w.])udf\(""")
     assert(hits.isEmpty, s"Scala udf() in main:\n${hits.mkString("\n")}")
   }
@@ -137,7 +137,7 @@ class HygieneSpec extends AnyFunSuite {
       "Bench.scala" -> 2,                    // bench plumbing, not an operator
       "core/Windows.scala" -> 1,             // per-partition totals (numParts rows)
       "core/AsOf.scala" -> 1,                // per-partition boundary carries
-      "stats/CoxPHReplicated.scala" -> 1,    // p×p NR step per replicate batch
+      "stats/CoxPH.scala" -> 1,              // p×p NR step per fit / replicate batch
       "stats/GLMReplicated.scala" -> 1,      // p×p IRLS step per replicate batch
       "stats/WeightedQuantile.scala" -> 1,   // ≤q quantile boundaries
       "llm/HeavyHitters.scala" -> 1,         // k sketch rows
@@ -166,6 +166,30 @@ class HygieneSpec extends AnyFunSuite {
     val hits = sites("""crossJoin\(""")
       .filterNot(_.contains("broadcast("))
     assertCapped("crossJoin without same-line broadcast(...)", hits, allow)
+  }
+
+  test("no typed Aggregator UDAFs in main (flat sum columns instead)") {
+    // A typed Aggregator deserializes every row through an encoder and
+    // runs outside whole-stage codegen; Gram / normal-equation sums are
+    // flat `sum` columns (core/Gram). The one exception keeps state that
+    // no fixed set of sums can hold:
+    //   llm/HeavyHitters.scala — the Misra–Gries counter map
+    val allow = Map("llm/HeavyHitters.scala" -> 1)
+    assertCapped("extends Aggregator", sites("""extends\s+Aggregator\b"""), allow)
+  }
+
+  test("driver linear solves only in the Newton driver and one-shot solves") {
+    // Every iterative fitter steps through stats/Newton.scala, which owns
+    // the cache lifecycle and the stop rule; a solve anywhere else is
+    // either a one-shot normal-equation solve (pinned below) or a new
+    // hand-rolled Newton loop, which must move onto the driver.
+    val allow = Map(
+      "stats/Newton.scala" -> 1,          // Newton.step, shared by every fitter
+      "stats/WeightedGLM.scala" -> 1,     // wls: one Gram solve
+      "weights/Greg.scala" -> 1,          // GREG: one Gram solve
+      "variance/JointVariance.scala" -> 1) // M⁻¹·s_j for GREG-corrected deviates
+    assertCapped("LinAlg.solve / LinAlg.solvePacked",
+      sites("""LinAlg\.solve(Packed)?\("""), allow)
   }
 
   test(".rdd access only for partition-count probes") {
