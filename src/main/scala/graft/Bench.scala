@@ -24,40 +24,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The default 100-entry whole-stage-codegen cache thrashes on this
-      // catalog: 244 queries × several codegen units each evict every
-      // entry long before a query re-runs, so EVERY pass re-Janino-
-      // compiles every pipeline (measured: pass-1 304 s vs pass-2 185 s
-      // with the cache sized; pass-2 ≈ pass-1 without). Sized to hold
-      // the catalog's generated classes (bounded metaspace, a few MB of
-      // bytecode); core-count independent — any driver running this
-      // many distinct queries per session needs it. Env-overridable for
-      // probes.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // With shuffle.partitions = cpus (32 locally) every shuffle sits
-      // under the 200-partition bypass-merge threshold, so Spark uses
-      // BypassMergeSortShuffleWriter: R temp files PER MAP TASK, created,
-      // written and concatenated per shuffle. Thread-sampling the 32-core
-      // anti-scalers (g_pagerank, d9, d17, mm_phash) showed the plurality
-      // of task time in copyFileStreamNIO/DiskBlockObjectWriter.initialize
-      // — file machinery, not query work. At production scale partitions
-      // ≫ 200 so bypass never fires and the serialized sort writer (one
-      // file per map task) is what runs; pinning the threshold below the
-      // local partition count makes the local writer match the at-scale
-      // writer instead of measuring filesystem contention. Env-overridable
-      // for probes; results unaffected (writer choice is plan-invisible).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .getOrCreate()
+    val spark = SparkEntry.session(4)
     spark.sparkContext.setLogLevel("WARN")
 
     // Per-query spill tracking (task-metrics listener): at sf>=10 the

@@ -1,29 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: dump `.explain("formatted")` for named
   * queries to files, so plan claims in OPTIMIZATION_r*.md are checkable
   * without running Spark (plans/rNN/&lt;query&gt;_{before,after}.txt).
   *
   * Usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...|all>
-  * Writes <outDir>/<name>_<suffix>.txt per query. Same session config
-  * as Bench (AQE on, shuffle.partitions = cpus) so the initial plans
-  * match what the bench executes.
+  * Writes <outDir>/<name>_<suffix>.txt per query. Same session as Bench
+  * (SparkEntry.session) so the initial plans match what the bench
+  * executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, qlist) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
+    val spark = SparkEntry.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val names =

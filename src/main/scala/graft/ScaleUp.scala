@@ -41,13 +41,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ScaleUp {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(16)
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 10)

@@ -46,4 +46,38 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     catalog.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The one local session of the CLI mains (Bench, Verify, PlanDump,
+    * ScaleUp), so a plan dump, a verify pass and a scale-up tier all run
+    * in the session Bench times: local[SPARK_GRAFT_CPUS] (else
+    * `defaultCpus`) with shuffle.partitions = cpus, AQE on, UTC, no UI.
+    * The last two settings move harness wall-clock only; results and
+    * plans are unaffected:
+    *  - the default 100-entry whole-stage-codegen cache thrashes on this
+    *    catalog: 244 queries × several codegen units each evict every
+    *    entry long before a query re-runs, so EVERY pass re-Janino-
+    *    compiles every pipeline (measured: pass-1 304 s vs pass-2 185 s
+    *    with the cache sized; pass-2 ≈ pass-1 without). 4096 entries hold
+    *    the catalog's generated classes (a few MB of bytecode);
+    *  - with shuffle.partitions = cpus (32 locally) every shuffle sits
+    *    under the 200-partition bypass-merge threshold, so Spark uses
+    *    BypassMergeSortShuffleWriter: R temp files PER MAP TASK.
+    *    Thread-sampling the 32-core anti-scalers (g_pagerank, d9, d17,
+    *    mm_phash) showed the plurality of task time in
+    *    copyFileStreamNIO/DiskBlockObjectWriter.initialize. At production
+    *    scale partitions ≫ 200 and the serialized sort writer (one file
+    *    per map task) runs; pinning the threshold to 1 makes the local
+    *    writer match it instead of measuring filesystem contention. */
+  def session(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .getOrCreate()
+  }
 }

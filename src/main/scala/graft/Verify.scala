@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,24 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(n: String) = only.forall(_.contains(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 244 distinct queries per session thrash the default 100-entry
-      // codegen cache (see Bench.scala) — sizing it here only speeds the
-      // harness wall-clock, results are unaffected
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // match the at-scale shuffle writer locally (see Bench.scala): with
-      // partitions = cpus < 200 the bypass-merge writer's per-map-task
-      // file fan-out dominates small stages at 32 cores; harness
-      // wall-clock only, results unaffected
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .getOrCreate()
+    val spark = SparkEntry.session(4)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // a query that throws must NEVER just vanish from the artifact set —

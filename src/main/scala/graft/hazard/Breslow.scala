@@ -8,40 +8,27 @@ import org.apache.spark.sql.{Column, DataFrame}
   * `cum_bsln_hzd` (taylor_deviate.R:1023-1055).
   *
   *   Λ0(t*) = Σ_{event times u <= t*}  N(u) / S0(u)
-  *   N(u)   = Σ_i w_i d_i 1{t_i = u}          (tied-event weight sum)
-  *   S0(u)  = Σ_i w_i e^{x_i'β} 1{t_i >= u}   (risk-set denominator)
   *
-  * Pipeline: tie-collapse groupBy(t) → distributed suffix scan for S0 →
-  * prefix scan of N/S0 over event times → as-of lookup at the t* grid.
-  * Mirrors the reference's sort + rev-cumsum + dedup + cumsum chain
-  * (O1+O3+O5+O4+J5) with no single-partition stage.
+  * Breslow's S0 is the RiskSet total Z, so N/S0 is DiscreteHazard's λ
+  * and Λ0 is its prefix cumsum: RiskSet tie-collapse + suffix scan →
+  * prefix scan of λ over event times → as-of lookup at the t* grid. No
+  * single-partition stage unless `sizeHint` is Small.
   */
 object Breslow {
 
-  /** Step table of (t, cum_hzd) at event times. `relHzd` is e^{x'β}
-    * (lit(1.0) for the null model). `sizeHint` describes the
+  /** Step table of (t, lambda, cum_hzd) at event times. `relHzd` is
+    * e^{x'β} (lit(1.0) for the null model). `sizeHint` describes the
     * TIE-COLLAPSED table (distinct event times) — pass Small when the
     * time domain is known coarse (discrete grids, binned ages) to
     * collapse the whole chain into single-window jobs with no probes. */
   def cumulativeHazardSteps(
       df: DataFrame, time: Column, event: Column, weight: Column,
       relHzd: Column,
-      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame = {
-    val base = df.select(time.cast("double").as("t"),
-      event.cast("double").as("d"),
-      weight.cast("double").as("w"),
-      relHzd.cast("double").as("rel"))
-    val grouped = base.groupBy(col("t")).agg(
-      sum(col("w") * col("rel")).as("s0g"),
-      sum(when(col("d") === 1.0, col("w")).otherwise(0.0)).as("num"))
-    val withS0 = Windows.scan(grouped, Seq(col("t").desc),
-      Seq(col("s0g") -> "S0"), sizeHint = sizeHint)
-    val events = withS0.filter(col("num") > 0.0)
-      .withColumn("lambda", col("num") / col("S0"))
-    Windows.scan(events, Seq(col("t")), Seq(col("lambda") -> "cum_hzd"),
-        sizeHint = sizeHint)
+      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame =
+    DiscreteHazard.cumulative(
+        DiscreteHazard.steps(df, time, event, weight, relHzd, sizeHint),
+        sizeHint)
       .select(col("t"), col("lambda"), col("cum_hzd"))
-  }
 
   /** Λ0 evaluated at the probe grid (reference t* = 1..15,
     * calib_simu_noninf0315.R:122). */

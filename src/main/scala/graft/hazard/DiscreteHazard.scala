@@ -8,13 +8,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (SURVEY.md M9) — the reference's `lambda.ar_w`
   * (taylor_deviate.R:746-883):
   *
-  *   N(u)  = Σ w_i d_i 1{t_i = u}
-  *   Z(u)  = Σ w_i rh_i 1{t_i >= u}   (rh = e^{x'β} relative hazard)
-  *   Y(u)  = Σ w_i 1{t_i >= u}
   *   λ(u)  = N(u)/Z(u),   ar(u) = 1 − Y(u)/Z(u)
   *
-  * One tie-collapse aggregation + one multi-column distributed suffix
-  * scan produces all three risk-set totals in a single pass.
+  * over the event rows (N > 0) of the RiskSet step table.
   */
 object DiscreteHazard {
 
@@ -22,21 +18,12 @@ object DiscreteHazard {
     * `sizeHint` describes the tie-collapsed table (distinct times). */
   def steps(df: DataFrame, time: Column, event: Column, weight: Column,
       relHzd: Column,
-      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame = {
-    val base = df.select(time.cast("double").as("t"),
-      event.cast("double").as("d"), weight.cast("double").as("w"),
-      relHzd.cast("double").as("rh"))
-    val grouped = base.groupBy(col("t")).agg(
-      sum(when(col("d") === 1.0, col("w")).otherwise(0.0)).as("num"),
-      sum(col("w") * col("rh")).as("zg"),
-      sum(col("w")).as("yg"))
-    Windows.scan(grouped, Seq(col("t").desc),
-        Seq(col("zg") -> "Z", col("yg") -> "Y"), sizeHint = sizeHint)
-      .filter(col("num") > 0.0)
-      .select(col("t"), col("num").as("N"), col("Z"), col("Y"),
-        (col("num") / col("Z")).as("lambda"),
+      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame =
+    RiskSet.steps(df, time, event, weight, relHzd, sizeHint = sizeHint)
+      .filter(col("N") > 0.0)
+      .select(col("t"), col("N"), col("Z"), col("Y"),
+        (col("N") / col("Z")).as("lambda"),
         (lit(1.0) - col("Y") / col("Z")).as("ar"))
-  }
 
   /** Prefix-cumulated hazard Λ(t) over the step table (M10, `Lambda_w`
     * taylor_deviate.R:885-900). */

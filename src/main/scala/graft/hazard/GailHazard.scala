@@ -60,22 +60,18 @@ object GailHazard {
     * set; with a grid, events aggregate per interval (0,t₁],(t₁,t₂],…
     * and the interval rate is Σ N over the interval divided by the risk
     * set at the interval's LAST event time (the reference's keep-last
-    * dedup, `!rev(duplicated(rev(t_int)))`).
+    * dedup, `!rev(duplicated(rev(t_int)))`). N and Y come from the
+    * RiskSet table at rh = 1.
     */
   def lambdaStarPop(pop: DataFrame, time: Column, event: Column, weight: Column,
       tStarGrid: Seq[Double] = Nil,
       sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame = {
-    val base = pop.select(time.cast("double").as("t"),
-      event.cast("double").as("d"), weight.cast("double").as("w"))
-    val grouped = base.groupBy(col("t")).agg(
-      sum(when(col("d") === 1.0, col("w")).otherwise(0.0)).as("num"),
-      sum(col("w")).as("yg"))
-    val steps = Windows.scan(grouped, Seq(col("t").desc),
-        Seq(col("yg") -> "risk"), sizeHint = sizeHint)
-      .filter(col("num") > 0.0)
+    val steps = RiskSet.steps(pop, time, event, weight, lit(1.0),
+        sizeHint = sizeHint)
+      .filter(col("N") > 0.0)
     if (tStarGrid.isEmpty)
-      steps.select(col("t"), (col("num") / col("risk")).as("lambda_star"),
-        col("num").as("event_set"), col("risk").as("risk_set"))
+      steps.select(col("t"), (col("N") / col("Y")).as("lambda_star"),
+        col("N").as("event_set"), col("Y").as("risk_set"))
     else {
       val grid = tStarGrid.sorted
       // bin index = number of grid points strictly below t ((t_k, t_k+1])
@@ -84,8 +80,8 @@ object GailHazard {
       steps.withColumn("__bin", bin)
         .groupBy(col("__bin"))
         .agg(max(col("t")).as("t"),
-          sum(col("num")).as("event_set"),
-          max_by(col("risk"), col("t")).as("risk_set"))
+          sum(col("N")).as("event_set"),
+          max_by(col("Y"), col("t")).as("risk_set"))
         .select(col("t"), (col("event_set") / col("risk_set")).as("lambda_star"),
           col("event_set"), col("risk_set"))
         .orderBy(col("t"))

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.core.FeatureArray
-import graft.hazard.{AbsoluteRisk, Breslow, DiscreteHazard, GailHazard}
+import graft.hazard.{AbsoluteRisk, Breslow, DiscreteHazard, GailHazard, RiskSet}
 import graft.stats.{CoxPH, Kernels, WeightedGLM}
 import graft.weights.{Composite, Greg, Ipsw, KernelWeights, PostStratify}
 import graft.variance.Jackknife
@@ -150,10 +150,23 @@ object SurveyIntegration {
     val feats = featureCols.map(col)
     val (_, info) = CoxPH.scoreAndInfo(cald, time, event, col("greg_wt"),
       feats, battery.beta)
+    // Full calibration chain on the hazard estimands: the direct N/Z/Y
+    // deviates scale by f_i and pick up the factored-Jacobian projection
+    // −f_i·v_i'M⁻¹·S_dir(t*). The projection has exactly the γ-chain
+    // structure with pw_gamma := w·v and gamma_dev := −f·M⁻¹v (the β
+    // chain is already inside dbeta_greg); pw_gamma are the RiskSet
+    // measures of the one step table both deviate passes read.
+    val pc = cal.lambda.length
+    val minv = graft.core.LinAlg.inverse(
+      graft.core.LinAlg.unpack(pc, cal.gramPacked))
+    val pwGamma = (0 until pc).map(m =>
+      weight.cast("double") * auxFeats.getItem(m))
+    val steps = RiskSet.steps(cald, time, event, col("greg_wt"),
+      CoxInfluence.relHzd(feats, battery.beta), feats, pwGamma)
     val dev = CoxInfluence.deviates(cald, time, event, col("greg_wt"), feats,
-      battery.beta, info,
-      passthrough = Seq(auxFeats.as("__aux"), weight.cast("double").as("__w0"),
-        col("greg_f")))
+      battery.beta, info, steps,
+      Seq(auxFeats.as("__aux"), weight.cast("double").as("__w0"),
+        col("greg_f")), graft.core.Windows.SizeHint.Auto)
     val corrected = JointVariance.gregCorrectedDeviates(dev, p,
       col("__aux"), col("__w0"), col("greg_f"), cal, info)
     val betaVarPacked = JointVariance.ppsVariance(corrected, p, "dbeta_greg_")
@@ -162,16 +175,6 @@ object SurveyIntegration {
       val idx = (0 until j).map(k => p - k).sum
       betaVarPacked(idx)
     }.toArray
-    // Full calibration chain on the hazard estimands: the direct N/Z/Y
-    // deviates scale by f_i and pick up the factored-Jacobian projection
-    // −f_i·v_i'M⁻¹·S_dir(t*). The projection has exactly the γ-chain
-    // structure with pw_gamma := w·v and gamma_dev := −f·M⁻¹v (the β
-    // chain is already inside dbeta_greg).
-    val pc = cal.lambda.length
-    val minv = graft.core.LinAlg.inverse(
-      graft.core.LinAlg.unpack(pc, cal.gramPacked))
-    val pwGamma = (0 until pc).map(m =>
-      col("__w0") * col("__aux").getItem(m))
     val gammaDevs = (0 until pc).map { m =>
       val proj = (0 until pc).map(l => lit(minv(m, l)) * col("__aux").getItem(l))
         .foldLeft(lit(0.0): Column)(_ + _)
@@ -180,9 +183,9 @@ object SurveyIntegration {
     // Δ_i = w_i·(∂θ/∂w_i) against the BASE design weight — the deviates
     // already carry the calibration chain, so the sampling variation
     // contracts over w (the reference's ps.w·deviate, taylor_deviate.R:102)
-    val long = HazardInfluence.cumulativeDeviates(corrected, p, tStar,
+    val long = HazardInfluence.cumulativeDeviates(corrected, steps, p, tStar,
       lambdaStar = popLambda, betaDevPrefix = "dbeta_greg_",
-      gamma = Some(HazardInfluence.GammaChain(pwGamma, gammaDevs)),
+      gammaDevs = gammaDevs,
       directScale = col("greg_f"),
       passthrough = Seq(col("__w0")))
     val lamVar = HazardInfluence.ppsVariance(long, col("d_cum_hzd"), col("__w0"))

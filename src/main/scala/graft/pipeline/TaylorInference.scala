@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.{FeatureArray, LinAlg}
+import graft.hazard.RiskSet
 import graft.stats.{CoxPH, WeightedGLM}
 import graft.variance.{CoxInfluence, HazardInfluence, Influence}
 import graft.weights.Ipsw
@@ -62,43 +63,27 @@ object TaylorInference {
       // oracle replay the identical fixed-point arithmetic
       psIters: Int = 0,
       coxIters: Int = 0): IpswInference = {
-    val p = featureCols.length
     val q = psFeatureCols.length + 1
-    val psFeats = FeatureArray.withIntercept(psFeatureCols.map(col))
-
-    // 1. propensity fit on the a-scaled stack; leaf-plan view of the
-    //    cache so every downstream pass re-plans a one-node tree
-    val stackedCache = SurveyIntegration.stack(cohort, survey, surveyWt)
-      .withColumn("__wps", when(col("trt") === 1, 1.0)
-        .otherwise(col("w").cast("double") * a))
-      .persist()
-    val stacked = org.apache.spark.sql.GraftSqlBridge.flattenPlan(stackedCache)
-    val psFit =
-      if (psIters > 0) WeightedGLM.logistic(stacked, psFeats, col("trt"),
-        col("__wps"), p = q, maxIter = psIters, tol = 0.0)
-      else WeightedGLM.logistic(stacked, psFeats, col("trt"), col("__wps"), p = q)
-    val gammaDevExprs = Influence.logisticDeviates(psFit, psFeats,
-      col("trt"), col("__wps"))
+    // 1. propensity fit on the a-scaled stack
+    val ps = propensity(cohort, survey, surveyWt, psFeatureCols, a, psIters)
 
     // 2. cohort pseudo-weights: ipsw = exp(−x'γ)/a, closed-form
     //    ∂w̃/∂γ = −ipsw·x_ps
-    val score = FeatureArray.dot(psFeats, psFit.coefficients)
-    val withW = stacked
+    val score = FeatureArray.dot(ps.feats, ps.fit.coefficients)
+    val withW = ps.stacked
       .withColumn("__wtc", when(col("trt") === 1,
         Ipsw.fromLinearPredictor(score, a)).otherwise(lit(0.0)))
       .withColumn("__psw", when(col("trt") === 1, col("__wtc"))
         .otherwise(col("w").cast("double")))
       .withColumn("__pi", when(col("trt") === 1, lit(1.0) / col("__wtc"))
         .otherwise(lit(1.0) / col("w").cast("double")))
-    val gdCols = gammaDevExprs.zipWithIndex.map { case (c, m0) =>
-      c.as(s"__gd$m0") }
     val pgCols = (0 until q).map(m0 =>
-      (when(col("trt") === 1, -col("__wtc") * psFeats.getItem(m0))
+      (when(col("trt") === 1, -col("__wtc") * ps.feats.getItem(m0))
         .otherwise(0.0)).as(s"__pg$m0"))
-    val prepared = withW.select((withW.columns.map(col) ++ gdCols ++ pgCols): _*)
+    val prepared = withW.select((withW.columns.map(col) ++ ps.gdCols ++ pgCols): _*)
     val out = inferenceCore(prepared, time, event, featureCols, q, tStar,
-      lambdaStar, x0, sizeHint, coxIters, psFit.coefficients)
-    stackedCache.unpersist(blocking = false)
+      lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
+    ps.cache.unpersist(blocking = false)
     out
   }
 
@@ -128,22 +113,11 @@ object TaylorInference {
       psIters: Int = 0,
       coxIters: Int = 0): IpswInference = {
     val q = psFeatureCols.length + 1
-    val psFeats = FeatureArray.withIntercept(psFeatureCols.map(col))
-    val stackedCache = SurveyIntegration.stack(
-        cohort.withColumn("__cid", cohortId),
-        survey.withColumn("__sid", surveyId), surveyWt)
-      .withColumn("__wps", when(col("trt") === 1, 1.0)
-        .otherwise(col("w").cast("double") * a))
-      .persist()
-    val stacked = org.apache.spark.sql.GraftSqlBridge.flattenPlan(stackedCache)
-    val psFit =
-      if (psIters > 0) WeightedGLM.logistic(stacked, psFeats, col("trt"),
-        col("__wps"), p = q, maxIter = psIters, tol = 0.0)
-      else WeightedGLM.logistic(stacked, psFeats, col("trt"), col("__wps"), p = q)
-    val gammaDevExprs = Influence.logisticDeviates(psFit, psFeats,
-      col("trt"), col("__wps"))
-    val score = FeatureArray.dot(psFeats, psFit.coefficients)
-    val scored = stacked.withColumn("__q", score)
+    val ps = propensity(cohort.withColumn("__cid", cohortId),
+      survey.withColumn("__sid", surveyId), surveyWt, psFeatureCols, a, psIters)
+    val psFeats = ps.feats
+    val score = FeatureArray.dot(psFeats, ps.fit.coefficients)
+    val scored = ps.stacked.withColumn("__q", score)
     val h = bandwidth.getOrElse(graft.stats.Kernels.bwNrd0(
       scored.filter(col("trt") === 1).select(col("__q").as("q")), col("q")))
     val surveyQ = scored.filter(col("trt") === 0)
@@ -176,20 +150,45 @@ object TaylorInference {
       // the KW contractions too), not 1/kw
       .withColumn("__pi", when(col("trt") === 1, lit(a) * exp(col("__q")))
         .otherwise(lit(1.0) / col("w").cast("double")))
-    val gdCols = gammaDevExprs.zipWithIndex.map { case (c, m0) =>
-      c.as(s"__gd$m0") }
     val pgCols = (0 until q).map(m0 =>
       (when(col("trt") === 1, coalesce(col(s"d_kw_$m0"), lit(0.0)))
         .otherwise(0.0)).as(s"__pg$m0"))
     val preparedCache = withW
-      .select((withW.columns.map(col) ++ gdCols ++ pgCols): _*)
+      .select((withW.columns.map(col) ++ ps.gdCols ++ pgCols): _*)
       .persist()
     val prepared = org.apache.spark.sql.GraftSqlBridge.flattenPlan(preparedCache)
     val out = inferenceCore(prepared, time, event, featureCols, q, tStar,
-      lambdaStar, x0, sizeHint, coxIters, psFit.coefficients)
+      lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
     preparedCache.unpersist(blocking = false)
-    stackedCache.unpersist(blocking = false)
+    ps.cache.unpersist(blocking = false)
     out
+  }
+
+  /** Front half shared by both chains: the a-scaled stack (propensity
+    * weight __wps) persisted behind a leaf-plan view, so every
+    * downstream pass re-plans a one-node tree; the propensity IRLS for
+    * γ̂ (pinned to `psIters` iterations when > 0); and the per-unit γ
+    * deviates as `__gd` column expressions over the stack. */
+  private final case class Propensity(cache: DataFrame, stacked: DataFrame,
+      feats: Column, fit: WeightedGLM.Fit, gdCols: Seq[Column])
+
+  private def propensity(cohort: DataFrame, survey: DataFrame,
+      surveyWt: Column, psFeatureCols: Seq[String], a: Double,
+      psIters: Int): Propensity = {
+    val q = psFeatureCols.length + 1
+    val psFeats = FeatureArray.withIntercept(psFeatureCols.map(col))
+    val cache = SurveyIntegration.stack(cohort, survey, surveyWt)
+      .withColumn("__wps", when(col("trt") === 1, 1.0)
+        .otherwise(col("w").cast("double") * a))
+      .persist()
+    val stacked = org.apache.spark.sql.GraftSqlBridge.flattenPlan(cache)
+    val fit =
+      if (psIters > 0) WeightedGLM.logistic(stacked, psFeats, col("trt"),
+        col("__wps"), p = q, maxIter = psIters, tol = 0.0)
+      else WeightedGLM.logistic(stacked, psFeats, col("trt"), col("__wps"), p = q)
+    val gdCols = Influence.logisticDeviates(fit, psFeats, col("trt"),
+      col("__wps")).zipWithIndex.map { case (c, m0) => c.as(s"__gd$m0") }
+    Propensity(cache, stacked, psFeats, fit, gdCols)
   }
 
   /** Shared tail: Cox fit at the cohort pseudo-weight `__wtc`, per-unit
@@ -223,16 +222,19 @@ object TaylorInference {
       else CoxPH.fit(cohortF, time, event, col("__wtc"), feats,
         hint = fitHint(sizeHint))
 
-    // 3. influence frame: cohort rows carry the direct score influence,
-    //    survey rows join as zero-weight γ-only blocks (the reference's
+    // 3. one RiskSet table (with the γ measures ∂w̃/∂γ = __pg) feeds
+    //    both the β influence and the hazard chain. Influence frame:
+    //    cohort rows carry the direct score influence, survey rows join
+    //    as zero-weight γ-only blocks (the reference's
     //    rbind(…, matrix(0, n_s, …)))
+    val steps = RiskSet.steps(cohortF, time, event, col("__wtc"),
+      CoxInfluence.relHzd(feats, fit.coefficients), feats,
+      (0 until q).map(m0 => col(s"__pg$m0")), sizeHint)
     val pass = Seq(col("trt"), col("__pi"), col("__psw")) ++
       (0 until q).map(m0 => col(s"__gd$m0")) ++
       (0 until q).map(m0 => col(s"__pg$m0"))
-    val devFull = CoxInfluence.deviatesAndCollapse(cohortF, time, event,
-      col("__wtc"), feats, fit.coefficients, fit.infoPacked,
-      passthrough = pass, sizeHint = sizeHint, gammaQ = q)
-    val devC = devFull.units
+    val devC = CoxInfluence.deviates(cohortF, time, event, col("__wtc"),
+      feats, fit.coefficients, fit.infoPacked, steps, pass, sizeHint)
     // build survey rows with the same schema as devC
     val devCols = devC.columns
     val surveySide = prepared.filter(col("trt") === 0)
@@ -269,16 +271,13 @@ object TaylorInference {
 
       // 5. hazard-chain deviates at the same per-m scale
       val risk = x0.map(v => HazardInfluence.RiskProfile(fit.coefficients, v))
-      val long = HazardInfluence.cumulativeDeviates(withDb, p, tStar,
+      val long = HazardInfluence.cumulativeDeviates(withDb, steps, p, tStar,
         lambdaStar = lambdaStar, risk = risk,
-        gamma = Some(HazardInfluence.GammaChain(
-          (0 until q).map(m0 => col(s"__pg$m0")),
-          (0 until q).map(m0 => col(s"__gd$m0")))),
+        gammaDevs = (0 until q).map(m0 => col(s"__gd$m0")),
         betaDevPrefix = "dbeta_m_",
         directScale = col("__psw") * col("trt"),
         sizeHint = sizeHint,
-        passthrough = Seq(col("trt"), col("__pi"), col("__psw")),
-        preCollapsed = Some(devFull.collapsed))
+        passthrough = Seq(col("trt"), col("__pi"), col("__psw")))
 
       // 6. contractions: Poisson Σ(1−π)Δ² over both samples; PPS
       //    n·cov per sample summed (taylor_deviate.R:109-111)

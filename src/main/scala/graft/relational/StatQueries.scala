@@ -521,14 +521,16 @@ object StatQueries {
         (((col("l_orderkey") % 9) + 1.0) / 10.0).as("pi"))
       val (_, info) = CoxPH.scoreAndInfo(sf, col("t"), col("d"), col("w"),
         Seq(col("x")), Array(0.25))
-      val dev = graft.variance.CoxInfluence.deviatesAndCollapse(sf, col("t"),
-        col("d"), col("w"), Seq(col("x")), Array(0.25), info,
-        passthrough = Seq(col("pi")), sizeHint = Windows.SizeHint.Small)
+      val steps = graft.hazard.RiskSet.steps(sf, col("t"), col("d"), col("w"),
+        graft.variance.CoxInfluence.relHzd(Seq(col("x")), Array(0.25)),
+        Seq(col("x")), sizeHint = Windows.SizeHint.Small)
+      val dev = graft.variance.CoxInfluence.deviates(sf, col("t"),
+        col("d"), col("w"), Seq(col("x")), Array(0.25), info, steps,
+        Seq(col("pi")), Windows.SizeHint.Small)
       val long = graft.variance.HazardInfluence.cumulativeDeviates(
-        dev.units, p = 1, tStar = Seq(10.0, 20.0, 30.0, 40.0, 50.0),
+        dev, steps, p = 1, tStar = Seq(10.0, 20.0, 30.0, 40.0, 50.0),
         sizeHint = Windows.SizeHint.Small,
-        passthrough = Seq(col("pi")),
-        preCollapsed = Some(dev.collapsed))
+        passthrough = Seq(col("pi")))
       long.groupBy(col("t_star"))
         .agg(round(max(col("cum_hzd")), 6).as("cum_hzd"),
           round(sum((lit(1.0) - col("pi")) * col("__w") * col("d_cum_hzd")
@@ -652,20 +654,22 @@ object StatQueries {
         (((col("l_orderkey") % 9) + 1.0) / 10.0).as("pi"))
       val (_, info) = CoxPH.scoreAndInfo(sf, col("t"), col("d"), col("w"),
         Seq(col("x")), Array(0.25))
-      val dev = graft.variance.CoxInfluence.deviatesAndCollapse(sf, col("t"),
-        col("d"), col("w"), Seq(col("x")), Array(0.25), info,
-        passthrough = Seq(col("pi")), sizeHint = Windows.SizeHint.Small)
+      val steps = graft.hazard.RiskSet.steps(sf, col("t"), col("d"), col("w"),
+        graft.variance.CoxInfluence.relHzd(Seq(col("x")), Array(0.25)),
+        Seq(col("x")), sizeHint = Windows.SizeHint.Small)
+      val dev = graft.variance.CoxInfluence.deviates(sf, col("t"),
+        col("d"), col("w"), Seq(col("x")), Array(0.25), info, steps,
+        Seq(col("pi")), Windows.SizeHint.Small)
       val lambdaStar = Seq((0.5, 0.004), (7.0, 0.003), (13.0, 0.0025),
         (22.0, 0.0035), (25.0, 0.002), (33.0, 0.003), (41.0, 0.0015),
         (47.0, 0.0025)).toDF("t", "lambda_star")
       val long = graft.variance.HazardInfluence.cumulativeDeviates(
-        dev.units, p = 1, tStar = Seq(10.0, 20.0, 30.0, 40.0, 50.0),
+        dev, steps, p = 1, tStar = Seq(10.0, 20.0, 30.0, 40.0, 50.0),
         lambdaStar = Some(lambdaStar),
         risk = Some(graft.variance.HazardInfluence.RiskProfile(
           Array(0.25), Array(1.0))),
         sizeHint = Windows.SizeHint.Small,
-        passthrough = Seq(col("pi")),
-        preCollapsed = Some(dev.collapsed))
+        passthrough = Seq(col("pi")))
       def pvar(dcol: String) = round(sum((lit(1.0) - col("pi"))
         * col("__w") * col(dcol) * col("__w") * col(dcol)), 4)
       long.groupBy(col("t_star"))

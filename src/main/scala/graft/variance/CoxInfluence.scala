@@ -1,6 +1,7 @@
 package graft.variance
 
-import graft.core.{AsOf, LinAlg, Windows}
+import graft.core.{LinAlg, Windows}
+import graft.hazard.RiskSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -12,30 +13,24 @@ import org.apache.spark.sql.{Column, DataFrame}
   * form, which is what the engine computes — O(n) distributed, never an
   * n×|events| intermediate:
   *
-  *   Ui_j = d_i·(x_ij − S1_j(t_i)/S0(t_i))
+  *   Ui_j = d_i·(x_ij − A_j(t_i)/Z(t_i))
   *        − rh_i·(x_ij·G0(t_i) − G1_j(t_i))
-  *   G0(t)   = Σ_{events u ≤ t} wd_u / S0(u)
-  *   G1_j(t) = Σ_{events u ≤ t} wd_u · S1_j(u) / S0(u)²
+  *   G0(t)   = Σ_{events u ≤ t} N_u / Z(u)
+  *   G1_j(t) = Σ_{events u ≤ t} N_u · A_j(u) / Z(u)²
   *
-  * Pipeline: tie-collapse groupBy(t) → suffix scan (S0, S1) → event-time
-  * prefix scan (G0, G1) → join S/G values back to unit rows by t (S at
-  * t_i is exact; G is a step function evaluated at t_i, which for the
-  * risk-set structure equals the value at t_i since every t_i is in the
-  * step table). The β deviates are Δ_i = I⁻¹·Ui — a constant p×p
-  * driver-side matrix applied as codegen'd expressions.
+  * with N, Z (= S0) and A_j (= S1_j) from the hazard.RiskSet step table.
+  * Pipeline: RiskSet table → event-time prefix scan (G0, G1) → join
+  * Z/A/G values back to unit rows by t (every t_i is in the step table,
+  * so the step functions are read exactly at t_i). The β deviates are
+  * Δ_i = I⁻¹·Ui — a constant p×p driver-side matrix applied as
+  * codegen'd expressions.
   */
 object CoxInfluence {
 
-  /** `units` is the deviate frame (see `deviates`); `collapsed` is the
-    * tie-collapse aggregate it was built from, in the hazard-chain
-    * convention (__t, ng, zg, yg, ag0..ag{p-1}[, dng/dzg/dyg per γ]) so
-    * `HazardInfluence.cumulativeDeviates` can consume it as
-    * `preCollapsed` instead of re-aggregating the (much more expensive)
-    * joined deviate frame. */
-  final case class Deviates(units: DataFrame, collapsed: DataFrame)
-
-  /** Returns the input frame + per-unit score columns `ui_0..ui_{p-1}`
-    * and β-deviate columns `dbeta_0..dbeta_{p-1}`. */
+  /** Returns the input frame projected to the chain convention (__t,
+    * __d, __w, __x0..__x{p-1}, passthrough, __rh) + the step values
+    * (Z, A_j, G0, G1_j), per-unit score columns `ui_0..ui_{p-1}` and
+    * β-deviate columns `dbeta_0..dbeta_{p-1}`. */
   def deviates(
       df: DataFrame,
       time: Column, event: Column, weight: Column,
@@ -44,70 +39,49 @@ object CoxInfluence {
       infoPacked: Array[Double],
       passthrough: Seq[Column] = Nil,
       sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame =
-    deviatesAndCollapse(df, time, event, weight, features, beta, infoPacked,
-      passthrough, sizeHint).units
+    deviates(df, time, event, weight, features, beta, infoPacked,
+      RiskSet.steps(df, time, event, weight, relHzd(features, beta), features,
+        sizeHint = sizeHint),
+      passthrough, sizeHint)
 
-  /** As `deviates`, also exposing the tie-collapsed step aggregate.
-    * `gammaQ` > 0 additionally collapses the γ-chain measure columns
-    * `pgPrefix`0..{q-1} (which must be in `passthrough`) — the sums the
-    * hazard chain needs (taylor_deviate.R:823-834). */
-  def deviatesAndCollapse(
+  /** As above, on a RiskSet step table the caller built from the same
+    * (time, event, weight, relHzd(features, beta), features) — so one
+    * table can also feed `HazardInfluence.cumulativeDeviates`. */
+  def deviates(
       df: DataFrame,
       time: Column, event: Column, weight: Column,
       features: Seq[Column],
       beta: Array[Double],
       infoPacked: Array[Double],
-      passthrough: Seq[Column] = Nil,
-      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto,
-      gammaQ: Int = 0,
-      pgPrefix: String = "__pg"): Deviates = {
+      steps: DataFrame,
+      passthrough: Seq[Column],
+      sizeHint: Windows.SizeHint): DataFrame = {
     val p = features.length
     val x = features.indices.map(j => features(j).cast("double").as(s"__x$j"))
     val base = df.select((Seq(time.cast("double").as("__t"),
       event.cast("double").as("__d"), weight.cast("double").as("__w")) ++ x
       ++ passthrough): _*)
-      .withColumn("__rh", exp(
-        beta.zipWithIndex.map { case (b, j) => col(s"__x$j") * lit(b) }
-          .foldLeft(lit(0.0): Column)(_ + _)))
-
-    // tie-collapse + risk-set suffix sums. ONE groupBy serves both this
-    // score influence (zg = S0 increments, ag_j = S1_j) and the
-    // downstream hazard chain (ng, yg, γ sums) — computed over the cheap
-    // projected base, not the joined deviate output.
-    val aggExprs = Seq(
-      sum(when(col("__d") === 1.0, col("__w")).otherwise(0.0)).as("ng"),
-      sum(col("__w") * col("__rh")).as("zg"),
-      sum(col("__w")).as("yg")) ++
-      (0 until p).map(j => sum(col("__w") * col("__rh") * col(s"__x$j")).as(s"ag$j")) ++
-      (0 until gammaQ).flatMap(m => Seq(
-        sum(when(col("__d") === 1.0, col(pgPrefix + m)).otherwise(0.0)).as(s"dng$m"),
-        sum(col(pgPrefix + m) * col("__rh")).as(s"dzg$m"),
-        sum(col(pgPrefix + m)).as(s"dyg$m")))
-    val grouped = base.groupBy(col("__t")).agg(aggExprs.head, aggExprs.tail: _*)
-    val scanCols = (col("zg") -> "S0") +:
-      (0 until p).map(j => col(s"ag$j") -> s"S1$j")
-    val withS = Windows.scan(grouped, Seq(col("__t").desc), scanCols,
-      sizeHint = sizeHint)
+      .withColumn("__rh", relHzd((0 until p).map(j => col(s"__x$j")), beta))
 
     // event-time prefix sums G0, G1_j (zero increment at non-event times
     // keeps every t in the step table for the back-join)
-    val gCols = (when(col("ng") > 0, col("ng") / col("S0")).otherwise(0.0) -> "G0") +:
+    val gCols = (when(col("N") > 0, col("N") / col("Z")).otherwise(0.0) -> "G0") +:
       (0 until p).map(j =>
-        (when(col("ng") > 0, col("ng") * col(s"S1$j") / (col("S0") * col("S0")))
+        (when(col("N") > 0, col("N") * col(s"A$j") / (col("Z") * col("Z")))
           .otherwise(0.0)) -> s"G1$j")
-    val steps = Windows.scan(withS, Seq(col("__t")), gCols, sizeHint = sizeHint)
-      .select((col("__t") +: col("S0") +:
-        (0 until p).map(j => col(s"S1$j")) ++:
+    val gSteps = Windows.scan(steps, Seq(col("t")), gCols, sizeHint = sizeHint)
+      .select((col("t").as("__t") +: col("Z") +:
+        (0 until p).map(j => col(s"A$j")) ++:
         col("G0") +: (0 until p).map(j => col(s"G1$j"))): _*)
 
-    // join S/G back to unit rows by exact t (every t_i is in steps);
+    // join Z/A/G back to unit rows by exact t (every t_i is in steps);
     // a Small step table broadcasts — no shuffle of the unit rows
-    val stepsSide = if (sizeHint == Windows.SizeHint.Small) broadcast(steps)
-                    else steps
+    val stepsSide = if (sizeHint == Windows.SizeHint.Small) broadcast(gSteps)
+                    else gSteps
     val joined = base.join(stepsSide, Seq("__t"))
 
     val ui = (0 until p).map { j =>
-      (col("__d") * (col(s"__x$j") - col(s"S1$j") / col("S0")) -
+      (col("__d") * (col(s"__x$j") - col(s"A$j") / col("Z")) -
         col("__rh") * (col(s"__x$j") * col("G0") - col(s"G1$j"))).as(s"ui_$j")
     }
     val withUi = joined.select((joined.columns.map(col).toSeq ++ ui): _*)
@@ -116,8 +90,14 @@ object CoxInfluence {
     val dbeta = (0 until p).map { r =>
       (0 until p).map(j => lit(iinv(r, j)) * col(s"ui_$j")).reduce(_ + _).as(s"dbeta_$r")
     }
-    Deviates(withUi.select((withUi.columns.map(col).toSeq ++ dbeta): _*), grouped)
+    withUi.select((withUi.columns.map(col).toSeq ++ dbeta): _*)
   }
+
+  /** Relative hazard e^{x'β}, the `relHzd` of the RiskSet table the
+    * deviates read. */
+  def relHzd(features: Seq[Column], beta: Array[Double]): Column =
+    exp(beta.zipWithIndex.map { case (b, j) => features(j).cast("double") * lit(b) }
+      .foldLeft(lit(0.0): Column)(_ + _))
 
   /** Post-stratified variant (the reference's `post` branch,
     * taylor_deviate.R:670-742, with `post.f`'s factored f_w,

@@ -1,6 +1,7 @@
 package graft.variance
 
 import graft.core.Windows
+import graft.hazard.RiskSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 
@@ -29,19 +30,21 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * buckets the λ* grid mass by its governing event time (the LOCF
   * convention of GailHazard.cumulativeSteps, so the deviate is the exact
   * derivative of the ΛG point estimator) and uses the same
-  * min-composition on the bucketed prefix functions. Cost: one
-  * tie-collapse aggregate, one multi-column distributed scan, one tiny
+  * min-composition on the bucketed prefix functions. Cost on top of the
+  * caller's hazard.RiskSet table: one multi-column prefix scan, one tiny
   * interval aggregate, one broadcast-probe lookup, one equi-join —
   * never an n×|events| object.
   */
 object HazardInfluence {
 
-  /** Optional pseudo-weight γ-chain (the reference's `pw_list`,
+  /** Pseudo-weight γ-chain (the reference's `pw_list`,
     * taylor_deviate.R:823-834): the weights depend on estimated
-    * propensity coefficients γ, so N/Z/Y pick up ∂w/∂γ·Δγ terms.
-    * `pwGamma` are the ∂w_i/∂γ_m columns on the unit frame (length q,
-    * e.g. −w·x^{ps} for IPSW); `gammaDevs` the per-unit γ-deviate
-    * columns (length q). */
+    * propensity coefficients γ, so N/Z/Y pick up ∂w/∂γ·Δγ terms. The
+    * two halves go to different places: `pwGamma`, the ∂w_i/∂γ_m
+    * columns on the unit frame (length q, e.g. −w·x^{ps} for IPSW), are
+    * the RiskSet `measures` that give the step table its DN/DZ/DY
+    * columns; `gammaDevs`, the per-unit γ-deviate columns (length q),
+    * are `cumulativeDeviates`' unit-side input. */
   final case class GammaChain(pwGamma: Seq[Column], gammaDevs: Seq[Column])
 
   /** Risk profile for the absolute-risk deviate (absR_w): absR_w(t*) =
@@ -75,70 +78,49 @@ object HazardInfluence {
     *
     * @param devFrame output of CoxInfluence.deviates: columns __t, __d,
     *                 __w, __rh, __x0..__x{p-1}, `betaDevPrefix`0..{p-1}
+    * @param steps hazard.RiskSet table of the risk set — the one the
+    *              caller passed to CoxInfluence.deviates — with q γ
+    *              measures (DN/DZ/DY 0..q-1, q = gammaDevs.length). Its
+    *              t domain may be a SUBSET of the unit frame's: survey
+    *              γ-only rows contribute zero to every sum, and unit
+    *              times missing from it take inert step values.
     * @param lambdaStar optional (t, lambda_star) population-hazard grid
     *                   for the Gail chain
     * @param risk optional profile: adds d_abs_risk (and d_abs_risk_gail
     *             with lambdaStar)
-    * @param gamma optional γ-chain correction columns. Survey-side rows
-    *              (units outside the cohort whose deviate is PURELY the
-    *              γ chain, the reference's rbind(…, matrix(0, n_s, …))
-    *              blocks) can be unioned into `devFrame` with __w = 0,
-    *              __d = 0, zero β-deviates and directScale 0: they then
-    *              contribute nothing to any risk-set total and receive
-    *              exactly the Σ_m Δγ_m·CN_m(t*) terms.
+    * @param gammaDevs per-unit γ-deviate columns (GammaChain.gammaDevs).
+    *              Survey-side rows (units outside the cohort whose
+    *              deviate is PURELY the γ chain, the reference's
+    *              rbind(…, matrix(0, n_s, …)) blocks) can be unioned
+    *              into `devFrame` with __w = 0, __d = 0, zero β-deviates
+    *              and directScale 0: they then receive exactly the
+    *              Σ_m Δγ_m·CN_m(t*) terms.
     * @return long frame with passthrough ++ (t_star, d_cum_hzd
     *         [, d_cum_gail][, d_abs_risk][, d_abs_risk_gail]) plus the
     *         point estimates cum_hzd [, cum_gail] repeated per row
     */
-  /** @param preCollapsed optional tie-collapse aggregate already
-    *                     computed by `CoxInfluence.deviatesAndCollapse`
-    *                     (columns __t, ng, zg, yg, ag0..[, dng/dzg/dyg])
-    *                     — skips re-aggregating the joined deviate
-    *                     frame. Its __t domain may be a SUBSET of the
-    *                     unit frame's (survey γ-only rows contribute
-    *                     zero to every sum); missing unit times take
-    *                     inert step values via a left join. */
   def cumulativeDeviates(
       devFrame: DataFrame,
+      steps: DataFrame,
       p: Int,
       tStar: Seq[Double],
       lambdaStar: Option[DataFrame] = None,
       risk: Option[RiskProfile] = None,
-      gamma: Option[GammaChain] = None,
+      gammaDevs: Seq[Column] = Nil,
       betaDevPrefix: String = "dbeta_",
       sizeHint: Windows.SizeHint = Windows.SizeHint.Auto,
       directScale: Column = lit(1.0),
-      passthrough: Seq[Column] = Nil,
-      preCollapsed: Option[DataFrame] = None): DataFrame = {
+      passthrough: Seq[Column] = Nil): DataFrame = {
     val spark = devFrame.sparkSession
-    val q = gamma.map(_.pwGamma.length).getOrElse(0)
+    val q = gammaDevs.length
     val base = devFrame.select((Seq(col("__t"), col("__d"), col("__w"),
       col("__rh"), directScale.cast("double").as("__dsc")) ++
       (0 until p).map(j => col(s"__x$j")) ++
       (0 until p).map(j => col(s"$betaDevPrefix$j").as(s"__db$j")) ++
-      gamma.toSeq.flatMap(g => g.pwGamma.zipWithIndex.map { case (c, m) =>
-        c.cast("double").as(s"__pg$m") }) ++
-      gamma.toSeq.flatMap(g => g.gammaDevs.zipWithIndex.map { case (c, m) =>
-        c.cast("double").as(s"__gd$m") }) ++
+      gammaDevs.zipWithIndex.map { case (c, m) =>
+        c.cast("double").as(s"__gd$m") } ++
       passthrough): _*)
-
-    // ---- tie-collapse + suffix risk-set totals (N, Z, Y, A_m [, Dz, Dy]) ----
-    val aggs = Seq(
-      sum(when(col("__d") === 1.0, col("__w")).otherwise(0.0)).as("ng"),
-      sum(col("__w") * col("__rh")).as("zg"),
-      sum(col("__w")).as("yg")) ++
-      (0 until p).map(j => sum(col("__w") * col("__rh") * col(s"__x$j")).as(s"ag$j")) ++
-      (0 until q).flatMap(m => Seq(
-        sum(when(col("__d") === 1.0, col(s"__pg$m")).otherwise(0.0)).as(s"dng$m"),
-        sum(col(s"__pg$m") * col("__rh")).as(s"dzg$m"),
-        sum(col(s"__pg$m")).as(s"dyg$m")))
-    val grouped = preCollapsed.getOrElse(
-      base.groupBy(col("__t")).agg(aggs.head, aggs.tail: _*))
-    val sufCols = Seq(col("zg") -> "Z", col("yg") -> "Y") ++
-      (0 until p).map(j => col(s"ag$j") -> s"A$j") ++
-      (0 until q).flatMap(m => Seq(col(s"dzg$m") -> s"DZ$m", col(s"dyg$m") -> s"DY$m"))
-    val withSuf = Windows.scan(grouped, Seq(col("__t").desc), sufCols,
-      sizeHint = sizeHint)
+    val withSuf = steps.withColumnRenamed("t", "__t")
 
     // ---- merge the λ* grid (full outer on t) and LOCF event values so
     //      each grid time sees its governing event's (Z, ar, A, DZ, DY) ----
@@ -150,7 +132,7 @@ object HazardInfluence {
       case Some(g) => withSuf.join(g, Seq("__t"), "full_outer")
       case None    => withSuf.withColumn("__ls", lit(null).cast("double"))
     }
-    val isEv = col("ng") > 0.0
+    val isEv = col("N") > 0.0
     val evCols = Seq(
       when(isEv, col("__t")).as("evT"),
       when(isEv, col("Z")).as("evZ"),
@@ -171,27 +153,27 @@ object HazardInfluence {
     else withEv
 
     // ---- prefix increments: event-side (λ chain) and grid-side (ΛG) ----
-    val lam = when(isEv, col("ng") / col("Z")).otherwise(0.0)
+    val lam = when(isEv, col("N") / col("Z")).otherwise(0.0)
     val gridHasEv = col("__ls").isNotNull && col("evZ").isNotNull
     val oneMinusAr = lit(1.0) - coalesce(col("evAr"), lit(0.0))
     val scanSums: Seq[(Column, String)] =
       Seq(
         lam -> "LAM", // Λ(t)
-        when(isEv, col("ng") / (col("Z") * col("Z"))).otherwise(0.0) -> "GL",
+        when(isEv, col("N") / (col("Z") * col("Z"))).otherwise(0.0) -> "GL",
         // ΛG point mass: LOCF ar, absent ar ⇒ 0 (GailHazard semantics)
         coalesce(col("__ls") * oneMinusAr, lit(0.0)) -> "LG",
         when(gridHasEv, col("__ls") / col("evZ")).otherwise(0.0) -> "GA",
         when(gridHasEv, col("__ls") * (lit(1.0) - col("evAr")) / col("evZ"))
           .otherwise(0.0) -> "GB") ++
       (0 until p).map(j =>
-        (when(isEv, col("ng") * col(s"A$j") / (col("Z") * col("Z")))
+        (when(isEv, col("N") * col(s"A$j") / (col("Z") * col("Z")))
           .otherwise(0.0)) -> s"C$j") ++
       (0 until p).map(j =>
         (when(gridHasEv,
           col("__ls") * (lit(1.0) - col("evAr")) * col(s"evA$j") / col("evZ"))
           .otherwise(0.0)) -> s"CG$j") ++
       (0 until q).map(m =>
-        (when(isEv, (col(s"dng$m") - col("ng") * col(s"DZ$m") / col("Z")) / col("Z"))
+        (when(isEv, (col(s"DN$m") - col("N") * col(s"DZ$m") / col("Z")) / col("Z"))
           .otherwise(0.0)) -> s"CN$m") ++
       (0 until q).map(m =>
         (when(gridHasEv,
@@ -255,9 +237,9 @@ object HazardInfluence {
       col("EA"), col("EB"))
     val unitStep = if (sizeHint == Windows.SizeHint.Small) broadcast(unitStep0)
                    else unitStep0
-    // LEFT join: with a preCollapsed step table, survey-only times are
-    // absent; such rows have __d = __rh = __dsc = 0, so every step-value
-    // use vanishes — the coalesces only stop 0·null = null propagation.
+    // LEFT join: the step table may lack survey-only times; such rows
+    // have __d = __rh = __dsc = 0, so every step-value use vanishes —
+    // the coalesces only stop 0·null = null propagation.
     val units = base.join(unitStep, Seq("__t"), "left")
       .withColumn("Z", coalesce(col("Z"), lit(1.0)))
       .withColumn("GL", coalesce(col("GL"), lit(0.0)))
@@ -316,7 +298,7 @@ object HazardInfluence {
            else Nil)
       }
     // passthrough column names = base's trailing columns after the fixed block
-    val passNames = base.columns.drop(5 + 2 * p + 2 * q).toSeq
+    val passNames = base.columns.drop(5 + 2 * p + q).toSeq
     val keep = Seq("__t", "__d", "__w", "__rh") ++
       (0 until p).map(j => s"__x$j") ++
       (0 until p).map(j => s"__db$j") ++ passNames
@@ -339,17 +321,10 @@ object HazardInfluence {
     val base = devFrame.select((Seq(col("__t"), col("__d"), col("__w"),
       col("__rh")) ++ (0 until p).map(j => col(s"__x$j")) ++
       (0 until p).map(j => col(s"$betaDevPrefix$j").as(s"__db$j"))): _*)
-    val aggs = Seq(
-      sum(when(col("__d") === 1.0, col("__w")).otherwise(0.0)).as("ng"),
-      sum(col("__w") * col("__rh")).as("zg"),
-      sum(col("__w")).as("yg")) ++
-      (0 until p).map(j => sum(col("__w") * col("__rh") * col(s"__x$j")).as(s"ag$j"))
-    val grouped = base.groupBy(col("__t")).agg(aggs.head, aggs.tail: _*)
-    val events = Windows.scan(grouped, Seq(col("__t").desc),
-        Seq(col("zg") -> "Z", col("yg") -> "Y") ++
-          (0 until p).map(j => col(s"ag$j") -> s"A$j"))
-      .filter(col("ng") > 0.0)
-      .select((Seq(col("__t").as("u"), (col("ng") / col("Z")).as("lambda"),
+    val events = RiskSet.steps(base, col("__t"), col("__d"), col("__w"),
+        col("__rh"), (0 until p).map(j => col(s"__x$j")))
+      .filter(col("N") > 0.0)
+      .select((Seq(col("t").as("u"), (col("N") / col("Z")).as("lambda"),
         (lit(1.0) - col("Y") / col("Z")).as("ar"), col("Z").as("uZ")) ++
         (0 until p).map(j => col(s"A$j"))): _*)
     val pairs = base.crossJoin(broadcast(events))

@@ -1,7 +1,7 @@
 package graft.variance
 
 import breeze.linalg.DenseMatrix
-import graft.core.LinAlg
+import graft.core.{Gram, LinAlg}
 import graft.stats.WeightedGLM
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -48,12 +48,7 @@ object Influence {
     val p = fit.coefficients.length
     val resid = weight.cast("double") * (label.cast("double") - fit.predictProb(features))
     val f = (lit(1.0) - pi.cast("double"))
-    val exprs = for (i <- 0 until p; j <- i until p)
-      yield sum(f * resid * resid * features.getItem(i) * features.getItem(j))
-        .as(s"m${i}_$j")
-    val row = df.agg(exprs.head, exprs.tail: _*).head()
-    val packed = exprs.indices.map(row.getDouble).toArray
-    val m = LinAlg.unpack(p, packed)
+    val m = meat(df, p, features, f * resid * resid)
     val hinv = LinAlg.inverse(LinAlg.unpack(p, fit.hessianPacked))
     hinv * m * hinv
   }
@@ -67,13 +62,16 @@ object Influence {
     val e = y.cast("double") -
       graft.core.FeatureArray.dot(features, fit.coefficients)
     val w = weight.cast("double")
-    val exprs = for (i <- 0 until p; j <- i until p)
-      yield sum(w * w * e * e * features.getItem(i) * features.getItem(j))
-        .as(s"m${i}_$j")
-    val row = df.agg(exprs.head, exprs.tail: _*).head()
-    val packed = exprs.indices.map(row.getDouble).toArray
-    val m = LinAlg.unpack(p, packed)
+    val m = meat(df, p, features, w * w * e * e)
     val binv = LinAlg.inverse(LinAlg.unpack(p, fit.hessianPacked))
     binv * m * binv
+  }
+
+  /** The sandwich meat Σ v·x xᵀ as one packed Gram aggregate. */
+  private def meat(df: DataFrame, p: Int, features: Column,
+      v: Column): DenseMatrix[Double] = {
+    val cols = Gram.columns((0 until p).map(features.getItem(_)), v)
+    LinAlg.unpack(p, Gram.read(df.agg(cols.head, cols.tail: _*).head(), 0,
+      cols.length))
   }
 }

@@ -134,4 +134,20 @@ class EdgeCaseSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == Set((1L, 2L, 2)))
   }
+
+  test("a_basket_pairs basket guard passes an empty lineitem") {
+    // with graft.check.preconditions on, the bounded-basket guard reads
+    // the largest basket; an empty lineitem has none and must yield an
+    // empty result, not a NULL max
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-li").toFile
+    Seq.empty[(Long, Long)].toDF("l_orderkey", "l_partkey")
+      .write.parquet(s"$dir/lineitem.parquet")
+    sys.props("graft.check.preconditions") = "1"
+    try assert(SparkEntry.queries("a_basket_pairs")(spark, dir.toString)
+      .collect().isEmpty)
+    finally {
+      sys.props.remove("graft.check.preconditions")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
 }

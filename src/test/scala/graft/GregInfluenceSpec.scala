@@ -159,9 +159,11 @@ class GregInfluenceSpec extends SparkSpec {
         lit(minvM(m, l)) * col("aux").getItem(l))
         .foldLeft(lit(0.0): Column)(_ + _)
     }
-    val long = HazardInfluence.cumulativeDeviates(corr, p = 1, tStar = tStar,
-      betaDevPrefix = "dbeta_greg_",
-      gamma = Some(HazardInfluence.GammaChain(pwGamma, gammaDevs)),
+    val steps = graft.hazard.RiskSet.steps(caldf, col("t"), col("d"),
+      col("wtil"), CoxInfluence.relHzd(Seq(col("x")), Array(beta)),
+      Seq(col("x")), pwGamma)
+    val long = HazardInfluence.cumulativeDeviates(corr, steps, p = 1,
+      tStar = tStar, betaDevPrefix = "dbeta_greg_", gammaDevs = gammaDevs,
       directScale = col("greg_f"),
       sizeHint = graft.core.Windows.SizeHint.Small)
       .orderBy(col("__t"), col("__x0"), col("t_star")).collect()

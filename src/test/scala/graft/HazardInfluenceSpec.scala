@@ -1,8 +1,10 @@
 package graft
 
 import graft.core.Windows
+import graft.hazard.RiskSet
 import graft.stats.CoxPH
 import graft.variance.{CoxInfluence, HazardInfluence}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Validates the hazard-chain influence functions (taylor_deviate.R
@@ -97,6 +99,10 @@ class HazardInfluenceSpec extends SparkSpec {
     CoxInfluence.deviates(coxDf, col("t"), col("d"), col("w"),
       Seq(col("x")), Array(beta), info)
 
+  private def stepsOf(beta: Double, measures: Seq[Column] = Nil) =
+    RiskSet.steps(coxDf, col("t"), col("d"), col("w"),
+      CoxInfluence.relHzd(Seq(col("x")), Array(beta)), Seq(col("x")), measures)
+
   test("dense lambda_wt / ar_wt match the literal reference formulas") {
     val beta = CoxPH.fit(coxDf, col("t"), col("d"), col("w"), Seq(col("x")))
       .coefficients(0)
@@ -141,7 +147,7 @@ class HazardInfluenceSpec extends SparkSpec {
     val lsDf = lsGrid.toDF("t", "lambda_star")
     val x0 = Array(0.4)
     val long = HazardInfluence.cumulativeDeviates(
-      devFrame(beta, info), p = 1, tStar = tStar,
+      devFrame(beta, info), stepsOf(beta), p = 1, tStar = tStar,
       lambdaStar = Some(lsDf),
       risk = Some(HazardInfluence.RiskProfile(Array(beta), x0)),
       sizeHint = Windows.SizeHint.Small)
@@ -181,17 +187,18 @@ class HazardInfluenceSpec extends SparkSpec {
     val beta = nrBeta(rows.map(_._3).toArray)
     val (_, info) = CoxPH.scoreAndInfo(coxDf, col("t"), col("d"), col("w"),
       Seq(col("x")), Array(beta))
-    val dev = devFrame(beta, info)
-      // ∂w/∂γ = −w·x (IPSW form) and a synthetic per-unit γ deviate
-      .withColumn("pg0", -col("__w") * col("__x0"))
-      .withColumn("gd0", col("__x0") * 0.1)
-    val noG = HazardInfluence.cumulativeDeviates(dev, p = 1, tStar = tStar,
+    // a synthetic per-unit γ deviate; ∂w/∂γ = −w·x (IPSW form) is the
+    // step table's γ measure
+    val dev = devFrame(beta, info).withColumn("gd0", col("__x0") * 0.1)
+    val noG = HazardInfluence.cumulativeDeviates(dev, stepsOf(beta), p = 1,
+      tStar = tStar,
       lambdaStar = Some(lsGrid.toDF("t", "lambda_star")),
       sizeHint = Windows.SizeHint.Small)
       .orderBy(col("__t"), col("__x0"), col("t_star")).collect()
-    val withG = HazardInfluence.cumulativeDeviates(dev, p = 1, tStar = tStar,
+    val withG = HazardInfluence.cumulativeDeviates(dev,
+      stepsOf(beta, Seq(-col("w") * col("x"))), p = 1, tStar = tStar,
       lambdaStar = Some(lsGrid.toDF("t", "lambda_star")),
-      gamma = Some(HazardInfluence.GammaChain(Seq(col("pg0")), Seq(col("gd0")))),
+      gammaDevs = Seq(col("gd0")),
       sizeHint = Windows.SizeHint.Small)
       .orderBy(col("__t"), col("__x0"), col("t_star")).collect()
 
@@ -260,8 +267,10 @@ class HazardInfluenceSpec extends SparkSpec {
       popTotals, Seq(col("x")), Array(beta), info)
     val chain = HazardInfluence.postStratifiedChain(col("__cell"), Seq(0, 1),
       col("__pw"), col("__v"))
-    val long = HazardInfluence.cumulativeDeviates(dev, p = 1, tStar = tStar,
-      betaDevPrefix = "dbeta_post_", gamma = Some(chain),
+    val steps = RiskSet.steps(dev, col("__t"), col("__d"), col("__w"),
+      col("__rh"), Seq(col("__x0")), chain.pwGamma)
+    val long = HazardInfluence.cumulativeDeviates(dev, steps, p = 1,
+      tStar = tStar, betaDevPrefix = "dbeta_post_", gammaDevs = chain.gammaDevs,
       directScale = col("__f"), sizeHint = Windows.SizeHint.Small)
       .orderBy(col("__t"), col("__x0"), col("t_star")).collect()
 
@@ -287,7 +296,7 @@ class HazardInfluenceSpec extends SparkSpec {
     val (_, info) = CoxPH.scoreAndInfo(coxDf, col("t"), col("d"), col("w"),
       Seq(col("x")), Array(beta))
     val long = HazardInfluence.cumulativeDeviates(devFrame(beta, info),
-      p = 1, tStar = tStar, sizeHint = Windows.SizeHint.Small)
+      stepsOf(beta), p = 1, tStar = tStar, sizeHint = Windows.SizeHint.Small)
     val vp = HazardInfluence.poissonVariance(long, col("d_cum_hzd"),
       col("__w"), lit(0.2)).collect()
     assert(vp.length == tStar.length)

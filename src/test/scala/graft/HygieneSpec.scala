@@ -192,6 +192,36 @@ class HygieneSpec extends AnyFunSuite {
       sites("""LinAlg\.solve(Packed)?\("""), allow)
   }
 
+  test("descending risk-set scans in the survival packages only in RiskSet") {
+    // A descending scan over a tie-collapsed time axis is a risk-set
+    // total. hazard/RiskSet.scala owns the weighted table (N, Z, Y, A_j
+    // and the γ measures) that Breslow, DiscreteHazard, GailHazard,
+    // CoxInfluence and HazardInfluence read, so a new collapse + suffix
+    // scan pair in hazard/, variance/ or stats/ must read it instead.
+    // The exceptions sum something else:
+    //   stats/CoxPH.scala           — S2 second moments per replicate key
+    //                                 (scan and groupedScan)
+    //   stats/KaplanMeier.scala     — w·d event sums beside Σ w
+    //   hazard/CompetingRisks.scala — unweighted cause-specific counts
+    //   stats/RankTests.scala       — unweighted per-group counts
+    val allow = Map(
+      "hazard/RiskSet.scala" -> 1, "stats/CoxPH.scala" -> 2,
+      "stats/KaplanMeier.scala" -> 1, "hazard/CompetingRisks.scala" -> 1,
+      "stats/RankTests.scala" -> 1)
+    val scan = """Windows\.(scan|groupedScan)\(""".r
+    val suffix = """Windows\.suffixSum\(""".r
+    val hits = for {
+      (f, lines) <- sources
+      if Seq("hazard/", "variance/", "stats/").exists(f.startsWith)
+      (l, i) <- lines.zipWithIndex
+      call = l + lines.lift(i + 1).getOrElse("")
+      if suffix.findFirstIn(l).isDefined ||
+        (scan.findFirstIn(l).isDefined && call.contains(".desc"))
+    } yield s"$f:${i + 1}: ${l.trim.take(100)}"
+    assertCapped("descending Windows.scan / suffixSum (use hazard.RiskSet)",
+      hits, allow)
+  }
+
   test(".rdd access only for partition-count probes") {
     // Dropping to the RDD API forfeits Catalyst; the only sanctioned
     // use is reading getNumPartitions to decide whether a narrow input

@@ -43,10 +43,13 @@ class ScaleSpec extends SparkSpec {
       maxIter = 8, tol = 0.0)
     val tStar = Seq(3.0, 9.0, 14.0)
     def run(hint: graft.core.Windows.SizeHint) = {
+      val steps = graft.hazard.RiskSet.steps(pop, col("t"), col("d"),
+        col("w"), graft.variance.CoxInfluence.relHzd(Seq(col("x1")),
+          fit.coefficients), Seq(col("x1")), sizeHint = hint)
       val dev = graft.variance.CoxInfluence.deviates(pop, col("t"), col("d"),
-        col("w"), Seq(col("x1")), fit.coefficients, fit.infoPacked,
-        sizeHint = hint)
-      graft.variance.HazardInfluence.cumulativeDeviates(dev, p = 1,
+        col("w"), Seq(col("x1")), fit.coefficients, fit.infoPacked, steps,
+        Nil, hint)
+      graft.variance.HazardInfluence.cumulativeDeviates(dev, steps, p = 1,
           tStar = tStar, sizeHint = hint)
         .groupBy(col("t_star"))
         .agg(sum(col("d_cum_hzd") * col("d_cum_hzd")).as("ssq"),
