@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.Coef
 
 /** Design-matrix-as-array-column builders (SURVEY.md P9): the reference's
   * `model.matrix(~x1+x2)` / `cbind(1, x1, x2, x1*x2)`
@@ -24,10 +25,12 @@ object FeatureArray {
     array(((lit(1.0) +: cols.map(_.cast("double"))) ++ inter): _*)
   }
 
-  /** Dot product of a feature array column with a constant coefficient
-    * vector — unrolled to a codegen-friendly sum, no higher-order fn. */
+  /** Dot product of a feature array column with a driver-side
+    * coefficient vector — unrolled to a codegen-friendly sum, no
+    * higher-order fn. The coefficients enter as `functions.Coef`
+    * references, so the generated code does not depend on their values. */
   def dot(features: Column, beta: Array[Double]): Column =
-    beta.zipWithIndex.map { case (b, i) => features.getItem(i) * lit(b) }
+    beta.indices.map(i => features.getItem(i) * Coef.at(beta, i))
       .reduce(_ + _)
 
   /** Logistic link p = 1/(1+exp(-eta)) (simu_fun.R:34-48). */

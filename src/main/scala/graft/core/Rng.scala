@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.Coef
 
 /** Cross-engine deterministic pseudo-randomness.
   *
@@ -35,7 +36,9 @@ object Rng {
     * Validated: mean .496, sd of derived normals .995, cross-salt
     * corr < .02. */
   def uniform(key: Column, salt: Long = 0L): Column = {
-    val k0 = ((key.cast("long") % lit(P)) * lit(SALT_MIX) + lit(salt)) % lit(P)
+    // the salt is a BIGINT reference, not a literal: each draw's salt
+    // differs, and an inlined one would recompile the draw's code
+    val k0 = ((key.cast("long") % lit(P)) * lit(SALT_MIX) + Coef.scalar(salt)) % lit(P)
     val k1 = (k0 * k0 + lit(C)) % lit(P)
     val k2 = (k1 * k1 + lit(C2)) % lit(P)
     val k3 = (lit(A) * k2 + lit(C)) % lit(P)

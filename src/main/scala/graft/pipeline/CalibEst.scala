@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.FeatureArray
+import graft.functions.Coef
 import graft.hazard.{Breslow, DiscreteHazard, GailHazard}
 import graft.stats.CoxPH
 import graft.variance.CoxInfluence
@@ -63,7 +64,7 @@ object CalibEst {
       passthrough = Seq(col("trt"), col("t"), col("d"), gregWt.as("__gw"),
         col(tVar).as("__taux")),
       sizeHint = sizeHint)
-    val rr = exp(feats.indices.map(j => col(s"__x$j") * lit(aux.coefficients(j)))
+    val rr = exp(feats.indices.map(j => col(s"__x$j") * Coef.at(aux.coefficients, j))
       .foldLeft(lit(0.0): Column)(_ + _))
     val cohort = dev.filter(col("trt") === 1)
       .withColumn("__dtrue", col("d").cast("double"))
@@ -91,7 +92,7 @@ object CalibEst {
     // 5. true-outcome fits at the calibrated weights
     val xCols = (0 until p).map(j => col(s"__x$j"))
     val fit = CoxPH.fit(cohort, col("t"), col("d"), wBeta, xCols)
-    val rel = exp(xCols.indices.map(j => xCols(j) * lit(fit.coefficients(j)))
+    val rel = exp(xCols.indices.map(j => xCols(j) * Coef.at(fit.coefficients, j))
       .foldLeft(lit(0.0): Column)(_ + _))
     val withLam = cohort.withColumn("__wlam", wLam)
     val cum = Breslow.cumulativeHazardAt(withLam, col("t"), col("d"),

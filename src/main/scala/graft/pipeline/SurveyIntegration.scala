@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.FeatureArray
+import graft.functions.Coef
 import graft.hazard.{AbsoluteRisk, Breslow, DiscreteHazard, GailHazard, RiskSet}
 import graft.stats.{CoxPH, Kernels, WeightedGLM}
 import graft.weights.{Composite, Greg, Ipsw, KernelWeights, PostStratify}
@@ -102,7 +103,7 @@ object SurveyIntegration {
       popLambda: Option[DataFrame] = None, eta0: Double = 0.0): Battery = {
     val feats = featureCols.map(col)
     val fit = CoxPH.fit(samp, time, event, weight, feats)
-    val rel = exp(feats.zip(fit.coefficients).map { case (c, b) => c * lit(b) }
+    val rel = exp(feats.indices.map(j => feats(j) * Coef.at(fit.coefficients, j))
       .foldLeft(lit(0.0): Column)(_ + _))
     val cum = Breslow.cumulativeHazardAt(samp, time, event, weight, rel, tStar)
       .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
@@ -157,8 +158,9 @@ object SurveyIntegration {
     // chain is already inside dbeta_greg); pw_gamma are the RiskSet
     // measures of the one step table both deviate passes read.
     val pc = cal.lambda.length
-    val minv = graft.core.LinAlg.inverse(
-      graft.core.LinAlg.unpack(pc, cal.gramPacked))
+    // M⁻¹ row-major (entry (m, l) at m·pc + l), read through Coef
+    val minvRows = graft.core.LinAlg.inverse(
+      graft.core.LinAlg.unpack(pc, cal.gramPacked)).t.toArray
     val pwGamma = (0 until pc).map(m =>
       weight.cast("double") * auxFeats.getItem(m))
     val steps = RiskSet.steps(cald, time, event, col("greg_wt"),
@@ -176,7 +178,7 @@ object SurveyIntegration {
       betaVarPacked(idx)
     }.toArray
     val gammaDevs = (0 until pc).map { m =>
-      val proj = (0 until pc).map(l => lit(minv(m, l)) * col("__aux").getItem(l))
+      val proj = (0 until pc).map(l => Coef.at(minvRows, m * pc + l) * col("__aux").getItem(l))
         .foldLeft(lit(0.0): Column)(_ + _)
       -col("greg_f") * proj
     }

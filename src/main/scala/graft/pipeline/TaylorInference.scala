@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.{FeatureArray, LinAlg}
+import graft.functions.Coef
 import graft.hazard.RiskSet
 import graft.stats.{CoxPH, WeightedGLM}
 import graft.variance.{CoxInfluence, HazardInfluence, Influence}
@@ -261,10 +262,11 @@ object TaylorInference {
       val dRow = allDev.agg(dExprs.head, dExprs.tail: _*).head()
       val dMat = breeze.linalg.DenseMatrix.tabulate(p, q)((j, m0) =>
         dRow.getDouble(j * q + m0))
-      val bMat = LinAlg.inverse(LinAlg.unpack(p, fit.infoPacked)) * dMat
+      // B row-major (entry (j, m0) at j·q + m0), read through Coef
+      val bMat = (LinAlg.inverse(LinAlg.unpack(p, fit.infoPacked)) * dMat).t.toArray
       val dbTot = (0 until p).map { j =>
         (col("__psw") * col("trt") * col(s"dbeta_$j") +
-          (0 until q).map(m0 => lit(bMat(j, m0)) * col(s"__gd$m0"))
+          (0 until q).map(m0 => Coef.at(bMat, j * q + m0) * col(s"__gd$m0"))
             .foldLeft(lit(0.0): Column)(_ + _)).as(s"dbeta_m_$j")
       }
       val withDb = allDev.select((allDev.columns.map(col) ++ dbTot): _*)

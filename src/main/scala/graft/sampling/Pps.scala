@@ -1,6 +1,7 @@
 package graft.sampling
 
 import graft.core.Rng
+import graft.functions.Coef
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -31,7 +32,7 @@ object Pps {
       .orderBy(col("__key"))
       .limit(n)
       .drop("__key")
-      .withColumn("wt", lit(totalM) / (lit(n.toDouble) * size.cast("double")))
+      .withColumn("wt", Coef.scalar(totalM) / (lit(n.toDouble) * size.cast("double")))
   }
 
   /** Two-stage cluster design (srs-pps / pps-pps, simu_fun.R:389-444):

@@ -1,6 +1,7 @@
 package graft.variance
 
 import graft.core.{LinAlg, Windows}
+import graft.functions.Coef
 import graft.hazard.RiskSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -86,9 +87,10 @@ object CoxInfluence {
     }
     val withUi = joined.select((joined.columns.map(col).toSeq ++ ui): _*)
 
-    val iinv = LinAlg.inverse(LinAlg.unpack(p, infoPacked))
+    val iinv = inverseRows(p, infoPacked)
     val dbeta = (0 until p).map { r =>
-      (0 until p).map(j => lit(iinv(r, j)) * col(s"ui_$j")).reduce(_ + _).as(s"dbeta_$r")
+      (0 until p).map(j => Coef.at(iinv, r * p + j) * col(s"ui_$j")).reduce(_ + _)
+        .as(s"dbeta_$r")
     }
     withUi.select((withUi.columns.map(col).toSeq ++ dbeta): _*)
   }
@@ -96,8 +98,13 @@ object CoxInfluence {
   /** Relative hazard e^{x'β}, the `relHzd` of the RiskSet table the
     * deviates read. */
   def relHzd(features: Seq[Column], beta: Array[Double]): Column =
-    exp(beta.zipWithIndex.map { case (b, j) => features(j).cast("double") * lit(b) }
+    exp(beta.indices.map(j => features(j).cast("double") * Coef.at(beta, j))
       .foldLeft(lit(0.0): Column)(_ + _))
+
+  /** I⁻¹ of a packed p×p information matrix, row-major (entry (r, j) at
+    * r·p + j), for `Coef.at` reads. */
+  private def inverseRows(p: Int, infoPacked: Array[Double]): Array[Double] =
+    LinAlg.inverse(LinAlg.unpack(p, infoPacked)).t.toArray
 
   /** Post-stratified variant (the reference's `post` branch,
     * taylor_deviate.R:670-742, with `post.f`'s factored f_w,
@@ -151,9 +158,9 @@ object CoxInfluence {
       (col("__f") * col(s"ui_$j") + col("__v") * col(s"__cs$j")).as(s"ui_post_$j")
     }
     val withPost = joined.select((joined.columns.map(col).toSeq ++ uiPost): _*)
-    val iinv = LinAlg.inverse(LinAlg.unpack(p, infoPacked))
+    val iinv = inverseRows(p, infoPacked)
     val dbeta = (0 until p).map { r =>
-      (0 until p).map(j => lit(iinv(r, j)) * col(s"ui_post_$j")).reduce(_ + _)
+      (0 until p).map(j => Coef.at(iinv, r * p + j) * col(s"ui_post_$j")).reduce(_ + _)
         .as(s"dbeta_post_$r")
     }
     withPost.select((withPost.columns.map(col).toSeq ++ dbeta): _*)

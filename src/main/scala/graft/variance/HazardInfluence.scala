@@ -1,6 +1,7 @@
 package graft.variance
 
 import graft.core.Windows
+import graft.functions.Coef
 import graft.hazard.RiskSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -247,16 +248,18 @@ object HazardInfluence {
       .withColumn("EB", coalesce(col("EB"), lit(0.0)))
 
     // ---- per-t* deviates, exploded long. ONE parametric expression set
-    //      indexed into literal constant arrays (element_at), not |t*|
-    //      inlined copies: each deviate inlines the full β-chain tree,
-    //      and struct-per-t* multiplied that tree by |t*|·|estimands|,
+    //      indexed into constant arrays (element_at), not |t*| inlined
+    //      copies: each deviate inlines the full β-chain tree, and
+    //      struct-per-t* multiplied that tree by |t*|·|estimands|,
     //      blowing up codegen (measured 3-4× slower at |t*|=5 with the
-    //      Gail+risk fields on). ----
+    //      Gail+risk fields on). Each array is one Coef.array reference,
+    //      so the generated code does not depend on the constants. ----
     val rr0 = risk.map(rp => math.exp(
       rp.x0.indices.map(m => rp.x0(m) * rp.beta(m)).sum))
     val tsSorted = tStar.sorted
-    def cArr(name: String): Column =
-      array(tsSorted.map(ts => lit(cst(consts(ts), name))): _*)
+    // one array column per constant, shared by every read of it
+    val cArr: Map[String, Column] = constCols.map(name =>
+      name -> Coef.array(tsSorted.map(ts => cst(consts(ts), name)).toArray)).toMap
     val idx = col("__pos") + 1 // element_at is 1-based
     def at(name: String): Column = element_at(cArr(name), idx)
 
@@ -284,10 +287,10 @@ object HazardInfluence {
         val dbx = risk.get.x0.indices
           .map(m => col(s"__db$m") * lit(risk.get.x0(m)))
           .foldLeft(lit(0.0): Column)(_ + _)
-        def aRArr(src: String): Column = array(tsSorted.map(ts =>
-          lit(1.0 - math.exp(-cst(consts(ts), src) * rr))): _*)
-        def sclArr(src: String): Column = array(tsSorted.map(ts =>
-          lit(math.exp(-cst(consts(ts), src) * rr) * rr)): _*)
+        def aRArr(src: String): Column = Coef.array(tsSorted.map(ts =>
+          1.0 - math.exp(-cst(consts(ts), src) * rr)).toArray)
+        def sclArr(src: String): Column = Coef.array(tsSorted.map(ts =>
+          math.exp(-cst(consts(ts), src) * rr) * rr).toArray)
         Seq(element_at(aRArr("LAM"), idx).as("abs_risk"),
           (element_at(sclArr("LAM"), idx) * (at("LAM") * dbx + dLambda))
             .as("d_abs_risk")) ++

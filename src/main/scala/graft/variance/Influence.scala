@@ -2,6 +2,7 @@ package graft.variance
 
 import breeze.linalg.DenseMatrix
 import graft.core.{Gram, LinAlg}
+import graft.functions.Coef
 import graft.stats.WeightedGLM
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -27,8 +28,9 @@ object Influence {
     val p = fit.coefficients.length
     val hinv = LinAlg.inverse(LinAlg.unpack(p, fit.hessianPacked))
     val resid = weight.cast("double") * (label.cast("double") - fit.predictProb(features))
+    val h = hinv.t.toArray // row-major: H⁻¹(r, j) at r·p + j
     (0 until p).map { r =>
-      (0 until p).map(j => lit(hinv(r, j)) * resid * features.getItem(j))
+      (0 until p).map(j => Coef.at(h, r * p + j) * resid * features.getItem(j))
         .reduce(_ + _)
     }
   }

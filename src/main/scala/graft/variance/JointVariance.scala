@@ -2,6 +2,7 @@ package graft.variance
 
 import breeze.linalg.DenseMatrix
 import graft.core.LinAlg
+import graft.functions.Coef
 import graft.stats.WeightedGLM
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -48,10 +49,10 @@ object JointVariance {
         .as(s"d${j}_$mIdx")
     val row = devFrame.agg(exprs.head, exprs.tail: _*).head()
     val d = DenseMatrix.tabulate(p, q)((j, mIdx) => row.getDouble(j * q + mIdx))
-    val b = LinAlg.inverse(LinAlg.unpack(p, infoPacked)) * d
+    val b = (LinAlg.inverse(LinAlg.unpack(p, infoPacked)) * d).t.toArray
 
     val corrected = (0 until p).map { j =>
-      val corr = (0 until q).map(mIdx => lit(b(j, mIdx)) * gammaDevs(mIdx))
+      val corr = (0 until q).map(mIdx => Coef.at(b, j * q + mIdx) * gammaDevs(mIdx))
         .foldLeft(lit(0.0): Column)(_ + _)
       (col(s"dbeta_$j") + corr).as(s"dbeta_tot_$j")
     }
@@ -77,9 +78,9 @@ object JointVariance {
       sum(col(s"ui_$j") * col(s"d_kw_$mIdx")).as(s"d${j}_$mIdx")
     val row = joined.agg(exprs.head, exprs.tail: _*).head()
     val dm = DenseMatrix.tabulate(p, q)((j, mIdx) => row.getDouble(j * q + mIdx))
-    val b = LinAlg.inverse(LinAlg.unpack(p, infoPacked)) * dm
+    val b = (LinAlg.inverse(LinAlg.unpack(p, infoPacked)) * dm).t.toArray
     val corrected = (0 until p).map { j =>
-      val corr = (0 until q).map(mIdx => lit(b(j, mIdx)) * gammaDevs(mIdx))
+      val corr = (0 until q).map(mIdx => Coef.at(b, j * q + mIdx) * gammaDevs(mIdx))
         .foldLeft(lit(0.0): Column)(_ + _)
       (col(s"dbeta_$j") + corr).as(s"dbeta_tot_$j")
     }
@@ -131,14 +132,14 @@ object JointVariance {
     }
     val withF = devFrame.withColumn("__greg_f", factor)
     val uiGreg = (0 until p).map { j =>
-      val proj = (0 until pc).map(m => calFeatures.getItem(m) * lit(minvS(j)(m)))
+      val proj = (0 until pc).map(m => calFeatures.getItem(m) * Coef.at(minvS(j), m))
         .foldLeft(lit(0.0): Column)(_ + _)
       (col("__greg_f") * (col(s"ui_$j") - proj)).as(s"ui_greg_$j")
     }
     val withUi = withF.select((withF.columns.map(col).toSeq ++ uiGreg): _*)
-    val iinv = LinAlg.inverse(LinAlg.unpack(p, infoPacked))
+    val iinv = LinAlg.inverse(LinAlg.unpack(p, infoPacked)).t.toArray
     val dbeta = (0 until p).map { r =>
-      (0 until p).map(j => lit(iinv(r, j)) * col(s"ui_greg_$j")).reduce(_ + _)
+      (0 until p).map(j => Coef.at(iinv, r * p + j) * col(s"ui_greg_$j")).reduce(_ + _)
         .as(s"dbeta_greg_$r")
     }
     withUi.select((withUi.columns.map(col).toSeq ++ dbeta): _*)

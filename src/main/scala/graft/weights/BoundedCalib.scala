@@ -65,7 +65,7 @@ object BoundedCalib {
   def factor(xs: Seq[Column], lambda: Array[Double],
       l: Double, u: Double): Column =
     distance(xs.zipWithIndex
-      .map { case (c, j) => c.cast("double") * lit(lambda(j)) }
+      .map { case (c, j) => c.cast("double") * graft.functions.Coef.at(lambda, j) }
       .reduce(_ + _), l, u)._1
 
   /** (F(u), F'(u)) for the bounded logit distance. The expression

@@ -1,6 +1,7 @@
 package graft.weights
 
 import org.apache.spark.sql.functions._
+import graft.functions.Coef
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Composite-weight blending (SURVEY.md M17) — the reference's CV-based
@@ -39,6 +40,6 @@ object Composite {
   def blend(stacked: DataFrame, trt: Column, cohortWt: Column, surveyWt: Column,
       alloc: Allocation): DataFrame =
     stacked.withColumn("composite_wt",
-      when(trt === 1, cohortWt.cast("double") * lit(alloc.aCohort))
-        .otherwise(surveyWt.cast("double") * lit(alloc.aSurvey)))
+      when(trt === 1, cohortWt.cast("double") * Coef.scalar(alloc.aCohort))
+        .otherwise(surveyWt.cast("double") * Coef.scalar(alloc.aSurvey)))
 }

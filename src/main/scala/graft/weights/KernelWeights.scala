@@ -2,6 +2,7 @@ package graft.weights
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Coef
 
 /** Kernel-smoothed pseudo-weights, "KW" (SURVEY.md M5, J2, A7, A8) —
   * the reference's `krnwt` (simu_fun.R:127-211).
@@ -83,7 +84,7 @@ object KernelWeights {
         cWide.crossJoin(broadcast(s))
       }
 
-    val withK = pairs.withColumn("k", kernel((col("q_s") - col("q_c")) / lit(h)))
+    val withK = pairs.withColumn("k", kernel((col("q_s") - col("q_c")) / Coef.scalar(h)))
 
     // stage 1: row sums per survey unit (+ cohort count for the rescue).
     // LEFT-join from the survey side so a unit that produced NO pairs
@@ -154,7 +155,7 @@ object KernelWeights {
     // cohort ids (duplicate input ids would otherwise fan the
     // id-collapsed contributions back out, double-counting them).
     contrib.join(c.select(col("c_id")).distinct(), Seq("c_id"), "right")
-      .select(col("c_id"), (coalesce(col("kw_raw"), lit(0.0)) + lit(flat)).as("kw"))
+      .select(col("c_id"), (coalesce(col("kw_raw"), lit(0.0)) + Coef.scalar(flat)).as("kw"))
   }
 
   /** Bucketed band join: only pairs with |q_s − q_c| <= h survive.
@@ -162,12 +163,12 @@ object KernelWeights {
     * adjacent bucket, so explode survey rows to 3 candidate buckets and
     * hash-join on the bucket id, then filter the exact band. */
   private def bandPairs(s: DataFrame, c: DataFrame, h: Double): DataFrame = {
-    val cb = c.withColumn("b", floor(col("q_c") / lit(h)).cast("long"))
-    val sb = s.withColumn("b0", floor(col("q_s") / lit(h)).cast("long"))
+    val cb = c.withColumn("b", floor(col("q_c") / Coef.scalar(h)).cast("long"))
+    val sb = s.withColumn("b0", floor(col("q_s") / Coef.scalar(h)).cast("long"))
       .withColumn("b", explode(array(col("b0") - 1, col("b0"), col("b0") + 1)))
       .drop("b0")
     sb.join(cb, Seq("b"))
-      .filter(abs(col("q_s") - col("q_c")) <= lit(h))
+      .filter(abs(col("q_s") - col("q_c")) <= Coef.scalar(h))
       .drop("b")
   }
 
@@ -207,7 +208,7 @@ object KernelWeights {
     c0.join(broadcast(contrib),
         cKeyNames.map(n => c0(n) === contrib(n)).reduce(_ && _), "left")
       .select((col("c_id") +:
-        (coalesce(col("kw_raw"), lit(0.0)) + lit(flat)).as("kw") +:
+        (coalesce(col("kw_raw"), lit(0.0)) + Coef.scalar(flat)).as("kw") +:
         (0 until p).map(j => coalesce(col(s"d_kw_$j"), lit(0.0)).as(s"d_kw_$j"))): _*)
   }
 
@@ -246,7 +247,7 @@ object KernelWeights {
         (0 until p).map(j => col(s"d_kw_$j"))): _*)
     val keyNames = "__kw_q" +: (0 until p).map(j => s"__kw_x$j")
     keyed.join(broadcast(renamed), keyNames.toSeq, "left")
-      .withColumn("kw", coalesce(col("kw_raw"), lit(0.0)) + lit(flat))
+      .withColumn("kw", coalesce(col("kw_raw"), lit(0.0)) + Coef.scalar(flat))
       .select(cohort.columns.map(col) ++
         (col("kw") +: (0 until p).map(j =>
           coalesce(col(s"d_kw_$j"), lit(0.0)).as(s"d_kw_$j"))): _*)
@@ -279,13 +280,13 @@ object KernelWeights {
     val s = s0.groupBy(sKey: _*).agg(sum(col("wt_s")).as("wt_s"))
 
     val pairs = s.crossJoin(broadcast(cProfiles))
-    val u = (col("q_s") - col("q_c")) / lit(h)
+    val u = (col("q_s") - col("q_c")) / Coef.scalar(h)
     // dK/du from kernelDeriv; d u/dγ_j = (x_sj − x_cj)·(dq/dγ)/h with
     // logistic scores dq/dγ_j folded into the feature columns by the caller.
     val withK = pairs.withColumn("k", kernel(u))
       .withColumn("dku", kernelDeriv(u))
     val dCols = (0 until p).map { j =>
-      (col("dku") * (col(s"xs$j") - col(s"xc$j")) / lit(h)).as(s"dk$j")
+      (col("dku") * (col(s"xs$j") - col(s"xc$j")) / Coef.scalar(h)).as(s"dk$j")
     }
     val cKey = col("q_c") +: (0 until p).map(j => col(s"xc$j"))
     val wk = withK.select((sKey ++ cKey ++

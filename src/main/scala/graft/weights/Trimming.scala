@@ -39,12 +39,13 @@ object Trimming {
   /** Trim at a fixed cap (the percentile-free core). */
   def trimAt(df: DataFrame, weight: Column, cap: Double): DataFrame = {
     val w = weight.cast("double")
+    val c = graft.functions.Coef.scalar(cap)
     val r = df.agg(
-      coalesce(sum(when(w > cap, w - cap)), lit(0.0)),
-      coalesce(sum(when(w <= cap, w)), lit(0.0))).head()
+      coalesce(sum(when(w > c, w - c)), lit(0.0)),
+      coalesce(sum(when(w <= c, w)), lit(0.0))).head()
     val (excess, untrimmed) = (r.getDouble(0), r.getDouble(1))
     val scale = if (untrimmed > 0.0) 1.0 + excess / untrimmed else 1.0
     df.withColumn("trim_wt",
-      when(w > cap, lit(cap)).otherwise(w * lit(scale)))
+      when(w > c, c).otherwise(w * graft.functions.Coef.scalar(scale)))
   }
 }
