@@ -21,15 +21,60 @@ object Windows {
 
   /** Caller knowledge about the scan input's cardinality: `Small` skips
     * the probe and uses a single-partition window; `Large` goes straight
-    * to the two-phase scan; `Auto` probes with head(threshold+1).
-    * Iterative fitters probe once and pass the answer to every
-    * subsequent iteration. */
+    * to the two-phase scan; `Auto` resolves to one of the two with a
+    * head(threshold+1) probe job (see [[resolve]]).
+    *
+    * A public entry point pays at most one probe; later scans inherit
+    * the answer ([[SizeHint.inherited]]):
+    *  - iterative fitters probe once and pass the answer to every
+    *    iteration (`CoxPH.fit`'s cardinality probe);
+    *  - `hazard.RiskSet.sized` returns the class its scan resolved to,
+    *    and Breslow's prefix scan over the table's event rows takes it;
+    *  - the IPSW/KW chains take the class from `CoxPH.fit`'s probe,
+    *    whose distinct-time count over the cohort is exactly the row
+    *    count of the chain's RiskSet table, and pass it to RiskSet,
+    *    CoxInfluence and HazardInfluence.
+    * Only `Small` is inherited: a filter or projection of a table under
+    * the threshold is itself under it, while a table derived from a
+    * `Large` one may not be, and the two-phase scan sums in a different
+    * order than the single window — so such a table keeps its own probe. */
   sealed trait SizeHint
   object SizeHint {
     case object Auto extends SizeHint
     case object Small extends SizeHint
     case object Large extends SizeHint
+
+    /** The hint for a scan over a filter or projection of a table whose
+      * own scan was `declared` and resolved to `resolved`. */
+    def inherited(declared: SizeHint, resolved: SizeHint): SizeHint =
+      if (resolved == Small) Small else declared
   }
+
+  /** A `Small` table brought to the driver and returned as a local
+    * relation. Joins then broadcast it without a job of their own: a
+    * broadcast job inside a plan the caller persists runs under the
+    * cache manager's cloned session, whose executor class loader is new
+    * for every cache, so its generated classes never hit the codegen
+    * cache. Doubles round-trip bit-for-bit. */
+  def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** The class `hint` resolves to for `df`: `Small`/`Large` as given;
+    * `Auto` runs one head(smallThreshold+1) probe job. Step tables that
+    * have already been tie-collapsed (distinct event times, monthly
+    * buckets, ...) are usually tiny, and a single-partition window is
+    * then cheaper than the range-sampling + offset machinery. head(N+1)
+    * terminates early; the probe's upstream work is paid once more at
+    * the caller's action rather than cached. */
+  def resolve(df: DataFrame, hint: SizeHint, smallThreshold: Int = 20000): SizeHint =
+    hint match {
+      case SizeHint.Auto =>
+        if (smallThreshold > 0 &&
+            df.head(smallThreshold + 1).length <= smallThreshold) SizeHint.Small
+        else SizeHint.Large
+      case declared => declared
+    }
 
   private val PID = "__graft_pid"
   private val LOCAL = "__graft_local_"
@@ -56,21 +101,7 @@ object Windows {
         acc.withColumn(alias, sum(c.cast("double")).over(w))
       }
     }
-    sizeHint match {
-      case SizeHint.Small => return smallPath(df)
-      case SizeHint.Large => () // fall through to two-phase
-      case SizeHint.Auto if smallThreshold > 0 =>
-        // Small-input fast path: step tables that have already been
-        // tie-collapsed (distinct event times, monthly buckets, ...) are
-        // usually tiny; a single-partition window is then cheaper than
-        // the range-sampling + offset machinery. head(N+1) terminates
-        // early; the probe's upstream work is paid once more at the
-        // caller's action rather than cached (hot callers pass an
-        // explicit hint and skip the probe entirely).
-        if (df.head(smallThreshold + 1).length <= smallThreshold)
-          return smallPath(df)
-      case _ => ()
-    }
+    if (resolve(df, sizeHint, smallThreshold) == SizeHint.Small) return smallPath(df)
     val n = if (numParts > 0) numParts
             else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val ranged = df.repartitionByRange(n, orderCols: _*)
@@ -124,7 +155,6 @@ object Windows {
       var i = 0; while (i < acc.length) { acc(i) += tot(i); i += 1 }
       row
     }
-    import spark.implicits._
     val offDf = spark.createDataFrame(
       spark.sparkContext.parallelize(offRows.toSeq.map(org.apache.spark.sql.Row.fromSeq), 1),
       org.apache.spark.sql.types.StructType(
@@ -177,14 +207,8 @@ object Windows {
         acc.withColumn(alias, sum(c.cast("double")).over(w))
       }.drop(groupCols.indices.map(GRP + _): _*)
     }
-    sizeHint match {
-      case SizeHint.Small => return smallPath(keyed)
-      case SizeHint.Large => ()
-      case SizeHint.Auto if smallThreshold > 0 =>
-        if (keyed.head(smallThreshold + 1).length <= smallThreshold)
-          return smallPath(keyed)
-      case _ => ()
-    }
+    if (resolve(keyed, sizeHint, smallThreshold) == SizeHint.Small)
+      return smallPath(keyed)
     val n = if (numParts > 0) numParts
             else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val ranged = keyed.repartitionByRange(n, (gcols ++ orderCols): _*)

@@ -20,15 +20,17 @@ object Breslow {
     * e^{x'β} (lit(1.0) for the null model). `sizeHint` describes the
     * TIE-COLLAPSED table (distinct event times) — pass Small when the
     * time domain is known coarse (discrete grids, binned ages) to
-    * collapse the whole chain into single-window jobs with no probes. */
+    * collapse the whole chain into single-window jobs with no probes.
+    * Under `Auto` the RiskSet scan probes once and the prefix scan over
+    * its event rows inherits a Small answer. */
   def cumulativeHazardSteps(
       df: DataFrame, time: Column, event: Column, weight: Column,
       relHzd: Column,
-      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame =
-    DiscreteHazard.cumulative(
-        DiscreteHazard.steps(df, time, event, weight, relHzd, sizeHint),
-        sizeHint)
+      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame = {
+    val rs = RiskSet.sized(df, time, event, weight, relHzd, sizeHint = sizeHint)
+    DiscreteHazard.cumulative(DiscreteHazard.events(rs.steps), rs.sizeHint)
       .select(col("t"), col("lambda"), col("cum_hzd"))
+  }
 
   /** Λ0 evaluated at the probe grid (reference t* = 1..15,
     * calib_simu_noninf0315.R:122). */

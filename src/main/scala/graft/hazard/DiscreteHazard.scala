@@ -19,8 +19,11 @@ object DiscreteHazard {
   def steps(df: DataFrame, time: Column, event: Column, weight: Column,
       relHzd: Column,
       sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame =
-    RiskSet.steps(df, time, event, weight, relHzd, sizeHint = sizeHint)
-      .filter(col("N") > 0.0)
+    events(RiskSet.steps(df, time, event, weight, relHzd, sizeHint = sizeHint))
+
+  /** The event rows (N > 0) of a RiskSet table with λ and ar. */
+  private[hazard] def events(riskSet: DataFrame): DataFrame =
+    riskSet.filter(col("N") > 0.0)
       .select(col("t"), col("N"), col("Z"), col("Y"),
         (col("N") / col("Z")).as("lambda"),
         (lit(1.0) - col("Y") / col("Z")).as("ar"))

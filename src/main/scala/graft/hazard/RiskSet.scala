@@ -25,12 +25,24 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object RiskSet {
 
+  /** A step table and the hint a scan over a filter or projection of it
+    * should take (`Windows.SizeHint.inherited`): `Small` when the
+    * table's own scan resolved to Small, the caller's hint otherwise. */
+  final case class Sized(steps: DataFrame, sizeHint: Windows.SizeHint)
+
   /** Step table (t, N, Z, Y, A0..A{p-1}, DN0.., DZ0.., DY0..) over every
     * distinct time, events or not. `sizeHint` describes the
     * tie-collapsed table (distinct times). */
   def steps(df: DataFrame, time: Column, event: Column, weight: Column,
       relHzd: Column, features: Seq[Column] = Nil, measures: Seq[Column] = Nil,
-      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame = {
+      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame =
+    sized(df, time, event, weight, relHzd, features, measures, sizeHint).steps
+
+  /** [[steps]] with the size class its scan resolved to, so scans over
+    * the table's event rows need no probe of their own. */
+  def sized(df: DataFrame, time: Column, event: Column, weight: Column,
+      relHzd: Column, features: Seq[Column] = Nil, measures: Seq[Column] = Nil,
+      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): Sized = {
     val p = features.indices
     val q = measures.indices
     val base = df.select((Seq(time.cast("double").as("t"),
@@ -52,8 +64,10 @@ object RiskSet {
     val suffix = Seq(col("zg") -> "Z", col("yg") -> "Y") ++
       p.map(j => col(s"ag$j") -> s"A$j") ++
       q.flatMap(m => Seq(col(s"dzg$m") -> s"DZ$m", col(s"dyg$m") -> s"DY$m"))
-    Windows.scan(grouped, Seq(col("t").desc), suffix, sizeHint = sizeHint)
+    val size = Windows.resolve(grouped, sizeHint)
+    Sized(Windows.scan(grouped, Seq(col("t").desc), suffix, sizeHint = size)
       .select((Seq("t", "N", "Z", "Y") ++ p.map(j => s"A$j") ++
-        q.flatMap(m => Seq(s"DN$m", s"DZ$m", s"DY$m"))).map(col): _*)
+        q.flatMap(m => Seq(s"DN$m", s"DZ$m", s"DY$m"))).map(col): _*),
+      Windows.SizeHint.inherited(sizeHint, size))
   }
 }

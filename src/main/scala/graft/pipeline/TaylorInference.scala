@@ -82,10 +82,9 @@ object TaylorInference {
       (when(col("trt") === 1, -col("__wtc") * ps.feats.getItem(m0))
         .otherwise(0.0)).as(s"__pg$m0"))
     val prepared = withW.select((withW.columns.map(col) ++ ps.gdCols ++ pgCols): _*)
-    val out = inferenceCore(prepared, time, event, featureCols, q, tStar,
+    try inferenceCore(prepared, time, event, featureCols, q, tStar,
       lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
-    ps.cache.unpersist(blocking = false)
-    out
+    finally { ps.cache.unpersist(blocking = false); () }
   }
 
   /** Kernel-weighted (KW) twin of `ipswChain` (the KW block,
@@ -116,53 +115,54 @@ object TaylorInference {
     val q = psFeatureCols.length + 1
     val ps = propensity(cohort.withColumn("__cid", cohortId),
       survey.withColumn("__sid", surveyId), surveyWt, psFeatureCols, a, psIters)
-    val psFeats = ps.feats
-    val score = FeatureArray.dot(psFeats, ps.fit.coefficients)
-    val scored = ps.stacked.withColumn("__q", score)
-    val h = bandwidth.getOrElse(graft.stats.Kernels.bwNrd0(
-      scored.filter(col("trt") === 1).select(col("__q").as("q")), col("q")))
-    val surveyQ = scored.filter(col("trt") === 0)
-    val cohortQ = scored.filter(col("trt") === 1)
-    // kernel weights + Jacobian ATTACHED to the cohort rows through the
-    // profile join — never keyed by the caller's id: duplicate ids in
-    // the cohort frame would fan an id join out and double-count
-    // pseudo-weight mass (the reference addresses units by row index,
-    // simu_fun.R:186, so id uniqueness is not part of its contract).
-    // Persisted: every downstream job (each Cox NR iteration, the
-    // deviate collapse, the hazard chain, the contractions) reads these
-    // rows, and without the cache each would re-run the O(n_c·n_s)
-    // kernel pair aggregation.
-    val cohortW = graft.weights.KernelWeights.attachJacobian(
-      surveyQ, col("__q"), col("w").cast("double"),
-      cohortQ, col("__q"), h,
-      sFeatures = (0 until q).map(m0 => psFeats.getItem(m0)),
-      cFeatures = (0 until q).map(m0 => psFeats.getItem(m0)))
-    val surveyW = surveyQ.withColumns(
-      (("kw" -> lit(null).cast("double")) +:
-        (0 until q).map(m0 => s"d_kw_$m0" -> lit(null).cast("double"))).toMap)
-    val withW = cohortW.unionByName(surveyW)
-      .withColumnRenamed("kw", "__kw")
-      .withColumn("__wtc", when(col("trt") === 1,
-        coalesce(col("__kw"), lit(0.0))).otherwise(lit(0.0)))
-      .withColumn("__psw", when(col("trt") === 1, col("__wtc"))
-        .otherwise(col("w").cast("double")))
-      // π for the KW chain stays the PROPENSITY-model estimate
-      // π_c = a·e^{score} (taylor_deviate.R:118,128 uses pi.c_est for
-      // the KW contractions too), not 1/kw
-      .withColumn("__pi", when(col("trt") === 1, lit(a) * exp(col("__q")))
-        .otherwise(lit(1.0) / col("w").cast("double")))
-    val pgCols = (0 until q).map(m0 =>
-      (when(col("trt") === 1, coalesce(col(s"d_kw_$m0"), lit(0.0)))
-        .otherwise(0.0)).as(s"__pg$m0"))
-    val preparedCache = withW
-      .select((withW.columns.map(col) ++ ps.gdCols ++ pgCols): _*)
-      .persist()
-    val prepared = org.apache.spark.sql.GraftSqlBridge.flattenPlan(preparedCache)
-    val out = inferenceCore(prepared, time, event, featureCols, q, tStar,
-      lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
-    preparedCache.unpersist(blocking = false)
-    ps.cache.unpersist(blocking = false)
-    out
+    try {
+      val psFeats = ps.feats
+      val score = FeatureArray.dot(psFeats, ps.fit.coefficients)
+      val scored = ps.stacked.withColumn("__q", score)
+      val h = bandwidth.getOrElse(graft.stats.Kernels.bwNrd0(
+        scored.filter(col("trt") === 1).select(col("__q").as("q")), col("q")))
+      val surveyQ = scored.filter(col("trt") === 0)
+      val cohortQ = scored.filter(col("trt") === 1)
+      // kernel weights + Jacobian ATTACHED to the cohort rows through the
+      // profile join — never keyed by the caller's id: duplicate ids in
+      // the cohort frame would fan an id join out and double-count
+      // pseudo-weight mass (the reference addresses units by row index,
+      // simu_fun.R:186, so id uniqueness is not part of its contract).
+      // Persisted: every downstream job (each Cox NR iteration, the
+      // deviate collapse, the hazard chain, the contractions) reads these
+      // rows, and without the cache each would re-run the O(n_c·n_s)
+      // kernel pair aggregation.
+      val cohortW = graft.weights.KernelWeights.attachJacobian(
+        surveyQ, col("__q"), col("w").cast("double"),
+        cohortQ, col("__q"), h,
+        sFeatures = (0 until q).map(m0 => psFeats.getItem(m0)),
+        cFeatures = (0 until q).map(m0 => psFeats.getItem(m0)))
+      val surveyW = surveyQ.withColumns(
+        (("kw" -> lit(null).cast("double")) +:
+          (0 until q).map(m0 => s"d_kw_$m0" -> lit(null).cast("double"))).toMap)
+      val withW = cohortW.unionByName(surveyW)
+        .withColumnRenamed("kw", "__kw")
+        .withColumn("__wtc", when(col("trt") === 1,
+          coalesce(col("__kw"), lit(0.0))).otherwise(lit(0.0)))
+        .withColumn("__psw", when(col("trt") === 1, col("__wtc"))
+          .otherwise(col("w").cast("double")))
+        // π for the KW chain stays the PROPENSITY-model estimate
+        // π_c = a·e^{score} (taylor_deviate.R:118,128 uses pi.c_est for
+        // the KW contractions too), not 1/kw
+        .withColumn("__pi", when(col("trt") === 1, lit(a) * exp(col("__q")))
+          .otherwise(lit(1.0) / col("w").cast("double")))
+      val pgCols = (0 until q).map(m0 =>
+        (when(col("trt") === 1, coalesce(col(s"d_kw_$m0"), lit(0.0)))
+          .otherwise(0.0)).as(s"__pg$m0"))
+      val preparedCache = withW
+        .select((withW.columns.map(col) ++ ps.gdCols ++ pgCols): _*)
+        .persist()
+      try {
+        val prepared = org.apache.spark.sql.GraftSqlBridge.flattenPlan(preparedCache)
+        inferenceCore(prepared, time, event, featureCols, q, tStar,
+          lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
+      } finally preparedCache.unpersist(blocking = false)
+    } finally { ps.cache.unpersist(blocking = false); () }
   }
 
   /** Front half shared by both chains: the a-scaled stack (propensity
@@ -184,9 +184,11 @@ object TaylorInference {
       .persist()
     val stacked = org.apache.spark.sql.GraftSqlBridge.flattenPlan(cache)
     val fit =
-      if (psIters > 0) WeightedGLM.logistic(stacked, psFeats, col("trt"),
-        col("__wps"), p = q, maxIter = psIters, tol = 0.0)
-      else WeightedGLM.logistic(stacked, psFeats, col("trt"), col("__wps"), p = q)
+      try {
+        if (psIters > 0) WeightedGLM.logistic(stacked, psFeats, col("trt"),
+          col("__wps"), p = q, maxIter = psIters, tol = 0.0)
+        else WeightedGLM.logistic(stacked, psFeats, col("trt"), col("__wps"), p = q)
+      } catch { case e: Throwable => cache.unpersist(blocking = false); throw e }
     val gdCols = Influence.logisticDeviates(fit, psFeats, col("trt"),
       col("__wps")).zipWithIndex.map { case (c, m0) => c.as(s"__gd$m0") }
     Propensity(cache, stacked, psFeats, fit, gdCols)
@@ -222,6 +224,10 @@ object TaylorInference {
         maxIter = coxIters, tol = 0.0, hint = fitHint(sizeHint))
       else CoxPH.fit(cohortF, time, event, col("__wtc"), feats,
         hint = fitHint(sizeHint))
+    // under Auto the fit's cardinality probe counted exactly the rows of
+    // the RiskSet table below: a Small answer sizes every scan of the
+    // chain, so the chain runs no probe of its own
+    val hint = graft.core.Windows.SizeHint.inherited(sizeHint, fit.stepSize)
 
     // 3. one RiskSet table (with the γ measures ∂w̃/∂γ = __pg) feeds
     //    both the β influence and the hazard chain. Influence frame:
@@ -230,12 +236,12 @@ object TaylorInference {
     //    rbind(…, matrix(0, n_s, …)))
     val steps = RiskSet.steps(cohortF, time, event, col("__wtc"),
       CoxInfluence.relHzd(feats, fit.coefficients), feats,
-      (0 until q).map(m0 => col(s"__pg$m0")), sizeHint)
+      (0 until q).map(m0 => col(s"__pg$m0")), hint)
     val pass = Seq(col("trt"), col("__pi"), col("__psw")) ++
       (0 until q).map(m0 => col(s"__gd$m0")) ++
       (0 until q).map(m0 => col(s"__pg$m0"))
     val devC = CoxInfluence.deviates(cohortF, time, event, col("__wtc"),
-      feats, fit.coefficients, fit.infoPacked, steps, pass, sizeHint)
+      feats, fit.coefficients, fit.infoPacked, steps, pass, hint)
     // build survey rows with the same schema as devC
     val devCols = devC.columns
     val surveySide = prepared.filter(col("trt") === 0)
@@ -278,7 +284,7 @@ object TaylorInference {
         gammaDevs = (0 until q).map(m0 => col(s"__gd$m0")),
         betaDevPrefix = "dbeta_m_",
         directScale = col("__psw") * col("trt"),
-        sizeHint = sizeHint,
+        sizeHint = hint,
         passthrough = Seq(col("trt"), col("__pi"), col("__psw")))
 
       // 6. contractions: Poisson Σ(1−π)Δ² over both samples; PPS

@@ -30,12 +30,16 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   */
 object CoxPH {
 
+  /** `stepSize` is the size class of the fit's tie-collapsed step table
+    * (the caller's hint, or the answer of the fit's cardinality probe);
+    * its row count is that of a hazard.RiskSet table over the same rows. */
   final case class Fit(
       coefficients: Array[Double],
       iterations: Int,
       converged: Boolean,
       infoPacked: Array[Double],
-      scoreNorm: Double) {
+      scoreNorm: Double,
+      stepSize: Windows.SizeHint) {
     /** Sum of |U_j| at the fitted β — the reference's own diagnostic
       * (`U(beta, fit)` ≈ 0, taylor_deviate.R:1125-1198). */
     def scoreResidual: Double = scoreNorm
@@ -141,19 +145,22 @@ object CoxPH {
     val p = features.length
     var lastInfo = new Array[Double](p * (p + 1) / 2)
     var lastScoreNorm = Double.MaxValue
+    var sizeHint: Windows.SizeHint = Windows.SizeHint.Auto
     val res = Newton.run(df, columns(time, event, weight, features),
         new Array[Double](p), maxIter, tol) { base =>
       // one up-front cardinality probe shared by every NR iteration:
-      // events must exist, and the distinct-time count decides the scan
-      // strategy (single-partition window vs two-phase distributed scan).
-      // A caller that already knows its step-table size (the composed
-      // chains pass their own hint) skips the probe job — the no-events
-      // guard then surfaces as the ANSI divide-by-zero in iteration 1.
-      val sizeHint = hint.getOrElse {
-        val probe = base.agg(sum(col("__d")), countDistinct(col("__t"))).head()
+      // events must exist, and the distinct-time count (a null time is
+      // one more group) decides the scan strategy (single-partition
+      // window vs two-phase distributed scan). A caller that already
+      // knows its step-table size (the composed chains pass their own
+      // hint) skips the probe job — the no-events guard then surfaces as
+      // the ANSI divide-by-zero in iteration 1.
+      sizeHint = hint.getOrElse {
+        val probe = base.agg(sum(col("__d")), countDistinct(col("__t")),
+          max(col("__t").isNull.cast("int"))).head()
         require(probe.getDouble(0) > 0,
           "CoxPH.fit: no events (d=1) in input — partial likelihood undefined")
-        if (probe.getLong(1) <= 20000) Windows.SizeHint.Small
+        if (probe.getLong(1) + probe.getInt(2) <= 20000) Windows.SizeHint.Small
         else Windows.SizeHint.Large
       }
       beta => {
@@ -163,6 +170,6 @@ object CoxPH {
         Newton.step(p, info, u)
       }
     }
-    Fit(res.theta, res.iterations, res.converged, lastInfo, lastScoreNorm)
+    Fit(res.theta, res.iterations, res.converged, lastInfo, lastScoreNorm, sizeHint)
   }
 }

@@ -76,8 +76,10 @@ object CoxInfluence {
         col("G0") +: (0 until p).map(j => col(s"G1$j"))): _*)
 
     // join Z/A/G back to unit rows by exact t (every t_i is in steps);
-    // a Small step table broadcasts — no shuffle of the unit rows
-    val stepsSide = if (sizeHint == Windows.SizeHint.Small) broadcast(gSteps)
+    // a Small step table broadcasts from the driver (Windows.local) — no
+    // shuffle of the unit rows, and no broadcast job inside a caller's
+    // persisted plan
+    val stepsSide = if (sizeHint == Windows.SizeHint.Small) broadcast(Windows.local(gSteps))
                     else gSteps
     val joined = base.join(stepsSide, Seq("__t"))
 

@@ -210,11 +210,8 @@ object HazardInfluence {
     // pass over the unit frame. (Exact doubles survive the round-trip
     // bit-for-bit, so hash oracles are unaffected.)
     val stepTable: DataFrame =
-      if (sizeHint == Windows.SizeHint.Small) {
-        val localRows = stepTable0.collect().toIndexedSeq
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(localRows, 1), stepTable0.schema)
-      } else stepTable0
+      if (sizeHint == Windows.SizeHint.Small) Windows.local(stepTable0)
+      else stepTable0
 
     // ---- t*-side constants: one broadcast-probe aggregate, |t*| rows ----
     import spark.implicits._

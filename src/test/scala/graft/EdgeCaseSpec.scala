@@ -150,4 +150,27 @@ class EdgeCaseSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
   }
+
+  test("a chain whose Cox fit throws releases its caches") {
+    // no cohort events: CoxPH.fit raises "no events" after the
+    // propensity stack (and, for KW, the prepared frame) is cached
+    spark.catalog.clearCache()
+    val cohort = Seq((1.0, 0.0, 0.5, 1L), (2.0, 0.0, -0.3, 2L), (3.0, 0.0, 1.1, 3L))
+      .toDF("t", "d", "x", "id")
+    val survey = Seq((1.5, 1.0, 0.2, 2.0, 4L), (2.5, 0.0, -0.8, 3.0, 5L))
+      .toDF("t", "d", "x", "wt", "id")
+    val ipsw = intercept[Exception] {
+      graft.pipeline.TaylorInference.ipswChain(cohort, survey, col("wt"),
+        col("t"), col("d"), Seq("x"), Seq("x"), Seq(2.0), psIters = 2)
+    }
+    assert(String.valueOf(ipsw.getMessage).contains("no events"), ipsw.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val kw = intercept[Exception] {
+      graft.pipeline.TaylorInference.kwChain(cohort, col("id"), survey, col("id"),
+        col("wt"), col("t"), col("d"), Seq("x"), Seq("x"), Seq(2.0),
+        bandwidth = Some(0.5), psIters = 2)
+    }
+    assert(String.valueOf(kw.getMessage).contains("no events"), kw.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

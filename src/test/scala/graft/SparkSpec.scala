@@ -20,6 +20,11 @@ object TestSpark {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the codegen cache sized as SparkEntry.session sizes it: at the
+      // default 100 entries one Monte-Carlo replicate's generated
+      // classes evict each other, and CompileOnceSpec could not tell a
+      // recompile from an eviction
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
