@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ListMap
 
 /** Ordering-dependent computation (SURVEY.md O1-O5) at scale.
   *
@@ -97,9 +98,8 @@ object Windows {
     def smallPath(input: DataFrame): DataFrame = {
       val w = Window.orderBy(orderCols: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      sums.foldLeft(input) { case (acc, (c, alias)) =>
-        acc.withColumn(alias, sum(c.cast("double")).over(w))
-      }
+      input.withColumns(ListMap(sums.map { case (c, alias) =>
+        alias -> sum(c.cast("double")).over(w) }: _*))
     }
     if (resolve(df, sizeHint, smallThreshold) == SizeHint.Small) return smallPath(df)
     val n = if (numParts > 0) numParts
@@ -108,10 +108,7 @@ object Windows {
       .withColumn(PID, spark_partition_id())
     val w = Window.partitionBy(col(PID)).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var local = ranged
-    sums.zipWithIndex.foreach { case ((c, _), i) =>
-      local = local.withColumn(LOCAL + i, sum(c.cast("double")).over(w))
-    }
+    var local = ranged.withColumns(localSums(sums, w))
     // Pinning `local` is CORRECTNESS-critical, not a cache: the offsets
     // are computed against one concrete range partitioning, and
     // repartitionByRange re-samples boundaries on re-materialization.
@@ -161,15 +158,24 @@ object Windows {
         org.apache.spark.sql.types.StructField(PID, org.apache.spark.sql.types.IntegerType) +:
           sums.indices.map(i => org.apache.spark.sql.types.StructField(
             s"__graft_off_$i", org.apache.spark.sql.types.DoubleType))))
-    var out = local.join(broadcast(offDf), Seq(PID), "left")
-    sums.zipWithIndex.foreach { case ((_, alias), i) =>
-      out = out.withColumn(alias,
-        col(LOCAL + i) + coalesce(col(s"__graft_off_$i"), lit(0.0)))
-    }
+    val out = local.join(broadcast(offDf), Seq(PID), "left")
+      .withColumns(offsetSums(sums))
     val tmpCols = Seq(PID) ++ sums.indices.map(LOCAL + _) ++
       sums.indices.map(i => s"__graft_off_$i")
     out.drop(tmpCols: _*)
   }
+
+  // one multi-column step per scan phase: a withColumn per sum column
+  // would re-analyse the whole plan once per column (Catalyst's
+  // CollapseWindow merges the windows either way, so the physical plan
+  // is the same)
+  private def localSums(sums: Seq[(Column, String)],
+      w: org.apache.spark.sql.expressions.WindowSpec): ListMap[String, Column] =
+    ListMap(sums.indices.map(i => (LOCAL + i) -> sum(sums(i)._1.cast("double")).over(w)): _*)
+
+  private def offsetSums(sums: Seq[(Column, String)]): ListMap[String, Column] =
+    ListMap(sums.indices.map(i => sums(i)._2 ->
+      (col(LOCAL + i) + coalesce(col(s"__graft_off_$i"), lit(0.0)))): _*)
 
   private val GRP = "__graft_g"
 
@@ -195,17 +201,14 @@ object Windows {
       sizeHint: SizeHint = SizeHint.Auto,
       release: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
     val spark = df.sparkSession
-    var keyed = df
-    groupCols.zipWithIndex.foreach { case (c, i) =>
-      keyed = keyed.withColumn(GRP + i, c)
-    }
+    val keyed = df.withColumns(ListMap(groupCols.indices.map(i => (GRP + i) -> groupCols(i)): _*))
     val gcols = groupCols.indices.map(i => col(GRP + i))
     def smallPath(input: DataFrame): DataFrame = {
       val w = Window.partitionBy(gcols: _*).orderBy(orderCols: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      sums.foldLeft(input) { case (acc, (c, alias)) =>
-        acc.withColumn(alias, sum(c.cast("double")).over(w))
-      }.drop(groupCols.indices.map(GRP + _): _*)
+      input.withColumns(ListMap(sums.map { case (c, alias) =>
+        alias -> sum(c.cast("double")).over(w) }: _*))
+        .drop(groupCols.indices.map(GRP + _): _*)
     }
     if (resolve(keyed, sizeHint, smallThreshold) == SizeHint.Small)
       return smallPath(keyed)
@@ -215,10 +218,7 @@ object Windows {
       .withColumn(PID, spark_partition_id())
     val w = Window.partitionBy((col(PID) +: gcols): _*).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var local = ranged
-    sums.zipWithIndex.foreach { case ((c, _), i) =>
-      local = local.withColumn(LOCAL + i, sum(c.cast("double")).over(w))
-    }
+    var local = ranged.withColumns(localSums(sums, w))
     // pinning is CORRECTNESS-critical (see scan): offsets must see the
     // same concrete range partitioning as the joined-back rows
     local = release match {
@@ -234,17 +234,11 @@ object Windows {
     val totals = local.groupBy((col(PID) +: gcols): _*).agg(aggs.head, aggs.tail: _*)
     val offW = Window.partitionBy(gcols: _*).orderBy(col(PID))
       .rowsBetween(Window.unboundedPreceding, -1)
-    var offDf = totals
-    sums.indices.foreach { i =>
-      offDf = offDf.withColumn(s"__graft_off_$i",
-        coalesce(sum(col(s"t$i")).over(offW), lit(0.0)))
-    }
-    offDf = offDf.drop(sums.indices.map(i => s"t$i"): _*)
-    var out = local.join(broadcast(offDf), (Seq(PID) ++ groupCols.indices.map(GRP + _)), "left")
-    sums.zipWithIndex.foreach { case ((_, alias), i) =>
-      out = out.withColumn(alias,
-        col(LOCAL + i) + coalesce(col(s"__graft_off_$i"), lit(0.0)))
-    }
+    val offDf = totals.withColumns(ListMap(sums.indices.map(i =>
+        s"__graft_off_$i" -> coalesce(sum(col(s"t$i")).over(offW), lit(0.0))): _*))
+      .drop(sums.indices.map(i => s"t$i"): _*)
+    val out = local.join(broadcast(offDf), (Seq(PID) ++ groupCols.indices.map(GRP + _)), "left")
+      .withColumns(offsetSums(sums))
     val tmpCols = Seq(PID) ++ sums.indices.map(LOCAL + _) ++
       sums.indices.map(i => s"__graft_off_$i") ++ groupCols.indices.map(GRP + _)
     out.drop(tmpCols: _*)

@@ -8,6 +8,7 @@ import graft.weights.{Composite, Greg, Ipsw, KernelWeights, PostStratify}
 import graft.variance.Jackknife
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ListMap
 
 /** The reference's end-to-end data-integration workflow (SURVEY.md §3)
   * as a composable Spark API: stack cohort ∪ survey, fit the propensity
@@ -26,8 +27,8 @@ object SurveyIntegration {
   /** Stack cohort (trt=1, w=1) ∪ survey (trt=0, w=design weight) —
     * simu_fun.R:22-25. Cohort design weight column is carried if given. */
   def stack(cohort: DataFrame, survey: DataFrame, surveyWt: Column): DataFrame = {
-    val c = cohort.withColumn("trt", lit(1)).withColumn("w", lit(1.0))
-    val s = survey.withColumn("trt", lit(0)).withColumn("w", surveyWt.cast("double"))
+    val c = cohort.withColumns(ListMap("trt" -> lit(1), "w" -> lit(1.0)))
+    val s = survey.withColumns(ListMap("trt" -> lit(0), "w" -> surveyWt.cast("double")))
     c.unionByName(s, allowMissingColumns = true)
   }
 

@@ -71,17 +71,17 @@ object TaylorInference {
     // 2. cohort pseudo-weights: ipsw = exp(−x'γ)/a, closed-form
     //    ∂w̃/∂γ = −ipsw·x_ps
     val score = FeatureArray.dot(ps.feats, ps.fit.coefficients)
-    val withW = ps.stacked
-      .withColumn("__wtc", when(col("trt") === 1,
-        Ipsw.fromLinearPredictor(score, a)).otherwise(lit(0.0)))
-      .withColumn("__psw", when(col("trt") === 1, col("__wtc"))
-        .otherwise(col("w").cast("double")))
-      .withColumn("__pi", when(col("trt") === 1, lit(1.0) / col("__wtc"))
-        .otherwise(lit(1.0) / col("w").cast("double")))
+    val withW = ps.stacked.withColumn("__wtc", when(col("trt") === 1,
+      Ipsw.fromLinearPredictor(score, a)).otherwise(lit(0.0)))
     val pgCols = (0 until q).map(m0 =>
       (when(col("trt") === 1, -col("__wtc") * ps.feats.getItem(m0))
         .otherwise(0.0)).as(s"__pg$m0"))
-    val prepared = withW.select((withW.columns.map(col) ++ ps.gdCols ++ pgCols): _*)
+    val prepared = withW.select((withW.columns.map(col) ++ Seq(
+      when(col("trt") === 1, col("__wtc"))
+        .otherwise(col("w").cast("double")).as("__psw"),
+      when(col("trt") === 1, lit(1.0) / col("__wtc"))
+        .otherwise(lit(1.0) / col("w").cast("double")).as("__pi")) ++
+      ps.gdCols ++ pgCols): _*)
     try inferenceCore(prepared, time, event, featureCols, q, tStar,
       lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
     finally { ps.cache.unpersist(blocking = false); () }
@@ -144,18 +144,18 @@ object TaylorInference {
         .withColumnRenamed("kw", "__kw")
         .withColumn("__wtc", when(col("trt") === 1,
           coalesce(col("__kw"), lit(0.0))).otherwise(lit(0.0)))
-        .withColumn("__psw", when(col("trt") === 1, col("__wtc"))
-          .otherwise(col("w").cast("double")))
-        // π for the KW chain stays the PROPENSITY-model estimate
-        // π_c = a·e^{score} (taylor_deviate.R:118,128 uses pi.c_est for
-        // the KW contractions too), not 1/kw
-        .withColumn("__pi", when(col("trt") === 1, lit(a) * exp(col("__q")))
-          .otherwise(lit(1.0) / col("w").cast("double")))
       val pgCols = (0 until q).map(m0 =>
         (when(col("trt") === 1, coalesce(col(s"d_kw_$m0"), lit(0.0)))
           .otherwise(0.0)).as(s"__pg$m0"))
-      val preparedCache = withW
-        .select((withW.columns.map(col) ++ ps.gdCols ++ pgCols): _*)
+      val preparedCache = withW.select((withW.columns.map(col) ++ Seq(
+          when(col("trt") === 1, col("__wtc"))
+            .otherwise(col("w").cast("double")).as("__psw"),
+          // π for the KW chain stays the PROPENSITY-model estimate
+          // π_c = a·e^{score} (taylor_deviate.R:118,128 uses pi.c_est for
+          // the KW contractions too), not 1/kw
+          when(col("trt") === 1, lit(a) * exp(col("__q")))
+            .otherwise(lit(1.0) / col("w").cast("double")).as("__pi")) ++
+          ps.gdCols ++ pgCols): _*)
         .persist()
       try {
         val prepared = org.apache.spark.sql.GraftSqlBridge.flattenPlan(preparedCache)

@@ -28,11 +28,13 @@ object Pps {
     * wt_i = ΣM / (n·M_i) (simu_fun.R:465). */
   def draw(df: DataFrame, idKey: Column, size: Column, n: Int, salt: Long = 0L): DataFrame = {
     val totalM = df.agg(sum(size.cast("double"))).head().getDouble(0)
+    val wt = (Coef.scalar(totalM) / (lit(n.toDouble) * size.cast("double"))).as("wt")
+    // one projection drops the key and sets wt (in place if df has one)
+    val out = df.columns.toSeq.map(c => if (c == "wt") wt else col(c))
     df.withColumn("__key", sampleKey(idKey, size, salt))
       .orderBy(col("__key"))
       .limit(n)
-      .drop("__key")
-      .withColumn("wt", Coef.scalar(totalM) / (lit(n.toDouble) * size.cast("double")))
+      .select((if (df.columns.contains("wt")) out else out :+ wt): _*)
   }
 
   /** Two-stage cluster design (srs-pps / pps-pps, simu_fun.R:389-444):

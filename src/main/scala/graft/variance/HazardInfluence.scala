@@ -5,6 +5,7 @@ import graft.functions.Coef
 import graft.hazard.RiskSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.immutable.ListMap
 
 /** Influence functions for the hazard / absolute-risk chain (SURVEY.md
   * M13 completion) — the reference's `lambda.ar_w` deviate matrices
@@ -196,9 +197,9 @@ object HazardInfluence {
         Seq(col("ta") -> "EAv", col("tb") -> "EBv"), sizeHint = sizeHint)
         .select(col("evT"), col("EAv"), col("EBv"))
       scanned.join(broadcast(ivalsCum), Seq("evT"), "left")
-        .withColumn("EA", coalesce(col("EAv"), lit(0.0)))
-        .withColumn("EB", coalesce(col("EBv"), lit(0.0)))
-    } else scanned.withColumn("EA", lit(0.0)).withColumn("EB", lit(0.0))
+        .withColumns(ListMap("EA" -> coalesce(col("EAv"), lit(0.0)),
+          "EB" -> coalesce(col("EBv"), lit(0.0))))
+    } else scanned.withColumns(ListMap("EA" -> lit(0.0), "EB" -> lit(0.0)))
 
     // Under the Small contract the step table is ≤ ~20k rows but its
     // PLAN is deep: tie-collapse, suffix/prefix windows (each a
@@ -239,10 +240,9 @@ object HazardInfluence {
     // have __d = __rh = __dsc = 0, so every step-value use vanishes —
     // the coalesces only stop 0·null = null propagation.
     val units = base.join(unitStep, Seq("__t"), "left")
-      .withColumn("Z", coalesce(col("Z"), lit(1.0)))
-      .withColumn("GL", coalesce(col("GL"), lit(0.0)))
-      .withColumn("EA", coalesce(col("EA"), lit(0.0)))
-      .withColumn("EB", coalesce(col("EB"), lit(0.0)))
+      .withColumns(ListMap("Z" -> coalesce(col("Z"), lit(1.0)),
+        "GL" -> coalesce(col("GL"), lit(0.0)), "EA" -> coalesce(col("EA"), lit(0.0)),
+        "EB" -> coalesce(col("EB"), lit(0.0))))
 
     // ---- per-t* deviates, exploded long. ONE parametric expression set
     //      indexed into constant arrays (element_at), not |t*| inlined

@@ -3,6 +3,7 @@ package graft.weights
 import graft.core.{Gram, LinAlg}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** GREG / linear calibration (SURVEY.md M7) — the reference's `greg.f`
   * (taylor_deviate.R:988-1007) and `calib_est`'s clip-and-refit
@@ -61,7 +62,7 @@ object Greg {
   def calibrate(df: DataFrame, features: Column, weight: Column,
       targets: Array[Double], clip: Double = 1e-5): DataFrame = {
     val cal = solve(df, features, weight, targets)
-    df.withColumn("greg_f", factor(features, cal))
-      .withColumn("greg_wt", calibratedWeight(features, weight, cal, clip))
+    df.withColumns(ListMap("greg_f" -> factor(features, cal),
+      "greg_wt" -> calibratedWeight(features, weight, cal, clip)))
   }
 }
