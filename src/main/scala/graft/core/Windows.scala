@@ -51,16 +51,6 @@ object Windows {
       if (resolved == Small) Small else declared
   }
 
-  /** A `Small` table brought to the driver and returned as a local
-    * relation. Joins then broadcast it without a job of their own: a
-    * broadcast job inside a plan the caller persists runs under the
-    * cache manager's cloned session, whose executor class loader is new
-    * for every cache, so its generated classes never hit the codegen
-    * cache. Doubles round-trip bit-for-bit. */
-  def local(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-
   /** The class `hint` resolves to for `df`: `Small`/`Large` as given;
     * `Auto` runs one head(smallThreshold+1) probe job. Step tables that
     * have already been tie-collapsed (distinct event times, monthly

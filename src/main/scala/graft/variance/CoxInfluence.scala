@@ -76,11 +76,16 @@ object CoxInfluence {
         col("G0") +: (0 until p).map(j => col(s"G1$j"))): _*)
 
     // join Z/A/G back to unit rows by exact t (every t_i is in steps);
-    // a Small step table broadcasts from the driver (Windows.local) — no
-    // shuffle of the unit rows, and no broadcast job inside a caller's
-    // persisted plan
-    val stepsSide = if (sizeHint == Windows.SizeHint.Small) broadcast(Windows.local(gSteps))
-                    else gSteps
+    // a Small step table is collected and broadcast from a local
+    // relation — no shuffle of the unit rows, and no broadcast job
+    // inside the plan: a caller that persists the deviates would run
+    // that job under the cache manager's cloned session, whose executor
+    // class loader is new for every cache, so its generated classes
+    // would never hit the codegen cache
+    val stepsSide =
+      if (sizeHint == Windows.SizeHint.Small) broadcast(df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(gSteps.collect(): _*), gSteps.schema))
+      else gSteps
     val joined = base.join(stepsSide, Seq("__t"))
 
     val ui = (0 until p).map { j =>

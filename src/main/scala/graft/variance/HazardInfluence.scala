@@ -201,34 +201,44 @@ object HazardInfluence {
           "EB" -> coalesce(col("EBv"), lit(0.0))))
     } else scanned.withColumns(ListMap("EA" -> lit(0.0), "EB" -> lit(0.0)))
 
+    // ---- t*-side constants: per t*, the step-table row with the largest
+    //      __t ≤ t* (none: every constant is 0) ----
+    val constCols = Seq("LAM", "GL", "LG", "GA", "GB") ++
+      (0 until p).map(j => s"C$j") ++ (0 until p).map(j => s"CG$j") ++
+      (0 until q).map(m => s"CN$m") ++ (0 until q).map(m => s"CGN$m")
     // Under the Small contract the step table is ≤ ~20k rows but its
     // PLAN is deep: tie-collapse, suffix/prefix windows (each a
     // single-partition exchange), the λ*-grid full-outer merge, LOCF and
     // the EA/EB bucket join — rebuilt at EVERY downstream action.
-    // Localize it ONCE to the driver and substitute a literal local
-    // relation: the t*-probe job collapses to a LocalTableScan and the
-    // unit-side broadcast carries no subplan, leaving each action one
-    // pass over the unit frame. (Exact doubles survive the round-trip
-    // bit-for-bit, so hash oracles are unaffected.)
-    val stepTable: DataFrame =
-      if (sizeHint == Windows.SizeHint.Small) Windows.local(stepTable0)
-      else stepTable0
-
-    // ---- t*-side constants: one broadcast-probe aggregate, |t*| rows ----
-    import spark.implicits._
-    val probeDf = tStar.toDF("t_star")
-    val constCols = Seq("LAM", "GL", "LG", "GA", "GB") ++
-      (0 until p).map(j => s"C$j") ++ (0 until p).map(j => s"CG$j") ++
-      (0 until q).map(m => s"CN$m") ++ (0 until q).map(m => s"CGN$m")
-    val probed = stepTable.join(broadcast(probeDf), col("__t") <= col("t_star"), "right")
-      .groupBy(col("t_star"))
-      .agg(max_by(struct(constCols.map(col): _*), col("__t")).as("s"))
-      .select(col("t_star") +: constCols.map(c => col(s"s.$c").as(c)): _*)
-      .collect()
-    val consts: Map[Double, Row] =
-      probed.map(r => r.getDouble(0) -> r).toMap
-    def cst(r: Row, name: String): Double =
-      if (r.isNullAt(r.fieldIndex(name))) 0.0 else r.getDouble(r.fieldIndex(name))
+    // Localize it ONCE to the driver: the t* constants are read from the
+    // collected rows, and a local relation replaces the plan, so the
+    // unit-side broadcast runs no job and carries no subplan, leaving
+    // each action one pass over the unit frame. (Exact doubles survive
+    // the round-trip bit-for-bit, so hash oracles are unaffected.)
+    val (stepTable, consts): (DataFrame, Map[Double, Row]) =
+      if (sizeHint == Windows.SizeHint.Small) {
+        val rows = stepTable0.collect()
+        val ti = stepTable0.schema.fieldIndex("__t")
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), stepTable0.schema),
+          tStar.flatMap { ts =>
+            val upTo = rows.filter(r => !r.isNullAt(ti) && r.getDouble(ti) <= ts)
+            if (upTo.isEmpty) None else Some(ts -> upTo.maxBy(_.getDouble(ti)))
+          }.toMap)
+      } else {
+        // one broadcast-probe aggregate, |t*| rows
+        import spark.implicits._
+        val probed = stepTable0
+          .join(broadcast(tStar.toDF("t_star")), col("__t") <= col("t_star"), "right")
+          .groupBy(col("t_star"))
+          .agg(max_by(struct(constCols.map(col): _*), col("__t")).as("s"))
+          .select(col("t_star") +: constCols.map(c => col(s"s.$c").as(c)): _*)
+          .collect()
+        (stepTable0, probed.map(r => r.getDouble(0) -> r).toMap)
+      }
+    def cst(ts: Double, name: String): Double = consts.get(ts) match {
+      case Some(r) if !r.isNullAt(r.fieldIndex(name)) => r.getDouble(r.fieldIndex(name))
+      case _ => 0.0
+    }
 
     // ---- unit side: exact join on t (every t_i is in the step table;
     //      the γ-chain terms are t*-constants and need no unit lookup) ----
@@ -256,7 +266,7 @@ object HazardInfluence {
     val tsSorted = tStar.sorted
     // one array column per constant, shared by every read of it
     val cArr: Map[String, Column] = constCols.map(name =>
-      name -> Coef.array(tsSorted.map(ts => cst(consts(ts), name)).toArray)).toMap
+      name -> Coef.array(tsSorted.map(ts => cst(ts, name)).toArray)).toMap
     val idx = col("__pos") + 1 // element_at is 1-based
     def at(name: String): Column = element_at(cArr(name), idx)
 
@@ -285,9 +295,9 @@ object HazardInfluence {
           .map(m => col(s"__db$m") * lit(risk.get.x0(m)))
           .foldLeft(lit(0.0): Column)(_ + _)
         def aRArr(src: String): Column = Coef.array(tsSorted.map(ts =>
-          1.0 - math.exp(-cst(consts(ts), src) * rr)).toArray)
+          1.0 - math.exp(-cst(ts, src) * rr)).toArray)
         def sclArr(src: String): Column = Coef.array(tsSorted.map(ts =>
-          math.exp(-cst(consts(ts), src) * rr) * rr).toArray)
+          math.exp(-cst(ts, src) * rr) * rr).toArray)
         Seq(element_at(aRArr("LAM"), idx).as("abs_risk"),
           (element_at(sclArr("LAM"), idx) * (at("LAM") * dbx + dLambda))
             .as("d_abs_risk")) ++
