@@ -147,7 +147,7 @@ object CoxPH {
     var lastScoreNorm = Double.MaxValue
     var sizeHint: Windows.SizeHint = Windows.SizeHint.Auto
     val res = Newton.run(df, columns(time, event, weight, features),
-        new Array[Double](p), maxIter, tol) { base =>
+        new Array[Double](p), maxIter, tol, "CoxPH") { base =>
       // one up-front cardinality probe shared by every NR iteration:
       // events must exist, and the distinct-time count (a null time is
       // one more group) decides the scan strategy (single-partition

@@ -42,7 +42,8 @@ object CoxPHReplicated {
       CoxPH.columns(time, event, weight, features)
     var maxResid = Double.MaxValue
 
-    val res = Newton.run(df, cols, new Array[Double](m * p), maxIter, tol) { base =>
+    val res = Newton.run(df, cols, new Array[Double](m * p), maxIter, tol,
+        "CoxPHReplicated") { base =>
       // size the (replicate, time) step table ONCE — every NR iteration
       // scans the same axis, so the small-vs-two-phase decision is paid a
       // single head() probe, not one per iteration. The step table is

@@ -59,7 +59,8 @@ object GLMReplicated {
       features.indices.map(j => features(j).cast("double").as(s"__f$j"))
     val f = (0 until p).map(j => col(s"__f$j"))
     val tri = p * (p + 1) / 2
-    val res = Newton.run(df, cols, new Array[Double](m * p), maxIter, tol) { base => gamma =>
+    val res = Newton.run(df, cols, new Array[Double](m * p), maxIter, tol,
+        "GLMReplicated") { base => gamma =>
       val g = graft.functions.Coef.array(gamma)
       val eta = f.indices.map(j =>
           f(j) * element_at(g, col("__r") * p + (j + 1)))

@@ -18,7 +18,10 @@ import org.apache.spark.storage.StorageLevel
   *  - the cache is released on every path, a failing solve included;
   *  - θ ← θ + step, stopping after `maxIter` steps or once
   *    max|step| < `tol` (tol = 0 pins the iteration count, so a SQL
-  *    oracle can replay the same fixed point).
+  *    oracle can replay the same fixed point);
+  *  - a singular solve or a non-finite θ fails the fit with a
+  *    [[NumericalError]] naming the fitter and the iteration. The check
+  *    reads the driver's θ only, so it adds no job.
   *
   * Each fitter supplies one pass: a distributed aggregate at the current
   * θ and its driver-side solve. θ enters the aggregate through
@@ -30,13 +33,21 @@ object Newton {
   final case class Result(theta: Array[Double], iterations: Int,
       converged: Boolean, maxStep: Double)
 
+  /** A fit that cannot go on: `fitter`'s information matrix (or
+    * Hessian) was singular at `iteration`, or its coefficients left the
+    * finite doubles there (separation, divergence, non-finite input). */
+  final class NumericalError(val fitter: String, val iteration: Int,
+      reason: String, cause: Throwable = null)
+    extends RuntimeException(s"$fitter: $reason at iteration $iteration", cause)
+
   /** Iterate θ from `theta0` over `df` projected to `cols`.
     *
+    * @param fitter the fitter's name, carried by its errors
     * @param setup called once with the cached projection, before the
     *              first step (size probes go here); returns the pass,
     *              which maps the current θ to the step added to it */
   def run(df: DataFrame, cols: Seq[Column], theta0: Array[Double],
-      maxIter: Int, tol: Double)(
+      maxIter: Int, tol: Double, fitter: String)(
       setup: DataFrame => Array[Double] => Array[Double]): Result = {
     val cached = df.select(cols: _*).persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -46,15 +57,21 @@ object Newton {
       var converged = false
       var maxStep = Double.MaxValue
       while (iter < maxIter && !converged) {
-        val step = pass(theta)
+        val step = try pass(theta) catch {
+          case e: breeze.linalg.MatrixSingularException =>
+            throw new NumericalError(fitter, iter + 1, "singular information matrix", e)
+        }
         maxStep = 0.0
+        var finite = true
         var i = 0
         while (i < theta.length) {
           theta(i) += step(i)
           maxStep = math.max(maxStep, math.abs(step(i)))
+          finite &&= !theta(i).isNaN && !theta(i).isInfinite
           i += 1
         }
         iter += 1
+        if (!finite) throw new NumericalError(fitter, iter, "non-finite coefficients")
         converged = maxStep < tol
       }
       Result(theta, iter, converged, maxStep)

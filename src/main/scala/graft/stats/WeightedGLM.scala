@@ -86,7 +86,7 @@ object WeightedGLM {
     val f = (0 until p).map(i => col(s"__f$i"))
     val tri = p * (p + 1) / 2
     var lastHessian = new Array[Double](tri)
-    val res = Newton.run(df, cols, new Array[Double](p), maxIter, tol) { flat => beta =>
+    val res = Newton.run(df, cols, new Array[Double](p), maxIter, tol, "IRLS") { flat => beta =>
       val eta = f.indices.map(i => graft.functions.Coef.at(beta, i) * f(i))
         .foldLeft(lit(0.0): Column)(_ + _)
       val (mu, varFn) = family(eta)

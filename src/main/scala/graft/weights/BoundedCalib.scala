@@ -43,7 +43,8 @@ object BoundedCalib {
     val cols = xs.zipWithIndex.map { case (c, i) => c.cast("double").as(s"x$i") } :+
       d.cast("double").as("d")
     val x = (0 until p).map(j => col(s"x$j"))
-    Newton.run(df, cols, new Array[Double](p), iters, tol = 0.0) { base => lambda =>
+    Newton.run(df, cols, new Array[Double](p), iters, tol = 0.0,
+        fitter = "BoundedCalib") { base => lambda =>
       val (fExpr, fpExpr) = distance(
         x.indices.map(j => x(j) * graft.functions.Coef.at(lambda, j)).reduce(_ + _), l, u)
       val aggs = Gram.linear(x, col("d") * fExpr) ++ Gram.columns(x, col("d") * fpExpr)

@@ -144,6 +144,7 @@ class HygieneSpec extends AnyFunSuite {
       "llm/Similarity.scala" -> 7,           // k centroids / codebooks / tree levels (≤ b^depth rows)
       "llm/Dedup.scala" -> 3,                // df caps + band constants + debug-flag precondition probe (limit(1))
       "pipeline/TaylorInference.scala" -> 2, // p×p variance blocks
+      "variance/CoxInfluence.scala" -> 1,    // a Small G0/G1 step table for its broadcast
       "pipeline/Simulation.scala" -> 1,      // per-rep scalar results
       "pipeline/CalibEst.scala" -> 2,        // p-vector calibration solves
       "pipeline/SurveyIntegration.scala" -> 4, // p×p chain blocks
@@ -220,6 +221,58 @@ class HygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${l.trim.take(100)}"
     assertCapped("descending Windows.scan / suffixSum (use hazard.RiskSet)",
       hits, allow)
+  }
+
+  test("no lit() of a driver value on the replicate path (functions.Coef instead)") {
+    // A literal double is inlined into the generated Java, so a value
+    // that changes between fits or Monte-Carlo replicates (coefficients,
+    // I⁻¹ rows, hazard constants, a draw's salt or ΣM) recompiles every
+    // stage that reads it; functions.Coef reads the same value through a
+    // reference. Sites left are constant by construction (or, Raking,
+    // a map that must fold to one constant):
+    //   stats/Newton.scala        — the replicate-id error message
+    //   stats/ExactCorr.scala     — the caller's column names
+    //   stats/Kernels.scala, weights/KernelWeights.scala ×2 — √(2π)
+    //   weights/BoundedCalib.scala ×4 — the caller's bounds (L, U) and a
+    //   weights/Ipsw.scala, pipeline/TaylorInference.scala — fraction a
+    //   weights/Greg.scala        — the negative-weight clip
+    //   weights/Raking.scala ×3   — cell keys, and per-sweep factors in a
+    //                               map literal (a referenced map would be
+    //                               rebuilt per row)
+    //   weights/Psas.scala        — the stratum count
+    //   variance/Jackknife.scala ×5 — replicate count m and its factors
+    //   variance/HazardInfluence.scala ×4 — post-strata cell values (×2),
+    //                               the caller's risk profile x0, the t* grid
+    //   hazard/AbsoluteRisk.scala — the caller's e^{η0}
+    //   sampling/Pps.scala ×2     — the sample sizes n and nPerPsu
+    val inScope = Seq("stats/", "weights/", "variance/", "hazard/", "pipeline/",
+      "sampling/Pps.scala", "core/FeatureArray.scala")
+    val allow = Map(
+      "stats/Newton.scala" -> 1, "stats/ExactCorr.scala" -> 1,
+      "stats/Kernels.scala" -> 1, "weights/KernelWeights.scala" -> 2,
+      "weights/BoundedCalib.scala" -> 4, "weights/Ipsw.scala" -> 1,
+      "weights/Greg.scala" -> 1, "weights/Raking.scala" -> 3,
+      "weights/Psas.scala" -> 1, "variance/Jackknife.scala" -> 5,
+      "variance/HazardInfluence.scala" -> 4, "hazard/AbsoluteRisk.scala" -> 1,
+      "pipeline/TaylorInference.scala" -> 1, "sampling/Pps.scala" -> 2)
+    val literal = """lit\((?!\s*(-?[0-9][0-9_.]*[dDfFlL]?|null|true|false|"[^"]*")\s*\))"""
+    assertCapped("lit() of a non-literal argument",
+      sites(literal, f => !inScope.exists(f.startsWith)), allow)
+  }
+
+  test("withColumn capped in the replicate path's multi-column steps") {
+    // each withColumn re-analyses the whole plan built so far: a step
+    // that adds several columns adds them in one withColumns/select
+    // (Windows' scan phases, HazardInfluence's unit side, the chains'
+    // pseudo-weight columns, Pps.draw). The sites left add one column.
+    val files = Set("core/Windows.scala", "variance/HazardInfluence.scala",
+      "pipeline/TaylorInference.scala", "sampling/Pps.scala")
+    val allow = Map(
+      "core/Windows.scala" -> 2,              // the range partition id
+      "variance/HazardInfluence.scala" -> 1,  // the absent λ* column
+      "pipeline/TaylorInference.scala" -> 6,  // __wtc ×2, __cid, __sid, __q, __wps
+      "sampling/Pps.scala" -> 5)              // the key; the two-stage design
+    assertCapped("withColumn(", sites("""\.withColumn\(""", f => !files(f)), allow)
   }
 
   test(".rdd access only for partition-count probes") {

@@ -1,14 +1,15 @@
 package graft
 
 import graft.functions.Coef
-import graft.stats.{CoxPH, CoxPHReplicated, GLMReplicated, WeightedGLM}
+import graft.stats.{CoxPH, CoxPHReplicated, GLMReplicated, Newton, WeightedGLM}
 import graft.weights.BoundedCalib
 import org.apache.spark.sql.functions._
 
 /** The shared Newton driver's contract: coefficients enter a pass as a
-  * snapshot, the input cache is released on every path, replicated fits
-  * reject replicate ids they cannot index, and bounded calibration —
-  * the fitter with its own 2×2 step — lands on its targets. */
+  * snapshot, the input cache is released on every path, a singular
+  * solve or a non-finite β fails by fitter and iteration, replicated
+  * fits reject replicate ids they cannot index, and bounded calibration
+  * — the fitter with its own 2×2 step — lands on its targets. */
 class NewtonSpec extends SparkSpec {
   import spark.implicits._
 
@@ -59,13 +60,28 @@ class NewtonSpec extends SparkSpec {
   test("a singular solve throws and leaves no cached input behind") {
     spark.catalog.clearCache()
     val df = sample
-    intercept[Exception] {
+    val glm = intercept[Newton.NumericalError] {
       WeightedGLM.logistic(df, array(col("x"), col("x")), col("trt"), col("w"), p = 2)
     }
+    assert(glm.getMessage == "IRLS: singular information matrix at iteration 1")
     assert(spark.sharedState.cacheManager.isEmpty)
-    intercept[Exception] {
+    val cox = intercept[Newton.NumericalError] {
       CoxPH.fit(df, col("t"), col("d"), col("w"), Seq(col("x"), col("x")))
     }
+    assert(cox.getMessage == "CoxPH: singular information matrix at iteration 1")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a fit whose coefficients leave the finite doubles fails by name") {
+    spark.catalog.clearCache()
+    // one NaN weight: the first Gram sums, and so the first step, are NaN
+    val df = sample.withColumn("w", when(col("id") === 7L, lit(Double.NaN))
+      .otherwise(col("w")))
+    val e = intercept[Newton.NumericalError] {
+      WeightedGLM.logistic(df, array(lit(1.0), col("x")), col("trt"), col("w"), p = 2)
+    }
+    assert((e.fitter, e.iteration) == ("IRLS", 1))
+    assert(e.getMessage == "IRLS: non-finite coefficients at iteration 1", e.getMessage)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
