@@ -35,7 +35,7 @@ object Newton {
 
   /** A fit that cannot go on: `fitter`'s information matrix (or
     * Hessian) was singular at `iteration`, or its coefficients left the
-    * finite doubles there (separation, divergence, non-finite input). */
+    * finite doubles there (a diverging fit, non-finite input). */
   final class NumericalError(val fitter: String, val iteration: Int,
       reason: String, cause: Throwable = null)
     extends RuntimeException(s"$fitter: $reason at iteration $iteration", cause)
