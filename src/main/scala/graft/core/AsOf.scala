@@ -1,6 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -14,9 +13,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   *  - as-of lookup = inequality join against the (tiny, broadcast) probe
   *    grid + `max_by` per probe — linear in the step table, no window.
-  *  - LOCF = `last(col, ignoreNulls)` over an ordered window; offered
-  *    both in plain single-partition form (post-aggregation step tables
-  *    are small) and, for large frames, a two-phase partitioned variant.
+  *  - LOCF = [[Windows]]' ordered scan with the last-non-null operator:
+  *    one window over a small step table, the two-phase scan over a
+  *    large one.
   */
 object AsOf {
 
@@ -35,63 +34,18 @@ object AsOf {
       .agg(coalesce(max_by(col("__v"), col("__t")), lit(default)).as("value"))
   }
 
-  /** LOCF gap-fill of `cols` ordered by `order` — plain window form for
-    * aggregated (distinct-key) step tables. */
-  def locf(df: DataFrame, order: Column, cols: Seq[String]): DataFrame = {
-    val w = Window.orderBy(order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cols.foldLeft(df)((d, c) => d.withColumn(c, last(col(c), ignoreNulls = true).over(w)))
-  }
+  /** [[locfPartitioned]] over a step table known to be small: one
+    * window, no probe and no shuffle. */
+  def locf(df: DataFrame, order: Column, cols: Seq[String]): DataFrame =
+    locfPartitioned(df, order, cols, Windows.SizeHint.Small)
 
-  /** Scale-safe LOCF: range-partition on the order key, local LOCF, then
-    * carry each partition's last non-null value into the next partitions
-    * via a tiny driver pass + broadcast join (same two-phase shape as
-    * Windows.scan). Callers that KNOW the frame is step-table-sized pass
-    * `Windows.SizeHint.Small` to get the plain single-window form with
-    * no shuffle, probe, or persist. */
+  /** LOCF gap-fill of `cols` in ascending `order`: each null takes the
+    * last non-null value before it. `sizeHint` follows [[Windows.scan]]'s
+    * contract: `Small` is one window, `Large` the two-phase scan, `Auto`
+    * probes. The carry is exact, so every path gives the same values,
+    * each in its column's own type. */
   def locfPartitioned(df: DataFrame, order: Column, cols: Seq[String],
-      numParts: Int = -1,
-      sizeHint: Windows.SizeHint = Windows.SizeHint.Large): DataFrame = {
-    if (sizeHint == Windows.SizeHint.Small) return locf(df, order, cols)
-    val spark = df.sparkSession
-    val n = if (numParts > 0) numParts
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pid = "__graft_pid"
-    val ranged = df.repartitionByRange(n, order).withColumn(pid, spark_partition_id())
-    val w = Window.partitionBy(col(pid)).orderBy(order)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var local = ranged
-    cols.foreach { c =>
-      local = local.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
-    local = local.persist()
-    // last non-null per partition, per column (numParts rows)
-    val lastRows = local.groupBy(col(pid))
-      .agg(cols.map(c => max_by(col(c), when(col(c).isNotNull, order)).as(c)).head,
-           cols.map(c => max_by(col(c), when(col(c).isNotNull, order)).as(c)).tail: _*)
-      .collect().sortBy(_.getInt(0))
-    // carry-in per partition = last non-null from any earlier partition
-    val carry = scala.collection.mutable.Map.empty[Int, Array[Any]]
-    val cur = new Array[Any](cols.length)
-    lastRows.foreach { r =>
-      carry(r.getInt(0)) = cur.clone()
-      cols.indices.foreach { i => if (!r.isNullAt(i + 1)) cur(i) = r.get(i + 1) }
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField(pid, org.apache.spark.sql.types.IntegerType) +:
-        cols.indices.map(i => org.apache.spark.sql.types.StructField(
-          s"__carry_$i", org.apache.spark.sql.types.DoubleType)))
-    val rows = carry.toSeq.sortBy(_._1).map { case (k, arr) =>
-      org.apache.spark.sql.Row.fromSeq(k +: arr.toSeq.map {
-        case null => null
-        case d: Double => d
-        case other => other.toString.toDouble
-      })
-    }
-    val carryDf = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    var out = local.join(broadcast(carryDf), Seq(pid), "left")
-    cols.zipWithIndex.foreach { case (c, i) =>
-      out = out.withColumn(c, coalesce(col(c), col(s"__carry_$i")))
-    }
-    out.drop((Seq(pid) ++ cols.indices.map(i => s"__carry_$i")): _*)
-  }
+      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): DataFrame =
+    Windows.ordered(df, Nil, Seq(order), Windows.Running.LastNonNull,
+      cols.map(c => col(c) -> c), sizeHint, release = None)
 }

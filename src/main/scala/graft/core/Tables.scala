@@ -29,26 +29,22 @@ object Tables {
   // their entries; the driver test tables are written once per sf dir
   // and never mutated in-session (writers in the catalog all target
   // their own scratch dirs), so a cached file listing cannot go stale.
-  // SPARK_GRAFT_NO_RELATION_MEMO=1 restores the per-call read for A/B.
-  private val memoOff = sys.env.contains("SPARK_GRAFT_NO_RELATION_MEMO")
   private val memo =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, DataFrame]]
 
   private def memoized(spark: SparkSession, key: String)
-      (make: => DataFrame): DataFrame =
-    if (memoOff) make
-    else {
-      val m = memo.synchronized {
-        var t = memo.get(spark)
-        if (t == null) {
-          t = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-          memo.put(spark, t)
-        }
-        t
+      (make: => DataFrame): DataFrame = {
+    val m = memo.synchronized {
+      var t = memo.get(spark)
+      if (t == null) {
+        t = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+        memo.put(spark, t)
       }
-      m.getOrElseUpdate(key, make)
+      t
     }
+    m.getOrElseUpdate(key, make)
+  }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     memoized(spark, s"$sfDir/$name.parquet") {

@@ -8,22 +8,38 @@ import scala.collection.immutable.ListMap
 /** Ordering-dependent computation (SURVEY.md O1-O5) at scale.
   *
   * The reference's risk-set suffix-cumsums (`rev(cumsum(rev(...)))`,
-  * taylor_deviate.R:616-617,1027) and hazard prefix-cumsums (`cumsum`,
-  * taylor_deviate.R:890) are GLOBAL ordered scans. The naive Spark
+  * taylor_deviate.R:616-617,1027), hazard prefix-cumsums (`cumsum`,
+  * taylor_deviate.R:890) and the LOCF gap fill of its step-function
+  * merge (taylor_deviate.R:908-912, [[AsOf]]) are ordered scans: a
+  * running operator — a sum or the last non-null value — over an
+  * ordered table, optionally reset per group. The naive Spark
   * translation — `Window.orderBy(t)` with no partitionBy — funnels the
   * whole dataset through ONE task, which is the canonical 100-TB
-  * bottleneck. `scan` instead does the classic two-phase distributed
-  * prefix sum: range-repartition on the order key, local per-partition
-  * running sums, a tiny driver-side exclusive-offset pass over the
-  * per-partition totals (one row per partition), and a broadcast join
-  * of the offsets back. Wall-clock is O(n/partitions), not O(n).
+  * bottleneck, and `Window.partitionBy(group)` funnels each group
+  * through one task. Every scan here runs through one two-phase
+  * implementation ([[ordered]]):
+  *  1. range-repartition on group keys ++ order keys, so each group's
+  *     order is contiguous ACROSS partitions;
+  *  2. a running window per (partition, group);
+  *  3. a boundary table with one summary row per (partition, group)
+  *     slice — at most partitions + groups rows;
+  *  4. each slice's carry-in: the running operator over the preceding
+  *     partitions of its group, a window over the boundary table;
+  *  5. a broadcast join of the carries back.
+  * Wall-clock is O(n/partitions), not O(n), and no rows reach the
+  * driver.
   */
 object Windows {
+
+  /** Row count at or under which a scan input is `Small`: probed by
+    * [[resolve]] and by the fitters that size their step tables once
+    * (`CoxPH.fit`, `CoxPHReplicated.fit`). */
+  val SmallRows = 20000
 
   /** Caller knowledge about the scan input's cardinality: `Small` skips
     * the probe and uses a single-partition window; `Large` goes straight
     * to the two-phase scan; `Auto` resolves to one of the two with a
-    * head(threshold+1) probe job (see [[resolve]]).
+    * head(SmallRows+1) probe job (see [[resolve]]).
     *
     * A public entry point pays at most one probe; later scans inherit
     * the answer ([[SizeHint.inherited]]):
@@ -52,54 +68,120 @@ object Windows {
   }
 
   /** The class `hint` resolves to for `df`: `Small`/`Large` as given;
-    * `Auto` runs one head(smallThreshold+1) probe job. Step tables that
+    * `Auto` runs one head(SmallRows+1) probe job. Step tables that
     * have already been tie-collapsed (distinct event times, monthly
     * buckets, ...) are usually tiny, and a single-partition window is
-    * then cheaper than the range-sampling + offset machinery. head(N+1)
-    * terminates early; the probe's upstream work is paid once more at
-    * the caller's action rather than cached. */
-  def resolve(df: DataFrame, hint: SizeHint, smallThreshold: Int = 20000): SizeHint =
+    * then cheaper than the range-sampling + boundary-table machinery.
+    * head(N+1) terminates early; the probe's upstream work is paid once
+    * more at the caller's action rather than cached. */
+  def resolve(df: DataFrame, hint: SizeHint): SizeHint =
     hint match {
       case SizeHint.Auto =>
-        if (smallThreshold > 0 &&
-            df.head(smallThreshold + 1).length <= smallThreshold) SizeHint.Small
+        if (df.head(SmallRows + 1).length <= SmallRows) SizeHint.Small
         else SizeHint.Large
       case declared => declared
     }
 
+  /** The running operator of an ordered scan: `agg` runs over each
+    * row's window and over the boundary table's preceding slices,
+    * `slice` summarizes one (partition, group) slice, and `combine`
+    * adds a slice's carry-in to a row's local running value. */
+  private[core] sealed trait Running {
+    def agg(c: Column): Column
+    def slice(c: Column, orderCols: Seq[Column]): Column
+    def combine(local: Column, carry: Column): Column
+  }
+  private[core] object Running {
+    /** Running sum, in double. */
+    case object Sum extends Running {
+      def agg(c: Column): Column = sum(c.cast("double"))
+      def slice(c: Column, orderCols: Seq[Column]): Column = agg(c)
+      def combine(local: Column, carry: Column): Column =
+        local + coalesce(carry, lit(0.0))
+    }
+    /** Last non-null value, in the column's own type (LOCF). The order
+      * columns must be ascending: a slice's last value is the one at
+      * its greatest order key. */
+    case object LastNonNull extends Running {
+      def agg(c: Column): Column = last(c, ignoreNulls = true)
+      def slice(c: Column, orderCols: Seq[Column]): Column =
+        max_by(c, when(c.isNotNull, struct(orderCols: _*)))
+      def combine(local: Column, carry: Column): Column = coalesce(local, carry)
+    }
+  }
+
   private val PID = "__graft_pid"
+  private val GRP = "__graft_g"
   private val LOCAL = "__graft_local_"
+  private val SLICE = "__graft_slice_"
+  private val CARRY = "__graft_carry_"
 
   /** Running (cumulative-inclusive) sums of each `(value, alias)` in the
     * order given by `orderCols` (use `desc(c)` entries for suffix sums).
-    * Output = input columns + one `alias` column per pair.
-    *
-    * `numParts <= 0` keeps the session's shuffle parallelism.
+    * Output = input columns + one `alias` column per pair. The
+    * two-phase scan runs over the session's shuffle parallelism.
     */
   def scan(
       df: DataFrame,
       orderCols: Seq[Column],
       sums: Seq[(Column, String)],
-      numParts: Int = -1,
-      smallThreshold: Int = 20000,
       sizeHint: SizeHint = SizeHint.Auto,
-      release: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
-    val spark = df.sparkSession
-    def smallPath(input: DataFrame): DataFrame = {
-      val w = Window.orderBy(orderCols: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      input.withColumns(ListMap(sums.map { case (c, alias) =>
-        alias -> sum(c.cast("double")).over(w) }: _*))
-    }
-    if (resolve(df, sizeHint, smallThreshold) == SizeHint.Small) return smallPath(df)
-    val n = if (numParts > 0) numParts
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = df.repartitionByRange(n, orderCols: _*)
-      .withColumn(PID, spark_partition_id())
-    val w = Window.partitionBy(col(PID)).orderBy(orderCols: _*)
+      release: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame =
+    ordered(df, Nil, orderCols, Running.Sum, sums, sizeHint, release)
+
+  /** Grouped running (cumulative-inclusive) sums: like [[scan]] but the
+    * sums reset per group. The naive `Window.partitionBy(group)`
+    * funnels each group through ONE task — with dimension-sized group
+    * cardinality (return flags, languages, segments) that is a handful
+    * of tasks for the whole table, the classic grouped-scan skew trap.
+    * The two-phase scan parallelizes within a group too, at any group
+    * count, with no driver collect.
+    */
+  def groupedScan(
+      df: DataFrame,
+      groupCols: Seq[Column],
+      orderCols: Seq[Column],
+      sums: Seq[(Column, String)],
+      sizeHint: SizeHint = SizeHint.Auto,
+      release: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame =
+    ordered(df, groupCols, orderCols, Running.Sum, sums, sizeHint, release)
+
+  /** The one ordered scan: `op` of each `(value, alias)` over the rows
+    * of its group (`groupCols`, none for a global scan) up to and
+    * including the current one in `orderCols` order. `Small` runs one
+    * window; `Large` the two-phase scan (see [[Windows]]). Output =
+    * input columns + one `alias` column per pair (an alias that names
+    * an input column replaces it in place). */
+  private[core] def ordered(
+      df: DataFrame,
+      groupCols: Seq[Column],
+      orderCols: Seq[Column],
+      op: Running,
+      values: Seq[(Column, String)],
+      sizeHint: SizeHint,
+      release: Option[scala.collection.mutable.Buffer[DataFrame]]): DataFrame = {
+    val keyed = df.withColumns(ListMap(groupCols.indices.map(i => (GRP + i) -> groupCols(i)): _*))
+    val groups = groupCols.indices.map(GRP + _)
+    val gcols = groups.map(col)
+    def running(keys: Seq[Column]) = Window.partitionBy(keys: _*).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var local = ranged.withColumns(localSums(sums, w))
-    // Pinning `local` is CORRECTNESS-critical, not a cache: the offsets
+    // one multi-column step per scan phase: a withColumn per value column
+    // would re-analyse the whole plan once per column (Catalyst's
+    // CollapseWindow merges the windows either way, so the physical plan
+    // is the same)
+    def perValue(name: Int => String, value: Int => Column) =
+      ListMap(values.indices.map(i => name(i) -> value(i)): _*)
+
+    if (resolve(keyed, sizeHint) == SizeHint.Small)
+      return keyed.withColumns(perValue(values(_)._2,
+        i => op.agg(values(i)._1).over(running(gcols)))).drop(groups: _*)
+
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val ranged = keyed.repartitionByRange(n, (gcols ++ orderCols): _*)
+      .withColumn(PID, spark_partition_id())
+    val local0 = ranged.withColumns(perValue(LOCAL + _,
+      i => op.agg(values(i)._1).over(running(col(PID) +: gcols))))
+    // Pinning `local` is CORRECTNESS-critical, not a cache: the carries
     // are computed against one concrete range partitioning, and
     // repartitionByRange re-samples boundaries on re-materialization.
     // Callers that fully consume the result within one action pass
@@ -111,127 +193,34 @@ object Windows {
     // lineage into non-reliable executor storage, so executor loss after
     // materialization FAILS the job instead of recomputing. That
     // fail-fast is the correct default here — a recompute would
-    // re-sample range boundaries and silently mis-align the offsets —
+    // re-sample range boundaries and silently mis-align the carries —
     // but fault-tolerant deployments that prefer retry-with-recompute
     // semantics should pass a `release` buffer (persist + explicit
     // unpersist), which keeps full lineage.
-    local = release match {
-      case Some(buf) => val p = local.persist(); buf += p; p
-      case None => local.localCheckpoint(eager = false)
+    val local = release match {
+      case Some(buf) => val p = local0.persist(); buf += p; p
+      case None => local0.localCheckpoint(eager = false)
     }
 
-    // Per-partition totals: one row per partition — the collect is tiny
-    // (numParts rows), independent of data size.
-    val aggs = sums.zipWithIndex.map { case ((c, _), i) =>
-      sum(c.cast("double")).as(s"t$i")
-    }
-    val totals = local.groupBy(col(PID)).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val pid = r.getInt(0)
-        val t = sums.indices.map(i =>
-          if (r.isNullAt(i + 1)) 0.0 else r.getDouble(i + 1)).toArray
-        (pid, t)
-      }
-      .sortBy(_._1)
-
-    // Exclusive prefix offsets by partition id → broadcast-joined back.
-    val acc = new Array[Double](sums.length)
-    val offRows = totals.map { case (pid, tot) =>
-      val row = pid +: acc.clone().toSeq
-      var i = 0; while (i < acc.length) { acc(i) += tot(i); i += 1 }
-      row
-    }
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows.toSeq.map(org.apache.spark.sql.Row.fromSeq), 1),
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField(PID, org.apache.spark.sql.types.IntegerType) +:
-          sums.indices.map(i => org.apache.spark.sql.types.StructField(
-            s"__graft_off_$i", org.apache.spark.sql.types.DoubleType))))
-    val out = local.join(broadcast(offDf), Seq(PID), "left")
-      .withColumns(offsetSums(sums))
-    val tmpCols = Seq(PID) ++ sums.indices.map(LOCAL + _) ++
-      sums.indices.map(i => s"__graft_off_$i")
-    out.drop(tmpCols: _*)
-  }
-
-  // one multi-column step per scan phase: a withColumn per sum column
-  // would re-analyse the whole plan once per column (Catalyst's
-  // CollapseWindow merges the windows either way, so the physical plan
-  // is the same)
-  private def localSums(sums: Seq[(Column, String)],
-      w: org.apache.spark.sql.expressions.WindowSpec): ListMap[String, Column] =
-    ListMap(sums.indices.map(i => (LOCAL + i) -> sum(sums(i)._1.cast("double")).over(w)): _*)
-
-  private def offsetSums(sums: Seq[(Column, String)]): ListMap[String, Column] =
-    ListMap(sums.indices.map(i => sums(i)._2 ->
-      (col(LOCAL + i) + coalesce(col(s"__graft_off_$i"), lit(0.0)))): _*)
-
-  private val GRP = "__graft_g"
-
-  /** Grouped running (cumulative-inclusive) sums: like [[scan]] but the
-    * sums reset per group. The naive `Window.partitionBy(group)`
-    * funnels each group through ONE task — with dimension-sized group
-    * cardinality (return flags, languages, segments) that is a handful
-    * of tasks for the whole table, the classic grouped-scan skew trap.
-    * Here the data is range-partitioned on (group, order) so each
-    * group's order is contiguous ACROSS partitions, local running sums
-    * are computed per (partition, group), and per-group exclusive
-    * offsets come from the (≤ partitions + groups)-row boundary table —
-    * itself adjusted with a tiny window and broadcast back. Full
-    * parallelism at any group count, no driver collect.
-    */
-  def groupedScan(
-      df: DataFrame,
-      groupCols: Seq[Column],
-      orderCols: Seq[Column],
-      sums: Seq[(Column, String)],
-      numParts: Int = -1,
-      smallThreshold: Int = 20000,
-      sizeHint: SizeHint = SizeHint.Auto,
-      release: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
-    val spark = df.sparkSession
-    val keyed = df.withColumns(ListMap(groupCols.indices.map(i => (GRP + i) -> groupCols(i)): _*))
-    val gcols = groupCols.indices.map(i => col(GRP + i))
-    def smallPath(input: DataFrame): DataFrame = {
-      val w = Window.partitionBy(gcols: _*).orderBy(orderCols: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      input.withColumns(ListMap(sums.map { case (c, alias) =>
-        alias -> sum(c.cast("double")).over(w) }: _*))
-        .drop(groupCols.indices.map(GRP + _): _*)
-    }
-    if (resolve(keyed, sizeHint, smallThreshold) == SizeHint.Small)
-      return smallPath(keyed)
-    val n = if (numParts > 0) numParts
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = keyed.repartitionByRange(n, (gcols ++ orderCols): _*)
-      .withColumn(PID, spark_partition_id())
-    val w = Window.partitionBy((col(PID) +: gcols): _*).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var local = ranged.withColumns(localSums(sums, w))
-    // pinning is CORRECTNESS-critical (see scan): offsets must see the
-    // same concrete range partitioning as the joined-back rows
-    local = release match {
-      case Some(buf) => val p = local.persist(); buf += p; p
-      case None => local.localCheckpoint(eager = false)
-    }
-
-    val aggs = sums.zipWithIndex.map { case ((c, _), i) =>
-      sum(c.cast("double")).as(s"t$i")
-    }
-    // boundary table: one row per (partition, group) slice present —
-    // bounded by partitions + groups, so the offset window is trivial
-    val totals = local.groupBy((col(PID) +: gcols): _*).agg(aggs.head, aggs.tail: _*)
-    val offW = Window.partitionBy(gcols: _*).orderBy(col(PID))
+    // boundary table: one row per (partition, group) slice present. It
+    // is broadcast back, so it is driver-sized by construction: one task
+    // computes the carries, with no single-partition shuffle. The carry
+    // window folds slices in partition order, from the operator's empty
+    // value (a sum starts at 0.0 + the first slice's total).
+    val slices = values.indices.map(i =>
+      op.slice(values(i)._1, orderCols).as(SLICE + i))
+    val preceding = Window.partitionBy(gcols: _*).orderBy(col(PID))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offDf = totals.withColumns(ListMap(sums.indices.map(i =>
-        s"__graft_off_$i" -> coalesce(sum(col(s"t$i")).over(offW), lit(0.0))): _*))
-      .drop(sums.indices.map(i => s"t$i"): _*)
-    val out = local.join(broadcast(offDf), (Seq(PID) ++ groupCols.indices.map(GRP + _)), "left")
-      .withColumns(offsetSums(sums))
-    val tmpCols = Seq(PID) ++ sums.indices.map(LOCAL + _) ++
-      sums.indices.map(i => s"__graft_off_$i") ++ groupCols.indices.map(GRP + _)
-    out.drop(tmpCols: _*)
+    val carries = local.groupBy((col(PID) +: gcols): _*)
+      .agg(slices.head, slices.tail: _*)
+      .coalesce(1)
+      .select((col(PID) +: gcols) ++ values.indices.map(i =>
+        op.agg(col(SLICE + i)).over(preceding).as(CARRY + i)): _*)
+    local.join(broadcast(carries), PID +: groups, "left")
+      .withColumns(perValue(values(_)._2,
+        i => op.combine(col(LOCAL + i), col(CARRY + i))))
+      .drop((Seq(PID) ++ groups ++ values.indices.flatMap(i =>
+        Seq(LOCAL + i, CARRY + i))): _*)
   }
 
   /** Convenience: single-column global cumulative sum. */

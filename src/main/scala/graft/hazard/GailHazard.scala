@@ -34,16 +34,17 @@ object GailHazard {
     // ar-only rows never double-count a carried-forward λ*.
     val joined = l.join(a, Seq("t"), "full_outer")
       .withColumn("is_step", col("lambda_star").isNotNull)
-    val locfHint = if (sizeHint == Windows.SizeHint.Small)
-      Windows.SizeHint.Small else Windows.SizeHint.Large
+    // one probe sizes both scans: the prefix scan runs over the LOCF's
+    // own rows
+    val size = Windows.resolve(joined, sizeHint)
     val filled = AsOf.locfPartitioned(joined, col("t"),
-        Seq("lambda_star", "ar"), sizeHint = locfHint)
+        Seq("lambda_star", "ar"), sizeHint = size)
       .na.fill(Map("ar" -> 0.0))
     val masses = filled.withColumn("g",
       when(col("is_step"), col("lambda_star") * (lit(1.0) - col("ar")))
         .otherwise(lit(0.0)))
     Windows.scan(masses, Seq(col("t")), Seq(col("g") -> "cum_gail"),
-        sizeHint = sizeHint)
+        sizeHint = size)
       .select(col("t"), col("cum_gail"))
   }
 

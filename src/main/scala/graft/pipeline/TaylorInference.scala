@@ -198,14 +198,6 @@ object TaylorInference {
     * influence with survey γ-only blocks, per-m β deviates, hazard
     * chain, contractions. `prepared` carries trt, the time/event and
     * feature columns, __wtc/__psw/__pi and q columns each of __gd/__pg. */
-  // a caller-declared Small/Large step-table size lets CoxPH.fit skip
-  // its cardinality-probe job; Auto keeps the probe
-  private def fitHint(h: graft.core.Windows.SizeHint)
-      : Option[graft.core.Windows.SizeHint] = h match {
-    case graft.core.Windows.SizeHint.Auto => None
-    case other => Some(other)
-  }
-
   private def inferenceCore(
       prepared: DataFrame,
       time: Column, event: Column,
@@ -221,9 +213,9 @@ object TaylorInference {
     val feats = featureCols.map(col)
     val fit =
       if (coxIters > 0) CoxPH.fit(cohortF, time, event, col("__wtc"), feats,
-        maxIter = coxIters, tol = 0.0, hint = fitHint(sizeHint))
+        maxIter = coxIters, tol = 0.0, sizeHint = sizeHint)
       else CoxPH.fit(cohortF, time, event, col("__wtc"), feats,
-        hint = fitHint(sizeHint))
+        sizeHint = sizeHint)
     // under Auto the fit's cardinality probe counted exactly the rows of
     // the RiskSet table below: a Small answer sizes every scan of the
     // chain, so the chain runs no probe of its own

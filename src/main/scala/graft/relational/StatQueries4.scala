@@ -416,14 +416,11 @@ object StatQueries4 {
           col("t_id"), col("t_sq").as("sq"),
           lit(null).cast("long").as("p_csq"), lit(null).cast("long").as("p_cid"),
           lit(null).cast("long").as("n_csq"), lit(null).cast("long").as("n_cid")))
-      // locfPartitioned carries fills as doubles; the values are exact
-      // integers ≤ 1e6-scale, so cast back to BIGINT for the oracle
-      def relong(df: org.apache.spark.sql.DataFrame, cs: Seq[String]) =
-        cs.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("long")))
-      val withPrev = relong(graft.core.AsOf.locfPartitioned(uni, col("ord"),
-        Seq("p_csq", "p_cid")), Seq("p_csq", "p_cid"))
-      val withBoth = relong(graft.core.AsOf.locfPartitioned(withPrev,
-        -col("ord"), Seq("n_csq", "n_cid")), Seq("n_csq", "n_cid"))
+      // the interleaved frame is customer-sized: declared Large
+      val withPrev = graft.core.AsOf.locfPartitioned(uni, col("ord"),
+        Seq("p_csq", "p_cid"), sizeHint = Windows.SizeHint.Large)
+      val withBoth = graft.core.AsOf.locfPartitioned(withPrev,
+        -col("ord"), Seq("n_csq", "n_cid"), sizeHint = Windows.SizeHint.Large)
       def cand(csq: org.apache.spark.sql.Column,
           cid: org.apache.spark.sql.Column) = when(csq.isNull, lit(null))
         .otherwise(struct(abs(col("sq") - csq).as("dist"),

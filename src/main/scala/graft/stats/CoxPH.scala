@@ -141,11 +141,11 @@ object CoxPH {
       features: Seq[Column],
       maxIter: Int = 25,
       tol: Double = 1e-9,
-      hint: Option[Windows.SizeHint] = None): Fit = {
+      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): Fit = {
     val p = features.length
     var lastInfo = new Array[Double](p * (p + 1) / 2)
     var lastScoreNorm = Double.MaxValue
-    var sizeHint: Windows.SizeHint = Windows.SizeHint.Auto
+    var stepSize: Windows.SizeHint = sizeHint
     val res = Newton.run(df, columns(time, event, weight, features),
         new Array[Double](p), maxIter, tol, "CoxPH") { base =>
       // one up-front cardinality probe shared by every NR iteration:
@@ -155,21 +155,23 @@ object CoxPH {
       // knows its step-table size (the composed chains pass their own
       // hint) skips the probe job — the no-events guard then surfaces as
       // the ANSI divide-by-zero in iteration 1.
-      sizeHint = hint.getOrElse {
+      if (sizeHint == Windows.SizeHint.Auto) {
         val probe = base.agg(sum(col("__d")), countDistinct(col("__t")),
           max(col("__t").isNull.cast("int"))).head()
         require(probe.getDouble(0) > 0,
           "CoxPH.fit: no events (d=1) in input — partial likelihood undefined")
-        if (probe.getLong(1) + probe.getInt(2) <= 20000) Windows.SizeHint.Small
-        else Windows.SizeHint.Large
+        stepSize =
+          if (probe.getLong(1) + probe.getInt(2) <= Windows.SmallRows)
+            Windows.SizeHint.Small
+          else Windows.SizeHint.Large
       }
       beta => {
-        val (u, info) = scoreAndInfoPrepared(base, p, beta, sizeHint)
+        val (u, info) = scoreAndInfoPrepared(base, p, beta, stepSize)
         lastInfo = info
         lastScoreNorm = u.map(math.abs).sum
         Newton.step(p, info, u)
       }
     }
-    Fit(res.theta, res.iterations, res.converged, lastInfo, lastScoreNorm, sizeHint)
+    Fit(res.theta, res.iterations, res.converged, lastInfo, lastScoreNorm, stepSize)
   }
 }

@@ -51,7 +51,7 @@ object CoxPHReplicated {
       // the probe a one-column distinct (map-side partials collapse the
       // m-fold replication before the shuffle) instead of a distinct over
       // the exploded (r, t) pairs.
-      val tBudget = math.max(1, 20000 / math.max(1, m))
+      val tBudget = math.max(1, graft.core.Windows.SmallRows / math.max(1, m))
       val stepHint =
         if (base.select(col("__t")).distinct()
               .head(tBudget + 1).length <= tBudget)

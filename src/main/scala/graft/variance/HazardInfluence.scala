@@ -147,11 +147,14 @@ object HazardInfluence {
     // pass (whose only purpose is giving grid rows their governing
     // event's values) can be skipped entirely.
     val withEv = merged0.select((merged0.columns.map(col) ++ evCols).toSeq: _*)
+    // one probe sizes the LOCF and the prefix scan below: both run over
+    // these rows
+    val size = Windows.resolve(withEv, sizeHint)
     val merged = if (ls.isDefined) graft.core.AsOf.locfPartitioned(
       withEv, col("__t"),
       Seq("evT", "evZ", "evAr") ++ (0 until p).map(j => s"evA$j") ++
         (0 until q).flatMap(m => Seq(s"evDZ$m", s"evDY$m")),
-      sizeHint = sizeHint)
+      sizeHint = size)
     else withEv
 
     // ---- prefix increments: event-side (λ chain) and grid-side (ΛG) ----
@@ -182,7 +185,7 @@ object HazardInfluence {
           col("__ls") * (col(s"evDY$m") - (lit(1.0) - col("evAr")) * col(s"evDZ$m"))
             / col("evZ")).otherwise(0.0)) -> s"CGN$m")
     val scanned = Windows.scan(merged, Seq(col("__t")), scanSums,
-      sizeHint = sizeHint).persist()
+      sizeHint = size).persist()
 
     // ---- grid mass bucketed by governing event: EA/EB(t) = Σ_{s: e(s)≤t} ----
     val needGail = ls.isDefined

@@ -107,16 +107,16 @@ class HygieneSpec extends AnyFunSuite {
     // construction, each site carrying its bound comment, and capped
     // per FILE so a new unbounded window added to an already-allowed
     // catalog file fails here rather than passing silently:
-    //   core/Windows.scala      — the scan's own probed small path
-    //   core/AsOf.scala         — step-table LOCF (scale-safe sibling exists)
     //   stats/Isotonic.scala    — collapsed bin axis (caller-bounded)
     //   relational/RelationalQueries.scala  — p7 rowid over 25-row nation
     //   relational/RelationalQueries6.scala — month-cardinality step table
     //   relational/StatQueries3.scala       — m38 bin axis clamped to 25 (×2)
     //   relational/StatQueries4.scala       — 5-segment stratum id table
     //   relational/LlmQueries4.scala        — vocab / per-supplier axes (×2)
+    // The ordered scans' probed small path (core/Windows.scala, also
+    // behind AsOf's LOCF) is not counted: it spells its window as a
+    // partitionBy over the scan's group keys, none for a global scan.
     val allow = Map(
-      "core/Windows.scala" -> 1, "core/AsOf.scala" -> 1,
       "stats/Isotonic.scala" -> 1,
       "relational/RelationalQueries.scala" -> 1,
       "relational/RelationalQueries6.scala" -> 1,
@@ -135,8 +135,6 @@ class HygieneSpec extends AnyFunSuite {
     // justify itself by extending the allowlist.
     val allow = Map(
       "Bench.scala" -> 2,                    // bench plumbing, not an operator
-      "core/Windows.scala" -> 1,             // per-partition totals (numParts rows)
-      "core/AsOf.scala" -> 1,                // per-partition boundary carries
       "stats/CoxPH.scala" -> 1,              // p×p NR step per fit / replicate batch
       "stats/GLMReplicated.scala" -> 1,      // p×p IRLS step per replicate batch
       "stats/WeightedQuantile.scala" -> 1,   // ≤q quantile boundaries
@@ -265,14 +263,24 @@ class HygieneSpec extends AnyFunSuite {
     // that adds several columns adds them in one withColumns/select
     // (Windows' scan phases, HazardInfluence's unit side, the chains'
     // pseudo-weight columns, Pps.draw). The sites left add one column.
-    val files = Set("core/Windows.scala", "variance/HazardInfluence.scala",
-      "pipeline/TaylorInference.scala", "sampling/Pps.scala")
+    val files = Set("core/Windows.scala", "core/AsOf.scala",
+      "variance/HazardInfluence.scala", "pipeline/TaylorInference.scala",
+      "sampling/Pps.scala")
     val allow = Map(
-      "core/Windows.scala" -> 2,              // the range partition id
+      "core/Windows.scala" -> 1,              // the range partition id
       "variance/HazardInfluence.scala" -> 1,  // the absent λ* column
       "pipeline/TaylorInference.scala" -> 6,  // __wtc ×2, __cid, __sid, __q, __wps
       "sampling/Pps.scala" -> 5)              // the key; the two-stage design
     assertCapped("withColumn(", sites("""\.withColumn\(""", f => !files(f)), allow)
+  }
+
+  test("repartitionByRange only in the ordered scan") {
+    // A range partition re-samples its boundaries on every
+    // materialization, so a scan built on one must pin it and carry
+    // across its boundaries; core/Windows.scala holds the one two-phase
+    // scan that does (behind Windows.scan, groupedScan and AsOf's LOCF).
+    assertCapped("repartitionByRange", sites("""repartitionByRange\("""),
+      Map("core/Windows.scala" -> 1))
   }
 
   test(".rdd access only for partition-count probes") {

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The shared Newton driver's contract: coefficients enter a pass as a
   * snapshot, the input cache is released on every path, a singular
-  * solve or a non-finite β fails by fitter and iteration, replicated
-  * fits reject replicate ids they cannot index, and bounded calibration
+  * solve or a non-finite β fails by fitter and iteration, a separated
+  * fit reports itself unconverged, replicated fits reject replicate ids
+  * they cannot index, and bounded calibration
   * — the fitter with its own 2×2 step — lands on its targets. */
 class NewtonSpec extends SparkSpec {
   import spark.implicits._
@@ -82,6 +83,29 @@ class NewtonSpec extends SparkSpec {
     }
     assert((e.fitter, e.iteration) == ("IRLS", 1))
     assert(e.getMessage == "IRLS: non-finite coefficients at iteration 1", e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a perfectly separated logistic fit runs to maxIter unconverged") {
+    // y = 1{x > 0}: no finite MLE exists and every IRLS step grows |β|
+    // by about 1/min|x|. With x alone the information matrix stays
+    // solvable and β finite through the default maxIter, so no
+    // NumericalError fires: Fit.converged is the only sign of failure.
+    spark.catalog.clearCache()
+    val df = (-20 to 20).filter(_ != 0)
+      .map(x => (x.toDouble, if (x > 0) 1.0 else 0.0)).toDF("x", "y")
+    val fit = WeightedGLM.logistic(df, array(col("x")), col("y"), lit(1.0), p = 1)
+    assert(fit.coefficients.forall(b => !b.isNaN && !b.isInfinite),
+      fit.coefficients.mkString(", "))
+    assert(!fit.converged)
+    assert(fit.iterations == 50) // logistic's default maxIter
+    // with an intercept, the fitted probabilities of the points nearest
+    // the boundary round to 0 or 1 within the default maxIter and the
+    // information matrix turns singular: that fit does fail by name
+    val e = intercept[Newton.NumericalError] {
+      WeightedGLM.logistic(df, array(lit(1.0), col("x")), col("y"), lit(1.0), p = 2)
+    }
+    assert(e.getMessage.startsWith("IRLS: singular information matrix"), e.getMessage)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 

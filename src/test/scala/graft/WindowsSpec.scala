@@ -6,11 +6,20 @@ import org.apache.spark.sql.functions._
 
 /** The two-phase distributed scan must agree exactly with the
   * single-partition window on any input — exercised explicitly with
-  * smallThreshold=0 so the partitioned branch runs (the sf-test step
+  * `SizeHint.Large` so the partitioned branch runs (the sf-test step
   * tables are small enough that production calls take the fast path).
   */
 class WindowsSpec extends SparkSpec {
   import spark.implicits._
+
+  // the two-phase scan range-partitions over the session's shuffle
+  // parallelism: many partitions put many boundaries into one scan
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, saved)
+  }
 
   private def data = {
     val rng = new scala.util.Random(7)
@@ -22,7 +31,7 @@ class WindowsSpec extends SparkSpec {
   test("distributed prefix scan == single-partition window (multi-column)") {
     val df = data
     val got = Windows.scan(df, Seq(col("t")),
-        Seq(col("a") -> "ca", col("b") -> "cb"), smallThreshold = 0)
+        Seq(col("a") -> "ca", col("b") -> "cb"), sizeHint = Windows.SizeHint.Large)
       .orderBy("t").select("t", "ca", "cb").collect()
     val w = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -38,7 +47,7 @@ class WindowsSpec extends SparkSpec {
   test("distributed suffix scan == single-partition window (desc)") {
     val df = data
     val got = Windows.scan(df, Seq(col("t").desc),
-        Seq(col("a") -> "ra"), smallThreshold = 0)
+        Seq(col("a") -> "ra"), sizeHint = Windows.SizeHint.Large)
       .orderBy("t").select("t", "ra").collect()
     val w = Window.orderBy(col("t").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -56,9 +65,11 @@ class WindowsSpec extends SparkSpec {
     }.toDF("g", "t", "a")
       // pre-collapse ties so the running sum per (g, t) is order-invariant
       .groupBy("g", "t").agg(sum("a").as("a"))
-    val got = Windows.groupedScan(df, Seq(col("g")), Seq(col("t")),
-        Seq(col("a") -> "ca"), smallThreshold = 0, numParts = 16)
-      .orderBy("g", "t").select("g", "t", "ca").collect()
+    val got = withShufflePartitions(16) {
+      Windows.groupedScan(df, Seq(col("g")), Seq(col("t")),
+          Seq(col("a") -> "ca"), sizeHint = Windows.SizeHint.Large)
+        .orderBy("g", "t").select("g", "t", "ca").collect()
+    }
     val w = Window.partitionBy(col("g")).orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val want = df.withColumn("ca", sum(col("a")).over(w))
@@ -79,10 +90,12 @@ class WindowsSpec extends SparkSpec {
         rng.nextGaussian(), rng.nextDouble())
     }.toDF("r", "t", "s0", "s1")
       .groupBy("r", "t").agg(sum("s0").as("s0"), sum("s1").as("s1"))
-    val got = Windows.groupedScan(df, Seq(col("r")), Seq(col("t").desc),
-        Seq(col("s0") -> "S0", col("s1") -> "S1"),
-        smallThreshold = 0, numParts = 16)
-      .orderBy("r", "t").select("r", "t", "S0", "S1").collect()
+    val got = withShufflePartitions(16) {
+      Windows.groupedScan(df, Seq(col("r")), Seq(col("t").desc),
+          Seq(col("s0") -> "S0", col("s1") -> "S1"),
+          sizeHint = Windows.SizeHint.Large)
+        .orderBy("r", "t").select("r", "t", "S0", "S1").collect()
+    }
     val w = Window.partitionBy(col("r")).orderBy(col("t").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val want = df.withColumn("S0", sum(col("s0")).over(w))
@@ -155,8 +168,10 @@ class WindowsSpec extends SparkSpec {
         if (rng.nextDouble() < 0.3) Some(rng.nextGaussian()) else None,
         if (rng.nextDouble() < 0.1) Some(rng.nextDouble()) else None)
     }.toDF("t", "u", "v")
-    val got = AsOf.locfPartitioned(df, col("t"), Seq("u", "v"), numParts = 16)
-      .orderBy("t").collect()
+    val got = withShufflePartitions(16) {
+      AsOf.locfPartitioned(df, col("t"), Seq("u", "v"),
+        sizeHint = Windows.SizeHint.Large).orderBy("t").collect()
+    }
     val want = AsOf.locf(df, col("t"), Seq("u", "v")).orderBy("t").collect()
     got.zip(want).foreach { case (g, e) =>
       assert(g.isNullAt(1) == e.isNullAt(1), s"null mismatch at t=${g.getDouble(0)}")
@@ -164,6 +179,34 @@ class WindowsSpec extends SparkSpec {
       assert(g.isNullAt(2) == e.isNullAt(2))
       if (!g.isNullAt(2)) assertNear(g.getDouble(2), e.getDouble(2), 1e-12)
     }
+  }
+
+  // a LONG step column with values past 2^53, non-null every 97th row:
+  // a double round trip would show, and most partitions start in a gap
+  private def sparseLongs = (1 to 3000).map { i =>
+    (i.toDouble, if (i % 97 == 1) Some((1L << 53) + i) else None)
+  }.toDF("t", "v")
+
+  test("partitioned LOCF keeps a LONG column's type and exact values") {
+    val (schema, rows) = withShufflePartitions(16) {
+      val got = AsOf.locfPartitioned(sparseLongs, col("t"), Seq("v"),
+        sizeHint = Windows.SizeHint.Large).orderBy("t")
+      (got.schema, got.collect())
+    }
+    assert(schema("v").dataType == org.apache.spark.sql.types.LongType)
+    rows.foreach { r =>
+      val i = r.getDouble(0).toLong
+      assert(r.getLong(1) == (1L << 53) + i - (i - 1) % 97, s"at t=$i")
+    }
+  }
+
+  test("partitioned LOCF leaves no cached dataset behind") {
+    spark.catalog.clearCache()
+    withShufflePartitions(16) {
+      AsOf.locfPartitioned(sparseLongs, col("t"), Seq("v"),
+        sizeHint = Windows.SizeHint.Large).collect()
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("as-of lookup: exact boundary semantics (value at greatest t <= probe)") {
