@@ -194,6 +194,7 @@ class WindowsSpec extends SparkSpec {
       (got.schema, got.collect())
     }
     assert(schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(rows.length == 3000)
     rows.foreach { r =>
       val i = r.getDouble(0).toLong
       assert(r.getLong(1) == (1L << 53) + i - (i - 1) % 97, s"at t=$i")
