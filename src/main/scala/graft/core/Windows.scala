@@ -160,7 +160,10 @@ object Windows {
       values: Seq[(Column, String)],
       sizeHint: SizeHint,
       release: Option[scala.collection.mutable.Buffer[DataFrame]]): DataFrame = {
-    val keyed = df.withColumns(ListMap(groupCols.indices.map(i => (GRP + i) -> groupCols(i)): _*))
+    // a global scan (no group columns) uses `df` as it is: an empty
+    // withColumns and an empty drop would each re-analyse the plan
+    val keyed = if (groupCols.isEmpty) df
+      else df.withColumns(ListMap(groupCols.indices.map(i => (GRP + i) -> groupCols(i)): _*))
     val groups = groupCols.indices.map(GRP + _)
     val gcols = groups.map(col)
     def running(keys: Seq[Column]) = Window.partitionBy(keys: _*).orderBy(orderCols: _*)
@@ -172,9 +175,11 @@ object Windows {
     def perValue(name: Int => String, value: Int => Column) =
       ListMap(values.indices.map(i => name(i) -> value(i)): _*)
 
-    if (resolve(keyed, sizeHint) == SizeHint.Small)
-      return keyed.withColumns(perValue(values(_)._2,
-        i => op.agg(values(i)._1).over(running(gcols)))).drop(groups: _*)
+    if (resolve(keyed, sizeHint) == SizeHint.Small) {
+      val scanned = keyed.withColumns(perValue(values(_)._2,
+        i => op.agg(values(i)._1).over(running(gcols))))
+      return if (groups.isEmpty) scanned else scanned.drop(groups: _*)
+    }
 
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val ranged = keyed.repartitionByRange(n, (gcols ++ orderCols): _*)

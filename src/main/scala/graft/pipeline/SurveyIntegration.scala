@@ -52,21 +52,23 @@ object SurveyIntegration {
     cohort.withColumn("ipsw", Ipsw.fromLinearPredictor(ps.score(cohort), a))
 
   /** Cohort frame + `kw` column (M5): kernel-smoothed pseudo-weights
-    * with bw.nrd0 bandwidth on the pooled scores. `removeUnmatched` is
-    * the reference's rm.s flag (simu_fun.R:13-15). */
+    * with bw.nrd0 bandwidth on the pooled scores, appended row by row
+    * (one output row per cohort row, whether or not the cohort has a
+    * unique key). `removeUnmatched` is the reference's rm.s flag
+    * (simu_fun.R:13-15). */
   def withKw(cohort: DataFrame, survey: DataFrame, surveyWt: Column,
-      ps: PsModel, idCol: String, kernel: String = "gaussian",
+      ps: PsModel, kernel: String = "gaussian",
       removeUnmatched: Boolean = false): DataFrame = {
     val cScored = cohort.withColumn("__q", ps.score(cohort))
     val sScored = survey.withColumn("__q", ps.score(survey))
     val h = Kernels.bwNrd0(cScored.select(col("__q").as("q"))
       .unionByName(sScored.select(col("__q").as("q"))), col("q"))
-    val kw = KernelWeights.compute(
-      sScored, col(idCol), col("__q"), surveyWt,
-      cScored, col(idCol), col("__q"),
-      h = h, kernel = Kernels.byName(kernel),
+    KernelWeights.attachJacobian(
+      sScored, col("__q"), surveyWt,
+      cScored, col("__q"), h,
+      sFeatures = Nil, cFeatures = Nil, kernel = Kernels.byName(kernel),
       removeUnmatched = removeUnmatched)
-    cohort.join(kw.withColumnRenamed("c_id", idCol), Seq(idCol))
+      .drop("__q")
   }
 
   /** Cohort frame + `psas` column (M22): propensity-score

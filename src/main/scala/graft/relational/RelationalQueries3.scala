@@ -225,11 +225,11 @@ object RelationalQueries3 {
         .select(col("s_suppkey").as("cid"),
           (col("s_acctbal") / 1000.0).as("qc"),
           (col("s_nationkey") / 10.0).as("xc"))
-      graft.weights.KernelWeights.jacobian(
-          surv, col("sid"), col("qs"), col("wt"),
-          coh, col("cid"), col("qc"), h = 0.5,
+      graft.weights.KernelWeights.attachJacobian(
+          surv, col("qs"), col("wt"),
+          coh, col("qc"), h = 0.5,
           sFeatures = Seq(col("xs")), cFeatures = Seq(col("xc")))
-        .select(col("c_id"), round(col("kw"), 8).as("kw"),
+        .select(col("cid").as("c_id"), round(col("kw"), 8).as("kw"),
           round(col("d_kw_0"), 8).as("d_kw_0"))
         .orderBy(col("c_id"))
     },

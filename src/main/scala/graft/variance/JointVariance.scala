@@ -61,7 +61,8 @@ object JointVariance {
 
   /** KW-weight variant: the pseudo-weights are kernel-smoothed, so
     * ∂w_c/∂γ_m comes from the kernel Jacobian (A8,
-    * `KernelWeights.jacobian` → columns d_kw_m keyed by unit id) rather
+    * `KernelWeights.attachJacobian` → columns d_kw_m on the cohort
+    * rows, selected with the unit id) rather
     * than the closed IPSW form. Cross derivative
     * D[j][m] = Σ_c ui_j(c) · d_kw_m(c) via one join + aggregate. */
   def kwCorrectedDeviates(

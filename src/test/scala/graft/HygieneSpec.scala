@@ -146,7 +146,7 @@ class HygieneSpec extends AnyFunSuite {
       "pipeline/Simulation.scala" -> 1,      // per-rep scalar results
       "pipeline/CalibEst.scala" -> 2,        // p-vector calibration solves
       "pipeline/SurveyIntegration.scala" -> 4, // p×p chain blocks
-      "weights/KernelWeights.scala" -> 2,    // bandwidth + Jacobian p-vectors
+      "weights/KernelWeights.scala" -> 1,    // the row-sum LIMIT probe (≤ threshold+1 rows)
       "weights/Raking.scala" -> 3,           // margin factor tables
       "relational/StatQueries.scala" -> 1,   // fitted p-vector echo
       "variance/HazardInfluence.scala" -> 2) // step-table hazard constants
@@ -165,6 +165,21 @@ class HygieneSpec extends AnyFunSuite {
     val hits = sites("""crossJoin\(""")
       .filterNot(_.contains("broadcast("))
     assertCapped("crossJoin without same-line broadcast(...)", hits, allow)
+  }
+
+  test("one read of the KW row-sum collect threshold in main") {
+    // KernelWeights' weights and Jacobian share one kernel core, so the
+    // row-sum collect threshold is read in one place
+    assertCapped("graft.kw.rowSumsCollectThreshold",
+      sites("""graft\.kw\.rowSumsCollectThreshold"""),
+      Map("weights/KernelWeights.scala" -> 1))
+  }
+
+  test("one kernel pair stream (crossJoin) in KernelWeights") {
+    // the dense n_s×n_c pair stream is built once, in the shared core
+    assertCapped("crossJoin in KernelWeights",
+      sites("""crossJoin\(""", _ != "weights/KernelWeights.scala"),
+      Map("weights/KernelWeights.scala" -> 1))
   }
 
   test("no typed Aggregator UDAFs in main (flat sum columns instead)") {
@@ -230,7 +245,7 @@ class HygieneSpec extends AnyFunSuite {
     // a map that must fold to one constant):
     //   stats/Newton.scala        — the replicate-id error message
     //   stats/ExactCorr.scala     — the caller's column names
-    //   stats/Kernels.scala, weights/KernelWeights.scala ×2 — √(2π)
+    //   stats/Kernels.scala, weights/KernelWeights.scala — √(2π)
     //   weights/BoundedCalib.scala ×4 — the caller's bounds (L, U) and a
     //   weights/Ipsw.scala, pipeline/TaylorInference.scala — fraction a
     //   weights/Greg.scala        — the negative-weight clip
@@ -247,7 +262,7 @@ class HygieneSpec extends AnyFunSuite {
       "sampling/Pps.scala", "core/FeatureArray.scala")
     val allow = Map(
       "stats/Newton.scala" -> 1, "stats/ExactCorr.scala" -> 1,
-      "stats/Kernels.scala" -> 1, "weights/KernelWeights.scala" -> 2,
+      "stats/Kernels.scala" -> 1, "weights/KernelWeights.scala" -> 1,
       "weights/BoundedCalib.scala" -> 4, "weights/Ipsw.scala" -> 1,
       "weights/Greg.scala" -> 1, "weights/Raking.scala" -> 3,
       "weights/Psas.scala" -> 1, "variance/Jackknife.scala" -> 5,

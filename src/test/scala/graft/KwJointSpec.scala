@@ -22,10 +22,11 @@ class KwJointSpec extends SparkSpec {
     ).toDF("id", "q", "t", "d", "x")
 
     // kernel weights + their γ-Jacobian on the same pair stream
-    val jac = KernelWeights.jacobian(
-      survey, col("id"), col("q"), col("wt"),
-      cohortRaw, col("id"), col("q"),
+    val jac = KernelWeights.attachJacobian(
+      survey, col("q"), col("wt"),
+      cohortRaw, col("q"),
       h = 0.5, sFeatures = Seq(col("q")), cFeatures = Seq(col("q")))
+      .select(col("id").as("c_id"), col("kw"), col("d_kw_0"))
     assert(jac.columns.toSet == Set("c_id", "kw", "d_kw_0"))
 
     val cohort = cohortRaw.join(jac.select(col("c_id").as("id"), col("kw")), Seq("id"))

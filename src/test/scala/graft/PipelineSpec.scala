@@ -68,12 +68,28 @@ class PipelineSpec extends SparkSpec {
       cohort.drop("msize"), survey.drop("msize"), col("wt"))
     val ps = SurveyIntegration.propensityModel(stacked, Seq("x1", "x2", "x3"))
     val withKw = SurveyIntegration.withKw(
-      cohort.drop("msize"), survey.drop("msize"), col("wt"), ps, idCol = "id")
+      cohort.drop("msize"), survey.drop("msize"), col("wt"), ps)
     val r = withKw.agg(min("kw"), sum("kw")).head()
     val sumWt = survey.agg(sum("wt")).head().getDouble(0)
     assert(r.getDouble(0) >= 0.0)
     // guaranteed by construction (simu_fun.R:186-189)
     assertNear(r.getDouble(1), sumWt, 1e-9)
+  }
+
+  test("KW pseudo-weights attach row by row: a shared cohort id is not double-counted") {
+    // two different cohort units carry the same id: each row keeps its
+    // own weight, so Σkw stays Σ survey wt (an id-keyed fan-back would
+    // give both rows the pair's summed weight)
+    val ids = cohort.select("id").orderBy("id").limit(2).as[Long].collect()
+    val shared = cohort.drop("msize")
+      .withColumn("id", when(col("id") === ids(1), lit(ids(0))).otherwise(col("id")))
+    assert(shared.filter(col("id") === ids(0)).count() == 2)
+    val stacked = SurveyIntegration.stack(shared, survey.drop("msize"), col("wt"))
+    val ps = SurveyIntegration.propensityModel(stacked, Seq("x1", "x2", "x3"))
+    val withKw = SurveyIntegration.withKw(shared, survey.drop("msize"), col("wt"), ps)
+    val r = withKw.agg(count(lit(1)), sum("kw")).head()
+    assert(r.getLong(0) == 600L)
+    assertNear(r.getDouble(1), survey.agg(sum("wt")).head().getDouble(0), 1e-9)
   }
 
   test("GREG-calibrated battery reproduces auxiliary totals exactly") {

@@ -36,6 +36,55 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin"), s"expected BNLJ:\n$p")
   }
 
+  test("KW pair stream: the broadcast side reads the survey input, never the cohort") {
+    // The n_s·n_c kernel pair stream must STREAM the cohort (the side
+    // that grows with the data) and broadcast the survey sample, in both
+    // KernelWeights entry points; no explicit broadcast hint may wrap a
+    // cohort-derived frame. Joins AQE broadcasts at run time on small
+    // inputs are not hints and are not checked.
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case o => o.children.flatMap(nodes)
+    })
+    def scanned(p: SparkPlan): Set[String] = nodes(p).collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+    }.flatten.toSet
+    // (query, survey input, cohort input): a8 runs attachJacobian, a7 compute
+    Seq(("a8_kw_jacobian", "customer.parquet", "supplier.parquet"),
+        ("a7_kernel_norm", "supplier.parquet", "customer.parquet")).foreach {
+      case (q, survey, cohort) =>
+        val df = SparkEntry.queries(q)(spark, sf)
+        df.collect()
+        val bnljs = nodes(df.queryExecution.executedPlan).collect {
+          case j: BroadcastNestedLoopJoinExec => j
+        }
+        assert(bnljs.nonEmpty, s"$q: no kernel pair stream")
+        bnljs.foreach { j =>
+          val build = if (j.buildSide == BuildRight) j.right else j.left
+          assert(scanned(build) == Set(survey),
+            s"$q: pair stream broadcasts ${scanned(build)}, want only $survey:\n$j")
+        }
+        val hinted = df.queryExecution.analyzed.collect {
+          case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h.child
+        }
+        hinted.foreach { h =>
+          val read = h.collect { case l: LogicalRelation => l.relation }.collect {
+            case r: HadoopFsRelation => r.location.rootPaths.map(_.getName)
+          }.flatten
+          assert(!read.contains(cohort), s"$q: broadcast hint over the cohort:\n$h")
+        }
+    }
+  }
+
   test("o1_topk plans as TakeOrderedAndProject (no global sort)") {
     val p = plan("o1_topk")
     assert(p.contains("TakeOrderedAndProject"), s"expected top-k operator:\n$p")

@@ -176,12 +176,13 @@ class StatsSpec extends SparkSpec {
       .toDF("id", "q", "wt")
     val cohort = Seq((1L, 0.2), (2L, 0.4), (3L, 0.7), (4L, 0.9))
       .toDF("id", "q")
-    def run() = KernelWeights.jacobian(
-      survey, col("id"), col("q"), col("wt"),
-      cohort, col("id"), col("q"),
+    def run() = KernelWeights.attachJacobian(
+      survey, col("q"), col("wt"),
+      cohort, col("q"),
       h = 0.5, sFeatures = Seq(col("q")), cFeatures = Seq(col("q")),
       kernel = Kernels.triangular, kernelDeriv =
         u => when(abs(u) < 1.0, -signum(u) / 2).otherwise(0.0))
+      .select(col("id").as("c_id"), col("kw"), col("d_kw_0"))
       .orderBy("c_id").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     val viaCollect = run()
