@@ -37,6 +37,10 @@ import graft.stats.Kernels
   */
 object KernelWeights {
 
+  // cohort profile key columns, carried on the cohort rows for the fan-back
+  private val CQ = "__kw_q"
+  private def cx(j: Int) = s"__kw_x$j"
+
   /** @param survey  (sId, score, wt) projection
     * @param sId     names the survey rows only: units enter the kernel
     *   through their score, so the id plays no part in the weights
@@ -111,10 +115,6 @@ object KernelWeights {
     kernelCore(survey, sScore, sWt, sFeatures, cohort, cScore, cFeatures,
       h, kernel, kernelDeriv, bandJoin = false, removeUnmatched)
 
-  // cohort profile key columns, carried on the cohort rows for the fan-back
-  private val CQ = "__kw_q"
-  private def cx(j: Int) = s"__kw_x$j"
-
   /** The one pair-stream core: survey rows × cohort rows → the cohort
     * frame plus `kw` and `d_kw_0..d_kw_{p-1}`, with the flat zero-row
     * rescue (wt/m, simu_fun.R:175-183) unless `removeUnmatched`.
@@ -164,13 +164,16 @@ object KernelWeights {
     val u = (col("q_s") - col(CQ)) / Coef.scalar(h)
     // dK/du from kernelDeriv; d u/dγ_j = (x_sj − x_cj)·(dq/dγ)/h with
     // logistic scores dq/dγ_j folded into the feature columns by the caller.
-    val pairs =
-      (if (bandJoin) bandPairs(sProfiles, cProfiles, h)
-       else cProfiles.crossJoin(broadcast(sProfiles)))
+    // the pair stream of the cohort profiles with a survey-side frame:
+    // the survey profiles, or (stage 2) the profiles carrying row sums
+    def pairsWith(s: DataFrame): DataFrame =
+      (if (bandJoin) bandPairs(s, cProfiles, h)
+       else cProfiles.crossJoin(broadcast(s)))
         .withColumns(Map("k" -> kernel(u), "dku" -> kernelDeriv(u)))
-        .select(((sKey ++ cKey ++ Seq("wt_s", "c_mult", "k")).map(col) ++
+        .select(((s.columns.toSeq ++ cKey ++ Seq("c_mult", "k")).map(col) ++
           js.map(j => (col("dku") * (col(s"xs$j") - col(cx(j))) / Coef.scalar(h))
             .as(s"dk$j"))): _*)
+    val pairs = pairsWith(sProfiles)
 
     // stage 1: row sums per survey profile, weighting each cohort
     // profile by its multiplicity (Σ_c k = Σ_profiles mult·k). LEFT-join
@@ -208,11 +211,14 @@ object KernelWeights {
     val collected = probe.length <= threshold
     val rkIdx = rowSums.schema.fieldIndex("row_k")
     val wtIdx = rowSums.schema.fieldIndex("wt_s")
-    val positive =
-      if (collected) broadcast(spark.createDataFrame(
+    // stage 2's pairs carry their survey profile's row sums: collected,
+    // the positive row sums ARE the broadcast side of a second pair
+    // stream (no per-pair join); distributed, they join the pairs
+    val normalized =
+      if (collected) pairsWith(spark.createDataFrame(
         spark.sparkContext.parallelize(probe.filter(_.getDouble(rkIdx) > 0.0).toSeq, 1),
-        rowSums.schema).drop("wt_s"))
-      else rowSums.filter(col("row_k") > 0.0).drop("wt_s")
+        rowSums.schema))
+      else pairs.join(rowSums.filter(col("row_k") > 0.0).drop("wt_s"), sKey)
     // Zero-sum rows (compact-support kernel or tiny bandwidth) spread
     // their wt_s/m to every cohort unit — added as a scalar, never
     // re-densified — with ZERO derivative: the rescue branch is
@@ -230,7 +236,7 @@ object KernelWeights {
     // results back to the cohort rows. Rows whose every pair came from
     // zero-sum survey rows (or that matched no pair) get kw = flat,
     // derivatives 0.
-    val contrib = pairs.join(positive, sKey)
+    val contrib = normalized
       .groupBy(cKey.map(col): _*)
       .agg(
         sum(col("wt_s") * col("k") / col("row_k")).as("kw_raw"),

@@ -38,10 +38,12 @@ class PlanSpec extends SparkSpec {
 
   test("KW pair stream: the broadcast side reads the survey input, never the cohort") {
     // The n_s·n_c kernel pair stream must STREAM the cohort (the side
-    // that grows with the data) and broadcast the survey sample, in both
-    // KernelWeights entry points; no explicit broadcast hint may wrap a
-    // cohort-derived frame. Joins AQE broadcasts at run time on small
-    // inputs are not hints and are not checked.
+    // that grows with the data) and broadcast the survey side — the
+    // survey profiles, or the row sums collected from them — in both
+    // KernelWeights entry points, with the row sums collected and with
+    // them distributed (threshold 0); no explicit broadcast hint may
+    // wrap a cohort-derived frame. Joins AQE broadcasts at run time on
+    // small inputs are not hints and are not checked.
     import org.apache.spark.sql.catalyst.optimizer.BuildRight
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -59,9 +61,14 @@ class PlanSpec extends SparkSpec {
       case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
     }.flatten.toSet
     // (query, survey input, cohort input): a8 runs attachJacobian, a7 compute
-    Seq(("a8_kw_jacobian", "customer.parquet", "supplier.parquet"),
-        ("a7_kernel_norm", "supplier.parquet", "customer.parquet")).foreach {
-      case (q, survey, cohort) =>
+    for {
+      (q, survey, cohort) <- Seq(
+        ("a8_kw_jacobian", "customer.parquet", "supplier.parquet"),
+        ("a7_kernel_norm", "supplier.parquet", "customer.parquet"))
+      threshold <- Seq(None, Some("0"))
+    } {
+      threshold.foreach(spark.conf.set("graft.kw.rowSumsCollectThreshold", _))
+      try {
         val df = SparkEntry.queries(q)(spark, sf)
         df.collect()
         val bnljs = nodes(df.queryExecution.executedPlan).collect {
@@ -69,9 +76,12 @@ class PlanSpec extends SparkSpec {
         }
         assert(bnljs.nonEmpty, s"$q: no kernel pair stream")
         bnljs.foreach { j =>
-          val build = if (j.buildSide == BuildRight) j.right else j.left
-          assert(scanned(build) == Set(survey),
+          val (build, stream) =
+            if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+          assert(scanned(build).subsetOf(Set(survey)),
             s"$q: pair stream broadcasts ${scanned(build)}, want only $survey:\n$j")
+          assert(scanned(stream).contains(cohort),
+            s"$q: pair stream does not stream the cohort $cohort:\n$j")
         }
         val hinted = df.queryExecution.analyzed.collect {
           case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h.child
@@ -82,6 +92,7 @@ class PlanSpec extends SparkSpec {
           }.flatten
           assert(!read.contains(cohort), s"$q: broadcast hint over the cohort:\n$h")
         }
+      } finally spark.conf.unset("graft.kw.rowSumsCollectThreshold")
     }
   }
 
