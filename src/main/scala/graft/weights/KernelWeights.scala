@@ -162,10 +162,11 @@ object KernelWeights {
       .groupBy(cKey.map(col): _*)
       .agg(count(lit(1)).cast("double").as("c_mult"))
     val u = (col("q_s") - col(CQ)) / Coef.scalar(h)
-    // dK/du from kernelDeriv; d u/dγ_j = (x_sj − x_cj)·(dq/dγ)/h with
-    // logistic scores dq/dγ_j folded into the feature columns by the caller.
-    // the pair stream of the cohort profiles with a survey-side frame:
-    // the survey profiles, or (stage 2) the profiles carrying row sums
+    // The pair stream of the cohort profiles with a survey-side frame:
+    // the survey profiles, or (stage 2) the profiles carrying their row
+    // sums. dK/du from kernelDeriv; d u/dγ_j = (x_sj − x_cj)·(dq/dγ)/h
+    // with logistic scores dq/dγ_j folded into the feature columns by
+    // the caller.
     def pairsWith(s: DataFrame): DataFrame =
       (if (bandJoin) bandPairs(s, cProfiles, h)
        else cProfiles.crossJoin(broadcast(s)))
