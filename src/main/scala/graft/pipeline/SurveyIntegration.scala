@@ -2,9 +2,9 @@ package graft.pipeline
 
 import graft.core.FeatureArray
 import graft.functions.Coef
-import graft.hazard.{AbsoluteRisk, Breslow, DiscreteHazard, GailHazard, RiskSet}
+import graft.hazard.{Breslow, DiscreteHazard, GailHazard}
 import graft.stats.{CoxPH, Kernels, WeightedGLM}
-import graft.weights.{Composite, Greg, Ipsw, KernelWeights, PostStratify}
+import graft.weights.{Composite, Ipsw, KernelWeights}
 import graft.variance.Jackknife
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -122,85 +122,6 @@ object SurveyIntegration {
       t -> (1.0 - math.exp(-ch * math.exp(eta0)))
     }
     Battery(fit.coefficients, fit.converged, fit.scoreResidual, cum, gail, abs)
-  }
-
-  final case class BatteryVariance(
-      battery: Battery,
-      betaVar: Array[Double],
-      lambdaVar: Map[Double, Double],
-      gailVar: Map[Double, Double])
-
-  /** `calib_est` WITH the influence plumbing (jk_fun.R:38-63,
-    * taylor_deviate.R:988-1007): the battery at GREG-calibrated
-    * weights plus PPS-linearized variances of β and Λ(t*) (and ΛG(t*)
-    * with a population hazard), propagating the calibration Jacobian in
-    * factored form through JointVariance.gregCorrectedDeviates and the
-    * hazard chain through HazardInfluence. */
-  def calibratedBatteryWithVariance(
-      comDat: DataFrame, time: Column, event: Column, weight: Column,
-      auxCols: Seq[String], auxTotals: Array[Double],
-      featureCols: Seq[String], tStar: Seq[Double],
-      popLambda: Option[DataFrame] = None, eta0: Double = 0.0): BatteryVariance = {
-    import graft.variance.{CoxInfluence, HazardInfluence, JointVariance}
-    val auxFeats = FeatureArray.withIntercept(auxCols.map(col))
-    val cal = Greg.solve(comDat, auxFeats, weight, auxTotals)
-    val cald = comDat
-      .withColumn("greg_f", Greg.factor(auxFeats, cal))
-      .withColumn("greg_wt", Greg.calibratedWeight(auxFeats, weight, cal))
-      .persist()
-    val battery = estimatorBattery(cald, time, event, col("greg_wt"),
-      featureCols, tStar, popLambda, eta0)
-    val p = featureCols.length
-    val feats = featureCols.map(col)
-    val (_, info) = CoxPH.scoreAndInfo(cald, time, event, col("greg_wt"),
-      feats, battery.beta)
-    // Full calibration chain on the hazard estimands: the direct N/Z/Y
-    // deviates scale by f_i and pick up the factored-Jacobian projection
-    // −f_i·v_i'M⁻¹·S_dir(t*). The projection has exactly the γ-chain
-    // structure with pw_gamma := w·v and gamma_dev := −f·M⁻¹v (the β
-    // chain is already inside dbeta_greg); pw_gamma are the RiskSet
-    // measures of the one step table both deviate passes read.
-    val pc = cal.lambda.length
-    // M⁻¹ row-major (entry (m, l) at m·pc + l), read through Coef
-    val minvRows = graft.core.LinAlg.inverse(
-      graft.core.LinAlg.unpack(pc, cal.gramPacked)).t.toArray
-    val pwGamma = (0 until pc).map(m =>
-      weight.cast("double") * auxFeats.getItem(m))
-    val steps = RiskSet.steps(cald, time, event, col("greg_wt"),
-      CoxInfluence.relHzd(feats, battery.beta), feats, pwGamma)
-    val dev = CoxInfluence.deviates(cald, time, event, col("greg_wt"), feats,
-      battery.beta, info, steps,
-      Seq(auxFeats.as("__aux"), weight.cast("double").as("__w0"),
-        col("greg_f")), graft.core.Windows.SizeHint.Auto)
-    val corrected = JointVariance.gregCorrectedDeviates(dev, p,
-      col("__aux"), col("__w0"), col("greg_f"), cal, info)
-    val betaVarPacked = JointVariance.ppsVariance(corrected, p, "dbeta_greg_")
-    val betaVar = (0 until p).map { j =>
-      // diagonal entries of the packed upper triangle
-      val idx = (0 until j).map(k => p - k).sum
-      betaVarPacked(idx)
-    }.toArray
-    val gammaDevs = (0 until pc).map { m =>
-      val proj = (0 until pc).map(l => Coef.at(minvRows, m * pc + l) * col("__aux").getItem(l))
-        .foldLeft(lit(0.0): Column)(_ + _)
-      -col("greg_f") * proj
-    }
-    // Δ_i = w_i·(∂θ/∂w_i) against the BASE design weight — the deviates
-    // already carry the calibration chain, so the sampling variation
-    // contracts over w (the reference's ps.w·deviate, taylor_deviate.R:102)
-    val long = HazardInfluence.cumulativeDeviates(corrected, steps, p, tStar,
-      lambdaStar = popLambda, betaDevPrefix = "dbeta_greg_",
-      gammaDevs = gammaDevs,
-      directScale = col("greg_f"),
-      passthrough = Seq(col("__w0")))
-    val lamVar = HazardInfluence.ppsVariance(long, col("d_cum_hzd"), col("__w0"))
-      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    val gailVar = if (popLambda.isDefined)
-      HazardInfluence.ppsVariance(long, col("d_cum_gail"), col("__w0"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    else Map.empty[Double, Double]
-    cald.unpersist(blocking = false)
-    BatteryVariance(battery, betaVar, lamVar, gailVar)
   }
 
   /** Delete-a-group jackknife of a scalar estimator over the replicate

@@ -1,10 +1,9 @@
 package graft.pipeline
 
-import graft.core.{FeatureArray, LinAlg}
-import graft.functions.Coef
+import graft.core.FeatureArray
 import graft.hazard.RiskSet
 import graft.stats.{CoxPH, WeightedGLM}
-import graft.variance.{CoxInfluence, HazardInfluence, Influence}
+import graft.variance.{CoxInfluence, HazardInfluence, Influence, JointVariance}
 import graft.weights.Ipsw
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -254,20 +253,11 @@ object TaylorInference {
       val allDev = org.apache.spark.sql.GraftSqlBridge.flattenPlan(allDevCache)
 
       // 4. per-m β deviates: ipsw·I⁻¹U + B·Δγ (cross-derivative through
-      //    ∂w̃/∂γ = −ipsw·x_ps; survey rows have U = 0)
-      val dExprs = for (j <- 0 until p; m0 <- 0 until q) yield
-        sum(col(s"ui_$j") * col(s"__pg$m0")).as(s"d${j}_$m0")
-      val dRow = allDev.agg(dExprs.head, dExprs.tail: _*).head()
-      val dMat = breeze.linalg.DenseMatrix.tabulate(p, q)((j, m0) =>
-        dRow.getDouble(j * q + m0))
-      // B row-major (entry (j, m0) at j·q + m0), read through Coef
-      val bMat = (LinAlg.inverse(LinAlg.unpack(p, fit.infoPacked)) * dMat).t.toArray
-      val dbTot = (0 until p).map { j =>
-        (col("__psw") * col("trt") * col(s"dbeta_$j") +
-          (0 until q).map(m0 => Coef.at(bMat, j * q + m0) * col(s"__gd$m0"))
-            .foldLeft(lit(0.0): Column)(_ + _)).as(s"dbeta_m_$j")
-      }
-      val withDb = allDev.select((allDev.columns.map(col) ++ dbTot): _*)
+      //    ∂w̃/∂γ = __pg: −ipsw·x_ps, or KW's d_kw; survey rows have U = 0)
+      val withDb = JointVariance.correctedDeviates(allDev, p,
+        (0 until q).map(m0 => col(s"__pg$m0")),
+        (0 until q).map(m0 => col(s"__gd$m0")), fit.infoPacked,
+        directScale = col("__psw") * col("trt"), out = "dbeta_m_")
 
       // 5. hazard-chain deviates at the same per-m scale
       val risk = x0.map(v => HazardInfluence.RiskProfile(fit.coefficients, v))
@@ -295,62 +285,29 @@ object TaylorInference {
       val families = Seq("d_cum_hzd" -> "cum_hzd", "d_cum_gail" -> "cum_gail",
           "d_abs_risk" -> "abs_risk", "d_abs_risk_gail" -> "abs_risk_gail")
         .filter { case (dc, _) => long.columns.contains(dc) }
-      val famAggs = families.flatMap { case (dc, ec) => Seq(
-        sum((lit(1.0) - col("__pi")) * col(dc) * col(dc)).as(s"v_$dc"),
-        max(col(ec)).as(s"e_$ec"),
-        (covar_samp(col(dc), col(dc)) * count(lit(1))).as(s"pps_$dc")) }
-      val famRows =
-        if (families.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else long.groupBy(col("t_star"), col("trt"))
-          .agg(famAggs.head, famAggs.tail: _*).collect()
-      // same one-job recombine for the β contractions: Poisson partials
-      // per sample + per-sample n·cov in a single groupBy(trt) aggregate
-      val bAggs = (0 until p).flatMap(j => Seq(
-        sum((lit(1.0) - col("__pi")) *
-          col(s"dbeta_m_$j") * col(s"dbeta_m_$j")).as(s"pois$j"),
-        (covar_samp(col(s"dbeta_m_$j"), col(s"dbeta_m_$j")) *
-          count(lit(1))).as(s"pps$j")))
-      val bRows = withDb.groupBy(col("trt"))
-        .agg(bAggs.head, bAggs.tail: _*).collect()
-      // a whole (t*, sample) group can come back NULL on any aggregate
-      // column (sum/max over an all-NULL group): treat NULL partials as
-      // 0.0 — exactly what the pre-recombine per-group aggregates did by
-      // ignoring NULL inputs
-      def nz(r: org.apache.spark.sql.Row, i: Int): Double =
-        if (r.isNullAt(i)) 0.0 else r.getDouble(i)
-      def contract(dcol: String, ecol: String): Map[Double, Estimand] = {
-        if (!families.exists(_._1 == dcol)) return Map.empty
+      val byT = Influence.contract(long, families.map(f => col(f._1)),
+        col("__pi"), keys = Seq(col("t_star")), sample = Some(col("trt")),
+        extra = families.map(f => max(col(f._2))))
+      // the same one-job recombine for the β contractions
+      val b = Influence.contract(withDb, (0 until p).map(j => col(s"dbeta_m_$j")),
+        col("__pi"), sample = Some(col("trt")))(Nil)
+      def estimands(dcol: String): Map[Double, Estimand] = {
         val fi = families.indexWhere(_._1 == dcol)
-        val byT = famRows.groupBy(_.getDouble(0))
-        tStar.map { t =>
-          val rs = byT(t)
-          val pois = rs.map(nz(_, 2 + 3 * fi)).sum
+        if (fi < 0) Map.empty
+        else tStar.map { t =>
+          val c = byT(Seq(t))
           // a sample group can be all-NULL on the estimate column (the
           // pre-grouped max ignored those rows; the recombine must too).
           // Every sample NULL (a t* before any event / grid mass reaches
           // either sample) ⇒ the cumulative estimand is identically 0.
-          val estVals = rs.filter(!_.isNullAt(3 + 3 * fi))
-            .map(_.getDouble(3 + 3 * fi))
-          val est = if (estVals.isEmpty) 0.0 else estVals.max
-          val pps = rs.map(nz(_, 4 + 3 * fi)).sum
-          t -> Estimand(est, pois, pps)
+          val est = if (c.extra(fi).isEmpty) 0.0 else c.extra(fi).max
+          t -> Estimand(est, c.poisson(fi), c.pps(fi))
         }.toMap
       }
-      val lam = contract("d_cum_hzd", "cum_hzd")
-      val gail = if (lambdaStar.isDefined) contract("d_cum_gail", "cum_gail")
-        else Map.empty[Double, Estimand]
-      val absR = if (risk.isDefined) contract("d_abs_risk", "abs_risk")
-        else Map.empty[Double, Estimand]
-      val absRG = if (risk.isDefined && lambdaStar.isDefined)
-        contract("d_abs_risk_gail", "abs_risk_gail") else Map.empty[Double, Estimand]
 
-      val bPois = (0 until p).map(j =>
-        bRows.map(nz(_, 1 + 2 * j)).sum).toArray
-      val bPps = (0 until p).map(j =>
-        bRows.map(nz(_, 2 + 2 * j)).sum).toArray
-
-      IpswInference(gamma, fit.coefficients, bPois, bPps,
-        lam, gail, absR, absRG)
+      IpswInference(gamma, fit.coefficients, b.poisson.toArray, b.pps.toArray,
+        estimands("d_cum_hzd"), estimands("d_cum_gail"),
+        estimands("d_abs_risk"), estimands("d_abs_risk_gail"))
     } finally allDevCache.unpersist(blocking = false)
   }
 }

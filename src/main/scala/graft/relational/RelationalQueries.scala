@@ -423,7 +423,7 @@ object RelationalQueries {
         |GROUP BY c_id ORDER BY c_id""".stripMargin) { (s, d) =>
       graft.weights.KernelWeights.compute(
           t(s, d, "supplier").filter(col("s_suppkey") < 1000),
-          col("s_suppkey"), col("s_acctbal") / 1000.0,
+          col("s_acctbal") / 1000.0,
           (col("s_suppkey") % 5 + 1.0).cast("double"),
           t(s, d, "customer"), col("c_custkey"), col("c_acctbal") / 1000.0,
           h = 1.0, kernel = graft.stats.Kernels.gaussian)

@@ -2,7 +2,7 @@ package graft.relational
 
 import graft.core.Tables
 import graft.stats.CoxPH
-import graft.variance.{CoxInfluence, Jackknife, JointVariance}
+import graft.variance.{CoxInfluence, Influence, Jackknife, JointVariance}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -342,11 +342,13 @@ object RelationalQueries3 {
       val dev = CoxInfluence.deviates(base, col("t"), col("d"), col("w"),
         Seq(col("x")), fit.coefficients, fit.infoPacked,
         sizeHint = graft.core.Windows.SizeHint.Small)
-      val corrected = JointVariance.ipswCorrectedDeviates(dev, p = 1,
-        psWeight = col("__w"), psFeatures = Seq(col("__x0")),
+      val corrected = JointVariance.correctedDeviates(dev, p = 1,
+        dwdGamma = Seq(-col("__w") * col("__x0")),
         gammaDevs = Seq(lit(0.0)), infoPacked = fit.infoPacked)
-      val v = JointVariance.ppsVariance(corrected, p = 1)
-      Seq((rnd(fit.coefficients(0), 8), rnd(v(0), 10))).toDF("beta", "v_pps")
+      // the query reads only the PPS n·cov, so π is immaterial
+      val v = Influence.contract(corrected, Seq(col("dbeta_tot_0")),
+        pi = lit(1.0))(Nil).pps(0)
+      Seq((rnd(fit.coefficients(0), 8), rnd(v, 10))).toDF("beta", "v_pps")
     },
 
     // ---- M13 flagship: the COMPLETE composed Taylor-inference IPSW

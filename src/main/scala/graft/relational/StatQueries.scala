@@ -218,7 +218,7 @@ object StatQueries {
       // prunes the pair stream to O(matching pairs)
       graft.weights.KernelWeights.compute(
           t(s, d, "supplier").filter(col("s_suppkey") < 1000),
-          col("s_suppkey"), col("s_acctbal") / 1000.0,
+          col("s_acctbal") / 1000.0,
           (col("s_suppkey") % 5 + 1.0).cast("double"),
           t(s, d, "customer"), col("c_custkey"), col("c_acctbal") / 1000.0,
           h = 0.05, kernel = Kernels.triangular, bandJoin = true)
@@ -247,7 +247,7 @@ object StatQueries {
         |ORDER BY c.c_id""".stripMargin) { (s, d) =>
       graft.weights.KernelWeights.compute(
           t(s, d, "supplier").filter(col("s_suppkey") < 1000),
-          col("s_suppkey"), col("s_acctbal") / 1000.0,
+          col("s_acctbal") / 1000.0,
           (col("s_suppkey") % 5 + 1.0).cast("double"),
           t(s, d, "customer"), col("c_custkey"), col("c_acctbal") / 1000.0,
           h = 0.05, kernel = Kernels.triangular, bandJoin = true,
@@ -460,7 +460,8 @@ object StatQueries {
         ((lit(1.0) + col("l_orderkey") % 5) * col("l_extendedprice") *
           (lit(1) - col("l_discount")) / 100000.0).as("delta"),
         ((col("l_orderkey") % 9 + 1.0) / 10.0).as("pi"))
-      val v = graft.variance.Influence.poissonVarianceOfTotal(base, col("delta"), col("pi"))
+      val v = graft.variance.Influence.contract(base, Seq(col("delta")), col("pi"))(Nil)
+        .poisson(0)
       Seq(rnd(v, 4)).toDF("v_poisson")
     },
 

@@ -354,22 +354,4 @@ object HazardInfluence {
       (0 until p).map(j => col(s"__x$j")) ++
       (0 until p).map(j => col(s"__db$j"))): _*)
   }
-
-  /** Poisson-linearization variance of the cumulated estimand per t*
-    * (taylor_deviate.R:110-111): Σ_i (1−π_i)·Δ_i², Δ = psWeight·deviate. */
-  def poissonVariance(
-      longDf: DataFrame, devCol: Column, psWeight: Column,
-      pi: Column): DataFrame =
-    longDf.groupBy(col("t_star"))
-      .agg(sum((lit(1.0) - pi) * psWeight * devCol * psWeight * devCol)
-        .as("var_poisson"))
-      .orderBy(col("t_star"))
-
-  /** With-replacement PPS variance per t* (taylor_deviate.R:109):
-    * n·cov(Δ). */
-  def ppsVariance(longDf: DataFrame, devCol: Column, psWeight: Column): DataFrame =
-    longDf.groupBy(col("t_star"))
-      .agg((covar_samp(psWeight * devCol, psWeight * devCol) * count(lit(1)))
-        .as("var_pps"))
-      .orderBy(col("t_star"))
 }

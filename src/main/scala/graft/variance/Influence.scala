@@ -5,7 +5,7 @@ import graft.core.{Gram, LinAlg}
 import graft.functions.Coef
 import graft.stats.WeightedGLM
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Taylor-linearization ("deviate") variance engine (SURVEY.md M13) —
   * the reference's influence-function machinery
@@ -35,11 +35,55 @@ object Influence {
     }
   }
 
-  /** Poisson-sampling variance of a total from unit deviates
-    * (taylor_deviate.R:109-117): V̂ = Σ (1−π_i) Δ_i². */
-  def poissonVarianceOfTotal(df: DataFrame, deviate: Column, pi: Column): Double =
-    df.agg(sum((lit(1.0) - pi.cast("double")) * deviate * deviate))
-      .head().getDouble(0)
+  /** One key's contraction: per deviate column, the Poisson and PPS
+    * variances summed over samples, and per extra aggregate its
+    * non-NULL per-sample values. */
+  final case class Contracted(poisson: IndexedSeq[Double],
+      pps: IndexedSeq[Double], extra: IndexedSeq[Seq[Double]])
+
+  /** The one variance contraction of unit deviates
+    * (taylor_deviate.R:109-111): per key and sample, the Poisson
+    * Σ(1−π_i)Δ_i² and the with-replacement PPS n·cov(Δ), in ONE
+    * `groupBy(keys ++ sample).agg(...).collect()` job; the driver then
+    * sums the per-sample partials per key. A NULL partial (a group whose
+    * deviates are all NULL, or `covar_samp` of a one-row group) reads
+    * as 0, as if the NULL rows had been left out of a per-key aggregate.
+    *
+    * @param deviates per-unit deviate columns Δ
+    * @param pi       inclusion probability π_i
+    * @param keys     result keys (none: one result under the key Nil)
+    * @param sample   the sample split: PPS n·cov is taken per sample and
+    *                 summed (the Poisson sum is additive either way)
+    * @param extra    double-valued aggregates that ride along in the same
+    *                 job (e.g. `max(estimate)`); each comes back as its
+    *                 per-sample values, NULLs dropped, for the caller to
+    *                 recombine
+    * @return key values (in `keys` order) → Contracted
+    */
+  def contract(df: DataFrame, deviates: Seq[Column], pi: Column,
+      keys: Seq[Column] = Nil, sample: Option[Column] = None,
+      extra: Seq[Column] = Nil): Map[Seq[Any], Contracted] = {
+    val k = deviates.length
+    val aggs = deviates.map(d => sum((lit(1.0) - pi.cast("double")) * d * d)) ++
+      deviates.map(d => covar_samp(d, d) * count(lit(1))) ++ extra
+    val rows = df.groupBy((keys ++ sample): _*)
+      .agg(aggs.head, aggs.tail: _*).collect()
+    val nk = keys.length
+    val base = nk + sample.size
+    def nz(r: Row, i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    // without keys, an empty frame still yields its (zero) result
+    val groups = if (nk == 0) Map(Seq.empty[Any] -> rows)
+      else rows.groupBy(_.toSeq.take(nk))
+    groups.map { case (key, rs) =>
+      key -> Contracted(
+        (0 until k).map(i => rs.map(nz(_, base + i)).sum),
+        (0 until k).map(i => rs.map(nz(_, base + k + i)).sum),
+        extra.indices.map { e =>
+          rs.toSeq.filter(!_.isNullAt(base + 2 * k + e))
+            .map(_.getDouble(base + 2 * k + e))
+        })
+    }
+  }
 
   /** Sandwich variance for the logistic fit under Poisson sampling
     * (`v_Poisson`, simu_fun.R:231-263): H⁻¹ M H⁻¹ with

@@ -47,18 +47,23 @@ object Jackknife {
   /** Explode to the replicate dimension: every input row appears once
     * per replicate r=0..m-1 with column `jk_wt` = 0 if its group is
     * dropped in r, else weight·m/(m−1). */
-  def replicated(df: DataFrame, groupCol: Column, weight: Column, m: Int): DataFrame =
+  def replicated(df: DataFrame, groupCol: Column, weight: Column, m: Int): DataFrame = {
+    // m = 1 would scale by m/(m−1) = ∞
+    require(m >= 2, s"Jackknife.replicated needs m >= 2 groups, got m = $m")
     df.withColumn("__jk_g", groupCol)
       .withColumn("jk_r", explode(sequence(lit(0), lit(m - 1))))
       .withColumn("jk_wt",
         when(col("__jk_g") === col("jk_r"), lit(0.0))
           .otherwise(weight.cast("double") * lit(m.toDouble / (m - 1))))
       .drop("__jk_g")
+  }
 
   /** Jackknife variance of replicate estimates: one row per (group-by
     * key ×) replicate with an estimate column. Returns the grouped
     * variance ((m−1)/m)·Σ(θ_k − θ̄)² per key. */
   def variance(estimates: DataFrame, estimate: Column, m: Int, keys: Seq[Column] = Nil): DataFrame = {
+    // m = 1 would scale by (m−1)/m = 0: a variance of 0, not an error
+    require(m >= 2, s"Jackknife.variance needs m >= 2 groups, got m = $m")
     val fac = (m - 1).toDouble / m
     if (keys.isEmpty)
       estimates.agg((var_pop(estimate) * lit(m) * lit(fac)).as("jk_var"))

@@ -3,7 +3,6 @@ package graft.variance
 import breeze.linalg.DenseMatrix
 import graft.core.LinAlg
 import graft.functions.Coef
-import graft.stats.WeightedGLM
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -16,7 +15,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *   Δβ_i(total) = Δβ_i(direct) + B · Δγ_i,
   *   B = I_β⁻¹ · ∂U_β/∂γ,   [∂U_β/∂γ]_{jm} = Σ_i (∂U_j/∂w_i)(∂w_i/∂γ_m)
   *
-  * For IPSW weights ∂w_i/∂γ_m = −w_i·x^{ps}_im (taylor_deviate.R:64).
+  * For IPSW weights ∂w_i/∂γ_m = −w_i·x^{ps}_im (taylor_deviate.R:64);
+  * for KW weights it is the kernel Jacobian d_kw_m (A8).
   * ∂U_j/∂w_i is exactly the per-unit Cox score influence `ui_j`
   * (CoxInfluence), so the cross-derivative is ONE distributed aggregate
   * over the deviate frame — the p×q matrix collects to the driver, the
@@ -25,67 +25,49 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object JointVariance {
 
-  /** @param devFrame   output of CoxInfluence.deviates on the COHORT
-    *                   frame (carries ui_j and the pseudo-weight column)
-    * @param psWeight   the pseudo-weight column (w_i)
-    * @param psFeatures the propensity design columns x^{ps}_m (length q)
-    * @param gammaDevs  per-unit γ-deviate columns on the same frame
-    *                   (length q, from Influence.logisticDeviates
-    *                   restricted to this frame's rows)
-    * @param infoPacked Cox information at β̂ (packed upper triangle)
-    * @return devFrame + corrected columns `dbeta_tot_0..p-1`
+  /** The one γ→β propagation (taylor_deviate.R:471-496): one p×q
+    * aggregate for D[j][m] = Σ_i ui_j·∂w_i/∂γ_m, a driver-side
+    * B = I⁻¹·D, and per row
+    *
+    *   out_j = directScale·dbeta_j + Σ_m B[j,m]·Δγ_m
+    *
+    * with B read through `Coef.at`, so a new fit recompiles nothing.
+    *
+    * @param devFrame    output of CoxInfluence.deviates (carries ui_j and
+    *                    dbeta_j), possibly unioned with γ-only rows that
+    *                    carry ui_j = 0
+    * @param dwdGamma    ∂w_i/∂γ_m as columns on the frame (length q): the
+    *                    closed IPSW form −w_i·x^{ps}_im, or KW's d_kw_m
+    *                    (`KernelWeights.attachJacobian` puts them on the
+    *                    cohort rows)
+    * @param gammaDevs   per-unit γ-deviate columns (length q, from
+    *                    Influence.logisticDeviates on the same rows)
+    * @param infoPacked  Cox information at β̂ (packed upper triangle)
+    * @param directScale scale of the direct deviate: 1, or the chains'
+    *                    per-multiplicity pseudo-weight
+    * @return devFrame + corrected columns `out`0..p-1
     */
-  def ipswCorrectedDeviates(
+  def correctedDeviates(
       devFrame: DataFrame,
       p: Int,
-      psWeight: Column,
-      psFeatures: Seq[Column],
+      dwdGamma: Seq[Column],
       gammaDevs: Seq[Column],
-      infoPacked: Array[Double]): DataFrame = {
-    val q = psFeatures.length
-    // cross derivative D[j][m] = Σ_i ui_j · (−w_i · x_im)
-    val exprs = for (j <- 0 until p; mIdx <- 0 until q) yield
-      sum(col(s"ui_$j") * (-psWeight.cast("double") * psFeatures(mIdx)))
-        .as(s"d${j}_$mIdx")
+      infoPacked: Array[Double],
+      directScale: Column = lit(1.0),
+      out: String = "dbeta_tot_"): DataFrame = {
+    val q = dwdGamma.length
+    val exprs = for (j <- 0 until p; m <- 0 until q) yield
+      sum(col(s"ui_$j") * dwdGamma(m)).as(s"d${j}_$m")
     val row = devFrame.agg(exprs.head, exprs.tail: _*).head()
-    val d = DenseMatrix.tabulate(p, q)((j, mIdx) => row.getDouble(j * q + mIdx))
+    val d = DenseMatrix.tabulate(p, q)((j, m) => row.getDouble(j * q + m))
+    // B row-major (entry (j, m) at j·q + m)
     val b = (LinAlg.inverse(LinAlg.unpack(p, infoPacked)) * d).t.toArray
-
     val corrected = (0 until p).map { j =>
-      val corr = (0 until q).map(mIdx => Coef.at(b, j * q + mIdx) * gammaDevs(mIdx))
-        .foldLeft(lit(0.0): Column)(_ + _)
-      (col(s"dbeta_$j") + corr).as(s"dbeta_tot_$j")
+      (directScale * col(s"dbeta_$j") +
+        (0 until q).map(m => Coef.at(b, j * q + m) * gammaDevs(m))
+          .foldLeft(lit(0.0): Column)(_ + _)).as(s"$out$j")
     }
     devFrame.select((devFrame.columns.map(col).toSeq ++ corrected): _*)
-  }
-
-  /** KW-weight variant: the pseudo-weights are kernel-smoothed, so
-    * ∂w_c/∂γ_m comes from the kernel Jacobian (A8,
-    * `KernelWeights.attachJacobian` → columns d_kw_m on the cohort
-    * rows, selected with the unit id) rather
-    * than the closed IPSW form. Cross derivative
-    * D[j][m] = Σ_c ui_j(c) · d_kw_m(c) via one join + aggregate. */
-  def kwCorrectedDeviates(
-      devFrame: DataFrame,
-      p: Int,
-      idCol: Column,
-      kwJacobian: DataFrame, // (c_id, d_kw_0..d_kw_{q-1})
-      q: Int,
-      gammaDevs: Seq[Column],
-      infoPacked: Array[Double]): DataFrame = {
-    val joined = devFrame.withColumn("__jid", idCol)
-      .join(kwJacobian.withColumnRenamed("c_id", "__jid"), Seq("__jid"))
-    val exprs = for (j <- 0 until p; mIdx <- 0 until q) yield
-      sum(col(s"ui_$j") * col(s"d_kw_$mIdx")).as(s"d${j}_$mIdx")
-    val row = joined.agg(exprs.head, exprs.tail: _*).head()
-    val dm = DenseMatrix.tabulate(p, q)((j, mIdx) => row.getDouble(j * q + mIdx))
-    val b = (LinAlg.inverse(LinAlg.unpack(p, infoPacked)) * dm).t.toArray
-    val corrected = (0 until p).map { j =>
-      val corr = (0 until q).map(mIdx => Coef.at(b, j * q + mIdx) * gammaDevs(mIdx))
-        .foldLeft(lit(0.0): Column)(_ + _)
-      (col(s"dbeta_$j") + corr).as(s"dbeta_tot_$j")
-    }
-    joined.select((joined.columns.map(col).toSeq ++ corrected): _*)
   }
 
   /** GREG-calibration variance propagation — the reference's factored
@@ -144,15 +126,5 @@ object JointVariance {
         .as(s"dbeta_greg_$r")
     }
     withUi.select((withUi.columns.map(col).toSeq ++ dbeta): _*)
-  }
-
-  /** PPS variance of the corrected β deviates: n·cov over units, per
-    * coefficient pair (taylor_deviate.R:490). Returns packed upper p×p. */
-  def ppsVariance(devFrame: DataFrame, p: Int, prefix: String = "dbeta_tot_"): Array[Double] = {
-    val exprs = for (j <- 0 until p; k <- j until p)
-      yield (covar_samp(col(s"$prefix$j"), col(s"$prefix$k")) * count(lit(1)))
-        .as(s"v${j}_$k")
-    val row = devFrame.agg(exprs.head, exprs.tail: _*).head()
-    exprs.indices.map(row.getDouble).toArray
   }
 }

@@ -41,9 +41,8 @@ object KernelWeights {
   private val CQ = "__kw_q"
   private def cx(j: Int) = s"__kw_x$j"
 
-  /** @param survey  (sId, score, wt) projection
-    * @param sId     names the survey rows only: units enter the kernel
-    *   through their score, so the id plays no part in the weights
+  /** @param survey  (score, wt) projection: units enter the kernel
+    *   through their score, so no survey id is needed
     * @param cohort  (cId, score) projection
     * @param h       bandwidth
     * @param kernel  kernel function (Kernels.gaussian, ...)
@@ -58,7 +57,7 @@ object KernelWeights {
     */
   def compute(
       survey: DataFrame,
-      sId: Column, sScore: Column, sWt: Column,
+      sScore: Column, sWt: Column,
       cohort: DataFrame,
       cId: Column, cScore: Column,
       h: Double,

@@ -173,4 +173,21 @@ class EdgeCaseSpec extends SparkSpec {
     assert(String.valueOf(kw.getMessage).contains("no events"), kw.getMessage)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("the jackknife names m on a single group") {
+    // m = 1 scales replicate weights by m/(m−1) = ∞ and the variance by
+    // (m−1)/m = 0: both entry points refuse it by name
+    val df = Seq((1.0, 1.0), (2.0, 1.0), (3.0, 2.0)).toDF("y", "w")
+    val mean = intercept[IllegalArgumentException] {
+      graft.pipeline.SurveyIntegration.jackknifeMean(df, col("y"), col("w"),
+        lit(0), m = 1)
+    }
+    assert(mean.getMessage.contains("Jackknife.replicated") &&
+      mean.getMessage.contains("m = 1"), mean.getMessage)
+    val v = intercept[IllegalArgumentException] {
+      graft.variance.Jackknife.variance(Seq(0.5).toDF("theta"), col("theta"), m = 1)
+    }
+    assert(v.getMessage.contains("Jackknife.variance") &&
+      v.getMessage.contains("m = 1"), v.getMessage)
+  }
 }

@@ -2,9 +2,8 @@ package graft
 
 import graft.core.FeatureArray
 import graft.stats.CoxPH
-import graft.variance.{CoxInfluence, HazardInfluence, JointVariance}
+import graft.variance.{CoxInfluence, HazardInfluence, Influence, JointVariance}
 import graft.weights.Greg
-import graft.pipeline.SurveyIntegration
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -129,13 +128,7 @@ class GregInfluenceSpec extends SparkSpec {
 
   test("calibrated Λ(t*) deviate matches FD through re-calibration + refit") {
     val tStar = Seq(2.0, 4.0, 6.0)
-    val bv = SurveyIntegration.calibratedBatteryWithVariance(
-      df, col("t"), col("d"), col("w"), auxCols = Seq("x"),
-      auxTotals = targets, featureCols = Seq("x"), tStar = tStar)
-    assert(bv.lambdaVar.size == tStar.size)
-    bv.lambdaVar.values.foreach(v => assert(v >= 0.0 && !v.isNaN))
-
-    // engine-side per-unit deviates via the same plumbing
+    // engine-side per-unit deviates through the calibration chain
     val feats = FeatureArray.withIntercept(Seq(col("x")))
     val cal = Greg.solve(df, feats, col("w"), targets)
     val f = calFactors(w0)
@@ -162,11 +155,21 @@ class GregInfluenceSpec extends SparkSpec {
     val steps = graft.hazard.RiskSet.steps(caldf, col("t"), col("d"),
       col("wtil"), CoxInfluence.relHzd(Seq(col("x")), Array(beta)),
       Seq(col("x")), pwGamma)
-    val long = HazardInfluence.cumulativeDeviates(corr, steps, p = 1,
+    val longDf = HazardInfluence.cumulativeDeviates(corr, steps, p = 1,
       tStar = tStar, betaDevPrefix = "dbeta_greg_", gammaDevs = gammaDevs,
       directScale = col("greg_f"),
-      sizeHint = graft.core.Windows.SizeHint.Small)
-      .orderBy(col("__t"), col("__x0"), col("t_star")).collect()
+      sizeHint = graft.core.Windows.SizeHint.Small,
+      passthrough = Seq(col("w")))
+
+    // PPS variance of Λ(t*) against the BASE design weight: the deviates
+    // already carry the calibration chain, so the sampling variation
+    // contracts over w (the reference's ps.w·deviate, taylor_deviate.R:102)
+    val lambdaVar = Influence.contract(longDf, Seq(col("w") * col("d_cum_hzd")),
+      pi = lit(1.0), keys = Seq(col("t_star"))).map { case (k, c) => k -> c.pps(0) }
+    assert(lambdaVar.size == tStar.size)
+    lambdaVar.values.foreach(v => assert(v >= 0.0 && !v.isNaN))
+
+    val long = longDf.orderBy(col("__t"), col("__x0"), col("t_star")).collect()
 
     val eps = 1e-6
     for (r <- long) {

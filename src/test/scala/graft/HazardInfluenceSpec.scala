@@ -3,7 +3,7 @@ package graft
 import graft.core.Windows
 import graft.hazard.RiskSet
 import graft.stats.CoxPH
-import graft.variance.{CoxInfluence, HazardInfluence}
+import graft.variance.{CoxInfluence, HazardInfluence, Influence}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -297,12 +297,10 @@ class HazardInfluenceSpec extends SparkSpec {
       Seq(col("x")), Array(beta))
     val long = HazardInfluence.cumulativeDeviates(devFrame(beta, info),
       stepsOf(beta), p = 1, tStar = tStar, sizeHint = Windows.SizeHint.Small)
-    val vp = HazardInfluence.poissonVariance(long, col("d_cum_hzd"),
-      col("__w"), lit(0.2)).collect()
-    assert(vp.length == tStar.length)
-    vp.foreach(r => assert(r.getDouble(1) >= 0.0 && !r.getDouble(1).isNaN))
-    val vpps = HazardInfluence.ppsVariance(long, col("d_cum_hzd"), col("__w"))
-      .collect()
-    vpps.foreach(r => assert(r.getDouble(1) >= 0.0 && !r.getDouble(1).isNaN))
+    val v = Influence.contract(long, Seq(col("__w") * col("d_cum_hzd")),
+      lit(0.2), keys = Seq(col("t_star")))
+    assert(v.size == tStar.length)
+    v.values.foreach(c => assert(c.poisson(0) >= 0.0 && !c.poisson(0).isNaN))
+    v.values.foreach(c => assert(c.pps(0) >= 0.0 && !c.pps(0).isNaN))
   }
 }

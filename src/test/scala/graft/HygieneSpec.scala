@@ -141,16 +141,26 @@ class HygieneSpec extends AnyFunSuite {
       "llm/HeavyHitters.scala" -> 1,         // k sketch rows
       "llm/Similarity.scala" -> 7,           // k centroids / codebooks / tree levels (≤ b^depth rows)
       "llm/Dedup.scala" -> 3,                // df caps + band constants + debug-flag precondition probe (limit(1))
-      "pipeline/TaylorInference.scala" -> 2, // p×p variance blocks
       "variance/CoxInfluence.scala" -> 1,    // a Small G0/G1 step table for its broadcast
       "pipeline/Simulation.scala" -> 1,      // per-rep scalar results
       "pipeline/CalibEst.scala" -> 2,        // p-vector calibration solves
-      "pipeline/SurveyIntegration.scala" -> 4, // p×p chain blocks
+      "pipeline/SurveyIntegration.scala" -> 2, // the battery's Λ(t*) / ΛG(t*) rows
+      "variance/Influence.scala" -> 1,       // the contraction's per-key rows
       "weights/KernelWeights.scala" -> 1,    // the row-sum LIMIT probe (≤ threshold+1 rows)
       "weights/Raking.scala" -> 3,           // margin factor tables
       "relational/StatQueries.scala" -> 1,   // fitted p-vector echo
       "variance/HazardInfluence.scala" -> 2) // step-table hazard constants
     assertCapped("collect()", sites("""\.collect\(\)"""), allow)
+  }
+
+  test("covar_samp in variance/ and pipeline/ only in the shared contraction") {
+    // every Taylor variance contracts its deviates through
+    // Influence.contract (Poisson Σ(1−π)Δ² and PPS n·cov per sample), so
+    // a new n·cov elsewhere in these packages is a second copy of it
+    assertCapped("covar_samp( outside Influence.contract",
+      sites("""covar_samp\(""",
+        f => !(f.startsWith("variance/") || f.startsWith("pipeline/"))),
+      Map("variance/Influence.scala" -> 1))
   }
 
   test("crossJoin only with a broadcast (or broadcast-producing) right side") {

@@ -65,4 +65,39 @@ class InfluenceSpec extends SparkSpec {
     assert(v(0, 0) > 0 && v(1, 1) > 0)
     assert(v(0, 0) * v(1, 1) - v(0, 1) * v(1, 0) > 0)
   }
+
+  test("the shared contraction sums per-sample partials, NULL partials as 0") {
+    // key 1: sample 1's deviates are all NULL (NULL Poisson and PPS
+    // partials); key 2: sample 0 is one row (covar_samp is NULL)
+    val rows = Seq[(Double, Int, Option[Double], Double)](
+      (1.0, 0, Some(1.0), 0.5), (1.0, 0, Some(2.0), 0.25), (1.0, 0, Some(4.0), 0.0),
+      (1.0, 1, None, 0.5), (1.0, 1, None, 0.2),
+      (2.0, 0, Some(3.0), 0.1),
+      (2.0, 1, Some(-1.0), 0.5), (2.0, 1, Some(2.0), 0.5))
+    val got = Influence.contract(rows.toDF("k", "s", "d", "pi"), Seq(col("d")),
+      col("pi"), keys = Seq(col("k")), sample = Some(col("s")),
+      extra = Seq(max(col("d"))))
+    assert(got.keySet == Set(Seq(1.0), Seq(2.0)))
+    for (k <- Seq(1.0, 2.0)) {
+      val byS = rows.filter(_._1 == k).groupBy(_._2).values
+        .map(_.collect { case (_, _, Some(d), pi) => (d, pi) })
+      val pois = byS.flatten.map { case (d, pi) => (1 - pi) * d * d }.sum
+      // n·cov(Δ, Δ) = Σ(Δ − Δ̄)²·n/(n−1); fewer than 2 values ⇒ 0
+      val pps = byS.map { g =>
+        val n = g.size
+        if (n < 2) 0.0 else {
+          val mean = g.map(_._1).sum / n
+          g.map { case (d, _) => (d - mean) * (d - mean) }.sum * n / (n - 1)
+        }
+      }.sum
+      assertNear(got(Seq(k)).poisson(0), pois, 1e-12)
+      assertNear(got(Seq(k)).pps(0), pps, 1e-12)
+      assertSeqNear(got(Seq(k)).extra(0).sorted, byS.filter(_.nonEmpty)
+        .map(_.map(_._1).max).toSeq.sorted, 0.0)
+    }
+    assertNear(got(Seq(1.0)).poisson(0), 19.5, 1e-12)
+    assertNear(got(Seq(1.0)).pps(0), 7.0, 1e-12)
+    assertNear(got(Seq(2.0)).poisson(0), 10.6, 1e-12)
+    assertNear(got(Seq(2.0)).pps(0), 9.0, 1e-12)
+  }
 }

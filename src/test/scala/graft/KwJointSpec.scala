@@ -1,7 +1,7 @@
 package graft
 
 import graft.stats.CoxPH
-import graft.variance.{CoxInfluence, JointVariance}
+import graft.variance.{CoxInfluence, Influence, JointVariance}
 import graft.weights.KernelWeights
 import org.apache.spark.sql.functions._
 
@@ -21,31 +21,28 @@ class KwJointSpec extends SparkSpec {
       (5L, 1.2, 5.0, 1.0, -0.5), (6L, 0.3, 6.0, 0.0, 0.8)
     ).toDF("id", "q", "t", "d", "x")
 
-    // kernel weights + their γ-Jacobian on the same pair stream
-    val jac = KernelWeights.attachJacobian(
+    // kernel weights + their γ-Jacobian on the same pair stream,
+    // attached to the cohort rows
+    val cohort = KernelWeights.attachJacobian(
       survey, col("q"), col("wt"),
       cohortRaw, col("q"),
       h = 0.5, sFeatures = Seq(col("q")), cFeatures = Seq(col("q")))
-      .select(col("id").as("c_id"), col("kw"), col("d_kw_0"))
-    assert(jac.columns.toSet == Set("c_id", "kw", "d_kw_0"))
+    assert(cohort.columns.toSet == cohortRaw.columns.toSet ++ Set("kw", "d_kw_0"))
 
-    val cohort = cohortRaw.join(jac.select(col("c_id").as("id"), col("kw")), Seq("id"))
     val fit = CoxPH.fit(cohort, col("t"), col("d"), col("kw"), Seq(col("x")))
     val dev = CoxInfluence.deviates(cohort, col("t"), col("d"), col("kw"),
       Seq(col("x")), fit.coefficients, fit.infoPacked,
-      passthrough = Seq(col("id")))
+      passthrough = Seq(col("d_kw_0")))
 
-    val zeroG = JointVariance.kwCorrectedDeviates(dev, p = 1, col("id"),
-      jac.select(col("c_id"), col("d_kw_0")), q = 1,
+    val zeroG = JointVariance.correctedDeviates(dev, p = 1, Seq(col("d_kw_0")),
       gammaDevs = Seq(lit(0.0)), infoPacked = fit.infoPacked)
     val drift = zeroG.agg(sum(abs(col("dbeta_tot_0") - col("dbeta_0"))))
       .head().getDouble(0)
     assertNear(drift, 0.0, 1e-12)
 
-    val withG = JointVariance.kwCorrectedDeviates(dev, p = 1, col("id"),
-      jac.select(col("c_id"), col("d_kw_0")), q = 1,
+    val withG = JointVariance.correctedDeviates(dev, p = 1, Seq(col("d_kw_0")),
       gammaDevs = Seq(col("__x0") * 0.01), infoPacked = fit.infoPacked)
-    val v = JointVariance.ppsVariance(withG, p = 1)
-    assert(v(0) > 0.0)
+    val v = Influence.contract(withG, Seq(col("dbeta_tot_0")), pi = lit(1.0))(Nil).pps(0)
+    assert(v > 0.0)
   }
 }

@@ -25,7 +25,7 @@ class PropertySpec extends SparkSpec {
         .map { case ((q, _, w), i) => (i.toLong, q, w) }.toDF("id", "q", "wt")
       val cohort = rows.zipWithIndex
         .map { case ((_, q, _), i) => (i.toLong + 1000, q) }.toDF("id", "q")
-      val kw = KernelWeights.compute(survey, col("id"), col("q"), col("wt"),
+      val kw = KernelWeights.compute(survey, col("q"), col("wt"),
         cohort, col("id"), col("q"), h, Kernels.gaussian)
       val sumKw = kw.agg(sum("kw")).head().getDouble(0)
       val sumWt = rows.map(_._3).sum

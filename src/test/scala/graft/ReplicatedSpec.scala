@@ -1,7 +1,7 @@
 package graft
 
 import graft.stats.{CoxPH, CoxPHReplicated, GLMReplicated, WeightedGLM}
-import graft.variance.{CoxInfluence, Jackknife, JointVariance}
+import graft.variance.{CoxInfluence, Influence, Jackknife, JointVariance}
 import org.apache.spark.sql.functions._
 
 class ReplicatedSpec extends SparkSpec {
@@ -82,13 +82,13 @@ class ReplicatedSpec extends SparkSpec {
     val fit = CoxPH.fit(df, col("t"), col("d"), col("w"), Seq(col("x")))
     val dev = CoxInfluence.deviates(df, col("t"), col("d"), col("w"),
       Seq(col("x")), fit.coefficients, fit.infoPacked)
-    val corrected = JointVariance.ipswCorrectedDeviates(dev, p = 1,
-      psWeight = col("__w"), psFeatures = Seq(col("__x0")),
+    val corrected = JointVariance.correctedDeviates(dev, p = 1,
+      dwdGamma = Seq(-col("__w") * col("__x0")),
       gammaDevs = Seq(lit(0.0)), infoPacked = fit.infoPacked)
     val r = corrected.agg(
       sum(abs(col("dbeta_tot_0") - col("dbeta_0")))).head().getDouble(0)
     assertNear(r, 0.0, 1e-12)
-    val v = JointVariance.ppsVariance(corrected, p = 1)
-    assert(v(0) > 0.0)
+    val v = Influence.contract(corrected, Seq(col("dbeta_tot_0")), pi = lit(1.0))(Nil).pps(0)
+    assert(v > 0.0)
   }
 }

@@ -119,7 +119,7 @@ class StatsSpec extends SparkSpec {
     val survey = Seq((1L, 0.0, 2.0), (2L, 1.0, 3.0)).toDF("id", "q", "wt")
     val cohort = Seq((10L, 0.0), (11L, 0.5), (12L, 1.0)).toDF("id", "q")
     val kw = KernelWeights.compute(
-      survey, col("id"), col("q"), col("wt"),
+      survey, col("q"), col("wt"),
       cohort, col("id"), col("q"),
       h = 1.0, kernel = Kernels.gaussian)
       .orderBy("c_id").collect().map(_.getDouble(1)).toSeq
@@ -136,7 +136,7 @@ class StatsSpec extends SparkSpec {
       (4L, 10.0, 5.0)).toDF("id", "q", "wt")
     val cohort = Seq((10L, 0.0), (11L, 0.5), (12L, 1.0), (13L, 3.1)).toDF("id", "q")
     def run(band: Boolean) = KernelWeights.compute(
-      survey, col("id"), col("q"), col("wt"),
+      survey, col("q"), col("wt"),
       cohort, col("id"), col("q"),
       h = 1.0, kernel = Kernels.triangular, bandJoin = band)
       .orderBy("c_id").collect().map(_.getDouble(1)).toSeq
@@ -155,7 +155,7 @@ class StatsSpec extends SparkSpec {
       .toDF("id", "q", "wt")
     val cohort = Seq((10L, 0.0), (11L, 0.5), (12L, 1.0)).toDF("id", "q")
     def run() = KernelWeights.compute(
-      survey, col("id"), col("q"), col("wt"),
+      survey, col("q"), col("wt"),
       cohort, col("id"), col("q"),
       h = 1.0, kernel = Kernels.triangular)
       .orderBy("c_id").collect().map(_.getDouble(1)).toSeq
@@ -206,7 +206,7 @@ class StatsSpec extends SparkSpec {
       .toDF("id", "q", "wt")
     val cohort = Seq((10L, 0.0), (11L, 0.5), (12L, 1.0)).toDF("id", "q")
     def run(rms: Boolean) = KernelWeights.compute(
-      survey, col("id"), col("q"), col("wt"),
+      survey, col("q"), col("wt"),
       cohort, col("id"), col("q"),
       h = 1.0, kernel = Kernels.triangular, removeUnmatched = rms)
       .orderBy("c_id").collect().map(_.getDouble(1)).toSeq
