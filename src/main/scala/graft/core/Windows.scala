@@ -33,7 +33,8 @@ object Windows {
 
   /** Row count at or under which a scan input is `Small`: probed by
     * [[resolve]] and by the fitters that size their step tables once
-    * (`CoxPH.fit`, `CoxPHReplicated.fit`). */
+    * (`CoxPH.fit`, `CoxPHReplicated.fit`). It also bounds the inputs the
+    * Newton driver fetches and fits on the driver (`stats.Newton.run`). */
   val SmallRows = 20000
 
   /** Caller knowledge about the scan input's cardinality: `Small` skips
@@ -43,14 +44,15 @@ object Windows {
     *
     * A public entry point pays at most one probe; later scans inherit
     * the answer ([[SizeHint.inherited]]):
-    *  - iterative fitters probe once and pass the answer to every
-    *    iteration (`CoxPH.fit`'s cardinality probe);
+    *  - iterative fitters size once and pass the answer to every
+    *    iteration (`CoxPH.fit`'s fetch of a Small input, else its
+    *    cardinality probe);
     *  - `hazard.RiskSet.sized` returns the class its scan resolved to,
     *    and Breslow's prefix scan over the table's event rows takes it;
-    *  - the IPSW/KW chains take the class from `CoxPH.fit`'s probe,
-    *    whose distinct-time count over the cohort is exactly the row
-    *    count of the chain's RiskSet table, and pass it to RiskSet,
-    *    CoxInfluence and HazardInfluence.
+    *  - the IPSW/KW chains take the class from `CoxPH.fit`, whose fetch
+    *    or probe bounds the cohort's distinct-time count, which is
+    *    exactly the row count of the chain's RiskSet table, and pass it
+    *    to RiskSet, CoxInfluence and HazardInfluence.
     * Only `Small` is inherited: a filter or projection of a table under
     * the threshold is itself under it, while a table derived from a
     * `Large` one may not be, and the two-phase scan sums in a different

@@ -92,14 +92,12 @@ object TaylorInference {
     * instead of the closed IPSW form; everything downstream — β-chain,
     * γ-chain, survey γ-only blocks, contractions — is shared.
     *
-    * @param cohortId unique cohort key for the Jacobian join
     * @param bandwidth kernel bandwidth; None ⇒ bw.nrd0 of the COHORT
     *                  scores (taylor_deviate.R:212). The Jacobian
     *                  treats h as fixed (dK/du only), matching the
     *                  reference's linearization. */
   def kwChain(
-      cohort: DataFrame, cohortId: Column,
-      survey: DataFrame, surveyId: Column, surveyWt: Column,
+      cohort: DataFrame, survey: DataFrame, surveyWt: Column,
       time: Column, event: Column,
       featureCols: Seq[String], psFeatureCols: Seq[String],
       tStar: Seq[Double],
@@ -112,8 +110,7 @@ object TaylorInference {
       psIters: Int = 0,
       coxIters: Int = 0): IpswInference = {
     val q = psFeatureCols.length + 1
-    val ps = propensity(cohort.withColumn("__cid", cohortId),
-      survey.withColumn("__sid", surveyId), surveyWt, psFeatureCols, a, psIters)
+    val ps = propensity(cohort, survey, surveyWt, psFeatureCols, a, psIters)
     try {
       val psFeats = ps.feats
       val score = FeatureArray.dot(psFeats, ps.fit.coefficients)
@@ -215,9 +212,9 @@ object TaylorInference {
         maxIter = coxIters, tol = 0.0, sizeHint = sizeHint)
       else CoxPH.fit(cohortF, time, event, col("__wtc"), feats,
         sizeHint = sizeHint)
-    // under Auto the fit's cardinality probe counted exactly the rows of
-    // the RiskSet table below: a Small answer sizes every scan of the
-    // chain, so the chain runs no probe of its own
+    // under Auto the fit's fetch (or its cardinality probe) bounded the
+    // rows of the RiskSet table below: a Small answer sizes every scan of
+    // the chain, so the chain runs no probe of its own
     val hint = graft.core.Windows.SizeHint.inherited(sizeHint, fit.stepSize)
 
     // 3. one RiskSet table (with the γ measures ∂w̃/∂γ = __pg) feeds

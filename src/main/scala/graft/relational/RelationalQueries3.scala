@@ -815,13 +815,12 @@ object RelationalQueries3 {
       import s.implicits._
       val li = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
       def side(m: Int) = li.filter(col("l_suppkey") % 2 === m).select(
-        (col("l_orderkey") * 10 + col("l_linenumber")).cast("long").as("uid"),
         col("l_quantity").cast("double").as("t"),
         when(col("l_returnflag") =!= "A", 1.0).otherwise(0.0).as("d"),
         (col("l_discount") * 10).cast("double").as("x"),
         (lit(1.0) + col("l_orderkey") % 5).cast("double").as("wt"))
       val inf = graft.pipeline.TaylorInference.kwChain(
-        side(0).drop("wt"), col("uid"), side(1), col("uid"), col("wt"),
+        side(0).drop("wt"), side(1), col("wt"),
         col("t"), col("d"),
         Seq("x"), Seq("x"), Seq(10.0, 20.0, 30.0, 40.0, 50.0),
         a = 0.3, bandwidth = Some(0.4), psIters = 6, coxIters = 4,

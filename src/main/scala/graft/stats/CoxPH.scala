@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * ties="breslow")` (jk_fun.R:90,96,103; taylor_deviate.R:69).
   *
   * Newton-Raphson on the Breslow partial likelihood. Per iteration, at
-  * the current β (all distributed, one job):
+  * the current β:
   *
   *   1. rel_i = exp(x_i'β)                       — codegen'd expression
   *   2. tie-collapse: groupBy(t) partial sums of w·rel, w·rel·x_j,
@@ -24,6 +24,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   *      — one tiny final aggregate, p + p(p+1)/2 doubles to the driver
   *   5. driver-side Breeze solve: β ← β + I⁻¹U (the shared Newton
   *      driver, stats/Newton.scala, owns the loop and the input cache)
+  *
+  * A fit's input of at most `Windows.SmallRows` rows is fetched once
+  * and steps 1-4 run on the driver over its columns ([[localScores]]);
+  * a larger one runs them as one distributed job per iteration.
   *
   * Features are individual double columns (p ≤ ~6), keeping every
   * expression inside whole-stage codegen.
@@ -133,6 +137,77 @@ object CoxPH {
     rows
   }
 
+  /** Steps 1-4 on the driver over a fit's fetched columns t, d, w,
+    * x_0 … x_{p-1}: [[scoreRows]]' sums in its operand order, with rows
+    * added in fetch order. Returns β ↦ (U, I packed upper). */
+  private def localScores(c: Array[Array[Double]], p: Int)
+      : Array[Double] => (Array[Double], Array[Double]) = {
+    val (t, d, w) = (c(0), c(1), c(2))
+    val x = c.drop(3)
+    val n = t.length
+    val tri = p * (p + 1) / 2
+    // the tie-collapse groups, numbered by descending t in Spark's
+    // double order: -0.0 groups with 0.0, and NaN sorts above +∞
+    val key = t.map(v => if (v == 0.0) 0.0 else v)
+    val byTime = (0 until n).toArray.sortBy(i => key(i))(Ordering.Double.TotalOrdering.reverse)
+    val g = new Array[Int](n)
+    var m = 0
+    for (k <- byTime.indices) {
+      if (k > 0 && java.lang.Double.compare(key(byTime(k)), key(byTime(k - 1))) != 0) m += 1
+      g(byTime(k)) = m
+    }
+    m = if (n == 0) 0 else m + 1
+    // the event-side sums do not depend on β
+    val wd = new Array[Double](m)
+    val ux = Array.ofDim[Double](p, m)
+    for (r <- 0 until n if d(r) == 1.0) {
+      wd(g(r)) += w(r)
+      for (j <- 0 until p) ux(j)(g(r)) += w(r) * x(j)(r)
+    }
+    beta => {
+      val s0 = new Array[Double](m)
+      val s1 = Array.ofDim[Double](p, m)
+      val s2 = Array.ofDim[Double](tri, m)
+      for (r <- 0 until n) {
+        var eta = 0.0
+        for (j <- 0 until p) eta += x(j)(r) * beta(j)
+        val wRel = w(r) * StrictMath.exp(eta)
+        s0(g(r)) += wRel
+        var k = 0
+        for (j <- 0 until p) {
+          s1(j)(g(r)) += wRel * x(j)(r)
+          for (l <- j until p) { s2(k)(g(r)) += wRel * x(j)(r) * x(l)(r); k += 1 }
+        }
+      }
+      val u = new Array[Double](p)
+      val info = new Array[Double](tri)
+      var sum0 = 0.0
+      val sum1 = new Array[Double](p)
+      val sum2 = new Array[Double](tri)
+      for (q <- 0 until m) {
+        sum0 += s0(q)
+        for (j <- 0 until p) sum1(j) += s1(j)(q)
+        for (k <- 0 until tri) sum2(k) += s2(k)(q)
+        // Spark orders NaN above every double, so `wd > 0` keeps it
+        if (wd(q) > 0 || wd(q).isNaN) {
+          var k = 0
+          for (j <- 0 until p) {
+            u(j) += ux(j)(q) - wd(q) * sum1(j) / sum0
+            for (l <- j until p) {
+              info(k) += wd(q) * (sum2(k) / sum0 - sum1(j) * sum1(l) / (sum0 * sum0))
+              k += 1
+            }
+          }
+        }
+      }
+      (u, info)
+    }
+  }
+
+  /** Fit β by Newton-Raphson. Under `Auto` or `Small` the input is
+    * fetched once: a Small fetch fits on the driver (`stepSize` Small);
+    * otherwise, and always under `Large`, the fit runs distributed, and
+    * under `Auto` one cardinality probe sizes its step table. */
   def fit(
       df: DataFrame,
       time: Column,
@@ -146,20 +221,36 @@ object CoxPH {
     var lastInfo = new Array[Double](p * (p + 1) / 2)
     var lastScoreNorm = Double.MaxValue
     var stepSize: Windows.SizeHint = sizeHint
+    def events(total: Double): Unit = require(total > 0,
+      "CoxPH.fit: no events (d=1) in input — partial likelihood undefined")
+    def step(u: Array[Double], info: Array[Double]): Array[Double] = {
+      lastInfo = info
+      lastScoreNorm = u.map(math.abs).sum
+      Newton.step(p, info, u)
+    }
+    // columns: t, d, w, x_0 … x_{p-1}
+    val local: Option[Newton.Local] =
+      if (sizeHint == Windows.SizeHint.Large) None
+      else Some { c =>
+        events(c(1).sum)
+        stepSize = Windows.SizeHint.Small
+        val scores = localScores(c, p)
+        beta => { val (u, info) = scores(beta); step(u, info) }
+      }
     val res = Newton.run(df, columns(time, event, weight, features),
-        new Array[Double](p), maxIter, tol, "CoxPH") { base =>
+        new Array[Double](p), maxIter, tol, "CoxPH", local) { base =>
       // one up-front cardinality probe shared by every NR iteration:
       // events must exist, and the distinct-time count (a null time is
       // one more group) decides the scan strategy (single-partition
       // window vs two-phase distributed scan). A caller that already
       // knows its step-table size (the composed chains pass their own
-      // hint) skips the probe job — the no-events guard then surfaces as
-      // the ANSI divide-by-zero in iteration 1.
+      // hint) skips the probe job — no events then surface in iteration 1
+      // as a null score row ([ROW_VALUE_IS_NULL]); a Small hint reaches
+      // this setup only for an input with a null.
       if (sizeHint == Windows.SizeHint.Auto) {
         val probe = base.agg(sum(col("__d")), countDistinct(col("__t")),
           max(col("__t").isNull.cast("int"))).head()
-        require(probe.getDouble(0) > 0,
-          "CoxPH.fit: no events (d=1) in input — partial likelihood undefined")
+        events(probe.getDouble(0))
         stepSize =
           if (probe.getLong(1) + probe.getInt(2) <= Windows.SmallRows)
             Windows.SizeHint.Small
@@ -167,9 +258,7 @@ object CoxPH {
       }
       beta => {
         val (u, info) = scoreAndInfoPrepared(base, p, beta, stepSize)
-        lastInfo = info
-        lastScoreNorm = u.map(math.abs).sum
-        Newton.step(p, info, u)
+        step(u, info)
       }
     }
     Fit(res.theta, res.iterations, res.converged, lastInfo, lastScoreNorm, stepSize)

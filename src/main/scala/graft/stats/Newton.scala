@@ -1,6 +1,6 @@
 package graft.stats
 
-import graft.core.LinAlg
+import graft.core.{LinAlg, Windows}
 import org.apache.spark.sql.functions.{lit, raise_error, when}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.storage.StorageLevel
@@ -11,10 +11,17 @@ import org.apache.spark.storage.StorageLevel
   * (jk_fun.R:279-387).
   *
   * The driver owns what the loops share:
-  *  - the iteration-invariant columns are projected once and persisted,
-  *    and every pass reads the leaf-plan view of that cache
+  *  - the input's path, chosen once per fit by its row count (the rule
+  *    `core.Windows.resolve` uses). A fitter that supplies a local pass
+  *    has its projection fetched with one head(SmallRows + 1); a fetch
+  *    of at most `Windows.SmallRows` rows with no null iterates on the
+  *    driver over column arrays, with no job, persist or plan per
+  *    iteration. Any other input takes the distributed path: the
+  *    iteration-invariant columns are projected once and persisted, and
+  *    every pass reads the leaf-plan view of that cache
   *    (GraftSqlBridge.flattenPlan), so an iteration re-plans a one-node
-  *    tree instead of the caller's lineage;
+  *    tree instead of the caller's lineage. Nulls always take the
+  *    distributed path, whose aggregates define their semantics;
   *  - the cache is released on every path, a failing solve included;
   *  - θ ← θ + step, stopping after `maxIter` steps or once
   *    max|step| < `tol` (tol = 0 pins the iteration count, so a SQL
@@ -23,10 +30,12 @@ import org.apache.spark.storage.StorageLevel
   *    [[NumericalError]] naming the fitter and the iteration. The check
   *    reads the driver's θ only, so it adds no job.
   *
-  * Each fitter supplies one pass: a distributed aggregate at the current
-  * θ and its driver-side solve. θ enters the aggregate through
+  * Each fitter supplies its distributed pass: an aggregate at the
+  * current θ and its driver-side solve. θ enters the aggregate through
   * functions.Coef, which snapshots it and keeps the generated code the
-  * same every iteration.
+  * same every iteration. A fitter's local pass, when it has one, sits
+  * beside that aggregate and sums the same products in the same operand
+  * order; the two paths differ only in the order rows are added.
   */
 object Newton {
 
@@ -40,18 +49,32 @@ object Newton {
       reason: String, cause: Throwable = null)
     extends RuntimeException(s"$fitter: $reason at iteration $iteration", cause)
 
+  /** A fitter's driver-side setup: called once with the fetched
+    * projection as one array per column (every column a double);
+    * returns the pass, which maps the current θ to the step added to it. */
+  type Local = Array[Array[Double]] => Array[Double] => Array[Double]
+
   /** Iterate θ from `theta0` over `df` projected to `cols`.
     *
     * @param fitter the fitter's name, carried by its errors
-    * @param setup called once with the cached projection, before the
-    *              first step (size probes go here); returns the pass,
-    *              which maps the current θ to the step added to it */
+    * @param local  the driver-side pass over a Small input, if the
+    *               fitter has one; None runs no fetch
+    * @param setup  called once with the cached projection, before the
+    *               first distributed step (size probes go here); returns
+    *               the pass, which maps the current θ to the step added
+    *               to it */
   def run(df: DataFrame, cols: Seq[Column], theta0: Array[Double],
-      maxIter: Int, tol: Double, fitter: String)(
+      maxIter: Int, tol: Double, fitter: String, local: Option[Local] = None)(
       setup: DataFrame => Array[Double] => Array[Double]): Result = {
-    val cached = df.select(cols: _*).persist(StorageLevel.MEMORY_AND_DISK)
+    val small = local.flatMap { localSetup =>
+      val rows = df.select(cols: _*).head(Windows.SmallRows + 1)
+      if (rows.length > Windows.SmallRows || rows.exists(_.anyNull)) None
+      else Some(localSetup(Array.tabulate(cols.length)(j => rows.map(_.getDouble(j)))))
+    }
+    val cached = if (small.isDefined) None
+      else Some(df.select(cols: _*).persist(StorageLevel.MEMORY_AND_DISK))
     try {
-      val pass = setup(GraftSqlBridge.flattenPlan(cached))
+      val pass = small.getOrElse(setup(GraftSqlBridge.flattenPlan(cached.get)))
       val theta = theta0.clone()
       var iter = 0
       var converged = false
@@ -75,7 +98,7 @@ object Newton {
         converged = maxStep < tol
       }
       Result(theta, iter, converged, maxStep)
-    } finally { cached.unpersist(blocking = false); () }
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
   /** The Newton step I⁻¹U for a packed symmetric information (or

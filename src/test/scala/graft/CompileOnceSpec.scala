@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
 /** The Monte-Carlo replicate's driver path: a replicate's plans carry no
   * data-dependent literal, so a second replicate (new PPS salts, new
   * fitted coefficients) reuses every generated class; and an `Auto`
-  * chain pays exactly one size probe, the Cox fit's cardinality probe. */
+  * chain pays no size probe of its own: the Cox fit's one fetch of its
+  * Small input sizes it, as it does under `Small`. */
 class CompileOnceSpec extends SparkSpec {
 
   private lazy val pop = {
@@ -81,7 +82,10 @@ class CompileOnceSpec extends SparkSpec {
         spark.sparkContext.removeSparkListener(listener)
         c.unpersist(); s.unpersist()
       }
-    assert(auto == small + 1, s"Auto chain ran $auto jobs, Small chain $small")
+    // the one job more was the Cox fit's cardinality probe; the fetch of
+    // the Small cohort now sizes the fit under either hint, so the two
+    // chains run the same jobs
+    assert(auto == small, s"Auto chain ran $auto jobs, Small chain $small")
     // the inherited Small plans are the declared ones: same numbers
     assert(autoInf.beta.toSeq == smallInf.beta.toSeq)
     assert(autoInf.lambda == smallInf.lambda)

@@ -166,7 +166,7 @@ class EdgeCaseSpec extends SparkSpec {
     assert(String.valueOf(ipsw.getMessage).contains("no events"), ipsw.getMessage)
     assert(spark.sharedState.cacheManager.isEmpty)
     val kw = intercept[Exception] {
-      graft.pipeline.TaylorInference.kwChain(cohort, col("id"), survey, col("id"),
+      graft.pipeline.TaylorInference.kwChain(cohort, survey,
         col("wt"), col("t"), col("d"), Seq("x"), Seq("x"), Seq(2.0),
         bandwidth = Some(0.5), psIters = 2)
     }

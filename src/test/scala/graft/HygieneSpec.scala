@@ -185,6 +185,15 @@ class HygieneSpec extends AnyFunSuite {
       Map("weights/KernelWeights.scala" -> 1))
   }
 
+  test("bounded SmallRows + 1 fetches only in the size probe and the Newton driver") {
+    // a Small input is sized by one head(SmallRows + 1): the scan probe
+    // (Windows.resolve) or the Newton driver's fetch of a fitter's
+    // projection. A fitter that fetched rows on its own would bypass the
+    // driver's null fallback and its shared stopping rule and checks.
+    assertCapped("SmallRows + 1", sites("""SmallRows\s*\+\s*1\b"""),
+      Map("core/Windows.scala" -> 1, "stats/Newton.scala" -> 1))
+  }
+
   test("one kernel pair stream (crossJoin) in KernelWeights") {
     // the dense n_s×n_c pair stream is built once, in the shared core
     assertCapped("crossJoin in KernelWeights",
@@ -294,7 +303,7 @@ class HygieneSpec extends AnyFunSuite {
     val allow = Map(
       "core/Windows.scala" -> 1,              // the range partition id
       "variance/HazardInfluence.scala" -> 1,  // the absent λ* column
-      "pipeline/TaylorInference.scala" -> 6,  // __wtc ×2, __cid, __sid, __q, __wps
+      "pipeline/TaylorInference.scala" -> 4,  // __wtc ×2, __q, __wps
       "sampling/Pps.scala" -> 5)              // the key; the two-stage design
     assertCapped("withColumn(", sites("""\.withColumn\(""", f => !files(f)), allow)
   }

@@ -114,12 +114,7 @@ class TaylorInferenceSpec extends SparkSpec {
   test("composed KW chain variances equal FD-deviate contractions") {
     val hFix = 0.6
     val inf = TaylorInference.kwChain(
-      coh.zipWithIndex.map { case ((t, d, x), i) => (t, d, x, i.toLong) }
-        .toDF("t", "d", "x", "cid"),
-      col("cid"),
-      svy.zipWithIndex.map { case ((t, d, x, wt), i) => (t, d, x, wt, i.toLong) }
-        .toDF("t", "d", "x", "wt", "sid"),
-      col("sid"), col("wt"),
+      coh.toDF("t", "d", "x"), svy.toDF("t", "d", "x", "wt"), col("wt"),
       col("t"), col("d"), Seq("x"), Seq("x"), tStar,
       a = aFrac, bandwidth = Some(hFix),
       sizeHint = graft.core.Windows.SizeHint.Small)
@@ -179,24 +174,23 @@ class TaylorInferenceSpec extends SparkSpec {
 
   test("kwChain is invariant to colliding unit ids") {
     // The reference addresses units by row index, so id uniqueness is
-    // not part of its contract; a regression here means some stage
-    // fanned a join out on the caller's id and double-counted
-    // pseudo-weight mass (the synthetic lineitem has duplicate
-    // (orderkey, linenumber) pairs, which is how this surfaced).
+    // not part of its contract and the chain takes no id; a regression
+    // here means some stage fanned a join out on an id column the
+    // frames carry and double-counted pseudo-weight mass (the synthetic
+    // lineitem has duplicate (orderkey, linenumber) pairs, which is how
+    // this surfaced).
     val hFix = 0.6
-    def run(cid: org.apache.spark.sql.Column,
-            sid: org.apache.spark.sql.Column) = TaylorInference.kwChain(
-      coh.zipWithIndex.map { case ((t, d, x), i) => (t, d, x, i.toLong) }
-        .toDF("t", "d", "x", "cid"),
-      cid,
-      svy.zipWithIndex.map { case ((t, d, x, wt), i) => (t, d, x, wt, i.toLong) }
-        .toDF("t", "d", "x", "wt", "sid"),
-      sid, col("wt"),
+    def run(id: Long => Long) = TaylorInference.kwChain(
+      coh.zipWithIndex.map { case ((t, d, x), i) => (t, d, x, id(i.toLong)) }
+        .toDF("t", "d", "x", "id"),
+      svy.zipWithIndex.map { case ((t, d, x, wt), i) => (t, d, x, wt, id(i.toLong)) }
+        .toDF("t", "d", "x", "wt", "id"),
+      col("wt"),
       col("t"), col("d"), Seq("x"), Seq("x"), tStar,
       a = aFrac, bandwidth = Some(hFix),
       sizeHint = graft.core.Windows.SizeHint.Small)
-    val unique = run(col("cid"), col("sid"))
-    val collided = run(lit(7L), lit(7L))
+    val unique = run(identity)
+    val collided = run(_ => 7L)
     assertNear(collided.beta(0), unique.beta(0), 1e-12)
     assertNear(collided.betaVarPoisson(0), unique.betaVarPoisson(0), 1e-12)
     for (ts <- tStar) {
