@@ -153,10 +153,9 @@ object CoxPH {
     val g = new Array[Int](n)
     var m = 0
     for (k <- byTime.indices) {
-      if (k > 0 && java.lang.Double.compare(key(byTime(k)), key(byTime(k - 1))) != 0) m += 1
-      g(byTime(k)) = m
+      if (k == 0 || java.lang.Double.compare(key(byTime(k)), key(byTime(k - 1))) != 0) m += 1
+      g(byTime(k)) = m - 1
     }
-    m = if (n == 0) 0 else m + 1
     // the event-side sums do not depend on β
     val wd = new Array[Double](m)
     val ux = Array.ofDim[Double](p, m)

@@ -82,9 +82,8 @@ class CompileOnceSpec extends SparkSpec {
         spark.sparkContext.removeSparkListener(listener)
         c.unpersist(); s.unpersist()
       }
-    // the one job more was the Cox fit's cardinality probe; the fetch of
-    // the Small cohort now sizes the fit under either hint, so the two
-    // chains run the same jobs
+    // the Cox fit's fetch of the Small cohort sizes the fit under either
+    // hint, so Auto adds no probe job and the two chains run the same jobs
     assert(auto == small, s"Auto chain ran $auto jobs, Small chain $small")
     // the inherited Small plans are the declared ones: same numbers
     assert(autoInf.beta.toSeq == smallInf.beta.toSeq)

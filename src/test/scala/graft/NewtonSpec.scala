@@ -29,14 +29,6 @@ class NewtonSpec extends SparkSpec {
       if ((i * 7) % 5 < 2) 1.0 else 0.0, x, 1.0 + i % 3)
   }.toDF("id", "t", "d", "trt", "x", "w")
 
-  /** `df` repeated `k` times, k the least count that takes it over
-    * Windows.SmallRows rows, so a fit on it runs the distributed path;
-    * returns the copy and k. */
-  private def repeated(df: DataFrame): (DataFrame, Int) = {
-    val k = Windows.SmallRows / df.count().toInt + 1
-    (df.withColumn("__copy", explode(sequence(lit(1), lit(k)))).drop("__copy"), k)
-  }
-
   /** `df` with Windows.SmallRows + 1 rows of zeros, weight included,
     * appended: the same weighted sums, and a fit on it runs the
     * distributed path. */
@@ -168,7 +160,8 @@ class NewtonSpec extends SparkSpec {
   test("IRLS on a Small input agrees with IRLS on its repeated copy") {
     // D repeated k times at weights w/k has D's likelihood, and more than
     // Windows.SmallRows rows: the local and the distributed pass
-    val (copies, k) = repeated(sample)
+    val k = Windows.SmallRows / 120 + 1
+    val copies = sample.withColumn("copy", explode(sequence(lit(1), lit(k)))).drop("copy")
     def fit(df: DataFrame, w: Column, maxIter: Int = 50) = WeightedGLM.logistic(df,
       array(lit(1.0), col("x")), col("trt"), w, p = 2, maxIter = maxIter)
     val local = fit(sample, col("w"))
@@ -200,9 +193,8 @@ class NewtonSpec extends SparkSpec {
 
   test("a Cox fit of a Small input with no events fails by name") {
     // the fetch checks the events on the driver under Auto and Small
-    // alike. A Small hint once skipped the probe that held the check, and
-    // the fit failed in its first pass reading a null score row
-    // ([ROW_VALUE_IS_NULL]), as a Large-hinted fit still does.
+    // alike; a Large-hinted fit skips the fetch and fails in its first
+    // pass, reading a null score row ([ROW_VALUE_IS_NULL])
     val df = Seq((1.0, 0.0, 0.5), (2.0, 0.0, -0.3), (3.0, 0.0, 1.1)).toDF("t", "d", "x")
     for (hint <- Seq(Windows.SizeHint.Auto, Windows.SizeHint.Small)) {
       val e = intercept[IllegalArgumentException] {
