@@ -25,9 +25,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   *   5. driver-side Breeze solve: β ← β + I⁻¹U (the shared Newton
   *      driver, stats/Newton.scala, owns the loop and the input cache)
   *
-  * A fit's input of at most `Windows.SmallRows` rows is fetched once
-  * and steps 1-4 run on the driver over its columns ([[localScores]]);
-  * a larger one runs them as one distributed job per iteration.
+  * A fit's input of at most `Windows.SmallRows` rows without nulls is
+  * fetched once and steps 1-4 run on the driver over its columns
+  * ([[localScores]]); any other input runs them distributed every
+  * iteration.
   *
   * Features are individual double columns (p ≤ ~6), keeping every
   * expression inside whole-stage codegen.

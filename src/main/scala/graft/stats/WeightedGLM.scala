@@ -12,9 +12,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * IRLS on the shared Newton driver: each iteration sums the p×p
   * Hessian and p-gradient at the current β, then solves on the driver
   * (Breeze). p ≤ ~6, ~8 iterations. An input of at most
-  * `Windows.SmallRows` rows is fetched once and summed on the driver;
-  * a larger one runs ONE shuffle-free distributed pass (flat Gram sums)
-  * per iteration over a cached input, never a per-row collect.
+  * `Windows.SmallRows` rows without nulls is fetched once and summed on
+  * the driver; any other input runs ONE shuffle-free distributed pass
+  * (flat Gram sums) per iteration over a cached input, never a per-row
+  * collect.
   *
   * M3: weighted least squares — the imputation model
   * `lm(t_delta ~ x1*x2)` (calib_simu_noninf0315.R:82): single-pass
