@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
 import scala.collection.immutable.ListMap
 
 /** Ordering-dependent computation (SURVEY.md O1-O5) at scale.
@@ -33,8 +33,7 @@ object Windows {
 
   /** Row count at or under which a scan input is `Small`: probed by
     * [[resolve]] and by the fitters that size their step tables once
-    * (`CoxPH.fit`, `CoxPHReplicated.fit`). It also bounds the inputs the
-    * Newton driver fetches and fits on the driver (`stats.Newton.run`). */
+    * (`CoxPH.fit`, `CoxPHReplicated.fit`), and by [[Pin]]. */
   val SmallRows = 20000
 
   /** Caller knowledge about the scan input's cardinality: `Small` skips
@@ -77,11 +76,18 @@ object Windows {
     * head(N+1) terminates early; the probe's upstream work is paid once
     * more at the caller's action rather than cached. */
   def resolve(df: DataFrame, hint: SizeHint): SizeHint =
+    if (hint != SizeHint.Auto) hint
+    else if (smallRows(df, hint).isDefined) SizeHint.Small else SizeHint.Large
+
+  /** `df`'s rows if Small under `hint` (declared: all of them; Auto: one
+    * head(SmallRows+1) of at most SmallRows), else None. The head reads a
+    * leaf view: a limit pushed into `df`'s plan compiles new code. */
+  private[core] def smallRows(df: DataFrame, hint: SizeHint): Option[Array[Row]] =
     hint match {
-      case SizeHint.Auto =>
-        if (df.head(SmallRows + 1).length <= SmallRows) SizeHint.Small
-        else SizeHint.Large
-      case declared => declared
+      case SizeHint.Small => Some(df.collect())
+      case SizeHint.Auto => Some(GraftSqlBridge.flattenPlan(df).head(SmallRows + 1))
+        .filter(_.length <= SmallRows)
+      case SizeHint.Large => None
     }
 
   /** The running operator of an ordered scan: `agg` runs over each

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import graft.core.FeatureArray
+import graft.core.{FeatureArray, Pin}
+import graft.core.Windows.SizeHint
 import graft.functions.Coef
 import graft.hazard.{Breslow, DiscreteHazard, GailHazard}
 import graft.stats.CoxPH
@@ -52,8 +53,7 @@ object CalibEst {
       tStar: Seq[Double],
       popLambda: Option[DataFrame] = None,
       eta0: Double = 0.0,
-      sizeHint: graft.core.Windows.SizeHint =
-        graft.core.Windows.SizeHint.Auto): SurveyIntegration.Battery = {
+      sizeHint: SizeHint = SizeHint.Auto): SurveyIntegration.Battery = {
     val feats = featureCols.map(col)
     val p = featureCols.length
 
@@ -66,51 +66,53 @@ object CalibEst {
       sizeHint = sizeHint)
     val rr = exp(feats.indices.map(j => col(s"__x$j") * Coef.at(aux.coefficients, j))
       .foldLeft(lit(0.0): Column)(_ + _))
-    val cohort = dev.filter(col("trt") === 1)
+    val cohort0 = dev.filter(col("trt") === 1)
       .withColumn("__dtrue", col("d").cast("double"))
       .withColumn("__trr", col("__taux") * rr)
-      .persist()
 
     // T_rr: combined-sample total of w·t̃·rr (__w IS the wtVar weight
     // after the deviates projection)
     val tRr = dev.agg(sum(col("__w") * col("__taux") * rr))
       .head().getDouble(0)
 
-    // 3. the two GREG calibrations on the cohort
-    val betaDesign = FeatureArray.noIntercept(
-      lit(1.0) +: col("__dtrue") +: (0 until p).map(j => col(s"dbeta_$j")))
-    val betaTargets = Array(popN, popN1) ++ Array.fill(p)(0.0)
-    val calBeta = Greg.solve(cohort, betaDesign, col("__gw"), betaTargets)
-    val wBeta = Greg.calibratedWeight(betaDesign, col("__gw"), calBeta)
+    // the cohort rows feed both GREG solves, the fit and the hazard chain
+    Pin(cohort0, SizeHint.Auto) { (cohort, _) =>
 
-    val lamDesign = FeatureArray.noIntercept(
-      Seq(lit(1.0), col("__dtrue"), col("__trr")))
-    val lamTargets = Array(popN, popN1, tRr)
-    val calLam = Greg.solve(cohort, lamDesign, col("__gw"), lamTargets)
-    val wLam = Greg.calibratedWeight(lamDesign, col("__gw"), calLam)
+      // 3. the two GREG calibrations on the cohort
+      val betaDesign = FeatureArray.noIntercept(
+        lit(1.0) +: col("__dtrue") +: (0 until p).map(j => col(s"dbeta_$j")))
+      val betaTargets = Array(popN, popN1) ++ Array.fill(p)(0.0)
+      val calBeta = Greg.solve(cohort, betaDesign, col("__gw"), betaTargets)
+      val wBeta = Greg.calibratedWeight(betaDesign, col("__gw"), calBeta)
 
-    // 5. true-outcome fits at the calibrated weights
-    val xCols = (0 until p).map(j => col(s"__x$j"))
-    val fit = CoxPH.fit(cohort, col("t"), col("d"), wBeta, xCols)
-    val rel = exp(xCols.indices.map(j => xCols(j) * Coef.at(fit.coefficients, j))
-      .foldLeft(lit(0.0): Column)(_ + _))
-    val withLam = cohort.withColumn("__wlam", wLam)
-    val cum = Breslow.cumulativeHazardAt(withLam, col("t"), col("d"),
-        col("__wlam"), rel, tStar, sizeHint)
-      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    val gail = popLambda match {
-      case Some(ls) =>
-        val ar = DiscreteHazard.steps(withLam, col("t"), col("d"),
-          col("__wlam"), rel, sizeHint).select(col("t"), col("ar"))
-        GailHazard.at(ls, ar, tStar, sizeHint).collect()
-          .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      case None => Map.empty[Double, Double]
+      val lamDesign = FeatureArray.noIntercept(
+        Seq(lit(1.0), col("__dtrue"), col("__trr")))
+      val lamTargets = Array(popN, popN1, tRr)
+      val calLam = Greg.solve(cohort, lamDesign, col("__gw"), lamTargets)
+      val wLam = Greg.calibratedWeight(lamDesign, col("__gw"), calLam)
+
+      // 5. true-outcome fits at the calibrated weights
+      val xCols = (0 until p).map(j => col(s"__x$j"))
+      val fit = CoxPH.fit(cohort, col("t"), col("d"), wBeta, xCols)
+      val rel = exp(xCols.indices.map(j => xCols(j) * Coef.at(fit.coefficients, j))
+        .foldLeft(lit(0.0): Column)(_ + _))
+      val withLam = cohort.withColumn("__wlam", wLam)
+      val cum = Breslow.cumulativeHazardAt(withLam, col("t"), col("d"),
+          col("__wlam"), rel, tStar, sizeHint)
+        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+      val gail = popLambda match {
+        case Some(ls) =>
+          val ar = DiscreteHazard.steps(withLam, col("t"), col("d"),
+            col("__wlam"), rel, sizeHint).select(col("t"), col("ar"))
+          GailHazard.at(ls, ar, tStar, sizeHint).collect()
+            .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+        case None => Map.empty[Double, Double]
+      }
+      val abs = cum.map { case (t, ch) =>
+        t -> (1.0 - math.exp(-ch * math.exp(eta0)))
+      }
+      SurveyIntegration.Battery(fit.coefficients, fit.converged,
+        fit.scoreResidual, cum, gail, abs)
     }
-    val abs = cum.map { case (t, ch) =>
-      t -> (1.0 - math.exp(-ch * math.exp(eta0)))
-    }
-    cohort.unpersist(blocking = false)
-    SurveyIntegration.Battery(fit.coefficients, fit.converged,
-      fit.scoreResidual, cum, gail, abs)
   }
 }

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import graft.core.Pin
+import graft.core.Windows.SizeHint
 import graft.sampling.{Population, Pps}
 import graft.stats.CoxPH
 import graft.weights.Composite
@@ -68,162 +70,160 @@ object Simulation {
     import spark.implicits._
     val xCols = Seq("x1", "x2", "x3")
     val pop0 = Population.generate(spark, cfg.populationSize, cfg.beta)
-    val pop = (if (cfg.fullBattery)
-                 Population.withErrorScenarios(pop0, cfg.errorScenarios)
-               else pop0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val popAgg = pop.agg(count(lit(1)).cast("double"),
-      sum(col("d").cast("double"))).head()
-    val popN = popAgg.getDouble(0); val popN1 = popAgg.getDouble(1)
+    // every replicate reads the population and its λ* grid
+    Pin(if (cfg.fullBattery) Population.withErrorScenarios(pop0, cfg.errorScenarios)
+        else pop0, SizeHint.Large) { (pop, _) =>
+      val popAgg = pop.agg(count(lit(1)).cast("double"),
+        sum(col("d").cast("double"))).head()
+      val popN = popAgg.getDouble(0); val popN1 = popAgg.getDouble(1)
 
-    // population truth (the reference's pop fits, calib_simu:113-124)
-    val truthFit = CoxPH.fit(pop, col("t"), col("d"), col("w"), xCols.map(col))
-    val popLambda =
-      if (cfg.fullBattery)
-        Some(graft.hazard.GailHazard.lambdaStarPop(pop, col("t"), col("d"),
-            col("w"), tStarGrid = cfg.tStar)
-          .select(col("t"), col("lambda_star"))
-          .persist())
-      else None
+      // population truth (the reference's pop fits, calib_simu:113-124)
+      val truthFit = CoxPH.fit(pop, col("t"), col("d"), col("w"), xCols.map(col))
+      def withPopLambda[A](body: Option[DataFrame] => A): A =
+        if (cfg.fullBattery)
+          Pin(graft.hazard.GailHazard.lambdaStarPop(pop, col("t"), col("d"),
+              col("w"), tStarGrid = cfg.tStar).select(col("t"), col("lambda_star")),
+            SizeHint.Auto)((grid, _) => body(Some(grid)))
+        else body(None)
+      withPopLambda { popLambda =>
+        // per-replicate RNG keys: first nSimu rows of the seed table
+        // (driver-side, O(replicates) doubles), else index-derived salts
+        val seedPairs: Option[Array[(Long, Long)]] = cfg.seedTable.map { st =>
+          val rows = st.limit(cfg.nSimu).collect()
+            .map(r => (r.getDouble(0).toLong, r.getDouble(1).toLong))
+          require(rows.length >= cfg.nSimu,
+            s"seed table has ${rows.length} rows < nSimu=${cfg.nSimu}")
+          rows
+        }
 
-    // per-replicate RNG keys: first nSimu rows of the seed table
-    // (driver-side, O(replicates) doubles), else index-derived salts
-    val seedPairs: Option[Array[(Long, Long)]] = cfg.seedTable.map { st =>
-      val rows = st.limit(cfg.nSimu).collect()
-        .map(r => (r.getDouble(0).toLong, r.getDouble(1).toLong))
-      require(rows.length >= cfg.nSimu,
-        s"seed table has ${rows.length} rows < nSimu=${cfg.nSimu}")
-      rows
-    }
+        val results = (1 to cfg.nSimu).flatMap { simu =>
+          val (cohortSalt, surveySalt) = seedPairs
+            .map(sp => sp(simu - 1))
+            .getOrElse((1000L + simu, 2000L + simu))
+          val cohort = Pps.draw(pop.withColumn("msize", cohortOdds(cfg.informative)),
+            col("id"), col("msize"), cfg.nCohort, salt = cohortSalt).drop("msize")
+          val survey = Pps.draw(pop.withColumn("msize", surveyOdds),
+            col("id"), col("msize"), cfg.nSurvey, salt = surveySalt).drop("msize")
 
-    val results = (1 to cfg.nSimu).flatMap { simu =>
-      val (cohortSalt, surveySalt) = seedPairs
-        .map(sp => sp(simu - 1))
-        .getOrElse((1000L + simu, 2000L + simu))
-      val cohort = Pps.draw(pop.withColumn("msize", cohortOdds(cfg.informative)),
-        col("id"), col("msize"), cfg.nCohort, salt = cohortSalt).drop("msize")
-      val survey = Pps.draw(pop.withColumn("msize", surveyOdds),
-        col("id"), col("msize"), cfg.nSurvey, salt = surveySalt).drop("msize")
+          val stacked = SurveyIntegration.stack(cohort, survey, col("wt"))
+          // recalibrated propensity on the a-scaled stack (jk_fun.R:123-127)
+          val a = cfg.nSurvey.toDouble / cfg.populationSize
+          val psStack = stacked.withColumn("__wps",
+            when(col("trt") === 1, 1.0).otherwise(col("w") * a))
+          val ps = SurveyIntegration.propensityModel(psStack, xCols, col("__wps"))
+          val withIpsw = cohort.withColumn("ipsw",
+            graft.weights.Ipsw.fromLinearPredictor(ps.score(cohort), a))
 
-      val stacked = SurveyIntegration.stack(cohort, survey, col("wt"))
-      // recalibrated propensity on the a-scaled stack (jk_fun.R:123-127)
-      val a = cfg.nSurvey.toDouble / cfg.populationSize
-      val psStack = stacked.withColumn("__wps",
-        when(col("trt") === 1, 1.0).otherwise(col("w") * a))
-      val ps = SurveyIntegration.propensityModel(psStack, xCols, col("__wps"))
-      val withIpsw = cohort.withColumn("ipsw",
-        graft.weights.Ipsw.fromLinearPredictor(ps.score(cohort), a))
+          // Informative twin: outcome-dependent sampling needs the outcome
+          // in the PS model, so the reference fits FOUR formulas
+          // (fm_ps = trt~x1+x2*d, trt~x1+x2*d_tilde.1..3 — the commented-in
+          // battery of calib_simu_inf0315.R:130, fit per jk_fun.R:306-313)
+          // into pseudo-weight variants ipsw.0..3. x2*d expands to
+          // {x2, d, x2·d}; ipsw.0 uses the true indicator, ipsw.i the
+          // scenario-i error-prone one (needs the error columns ⇒
+          // fullBattery).
+          val ipswVariants: Seq[(String, DataFrame)] =
+            if (!cfg.informative) Nil
+            else {
+              val dCols = Seq("d") ++
+                (if (cfg.fullBattery)
+                   (1 to cfg.errorScenarios.length).map(i => s"d_tilde_$i")
+                 else Nil)
+              dCols.zipWithIndex.map { case (dc, i) =>
+                val ic = s"__x2_$dc"
+                val st = psStack.withColumn(ic, col("x2") * col(dc).cast("double"))
+                val psI = SurveyIntegration.propensityModel(st,
+                  Seq("x1", "x2", dc, ic), col("__wps"))
+                val coI = cohort.withColumn(ic, col("x2") * col(dc).cast("double"))
+                s"ipsw.$i" -> coI.withColumn("ipsw",
+                  graft.weights.Ipsw.fromLinearPredictor(psI.score(coI), a))
+                  .drop(ic)
+              }
+            }
 
-      // Informative twin: outcome-dependent sampling needs the outcome
-      // in the PS model, so the reference fits FOUR formulas
-      // (fm_ps = trt~x1+x2*d, trt~x1+x2*d_tilde.1..3 — the commented-in
-      // battery of calib_simu_inf0315.R:130, fit per jk_fun.R:306-313)
-      // into pseudo-weight variants ipsw.0..3. x2*d expands to
-      // {x2, d, x2·d}; ipsw.0 uses the true indicator, ipsw.i the
-      // scenario-i error-prone one (needs the error columns ⇒
-      // fullBattery).
-      val ipswVariants: Seq[(String, DataFrame)] =
-        if (!cfg.informative) Nil
-        else {
-          val dCols = Seq("d") ++
-            (if (cfg.fullBattery)
-               (1 to cfg.errorScenarios.length).map(i => s"d_tilde_$i")
-             else Nil)
-          dCols.zipWithIndex.map { case (dc, i) =>
-            val ic = s"__x2_$dc"
-            val st = psStack.withColumn(ic, col("x2") * col(dc).cast("double"))
-            val psI = SurveyIntegration.propensityModel(st,
-              Seq("x1", "x2", dc, ic), col("__wps"))
-            val coI = cohort.withColumn(ic, col("x2") * col(dc).cast("double"))
-            s"ipsw.$i" -> coI.withColumn("ipsw",
-              graft.weights.Ipsw.fromLinearPredictor(psI.score(coI), a))
-              .drop(ic)
+          val naive = SurveyIntegration.estimatorBattery(cohort,
+            col("t"), col("d"), lit(1.0), xCols, cfg.tStar, popLambda)
+          val cht = SurveyIntegration.estimatorBattery(cohort,
+            col("t"), col("d"), col("wt"), xCols, cfg.tStar, popLambda)
+          val svyB = SurveyIntegration.estimatorBattery(survey,
+            col("t"), col("d"), col("wt"), xCols, cfg.tStar, popLambda)
+          val ipswB = SurveyIntegration.estimatorBattery(withIpsw,
+            col("t"), col("d"), col("ipsw"), xCols, cfg.tStar, popLambda)
+
+          def rows(method: String, b: SurveyIntegration.Battery) =
+            b.beta.zipWithIndex.map { case (v, j) =>
+              (simu, method, s"beta${j + 1}", v)
+            } ++ b.lambdaAt.toSeq.map { case (t, v) =>
+              (simu, method, s"Lambda@$t", v)
+            } ++ b.gailAt.toSeq.map { case (t, v) =>
+              (simu, method, s"LambdaG@$t", v)
+            } ++ b.absRiskAt.toSeq.map { case (t, v) =>
+              (simu, method, s"absR@$t", v)
+            }
+
+          val baseRows = rows("naive", naive) ++ rows("cht", cht) ++
+            rows("svy", svyB) ++ rows("ipsw", ipswB) ++
+            ipswVariants.flatMap { case (name, coI) =>
+              rows(name, SurveyIntegration.estimatorBattery(coI,
+                col("t"), col("d"), col("ipsw"), xCols, cfg.tStar, popLambda))
+            } ++
+            truthFit.coefficients.zipWithIndex.map { case (v, j) =>
+              (simu, "truth", s"beta${j + 1}", v)
+            }
+
+          val calibRows = if (!cfg.fullBattery) Nil else {
+            // blended-weight allocation (jk_fun.R:136-139 / m17 composite);
+            // under the informative design the blend is built on ipsw.0
+            // (the true-outcome PS variant, jk_est_inf's var.wt="ipsw.0")
+            val blendBase = if (cfg.informative) ipswVariants.head._2 else withIpsw
+            def blended(co: DataFrame): DataFrame = {
+              val alloc = Composite.allocation(co, col("ipsw"), survey, col("wt"))
+              SurveyIntegration.stack(co, survey, col("wt"))
+                .withColumn("halfwt", col("wt") / 2.0)
+                .withColumn("blend",
+                  when(col("trt") === 1, col("ipsw") * alloc.aCohort)
+                    .otherwise(col("wt") * alloc.aSurvey))
+            }
+            def withFit(df: DataFrame, i: Int): DataFrame = df
+              .withColumn(s"t_fit_$i",
+                when(col("trt") === 1, col("t")).otherwise(col(s"t_imp_$i")))
+              .withColumn(s"d_fit_$i",
+                when(col("trt") === 1, col("d")).otherwise(col(s"d_tilde_$i")))
+            // survey rows carry the imputed outcome; cohort rows the truth
+            Pin(blended(blendBase), SizeHint.Auto) { (com, _) =>
+              val methods = (1 to cfg.errorScenarios.length).flatMap { i =>
+                val comI = withFit(com, i)
+                Seq(
+                  (s"calib.d$i", CalibEst.run(comI, s"t_tilde_$i", s"d_tilde_$i",
+                    "halfwt", col("wt"), popN, popN1, xCols, cfg.tStar, popLambda)),
+                  (s"calib_ipsw.d$i", CalibEst.run(comI, s"t_tilde_$i", s"d_tilde_$i",
+                    "blend", col("blend"), popN, popN1, xCols, cfg.tStar, popLambda)),
+                  (s"imp.d$i", CalibEst.run(comI, s"t_fit_$i", s"d_fit_$i",
+                    "halfwt", col("wt"), popN, popN1, xCols, cfg.tStar, popLambda)),
+                  (s"imp_calib_ipsw.d$i", CalibEst.run(comI, s"t_fit_$i", s"d_fit_$i",
+                    "blend", col("blend"), popN, popN1, xCols, cfg.tStar, popLambda))) ++
+                // informative .t twins: the blend rebuilt from the scenario's
+                // OWN error-prone PS variant ipsw.i (jk_est_inf's
+                // var.wt=paste0("ipsw.",i) slots, jk_fun.R:267-270)
+                (if (!cfg.informative) Nil
+                 else {
+                   val comT = withFit(blended(ipswVariants(i)._2), i)
+                   Seq(
+                     (s"calib_ipsw_t.d$i", CalibEst.run(comT, s"t_tilde_$i",
+                       s"d_tilde_$i", "blend", col("blend"), popN, popN1, xCols,
+                       cfg.tStar, popLambda)),
+                     (s"imp_calib_ipsw_t.d$i", CalibEst.run(comT, s"t_fit_$i",
+                       s"d_fit_$i", "blend", col("blend"), popN, popN1, xCols,
+                       cfg.tStar, popLambda)))
+                 })
+              }
+              methods.flatMap { case (m, b) => rows(m, b) }
+            }
           }
+          baseRows ++ calibRows
         }
-
-      val naive = SurveyIntegration.estimatorBattery(cohort,
-        col("t"), col("d"), lit(1.0), xCols, cfg.tStar, popLambda)
-      val cht = SurveyIntegration.estimatorBattery(cohort,
-        col("t"), col("d"), col("wt"), xCols, cfg.tStar, popLambda)
-      val svyB = SurveyIntegration.estimatorBattery(survey,
-        col("t"), col("d"), col("wt"), xCols, cfg.tStar, popLambda)
-      val ipswB = SurveyIntegration.estimatorBattery(withIpsw,
-        col("t"), col("d"), col("ipsw"), xCols, cfg.tStar, popLambda)
-
-      def rows(method: String, b: SurveyIntegration.Battery) =
-        b.beta.zipWithIndex.map { case (v, j) =>
-          (simu, method, s"beta${j + 1}", v)
-        } ++ b.lambdaAt.toSeq.map { case (t, v) =>
-          (simu, method, s"Lambda@$t", v)
-        } ++ b.gailAt.toSeq.map { case (t, v) =>
-          (simu, method, s"LambdaG@$t", v)
-        } ++ b.absRiskAt.toSeq.map { case (t, v) =>
-          (simu, method, s"absR@$t", v)
-        }
-
-      val baseRows = rows("naive", naive) ++ rows("cht", cht) ++
-        rows("svy", svyB) ++ rows("ipsw", ipswB) ++
-        ipswVariants.flatMap { case (name, coI) =>
-          rows(name, SurveyIntegration.estimatorBattery(coI,
-            col("t"), col("d"), col("ipsw"), xCols, cfg.tStar, popLambda))
-        } ++
-        truthFit.coefficients.zipWithIndex.map { case (v, j) =>
-          (simu, "truth", s"beta${j + 1}", v)
-        }
-
-      val calibRows = if (!cfg.fullBattery) Nil else {
-        // blended-weight allocation (jk_fun.R:136-139 / m17 composite);
-        // under the informative design the blend is built on ipsw.0
-        // (the true-outcome PS variant, jk_est_inf's var.wt="ipsw.0")
-        val blendBase = if (cfg.informative) ipswVariants.head._2 else withIpsw
-        def blended(co: DataFrame): DataFrame = {
-          val alloc = Composite.allocation(co, col("ipsw"), survey, col("wt"))
-          SurveyIntegration.stack(co, survey, col("wt"))
-            .withColumn("halfwt", col("wt") / 2.0)
-            .withColumn("blend",
-              when(col("trt") === 1, col("ipsw") * alloc.aCohort)
-                .otherwise(col("wt") * alloc.aSurvey))
-        }
-        def withFit(df: DataFrame, i: Int): DataFrame = df
-          .withColumn(s"t_fit_$i",
-            when(col("trt") === 1, col("t")).otherwise(col(s"t_imp_$i")))
-          .withColumn(s"d_fit_$i",
-            when(col("trt") === 1, col("d")).otherwise(col(s"d_tilde_$i")))
-        // survey rows carry the imputed outcome; cohort rows the truth
-        val com = blended(blendBase).persist()
-        val methods = (1 to cfg.errorScenarios.length).flatMap { i =>
-          val comI = withFit(com, i)
-          Seq(
-            (s"calib.d$i", CalibEst.run(comI, s"t_tilde_$i", s"d_tilde_$i",
-              "halfwt", col("wt"), popN, popN1, xCols, cfg.tStar, popLambda)),
-            (s"calib_ipsw.d$i", CalibEst.run(comI, s"t_tilde_$i", s"d_tilde_$i",
-              "blend", col("blend"), popN, popN1, xCols, cfg.tStar, popLambda)),
-            (s"imp.d$i", CalibEst.run(comI, s"t_fit_$i", s"d_fit_$i",
-              "halfwt", col("wt"), popN, popN1, xCols, cfg.tStar, popLambda)),
-            (s"imp_calib_ipsw.d$i", CalibEst.run(comI, s"t_fit_$i", s"d_fit_$i",
-              "blend", col("blend"), popN, popN1, xCols, cfg.tStar, popLambda))) ++
-          // informative .t twins: the blend rebuilt from the scenario's
-          // OWN error-prone PS variant ipsw.i (jk_est_inf's
-          // var.wt=paste0("ipsw.",i) slots, jk_fun.R:267-270)
-          (if (!cfg.informative) Nil
-           else {
-             val comT = withFit(blended(ipswVariants(i)._2), i)
-             Seq(
-               (s"calib_ipsw_t.d$i", CalibEst.run(comT, s"t_tilde_$i",
-                 s"d_tilde_$i", "blend", col("blend"), popN, popN1, xCols,
-                 cfg.tStar, popLambda)),
-               (s"imp_calib_ipsw_t.d$i", CalibEst.run(comT, s"t_fit_$i",
-                 s"d_fit_$i", "blend", col("blend"), popN, popN1, xCols,
-                 cfg.tStar, popLambda)))
-           })
-        }
-        com.unpersist(blocking = false)
-        methods.flatMap { case (m, b) => rows(m, b) }
+        results.toDF("simu_id", "method", "param", "value")
       }
-      baseRows ++ calibRows
     }
-    popLambda.foreach(_.unpersist(blocking = false))
-    pop.unpersist(blocking = false)
-    results.toDF("simu_id", "method", "param", "value")
   }
 }

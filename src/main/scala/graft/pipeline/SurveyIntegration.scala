@@ -134,15 +134,13 @@ object SurveyIntegration {
     val rep = Jackknife.replicated(
       df.select(y.as("__y"), weight.cast("double").as("__w"), groupKey.as("__g")),
       col("__g"), col("__w"), m)
+    // the m replicate estimates are read by one action: nothing to pin
     val est = rep.groupBy(col("jk_r"))
       .agg((sum(col("jk_wt") * col("__y")) /
         when(sum(col("jk_wt")) =!= 0.0, sum(col("jk_wt")))).as("theta"))
-      .persist()
     val theta = df.agg(sum(weight.cast("double") * y) / sum(weight.cast("double")))
       .head().getDouble(0)
-    val v = Jackknife.variance(est, col("theta"), m).head().getDouble(0)
-    est.unpersist(blocking = false)
-    (theta, v)
+    (theta, Jackknife.variance(est, col("theta"), m).head().getDouble(0))
   }
 
   /** Jackknifed Cox battery: delete-a-group replication of the weighted

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import graft.core.FeatureArray
+import graft.core.{FeatureArray, Pin}
+import graft.core.Windows.SizeHint
 import graft.hazard.RiskSet
 import graft.stats.{CoxPH, WeightedGLM}
 import graft.variance.{CoxInfluence, HazardInfluence, Influence, JointVariance}
@@ -57,33 +58,31 @@ object TaylorInference {
       lambdaStar: Option[DataFrame] = None,
       x0: Option[Array[Double]] = None,
       a: Double = 1.0,
-      sizeHint: graft.core.Windows.SizeHint =
-        graft.core.Windows.SizeHint.Auto,
+      sizeHint: SizeHint = SizeHint.Auto,
       // pinned iteration counts (0 ⇒ run to convergence) let a DuckDB
       // oracle replay the identical fixed-point arithmetic
       psIters: Int = 0,
       coxIters: Int = 0): IpswInference = {
     val q = psFeatureCols.length + 1
     // 1. propensity fit on the a-scaled stack
-    val ps = propensity(cohort, survey, surveyWt, psFeatureCols, a, psIters)
-
-    // 2. cohort pseudo-weights: ipsw = exp(−x'γ)/a, closed-form
-    //    ∂w̃/∂γ = −ipsw·x_ps
-    val score = FeatureArray.dot(ps.feats, ps.fit.coefficients)
-    val withW = ps.stacked.withColumn("__wtc", when(col("trt") === 1,
-      Ipsw.fromLinearPredictor(score, a)).otherwise(lit(0.0)))
-    val pgCols = (0 until q).map(m0 =>
-      (when(col("trt") === 1, -col("__wtc") * ps.feats.getItem(m0))
-        .otherwise(0.0)).as(s"__pg$m0"))
-    val prepared = withW.select((withW.columns.map(col) ++ Seq(
-      when(col("trt") === 1, col("__wtc"))
-        .otherwise(col("w").cast("double")).as("__psw"),
-      when(col("trt") === 1, lit(1.0) / col("__wtc"))
-        .otherwise(lit(1.0) / col("w").cast("double")).as("__pi")) ++
-      ps.gdCols ++ pgCols): _*)
-    try inferenceCore(prepared, time, event, featureCols, q, tStar,
-      lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
-    finally { ps.cache.unpersist(blocking = false); () }
+    propensity(cohort, survey, surveyWt, psFeatureCols, a, psIters) { ps =>
+      // 2. cohort pseudo-weights: ipsw = exp(−x'γ)/a, closed-form
+      //    ∂w̃/∂γ = −ipsw·x_ps
+      val score = FeatureArray.dot(ps.feats, ps.fit.coefficients)
+      val withW = ps.stacked.withColumn("__wtc", when(col("trt") === 1,
+        Ipsw.fromLinearPredictor(score, a)).otherwise(lit(0.0)))
+      val pgCols = (0 until q).map(m0 =>
+        (when(col("trt") === 1, -col("__wtc") * ps.feats.getItem(m0))
+          .otherwise(0.0)).as(s"__pg$m0"))
+      val prepared = withW.select((withW.columns.map(col) ++ Seq(
+        when(col("trt") === 1, col("__wtc"))
+          .otherwise(col("w").cast("double")).as("__psw"),
+        when(col("trt") === 1, lit(1.0) / col("__wtc"))
+          .otherwise(lit(1.0) / col("w").cast("double")).as("__pi")) ++
+        ps.gdCols ++ pgCols): _*)
+      inferenceCore(prepared, ps.size, time, event, featureCols, q, tStar,
+        lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
+    }
   }
 
   /** Kernel-weighted (KW) twin of `ipswChain` (the KW block,
@@ -105,13 +104,11 @@ object TaylorInference {
       x0: Option[Array[Double]] = None,
       a: Double = 1.0,
       bandwidth: Option[Double] = None,
-      sizeHint: graft.core.Windows.SizeHint =
-        graft.core.Windows.SizeHint.Auto,
+      sizeHint: SizeHint = SizeHint.Auto,
       psIters: Int = 0,
       coxIters: Int = 0): IpswInference = {
     val q = psFeatureCols.length + 1
-    val ps = propensity(cohort, survey, surveyWt, psFeatureCols, a, psIters)
-    try {
+    propensity(cohort, survey, surveyWt, psFeatureCols, a, psIters) { ps =>
       val psFeats = ps.feats
       val score = FeatureArray.dot(psFeats, ps.fit.coefficients)
       val scored = ps.stacked.withColumn("__q", score)
@@ -124,10 +121,8 @@ object TaylorInference {
       // the cohort frame would fan an id join out and double-count
       // pseudo-weight mass (the reference addresses units by row index,
       // simu_fun.R:186, so id uniqueness is not part of its contract).
-      // Persisted: every downstream job (each Cox NR iteration, the
-      // deviate collapse, the hazard chain, the contractions) reads these
-      // rows, and without the cache each would re-run the O(n_c·n_s)
-      // kernel pair aggregation.
+      // Pinned in the stack's size class: every later job reads these
+      // rows, and would otherwise re-run the kernel pair aggregation.
       val cohortW = graft.weights.KernelWeights.attachJacobian(
         surveyQ, col("__q"), col("w").cast("double"),
         cohortQ, col("__q"), h,
@@ -143,7 +138,7 @@ object TaylorInference {
       val pgCols = (0 until q).map(m0 =>
         (when(col("trt") === 1, coalesce(col(s"d_kw_$m0"), lit(0.0)))
           .otherwise(0.0)).as(s"__pg$m0"))
-      val preparedCache = withW.select((withW.columns.map(col) ++ Seq(
+      val prepared = withW.select((withW.columns.map(col) ++ Seq(
           when(col("trt") === 1, col("__wtc"))
             .otherwise(col("w").cast("double")).as("__psw"),
           // π for the KW chain stays the PROPENSITY-model estimate
@@ -152,56 +147,53 @@ object TaylorInference {
           when(col("trt") === 1, lit(a) * exp(col("__q")))
             .otherwise(lit(1.0) / col("w").cast("double")).as("__pi")) ++
           ps.gdCols ++ pgCols): _*)
-        .persist()
-      try {
-        val prepared = org.apache.spark.sql.GraftSqlBridge.flattenPlan(preparedCache)
-        inferenceCore(prepared, time, event, featureCols, q, tStar,
-          lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients)
-      } finally preparedCache.unpersist(blocking = false)
-    } finally { ps.cache.unpersist(blocking = false); () }
+      Pin(prepared, ps.size)((pinned, _) => inferenceCore(pinned, ps.size, time, event,
+        featureCols, q, tStar, lambdaStar, x0, sizeHint, coxIters, ps.fit.coefficients))
+    }
   }
 
   /** Front half shared by both chains: the a-scaled stack (propensity
-    * weight __wps) persisted behind a leaf-plan view, so every
-    * downstream pass re-plans a one-node tree; the propensity IRLS for
-    * γ̂ (pinned to `psIters` iterations when > 0); and the per-unit γ
-    * deviates as `__gd` column expressions over the stack. */
-  private final case class Propensity(cache: DataFrame, stacked: DataFrame,
+    * weight __wps), pinned for `body` (core.Pin: the stack's size class
+    * is `size`); the propensity IRLS for γ̂ (pinned to `psIters`
+    * iterations when > 0); and the per-unit γ deviates as `__gd` column
+    * expressions over the stack. */
+  private final case class Propensity(stacked: DataFrame, size: SizeHint,
       feats: Column, fit: WeightedGLM.Fit, gdCols: Seq[Column])
 
-  private def propensity(cohort: DataFrame, survey: DataFrame,
+  private def propensity[A](cohort: DataFrame, survey: DataFrame,
       surveyWt: Column, psFeatureCols: Seq[String], a: Double,
-      psIters: Int): Propensity = {
+      psIters: Int)(body: Propensity => A): A = {
     val q = psFeatureCols.length + 1
     val psFeats = FeatureArray.withIntercept(psFeatureCols.map(col))
-    val cache = SurveyIntegration.stack(cohort, survey, surveyWt)
+    val stack = SurveyIntegration.stack(cohort, survey, surveyWt)
       .withColumn("__wps", when(col("trt") === 1, 1.0)
         .otherwise(col("w").cast("double") * a))
-      .persist()
-    val stacked = org.apache.spark.sql.GraftSqlBridge.flattenPlan(cache)
-    val fit =
-      try {
+    Pin(stack, SizeHint.Auto) { (stacked, rows) =>
+      val fit =
         if (psIters > 0) WeightedGLM.logistic(stacked, psFeats, col("trt"),
           col("__wps"), p = q, maxIter = psIters, tol = 0.0)
         else WeightedGLM.logistic(stacked, psFeats, col("trt"), col("__wps"), p = q)
-      } catch { case e: Throwable => cache.unpersist(blocking = false); throw e }
-    val gdCols = Influence.logisticDeviates(fit, psFeats, col("trt"),
-      col("__wps")).zipWithIndex.map { case (c, m0) => c.as(s"__gd$m0") }
-    Propensity(cache, stacked, psFeats, fit, gdCols)
+      val gdCols = Influence.logisticDeviates(fit, psFeats, col("trt"),
+        col("__wps")).zipWithIndex.map { case (c, m0) => c.as(s"__gd$m0") }
+      body(Propensity(stacked, if (rows.isDefined) SizeHint.Small else SizeHint.Large,
+        psFeats, fit, gdCols))
+    }
   }
 
   /** Shared tail: Cox fit at the cohort pseudo-weight `__wtc`, per-unit
     * influence with survey γ-only blocks, per-m β deviates, hazard
     * chain, contractions. `prepared` carries trt, the time/event and
-    * feature columns, __wtc/__psw/__pi and q columns each of __gd/__pg. */
+    * feature columns, __wtc/__psw/__pi and q columns each of __gd/__pg;
+    * its rows, and so the deviate frame's, are of class `rows`. */
   private def inferenceCore(
       prepared: DataFrame,
+      rows: SizeHint,
       time: Column, event: Column,
       featureCols: Seq[String], q: Int,
       tStar: Seq[Double],
       lambdaStar: Option[DataFrame],
       x0: Option[Array[Double]],
-      sizeHint: graft.core.Windows.SizeHint,
+      sizeHint: SizeHint,
       coxIters: Int,
       gamma: Array[Double]): IpswInference = {
     val p = featureCols.length
@@ -215,7 +207,7 @@ object TaylorInference {
     // under Auto the fit's fetch (or its cardinality probe) bounded the
     // rows of the RiskSet table below: a Small answer sizes every scan of
     // the chain, so the chain runs no probe of its own
-    val hint = graft.core.Windows.SizeHint.inherited(sizeHint, fit.stepSize)
+    val hint = SizeHint.inherited(sizeHint, fit.stepSize)
 
     // 3. one RiskSet table (with the γ measures ∂w̃/∂γ = __pg) feeds
     //    both the β influence and the hazard chain. Influence frame:
@@ -245,9 +237,7 @@ object TaylorInference {
       // CoxInfluence internals (risk-set/score columns) — inert zeros
       case n => lit(0.0).as(n)
     }: _*)
-    val allDevCache = devC.unionByName(surveyAligned).persist()
-    try {
-      val allDev = org.apache.spark.sql.GraftSqlBridge.flattenPlan(allDevCache)
+    Pin(devC.unionByName(surveyAligned), rows) { (allDev, _) =>
 
       // 4. per-m β deviates: ipsw·I⁻¹U + B·Δγ (cross-derivative through
       //    ∂w̃/∂γ = __pg: −ipsw·x_ps, or KW's d_kw; survey rows have U = 0)
@@ -305,6 +295,6 @@ object TaylorInference {
       IpswInference(gamma, fit.coefficients, b.poisson.toArray, b.pps.toArray,
         estimands("d_cum_hzd"), estimands("d_cum_gail"),
         estimands("d_abs_risk"), estimands("d_abs_risk_gail"))
-    } finally allDevCache.unpersist(blocking = false)
+    }
   }
 }

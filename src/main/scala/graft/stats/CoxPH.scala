@@ -23,7 +23,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   *      information I_jk = Σ_t (Σ_{d=1,t} w)·(S2_jk/S0 − S1_j·S1_k/S0²)
   *      — one tiny final aggregate, p + p(p+1)/2 doubles to the driver
   *   5. driver-side Breeze solve: β ← β + I⁻¹U (the shared Newton
-  *      driver, stats/Newton.scala, owns the loop and the input cache)
+  *      driver, stats/Newton.scala, owns the loop and pins its input)
   *
   * A fit's input of at most `Windows.SmallRows` rows without nulls is
   * fetched once and steps 1-4 run on the driver over its columns
@@ -50,11 +50,6 @@ object CoxPH {
     def scoreResidual: Double = scoreNorm
   }
 
-  /** Project the iteration-invariant columns once (callers persist). */
-  def prepare(df: DataFrame, time: Column, event: Column, weight: Column,
-      features: Seq[Column]): DataFrame =
-    df.select(columns(time, event, weight, features): _*)
-
   private[stats] def columns(time: Column, event: Column, weight: Column,
       features: Seq[Column]): Seq[Column] =
     Seq(time.cast("double").as("__t"), event.cast("double").as("__d"),
@@ -70,21 +65,19 @@ object CoxPH {
       weight: Column,
       features: Seq[Column],
       beta: Array[Double]): (Array[Double], Array[Double]) =
-    scoreAndInfoPrepared(prepare(df, time, event, weight, features),
-      features.length, beta)
+    read(scoreRows(df.select(columns(time, event, weight, features): _*), features.length,
+      eta(beta), Nil, Windows.SizeHint.Auto).head, features.length)
 
-  def scoreAndInfoPrepared(base: DataFrame, p: Int,
-      beta: Array[Double],
-      sizeHint: Windows.SizeHint = Windows.SizeHint.Auto): (Array[Double], Array[Double]) = {
-    // β as referenced values, not inlined literals: identical generated
-    // code every NR iteration → codegen-cache hit after iteration 1
-    // (functions.Coef.at; bit-identical arithmetic)
-    val eta = beta.indices.map(j =>
-        col(s"__x$j") * graft.functions.Coef.at(beta, j))
+  /** x'β with β as referenced values, not inlined literals: identical
+    * generated code every NR iteration → codegen-cache hit after
+    * iteration 1 (functions.Coef.at; bit-identical arithmetic). */
+  private def eta(beta: Array[Double]): Column =
+    beta.indices.map(j => col(s"__x$j") * graft.functions.Coef.at(beta, j))
       .foldLeft(lit(0.0): Column)(_ + _)
-    val row = scoreRows(base, p, eta, Nil, sizeHint).head
+
+  /** (U, I packed) of a single fit's score row. */
+  private def read(row: Row, p: Int): (Array[Double], Array[Double]) =
     (Gram.read(row, 0, p), Gram.read(row, p, p * (p + 1) / 2))
-  }
 
   /** Steps 1-4 at the linear predictor `eta`, one row per group of
     * `keys` (none: a single fit; the replicate id: every jackknife
@@ -244,9 +237,10 @@ object CoxPH {
       // one more group) decides the scan strategy (single-partition
       // window vs two-phase distributed scan). A caller that already
       // knows its step-table size (the composed chains pass their own
-      // hint) skips the probe job — no events then surface in iteration 1
-      // as a null score row ([ROW_VALUE_IS_NULL]); a Small hint reaches
-      // this setup only for an input with a null.
+      // hint) skips the probe job; a Small hint reaches this setup only
+      // for an input with a null or more than SmallRows rows. Without
+      // the probe, no events surface in the first pass: no row reaches
+      // the contraction, so its score row is all null.
       if (sizeHint == Windows.SizeHint.Auto) {
         val probe = base.agg(sum(col("__d")), countDistinct(col("__t")),
           max(col("__t").isNull.cast("int"))).head()
@@ -257,7 +251,9 @@ object CoxPH {
           else Windows.SizeHint.Large
       }
       beta => {
-        val (u, info) = scoreAndInfoPrepared(base, p, beta, stepSize)
+        val row = scoreRows(base, p, eta(beta), Nil, stepSize).head
+        if (row.isNullAt(0)) events(0.0)
+        val (u, info) = read(row, p)
         step(u, info)
       }
     }

@@ -1,9 +1,8 @@
 package graft.stats
 
-import graft.core.{LinAlg, Windows}
+import graft.core.{LinAlg, Pin, Windows}
 import org.apache.spark.sql.functions.{lit, raise_error, when}
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** The one Newton driver behind every iterative fitter: weighted GLM
   * IRLS (`svyglm`), Breslow Newton-Raphson (`svycoxph`), bounded
@@ -11,18 +10,15 @@ import org.apache.spark.storage.StorageLevel
   * (jk_fun.R:279-387).
   *
   * The driver owns what the loops share:
-  *  - the input's path, chosen once per fit by its row count (the rule
-  *    `core.Windows.resolve` uses). A fitter that supplies a local pass
-  *    has its projection fetched with one head(SmallRows + 1); a fetch
-  *    of at most `Windows.SmallRows` rows with no null iterates on the
-  *    driver over column arrays, with no job, persist or plan per
-  *    iteration. Any other input takes the distributed path: the
-  *    iteration-invariant columns are projected once and persisted, and
-  *    every pass reads the leaf-plan view of that cache
-  *    (GraftSqlBridge.flattenPlan), so an iteration re-plans a one-node
-  *    tree instead of the caller's lineage. Nulls always take the
-  *    distributed path, whose aggregates define their semantics;
-  *  - the cache is released on every path, a failing solve included;
+  *  - the input's path, chosen once per fit: the iteration-invariant
+  *    columns are projected once and held by core.Pin (under Auto when
+  *    the fitter has a local pass). A Small projection with no null
+  *    iterates on the driver over its rows as column arrays, with no job
+  *    or plan per iteration; any other input runs the distributed pass
+  *    over the pinned frame (a Large one's cached leaf view, a
+  *    null-holding Small one's local relation), whose aggregates define
+  *    the semantics of nulls. The pin is released on every path, a
+  *    failing solve included;
   *  - θ ← θ + step, stopping after `maxIter` steps or once
   *    max|step| < `tol` (tol = 0 pins the iteration count, so a SQL
   *    oracle can replay the same fixed point);
@@ -59,22 +55,20 @@ object Newton {
     * @param fitter the fitter's name, carried by its errors
     * @param local  the driver-side pass over a Small input, if the
     *               fitter has one; None runs no fetch
-    * @param setup  called once with the cached projection, before the
+    * @param setup  called once with the pinned projection, before the
     *               first distributed step (size probes go here); returns
     *               the pass, which maps the current θ to the step added
     *               to it */
   def run(df: DataFrame, cols: Seq[Column], theta0: Array[Double],
       maxIter: Int, tol: Double, fitter: String, local: Option[Local] = None)(
-      setup: DataFrame => Array[Double] => Array[Double]): Result = {
-    val small = local.flatMap { localSetup =>
-      val rows = df.select(cols: _*).head(Windows.SmallRows + 1)
-      if (rows.length > Windows.SmallRows || rows.exists(_.anyNull)) None
-      else Some(localSetup(Array.tabulate(cols.length)(j => rows.map(_.getDouble(j)))))
-    }
-    val cached = if (small.isDefined) None
-      else Some(df.select(cols: _*).persist(StorageLevel.MEMORY_AND_DISK))
-    try {
-      val pass = small.getOrElse(setup(GraftSqlBridge.flattenPlan(cached.get)))
+      setup: DataFrame => Array[Double] => Array[Double]): Result =
+    Pin(df.select(cols: _*),
+        if (local.isDefined) Windows.SizeHint.Auto else Windows.SizeHint.Large) { (in, rows) =>
+      val pass = (local, rows) match {
+        case (Some(localSetup), Some(rs)) if !rs.exists(_.anyNull) =>
+          localSetup(Array.tabulate(cols.length)(j => rs.map(_.getDouble(j))))
+        case _ => setup(in)
+      }
       val theta = theta0.clone()
       var iter = 0
       var converged = false
@@ -98,8 +92,7 @@ object Newton {
         converged = maxStep < tol
       }
       Result(theta, iter, converged, maxStep)
-    } finally cached.foreach(_.unpersist(blocking = false))
-  }
+    }
 
   /** The Newton step I⁻¹U for a packed symmetric information (or
     * Hessian) and a score. */

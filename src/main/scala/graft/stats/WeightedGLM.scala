@@ -14,8 +14,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (Breeze). p ≤ ~6, ~8 iterations. An input of at most
   * `Windows.SmallRows` rows without nulls is fetched once and summed on
   * the driver; any other input runs ONE shuffle-free distributed pass
-  * (flat Gram sums) per iteration over a cached input, never a per-row
-  * collect.
+  * (flat Gram sums) per iteration over the driver's pinned projection,
+  * never a per-row collect.
   *
   * M3: weighted least squares — the imputation model
   * `lm(t_delta ~ x1*x2)` (calib_simu_noninf0315.R:82): single-pass
@@ -36,8 +36,8 @@ object WeightedGLM {
 
   /** Fit weighted logistic regression of `label` (0/1) on the feature
     * array column `features` (length p, intercept included by caller)
-    * with per-row weights `weight`. Input is projected once and should
-    * be cheap to rescan (caller may persist). */
+    * with per-row weights `weight`. The Newton driver projects and pins
+    * the input once per fit. */
   def logistic(
       df: DataFrame,
       features: Column,

@@ -1,6 +1,6 @@
 package graft.variance
 
-import graft.core.{LinAlg, Windows}
+import graft.core.{LinAlg, Pin, Windows}
 import graft.functions.Coef
 import graft.hazard.RiskSet
 import org.apache.spark.sql.functions._
@@ -76,15 +76,10 @@ object CoxInfluence {
         col("G0") +: (0 until p).map(j => col(s"G1$j"))): _*)
 
     // join Z/A/G back to unit rows by exact t (every t_i is in steps);
-    // a Small step table is collected and broadcast from a local
-    // relation — no shuffle of the unit rows, and no broadcast job
-    // inside the plan: a caller that persists the deviates would run
-    // that job under the cache manager's cloned session, whose executor
-    // class loader is new for every cache, so its generated classes
-    // would never hit the codegen cache
+    // a Small step table is broadcast from its Pin local relation (which
+    // the returned deviates may outlive): no shuffle of the unit rows
     val stepsSide =
-      if (sizeHint == Windows.SizeHint.Small) broadcast(df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(gSteps.collect(): _*), gSteps.schema))
+      if (sizeHint == Windows.SizeHint.Small) Pin(gSteps, sizeHint)((s, _) => broadcast(s))
       else gSteps
     val joined = base.join(stepsSide, Seq("__t"))
 

@@ -1,6 +1,6 @@
 package graft.variance
 
-import graft.core.Windows
+import graft.core.{Pin, Windows}
 import graft.functions.Coef
 import graft.hazard.RiskSet
 import org.apache.spark.sql.functions._
@@ -185,7 +185,7 @@ object HazardInfluence {
           col("__ls") * (col(s"evDY$m") - (lit(1.0) - col("evAr")) * col(s"evDZ$m"))
             / col("evZ")).otherwise(0.0)) -> s"CGN$m")
     val scanned = Windows.scan(merged, Seq(col("__t")), scanSums,
-      sizeHint = size).persist()
+      sizeHint = size)
 
     // ---- grid mass bucketed by governing event: EA/EB(t) = Σ_{s: e(s)≤t} ----
     val needGail = ls.isDefined
@@ -209,24 +209,20 @@ object HazardInfluence {
     val constCols = Seq("LAM", "GL", "LG", "GA", "GB") ++
       (0 until p).map(j => s"C$j") ++ (0 until p).map(j => s"CG$j") ++
       (0 until q).map(m => s"CN$m") ++ (0 until q).map(m => s"CGN$m")
-    // Under the Small contract the step table is ≤ ~20k rows but its
-    // PLAN is deep: tie-collapse, suffix/prefix windows (each a
-    // single-partition exchange), the λ*-grid full-outer merge, LOCF and
-    // the EA/EB bucket join — rebuilt at EVERY downstream action.
-    // Localize it ONCE to the driver: the t* constants are read from the
-    // collected rows, and a local relation replaces the plan, so the
-    // unit-side broadcast runs no job and carries no subplan, leaving
-    // each action one pass over the unit frame. (Exact doubles survive
-    // the round-trip bit-for-bit, so hash oracles are unaffected.)
+    // A Small step table (it has the rows `size` was probed on) has a
+    // deep PLAN: tie-collapse, windows, the λ*-grid merge, LOCF and the
+    // EA/EB bucket join. It is pinned ONCE as a Pin local relation, which
+    // the returned frame may read: the t* constants come from its rows,
+    // and each action is one pass over the unit frame. (Exact doubles
+    // survive the round-trip bit-for-bit.)
     val (stepTable, consts): (DataFrame, Map[Double, Row]) =
-      if (sizeHint == Windows.SizeHint.Small) {
-        val rows = stepTable0.collect()
+      if (size == Windows.SizeHint.Small) Pin(stepTable0, size) { (table, small) =>
+        val rows = small.get
         val ti = stepTable0.schema.fieldIndex("__t")
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), stepTable0.schema),
-          tStar.flatMap { ts =>
-            val upTo = rows.filter(r => !r.isNullAt(ti) && r.getDouble(ti) <= ts)
-            if (upTo.isEmpty) None else Some(ts -> upTo.maxBy(_.getDouble(ti)))
-          }.toMap)
+        (table, tStar.flatMap { ts =>
+          val upTo = rows.filter(r => !r.isNullAt(ti) && r.getDouble(ti) <= ts)
+          if (upTo.isEmpty) None else Some(ts -> upTo.maxBy(_.getDouble(ti)))
+        }.toMap)
       } else {
         // one broadcast-probe aggregate, |t*| rows
         import spark.implicits._
@@ -247,7 +243,7 @@ object HazardInfluence {
     //      the γ-chain terms are t*-constants and need no unit lookup) ----
     val unitStep0 = stepTable.select(col("__t"), col("Z"), col("GL"),
       col("EA"), col("EB"))
-    val unitStep = if (sizeHint == Windows.SizeHint.Small) broadcast(unitStep0)
+    val unitStep = if (size == Windows.SizeHint.Small) broadcast(unitStep0)
                    else unitStep0
     // LEFT join: the step table may lack survey-only times; such rows
     // have __d = __rh = __dsc = 0, so every step-value use vanishes —
@@ -315,12 +311,10 @@ object HazardInfluence {
     val keep = Seq("__t", "__d", "__w", "__rh") ++
       (0 until p).map(j => s"__x$j") ++
       (0 until p).map(j => s"__db$j") ++ passNames
-    val exploded = units
+    units
       .select(col("*"),
         posexplode(array(tsSorted.map(lit(_)): _*)).as(Seq("__pos", "t_star")))
       .select((keep.map(col) :+ col("t_star")) ++ outFields: _*)
-    scanned.unpersist()
-    exploded
   }
 
   /** Dense per-(unit, event-time) λ/ar deviates — the literal reference

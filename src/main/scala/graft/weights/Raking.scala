@@ -1,5 +1,6 @@
 package graft.weights
 
+import graft.core.{Pin, Windows}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -116,32 +117,27 @@ object Raking {
   }
 
   /** Per-sweep distributed fallback for an unbounded joint-cell count:
-    * sweeps × dims sequential grouped aggregates against a cached
-    * narrow projection, factors applied as growing map-literal
-    * expressions (margin cardinality stays bounded even when the JOINT
-    * table is not). */
+    * sweeps × dims sequential grouped aggregates against a narrow
+    * projection pinned Large (core.Pin), factors applied as growing
+    * map-literal expressions (margin cardinality stays bounded even when
+    * the JOINT table is not). */
   private def rakeSequential(base: DataFrame,
       dims: Seq[((Column, DataFrame), Int)],
       targetMaps: Seq[Map[String, Double]], sweeps: Int): DataFrame = {
-    val cached = base.persist()
-    var wt: Column = col("rake_wt")
-    for (_ <- 1 to sweeps; ((_, _), i) <- dims) {
-      val hat = cached.groupBy(col(s"__rk$i")).agg(sum(wt).as("hat"))
-        .collect().filter(!_.isNullAt(0))
-        .map(r => r.getString(0) -> r.getDouble(1))
-      val factors = hat.flatMap { case (cell, h) =>
-        targetMaps(i).get(cell).map(t => cell -> t / h)
-      }.toMap
-      wt = if (factors.isEmpty) wt
-      else {
-        val m = map(factors.toSeq.flatMap { case (k, v) =>
-          Seq(lit(k), lit(v)) }: _*)
-        wt * coalesce(element_at(m, col(s"__rk$i")), lit(1.0))
+    val wt = Pin(base, Windows.SizeHint.Large) { (pinned, _) =>
+      (1 to sweeps).flatMap(_ => dims.map(_._2)).foldLeft(col("rake_wt")) { (wt, i) =>
+        val hat = pinned.groupBy(col(s"__rk$i")).agg(sum(wt).as("hat"))
+          .collect().filter(!_.isNullAt(0))
+          .map(r => r.getString(0) -> r.getDouble(1))
+        val factors = hat.flatMap { case (cell, h) =>
+          targetMaps(i).get(cell).map(t => cell -> t / h)
+        }.toMap
+        if (factors.isEmpty) wt
+        else wt * coalesce(element_at(map(factors.toSeq.flatMap { case (k, v) =>
+          Seq(lit(k), lit(v)) }: _*), col(s"__rk$i")), lit(1.0))
       }
     }
-    val result = base.withColumn("rake_wt", wt)
+    base.withColumn("rake_wt", wt)
       .drop(dims.map { case (_, i) => s"__rk$i" }: _*)
-    cached.unpersist(blocking = false)
-    result
   }
 }

@@ -21,16 +21,16 @@ object GraftSqlBridge {
     * execution RDD — `Dataset.checkpoint`'s plan surgery
     * (`LogicalRDD.fromDataset`) without the checkpoint itself.
     *
-    * Call this on a frame that has just been `persist()`ed and is then
-    * re-derived by MANY downstream jobs (IRLS/NR iteration hubs): each
-    * iteration then plans a one-leaf tree instead of re-analyzing the
-    * full upstream lineage — on the composed inference chains that
-    * lineage is the entire kernel/stacking pipeline and its repeated
-    * re-analysis dominated wall clock. Fault tolerance is unchanged:
-    * the wrapped RDD still recomputes through the (cached) plan on
-    * executor loss. The trade is that downstream column pruning stops
-    * at this boundary, so only flatten frames whose full width the
-    * consumers actually read. */
+    * Call this on a frame that has just been `persist()`ed (core.Pin's
+    * Large frames, llm/'s iteration caches) and is then re-derived by
+    * MANY downstream jobs: each then plans a one-leaf tree instead of
+    * re-analyzing the full upstream lineage — on the composed inference
+    * chains that lineage is the entire kernel/stacking pipeline. Fault
+    * tolerance is unchanged: the wrapped RDD still recomputes through the
+    * (cached) plan on executor loss. The trade is that downstream column
+    * pruning stops at this boundary, so only flatten frames whose full
+    * width the consumers actually read. The Small-size probe
+    * (core.Windows.smallRows) reads through it too, to keep its limit out. */
   def flattenPlan(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val plan = org.apache.spark.sql.execution.LogicalRDD.fromDataset(

@@ -153,7 +153,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("a chain whose Cox fit throws releases its caches") {
     // no cohort events: CoxPH.fit raises "no events" after the
-    // propensity stack (and, for KW, the prepared frame) is cached
+    // propensity stack (and, for KW, the prepared frame) is pinned
     spark.catalog.clearCache()
     val cohort = Seq((1.0, 0.0, 0.5, 1L), (2.0, 0.0, -0.3, 2L), (3.0, 0.0, 1.1, 3L))
       .toDF("t", "d", "x", "id")
@@ -171,6 +171,19 @@ class EdgeCaseSpec extends SparkSpec {
         bandwidth = Some(0.5), psIters = 2)
     }
     assert(String.valueOf(kw.getMessage).contains("no events"), kw.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // a cohort whose events are all 1 makes the GREG design's `1` and `d`
+    // columns collinear: the first solve throws after the cohort is pinned
+    val com = Seq(
+      (1, 1.0, 1, 1.1, 1, 0.3, 2.0), (1, 2.0, 1, 1.9, 0, -0.4, 2.0),
+      (1, 3.0, 1, 3.2, 1, 0.9, 2.0), (1, 4.0, 1, 4.1, 0, -1.2, 2.0),
+      (0, 1.5, 0, 1.5, 1, -0.2, 3.0), (0, 2.5, 0, 2.5, 0, 0.6, 3.0),
+      (0, 3.5, 0, 3.5, 1, -0.7, 3.0), (0, 4.5, 0, 4.5, 0, 1.4, 3.0))
+      .toDF("trt", "t", "d", "tt", "dt", "x", "w")
+    intercept[breeze.linalg.MatrixSingularException] {
+      graft.pipeline.CalibEst.run(com, "tt", "dt", "w", col("w"), 100.0, 20.0,
+        Seq("x"), Seq(2.0))
+    }
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 

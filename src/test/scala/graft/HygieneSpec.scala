@@ -135,13 +135,13 @@ class HygieneSpec extends AnyFunSuite {
     // justify itself by extending the allowlist.
     val allow = Map(
       "Bench.scala" -> 2,                    // bench plumbing, not an operator
+      "core/Windows.scala" -> 1,             // a declared-Small frame's rows (core.Pin)
       "stats/CoxPH.scala" -> 1,              // p×p NR step per fit / replicate batch
       "stats/GLMReplicated.scala" -> 1,      // p×p IRLS step per replicate batch
       "stats/WeightedQuantile.scala" -> 1,   // ≤q quantile boundaries
       "llm/HeavyHitters.scala" -> 1,         // k sketch rows
       "llm/Similarity.scala" -> 7,           // k centroids / codebooks / tree levels (≤ b^depth rows)
       "llm/Dedup.scala" -> 3,                // df caps + band constants + debug-flag precondition probe (limit(1))
-      "variance/CoxInfluence.scala" -> 1,    // a Small G0/G1 step table for its broadcast
       "pipeline/Simulation.scala" -> 1,      // per-rep scalar results
       "pipeline/CalibEst.scala" -> 2,        // p-vector calibration solves
       "pipeline/SurveyIntegration.scala" -> 2, // the battery's Λ(t*) / ΛG(t*) rows
@@ -149,7 +149,7 @@ class HygieneSpec extends AnyFunSuite {
       "weights/KernelWeights.scala" -> 1,    // the row-sum LIMIT probe (≤ threshold+1 rows)
       "weights/Raking.scala" -> 3,           // margin factor tables
       "relational/StatQueries.scala" -> 1,   // fitted p-vector echo
-      "variance/HazardInfluence.scala" -> 2) // step-table hazard constants
+      "variance/HazardInfluence.scala" -> 1) // t*-side hazard constants of a Large step table
     assertCapped("collect()", sites("""\.collect\(\)"""), allow)
   }
 
@@ -185,13 +185,33 @@ class HygieneSpec extends AnyFunSuite {
       Map("weights/KernelWeights.scala" -> 1))
   }
 
-  test("bounded SmallRows + 1 fetches only in the size probe and the Newton driver") {
-    // a Small input is sized by one head(SmallRows + 1): the scan probe
-    // (Windows.resolve) or the Newton driver's fetch of a fitter's
-    // projection. A fitter that fetched rows on its own would bypass the
-    // driver's null fallback and its shared stopping rule and checks.
+  test("bounded SmallRows + 1 fetches only in the shared size probe") {
+    // a frame is sized by one head(SmallRows + 1), whose rows a Small
+    // answer keeps: Windows.resolve and core.Pin (and so the Newton
+    // driver's fetch of a fitter's projection) share one probe. A site
+    // that fetched rows on its own would probe the same rows twice.
     assertCapped("SmallRows + 1", sites("""SmallRows\s*\+\s*1\b"""),
-      Map("core/Windows.scala" -> 1, "stats/Newton.scala" -> 1))
+      Map("core/Windows.scala" -> 1))
+  }
+
+  test("pins outside relational/ and llm/ only in core.Pin and the ordered scan") {
+    // core.Pin holds a frame for a scope and releases it on every path,
+    // a throw included; Windows.ordered's range-partition pin (a
+    // persist into its release buffer, else a localCheckpoint) serves
+    // correctness, and its result escapes any scope
+    assertCapped("persist/cache/localCheckpoint",
+      sites("""\.persist\(|\.cache\(\)|localCheckpoint\(""",
+        f => f.startsWith("relational/") || f.startsWith("llm/")),
+      Map("core/Pin.scala" -> 1, "core/Windows.scala" -> 2))
+  }
+
+  test("local relations in the survey chain's packages only from core.Pin") {
+    // a sample-sized frame becomes a driver-side local relation through
+    // core.Pin, whose probe rows are the relation's rows
+    assertCapped("createDataFrame(",
+      sites("""createDataFrame\(""", f => !(f == "core/Pin.scala" ||
+        Seq("stats/", "variance/", "hazard/", "pipeline/").exists(f.startsWith))),
+      Map("core/Pin.scala" -> 1))
   }
 
   test("one kernel pair stream (crossJoin) in KernelWeights") {

@@ -193,12 +193,16 @@ class NewtonSpec extends SparkSpec {
 
   test("a Cox fit of a Small input with no events fails by name") {
     // the fetch checks the events on the driver under Auto and Small
-    // alike; a Large-hinted fit skips the fetch and fails in its first
-    // pass, reading a null score row ([ROW_VALUE_IS_NULL])
+    // alike; a Large-hinted fit, and a null-holding input, skip it and
+    // read the first pass's all-null score row on the driver
     val df = Seq((1.0, 0.0, 0.5), (2.0, 0.0, -0.3), (3.0, 0.0, 1.1)).toDF("t", "d", "x")
-    for (hint <- Seq(Windows.SizeHint.Auto, Windows.SizeHint.Small)) {
+    val withNull = df.union(Seq[(Double, Double, Option[Double])]((4.0, 0.0, None))
+      .toDF("t", "d", "x"))
+    for ((in, hint) <- Seq(Windows.SizeHint.Auto, Windows.SizeHint.Small,
+        Windows.SizeHint.Large).map(df -> _) ++
+        Seq(Windows.SizeHint.Auto, Windows.SizeHint.Small).map(withNull -> _)) {
       val e = intercept[IllegalArgumentException] {
-        CoxPH.fit(df, col("t"), col("d"), lit(1.0), Seq(col("x")), sizeHint = hint)
+        CoxPH.fit(in, col("t"), col("d"), lit(1.0), Seq(col("x")), sizeHint = hint)
       }
       assert(e.getMessage.contains("CoxPH.fit: no events"), e.getMessage)
     }
